@@ -44,7 +44,7 @@ import os
 import sys
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -123,11 +123,9 @@ def _split_by_gtype(df: DataFrame, geom_col: str) -> dict[str, DataFrame]:
     }
 
 
-def _with_fkey(part: DataFrame, geom_col: str) -> DataFrame:
-    """Stable row-unique feature key (see ``operators/keys.py``)."""
-    from changegen_spark.operators.keys import feature_key
-
-    return feature_key(part, geom_col)
+def _union_by_name(frames: list[DataFrame]) -> DataFrame:
+    """Union tables by column name; a column missing from one is null."""
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
 def discover_new_tables(dbdir: str, suffixes: list[str]) -> list[str]:
@@ -148,16 +146,16 @@ def load_new_parts(
     """Load + geometry-dispatch the named feature tables into the pipeline's
     ``new_points`` / ``new_ways`` / ``new_polygons`` parts.
 
-    ``source`` is a ParquetSource/JdbcSource (a plain dbdir string is also
-    accepted for backward compatibility)."""
-    if isinstance(source, str):
-        source = ParquetSource(spark, source)
+    ``source`` is a ParquetSource or JdbcSource."""
+    from changegen_spark.operators.keys import feature_key
+
     points, lines, polys = [], [], []
     for name in table_names:
         df = source.load_geo(name)
         geom_col = "geometry" if "geometry" in df.columns else "geom"
         for gtype, part in _split_by_gtype(df, geom_col).items():
-            keyed = _with_fkey(part, geom_col)
+            # stable row-unique feature key (see operators/keys.py)
+            keyed = feature_key(part, geom_col)
             if gtype == "Point":
                 if "geom" not in keyed.columns:
                     keyed = keyed.withColumnRenamed(geom_col, "geom")
@@ -174,14 +172,8 @@ def load_new_parts(
                     keyed = keyed.withColumnRenamed(geom_col, "geometry")
                 polys.append(keyed.withColumnRenamed("__fkey", "name") if "name" not in keyed.columns else keyed)
 
-    parts: dict[str, DataFrame] = {}
-    if points:
-        parts["new_points"] = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), points)
-    if lines:
-        parts["new_ways"] = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), lines)
-    if polys:
-        parts["new_polygons"] = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), polys)
-    return parts
+    parts = {"new_points": points, "new_ways": lines, "new_polygons": polys}
+    return {name: _union_by_name(frames) for name, frames in parts.items() if frames}
 
 
 def load_extract(spark: SparkSession, osmsrc: str) -> dict[str, DataFrame]:
@@ -199,47 +191,6 @@ def load_extract(spark: SparkSession, osmsrc: str) -> dict[str, DataFrame]:
     if "pbf_ways" not in tables:
         raise SystemExit(f"extract {osmsrc} has no ways (need ways.parquet or a .pbf)")
     return tables
-
-
-def build_tables(
-    spark: SparkSession,
-    dbdir: str,
-    osmsrc: str,
-    suffix: str | list[str],
-    existing: str | list[str] | None,
-    deletions: str | list[str] | None,
-) -> dict[str, DataFrame]:
-    """Assemble the pipeline's table dict from discovered parquet files
-    (merged single-run mode)."""
-    suffixes = [suffix] if isinstance(suffix, str) else list(suffix)
-    source = ParquetSource(spark, dbdir) if isinstance(dbdir, str) else dbdir
-    names = source.discover(suffixes)
-    if not names:
-        raise SystemExit(f"no tables matching *{suffixes} in {source.describe()}")
-    tables = load_new_parts(spark, source, names)
-
-    for ex in _aslist(existing):
-        df = source.load_geo(ex)
-        tables["original_ways"] = (
-            tables["original_ways"].unionByName(df, allowMissingColumns=True)
-            if "original_ways" in tables
-            else df
-        )
-    for dl in _aslist(deletions):
-        df = source.load_plain(dl)
-        tables["deleted_ways"] = (
-            tables["deleted_ways"].unionByName(df, allowMissingColumns=True)
-            if "deleted_ways" in tables
-            else df
-        )
-    tables.update(load_extract(spark, osmsrc))
-    return tables
-
-
-def _aslist(v) -> list[str]:
-    if v is None:
-        return []
-    return [v] if isinstance(v, str) else list(v)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -304,7 +255,7 @@ def main(argv: list[str] | None = None) -> int:
         if str(args.max_nodes_per_way).lower() == "none"
         else int(args.max_nodes_per_way)
     )
-    suffixes = _aslist(args.suffix) or ["_new"]
+    suffixes = args.suffix or ["_new"]
 
     from changegen_spark.operators.changes import assemble_changeset
     from changegen_spark.pipeline import (
@@ -393,13 +344,8 @@ def main(argv: list[str] | None = None) -> int:
         raise SystemExit(f"nothing to do: no tables matching *{suffixes} in {source.describe()} and no --deletions")
 
     ex_tables: dict[str, DataFrame] = {}
-    for ex in _aslist(args.existing):
-        df = source.load_geo(ex)
-        ex_tables["original_ways"] = (
-            ex_tables["original_ways"].unionByName(df, allowMissingColumns=True)
-            if "original_ways" in ex_tables
-            else df
-        )
+    if args.existing:
+        ex_tables["original_ways"] = _union_by_name([source.load_geo(ex) for ex in args.existing])
 
     wrote: list[str] = []
     if args.outdir:
@@ -415,7 +361,7 @@ def main(argv: list[str] | None = None) -> int:
             counts = write_osmchange(elements, out, compress=args.compress)
             print(f"wrote {out}: {counts}", file=sys.stderr)
             wrote.append(out)
-        for dl in _aslist(args.deletions):
+        for dl in args.deletions or []:
             tables = {
                 "deleted_ways": source.load_plain(dl),
                 **extract,
@@ -430,22 +376,14 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # merged single-file mode
-    parts = []
     tables = {**load_new_parts(spark, source, names), **ex_tables, **extract}
-    for dl in _aslist(args.deletions):
-        df = source.load_plain(dl)
-        tables["deleted_ways"] = (
-            tables["deleted_ways"].unionByName(df, allowMissingColumns=True)
-            if "deleted_ways" in tables
-            else df
-        )
+    if args.deletions:
+        tables["deleted_ways"] = _union_by_name([source.load_plain(dl) for dl in args.deletions])
     result = run_one(tables)
-    if result is not None:
-        parts.append(result)
-    if not parts:
+    if result is None:
         raise SystemExit("nothing to do: no new tables, deletions, or modify_meta")
 
-    elements = assemble_changeset(*parts)
+    elements = assemble_changeset(result)
     counts = write_osmchange(elements, args.output, compress=args.compress)
     print(f"wrote {args.output}: {counts}", file=sys.stderr)
     return 0

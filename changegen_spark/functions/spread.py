@@ -105,10 +105,9 @@ def spread_if_narrow(
     if size <= 0:
         return df
     target = min(par, math.ceil(size / bytes_per_task))
-    try:
-        max_split = int(spark.conf.get("spark.sql.files.maxPartitionBytes"))
-    except (TypeError, ValueError):  # pragma: no cover - non-numeric conf
-        max_split = 128 * 1024 * 1024
+    # SQLConf parses byte strings such as "64m"; int() on the raw conf
+    # string would not.
+    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     est_splits = max(1, math.ceil(size / max_split))
     if target <= est_splits:
         return df

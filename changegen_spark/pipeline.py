@@ -27,20 +27,24 @@ ordered XML sink.
 from __future__ import annotations
 
 import contextlib
-import os
-import sys
-import time
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-# Eager local checkpoints (measured, see SCALE.md): each localCheckpoint
-# call pays physical planning + codegen compile at call time whether eager
-# or not, and lazy materialization lets multiple consumers race to compute
-# the same partitions — eager is strictly better here.  Env flip kept for
-# re-measurement.
-CHECKPOINT_EAGER = os.environ.get("CHANGEGEN_LAZY_CKPT", "") != "1"
+from changegen_spark.geo.geometry import exterior, g_type, point_xy
+from changegen_spark.geo.mercator import to_4326_lat, to_4326_lon
+from changegen_spark.geo.segments import explode_segments, segment_distance_join
+from changegen_spark.operators.changes import expand_deleted_ways, tag_change
+from changegen_spark.operators.ids import check_id_collision
+from changegen_spark.operators.keys import feature_key
+from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
+from changegen_spark.operators.ways import (
+    CHUNK_SIZE_DEFAULT,
+    NODE_LIMIT_DEFAULT,
+    cumulative_fraction,
+    line_locate_fraction,
+    split_ways,
+)
 
 # Input size (bytes, Catalyst plan stats) below which the pipeline plans
 # its checkpoint fences WITHOUT whole-stage codegen.  Janino compilation of
@@ -49,9 +53,7 @@ CHECKPOINT_EAGER = os.environ.get("CHANGEGEN_LAZY_CKPT", "") != "1"
 # stays on), but on an interactive small-diff run it IS the latency floor,
 # and interpreted execution of a few thousand rows is equally fast.  The
 # same size-adaptive reasoning as AQE, applied to compile time.
-SMALL_INPUT_CODEGEN_OFF_BYTES = int(
-    os.environ.get("CHANGEGEN_CODEGEN_OFF_BYTES", 256 * 1024 * 1024)
-)
+SMALL_INPUT_CODEGEN_OFF_BYTES = 256 * 1024 * 1024
 
 
 def _inputs_are_small(tables: dict) -> bool:
@@ -95,29 +97,6 @@ def _maybe_interpreted(spark: SparkSession, interpreted: bool):
         for k, v in prev.items():
             spark.conf.set(k, v)
 
-
-@contextlib.contextmanager
-def _timed(label: str):
-    """Phase timing to stderr when CHANGEGEN_TIMING=1 (perf attribution)."""
-    if not os.environ.get("CHANGEGEN_TIMING"):
-        yield
-        return
-    t0 = time.time()
-    yield
-    print(f"[changegen-timing] {label}: {time.time() - t0:.2f}s", file=sys.stderr)
-
-from changegen_spark.geo.geometry import exterior, g_type, interiors
-from changegen_spark.geo.mercator import to_4326_lat, to_4326_lon
-from changegen_spark.geo.segments import explode_segments, segment_distance_join
-from changegen_spark.operators.ids import check_id_collision
-from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
-from changegen_spark.operators.ways import (
-    CHUNK_SIZE_DEFAULT,
-    NODE_LIMIT_DEFAULT,
-    cumulative_fraction,
-    line_locate_fraction,
-    split_ways,
-)
 
 DISTANCE_BUFFER_DEFAULT = 5.0  # changegen/db.py:110 (meters in EPSG:3857)
 PRECISION = 6  # COORDINATE_PRECISION, changegen/generator.py:31
@@ -182,8 +161,6 @@ def synthesize_junctions(
     key_col: str,
     distance_buffer: float = DISTANCE_BUFFER_DEFAULT,
     self_intersections: bool = False,
-    checkpoint: bool = False,
-    eager: bool | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Stage A: (junction_nodes keyed by rounded lon/lat, per-pair junctions).
 
@@ -253,18 +230,15 @@ def synthesize_junctions(
         junctions = junctions.unionByName(self_junctions)
     rlon, rlat = _rounded_lonlat(F.col("jx"), F.col("jy"))
     junctions = junctions.withColumn("rlon", rlon).withColumn("rlat", rlat)
-    if checkpoint:
-        # ONE materialization of the segment-join pipeline; junction_nodes
-        # stays a lazy (trivial) agg over the checkpointed rows — a second
-        # dedicated checkpoint job cost more than the per-consumer re-agg.
-        # (The r1 shape — independent checkpoints of nodes AND junctions —
-        # analyzed and executed the whole segment join twice.)
-        # eager=False + a caller-side async force lets the materialization
-        # job overlap the driver's stage-B/C plan building (r3) — the
-        # lineage fence (LogicalRDD) exists either way.
-        junctions = junctions.localCheckpoint(
-            eager=CHECKPOINT_EAGER if eager is None else eager
-        )
+    # ONE materialization of the segment-join pipeline: every downstream
+    # stage re-references the junction frame, and the segment-join tree is
+    # deep, so the fence bounds Catalyst analysis for all consumers.
+    # junction_nodes stays a lazy (trivial) agg over the fenced rows — a
+    # second dedicated checkpoint job cost more than the per-consumer
+    # re-agg.  Lazy: the fence exists at once, and the rows materialize
+    # inside stage C's eager vertex fence, the frame's single plan-phase
+    # consumer, so no two jobs race to compute them.
+    junctions = junctions.localCheckpoint(eager=False)
     # A3 grid dedup: one node per 6-dp cell
     junction_nodes = junctions.groupBy("rlon", "rlat").agg(
         F.min(to_4326_lon(F.col("jx"))).alias("lon"),
@@ -288,21 +262,91 @@ def _vertices_with_frac(geoms: DataFrame, key_cols: list[str]) -> DataFrame:
     return verts.withColumn("rlon", rlon).withColumn("rlat", rlat)
 
 
+def _junction_inserts(
+    verts: DataFrame, junctions: DataFrame, key: str
+) -> tuple[DataFrame, DataFrame]:
+    """The junctions of each way, and those of them to insert between its
+    vertices: (way_j, inserted).
+
+    ``way_j`` holds ONE row per (way, 6-dp cell): raw jx/jy from different
+    pair joins can differ in low-order bits within the same cell (e.g. a
+    new way crossing an existing way AND another new way at the same spot
+    — the duplicate case the reference dedups, generator.py:132-142); a
+    plain distinct() would keep both and double every vertex row inside
+    the line_locate_fraction window, corrupting the insertion fraction.
+    A junction not coincident with any vertex of its way is ``inserted``
+    at its fractional position along the way (W2/M2)."""
+    way_j = (
+        junctions.groupBy(key, "rlon", "rlat")
+        .agg(F.min_by(F.struct("jx", "jy"), F.struct("jx", "jy")).alias("__j"))
+        .select(key, F.col("__j.jx").alias("jx"), F.col("__j.jy").alias("jy"), "rlon", "rlat")
+    )
+    to_insert = way_j.join(
+        verts.select(key, "rlon", "rlat"), [key, "rlon", "rlat"], "left_anti"
+    )
+    ins_input = verts.select(key, "pos", "x", "y").join(
+        to_insert.select(
+            key,
+            F.col("jx").alias("px"),
+            F.col("jy").alias("py"),
+            F.col("rlon").alias("jrlon"),
+            F.col("rlat").alias("jrlat"),
+        ),
+        key,
+    )
+    inserted = line_locate_fraction(
+        ins_input, [key, "jrlon", "jrlat"], "px", "py"
+    ).select(
+        key,
+        F.col("point_frac").alias("frac"),
+        F.col("jrlon").alias("rlon"),
+        F.col("jrlat").alias("rlat"),
+        F.lit(True).alias("is_junction"),
+        F.lit(None).cast("int").alias("pos"),
+    )
+    return way_j, inserted
+
+
+def _ordered_members(members: DataFrame, key: str, extra: tuple[str, ...] = ()) -> DataFrame:
+    """(key, mseq): each way's members sorted by (frac, junction-after-vertex
+    tie, pos); ``extra`` columns ride along in each member struct."""
+    return members.groupBy(key).agg(
+        F.array_sort(
+            F.collect_list(
+                F.struct(
+                    F.col("frac"),
+                    F.col("is_junction").cast("int").alias("jflag"),
+                    F.coalesce(F.col("pos"), F.lit(0)).alias("pos"),
+                    F.col("rlon"),
+                    F.col("rlat"),
+                    F.col("is_junction"),
+                    *extra,
+                )
+            )
+        ).alias("mseq")
+    )
+
+
+def _ordered_values(order: str, value: str):
+    """Aggregate: the group's ``value`` column listed by ascending ``order``."""
+    return F.transform(
+        F.array_sort(F.collect_list(F.struct(order, value))),
+        lambda s: s.getField(value),
+    )
+
+
 def build_new_ways(
     cs: ChangeSet,
     new_ways: DataFrame,
     junction_nodes: DataFrame,
     junctions: DataFrame,
     key_col: str,
-    tag_exclude: tuple[str, ...] = ("geometry",),
     hstore_col: str | None = None,
-    node_limit: int = NODE_LIMIT_DEFAULT,
-    chunk_size: int = CHUNK_SIZE_DEFAULT,
 ) -> dict[str, DataFrame]:
     """Stage B: create-path ways + their nodes.
 
     Returns dict with 'vertex_nodes' (unmatched vertices needing fresh ids),
-    'way_rows' (nkey, chunk, ordered member keys), 'way_tags'.
+    'ordered_members' (nkey, mseq), 'way_tags'.
     Junction handling: a junction equal to a way vertex at 6 dp reuses the
     junction node (J4, generator.py:430-443); otherwise it is inserted at
     its fractional position (W2/M2, generator.py:208-255,458-487)."""
@@ -310,12 +354,11 @@ def build_new_ways(
         F.col(key_col).alias("nkey"), exterior(F.col("geometry")).alias("__ring")
     )
     # verts feeds four downstream joins; truncating its (windowed) lineage
-    # keeps every consumer's analysis tree shallow
-    verts = _vertices_with_frac(geoms, ["nkey"])
-    if os.environ.get("CHANGEGEN_VERTS_CKPT", "1") == "1":
-        # no barrier needed: verts derive from new_ways only, so this
-        # eager job cannot race the junction materialization
-        verts = verts.localCheckpoint(eager=CHECKPOINT_EAGER)
+    # keeps every consumer's analysis tree shallow.  Eager (measured, see
+    # SCALE.md): a lazy fence lets several consumers race to compute the
+    # same partitions.  verts derive from new_ways only, so this job cannot
+    # race the junction materialization.
+    verts = _vertices_with_frac(geoms, ["nkey"]).localCheckpoint(eager=True)
 
     jn = junction_nodes.select("rlon", "rlat")
     matched = verts.join(jn, ["rlon", "rlat"], "inner").select(
@@ -323,42 +366,7 @@ def build_new_ways(
         F.lit(True).alias("is_junction"),
     )
     unmatched = verts.join(jn, ["rlon", "rlat"], "left_anti")
-
-    # junctions of this way not coincident with any of its vertices → insert.
-    # ONE row per (way, 6-dp cell): raw jx/jy from different pair joins can
-    # differ in low-order bits within the same cell (e.g. a new way crossing
-    # an existing way AND another new way at the same spot — the duplicate
-    # case the reference dedups, generator.py:132-142); a plain distinct()
-    # would keep both and double every vertex row inside the
-    # line_locate_fraction window, corrupting the insertion fraction.
-    way_j = (
-        junctions.groupBy("nkey", "rlon", "rlat")
-        .agg(F.min_by(F.struct("jx", "jy"), F.struct("jx", "jy")).alias("__j"))
-        .select("nkey", F.col("__j.jx").alias("jx"), F.col("__j.jy").alias("jy"), "rlon", "rlat")
-    )
-    to_insert = way_j.join(
-        verts.select("nkey", "rlon", "rlat"), ["nkey", "rlon", "rlat"], "left_anti"
-    )
-    ins_input = verts.select("nkey", "pos", "x", "y").join(
-        to_insert.select(
-            "nkey",
-            F.col("jx").alias("px"),
-            F.col("jy").alias("py"),
-            F.col("rlon").alias("jrlon"),
-            F.col("rlat").alias("jrlat"),
-        ),
-        "nkey",
-    )
-    inserted = line_locate_fraction(
-        ins_input, ["nkey", "jrlon", "jrlat"], "px", "py"
-    ).select(
-        "nkey",
-        F.col("point_frac").alias("frac"),
-        F.col("jrlon").alias("rlon"),
-        F.col("jrlat").alias("rlat"),
-        F.lit(True).alias("is_junction"),
-        F.lit(None).cast("int").alias("pos"),
-    )
+    _, inserted = _junction_inserts(verts, junctions, "nkey")
 
     # id requests for unmatched vertices
     vkey = F.concat_ws(":", F.col("nkey"), F.col("pos"))
@@ -371,35 +379,19 @@ def build_new_ways(
         .unionByName(matched)
         .unionByName(inserted, allowMissingColumns=True)
     )
-    # ordered member list per way (frac, junction-after-vertex tie, pos)
-    ordered = members.groupBy("nkey").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("frac"),
-                    F.col("is_junction").cast("int").alias("jflag"),
-                    F.coalesce(F.col("pos"), F.lit(0)).alias("pos"),
-                    F.col("rlon"),
-                    F.col("rlat"),
-                    F.col("is_junction"),
-                )
-            )
-        ).alias("mseq")
-    )
+    ordered = _ordered_members(members, "nkey")
 
     # key_col stays IN the tag map when it is a real attribute (e.g. name);
     # synthetic "__"-prefixed keys are dropped by _tags_map automatically.
     way_tags = new_ways.select(
         F.col(key_col).alias("nkey"),
-        _tags_map(new_ways, tag_exclude, hstore_col).alias("tags"),
+        _tags_map(new_ways, ("geometry",), hstore_col).alias("tags"),
     )
 
     return {
         "vertex_nodes": unmatched,
         "ordered_members": ordered,
         "way_tags": way_tags,
-        "node_limit": node_limit,
-        "chunk_size": chunk_size,
     }
 
 
@@ -407,7 +399,6 @@ def modify_intersecting_ways(
     existing_ways: DataFrame,
     junctions: DataFrame,
     pbf_ways: DataFrame,
-    ckpt_barrier=None,
 ) -> DataFrame:
     """Stage C: rebuild intersecting existing ways with junction nodes.
 
@@ -416,7 +407,8 @@ def modify_intersecting_ways(
     fractional insertion.  Ways missing from the extract are skipped, the
     reference's logged case (generator.py:820-822).
     Output: (osm_id, member structs sorted) — ids resolved later."""
-    hit_ways = junctions.filter(F.col("osm_id").isNotNull()).select("osm_id").distinct()
+    hit = junctions.filter(F.col("osm_id").isNotNull())
+    hit_ways = hit.select("osm_id").distinct()
     # Polygon intersection-modify is out of contract, matching the
     # reference's logged-unsupported case (changegen/generator.py:836-847):
     # non-LineString existing geometries are excluded from the rebuild.
@@ -429,80 +421,30 @@ def modify_intersecting_ways(
     nds = pbf_ways.select(
         F.col("id").alias("osm_id"), F.posexplode("nds").alias("pos", "node_id")
     )
-    # missing pbf → skipped; checkpoint: same multi-consumer fan-out as the
-    # create path
-    verts = verts.join(nds, ["osm_id", "pos"], "inner")
-    if os.environ.get("CHANGEGEN_VERTS_CKPT", "1") == "1":
-        if ckpt_barrier is not None:
-            # this subtree consumes the junction frame (hit_ways): wait for
-            # its async materialization so a lazy junction checkpoint is
-            # never computed twice by racing consumers
-            ckpt_barrier()
-        verts = verts.localCheckpoint(eager=CHECKPOINT_EAGER)
+    # missing pbf → skipped; eager fence: the same multi-consumer fan-out
+    # as the create path.  Its job also materializes the lazy junction
+    # fence (this subtree reads hit_ways).
+    verts = verts.join(nds, ["osm_id", "pos"], "inner").localCheckpoint(eager=True)
 
-    # Same one-row-per-(way, cell) dedup as the create path: low-order jx/jy
-    # jitter within a 6-dp cell must not duplicate insert candidates.
-    way_j = (
-        junctions.filter(F.col("osm_id").isNotNull())
-        .groupBy("osm_id", "rlon", "rlat")
-        .agg(F.min_by(F.struct("jx", "jy"), F.struct("jx", "jy")).alias("__j"))
-        .select("osm_id", F.col("__j.jx").alias("jx"), F.col("__j.jy").alias("jy"), "rlon", "rlat")
+    way_j, inserted = _junction_inserts(verts, hit, "osm_id")
+    # unlike the create path's global junction cells, a vertex here matches
+    # only the junction cells of its own way
+    cells = way_j.select("osm_id", "rlon", "rlat").distinct()
+    matched = verts.join(cells, ["osm_id", "rlon", "rlat"], "inner").select(
+        "osm_id", "pos", "frac", "rlon", "rlat", F.lit(True).alias("is_junction")
     )
-    matched = verts.join(
-        way_j.select("osm_id", "rlon", "rlat").distinct(), ["osm_id", "rlon", "rlat"], "inner"
-    ).select("osm_id", "pos", "frac", "rlon", "rlat", F.lit(True).alias("is_junction"))
-    unmatched = verts.join(
-        way_j.select("osm_id", "rlon", "rlat").distinct(), ["osm_id", "rlon", "rlat"], "left_anti"
-    ).select(
+    unmatched = verts.join(cells, ["osm_id", "rlon", "rlat"], "left_anti").select(
         "osm_id", "pos", "frac", "rlon", "rlat",
         F.lit(False).alias("is_junction"), F.col("node_id"),
     )
 
-    to_insert = way_j.join(
-        verts.select("osm_id", "rlon", "rlat"), ["osm_id", "rlon", "rlat"], "left_anti"
-    )
-    ins_input = verts.select("osm_id", "pos", "x", "y").join(
-        to_insert.select(
-            "osm_id",
-            F.col("jx").alias("px"),
-            F.col("jy").alias("py"),
-            F.col("rlon").alias("jrlon"),
-            F.col("rlat").alias("jrlat"),
-        ),
-        "osm_id",
-    )
-    inserted = line_locate_fraction(
-        ins_input, ["osm_id", "jrlon", "jrlat"], "px", "py"
-    ).select(
-        "osm_id",
-        F.col("point_frac").alias("frac"),
-        F.col("jrlon").alias("rlon"),
-        F.col("jrlat").alias("rlat"),
-        F.lit(True).alias("is_junction"),
-        F.lit(None).cast("int").alias("pos"),
-        F.lit(None).cast("long").alias("node_id"),
-    )
-
+    no_node = F.lit(None).cast("long")
     members = (
         unmatched
-        .unionByName(matched.withColumn("node_id", F.lit(None).cast("long")), allowMissingColumns=True)
-        .unionByName(inserted)
+        .unionByName(matched.withColumn("node_id", no_node), allowMissingColumns=True)
+        .unionByName(inserted.withColumn("node_id", no_node))
     )
-    return members.groupBy("osm_id").agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("frac"),
-                    F.col("is_junction").cast("int").alias("jflag"),
-                    F.coalesce(F.col("pos"), F.lit(0)).alias("pos"),
-                    F.col("rlon"),
-                    F.col("rlat"),
-                    F.col("is_junction"),
-                    F.col("node_id"),
-                )
-            )
-        ).alias("mseq")
-    )
+    return _ordered_members(members, "osm_id", extra=("node_id",))
 
 
 def generate_changes(
@@ -536,26 +478,19 @@ def generate_changes(
     reference (the CLI's ``--reference-bytes``)."""
     import concurrent.futures
 
-    from changegen_spark.operators.changes import expand_deleted_ways
     from changegen_spark.sources.osm import max_pbf_ids
 
     # Overlapped head (r3, measured on scale_smoke 300×200): the max-id
     # scan runs as an EXECUTOR-side job while the driver builds the
     # junction plan — py4j/Catalyst work — removing ~2 s of serial
-    # wall-clock.  The junction checkpoint is created LAZY (the LogicalRDD
-    # lineage fence exists immediately, bounding every consumer's analysis
-    # tree) and materializes inside stage C's eager checkpoint job — the
-    # single plan-phase consumer of the junction frame, so no duplicate
-    # compute and one fused job instead of two.  Stage B's checkpoint
-    # derives from new_ways only and safely runs concurrently.  Collision
-    # check stays fail-fast: its result is read before any output exists.
+    # wall-clock.  Collision check stays fail-fast: its result is read
+    # before any output exists.
     pool = concurrent.futures.ThreadPoolExecutor(max_workers=4)
     fut_maxids = pool.submit(max_pbf_ids, tables) if check_collision else None
 
     cs = ChangeSet(spark)
     new_ways = tables.get("new_ways")
     existing = tables.get("original_ways")
-    way_key_col = key_col
 
     # Small inputs: plan the checkpoint fences interpreted (see
     # SMALL_INPUT_CODEGEN_OFF_BYTES) — the conf stays off through the
@@ -572,16 +507,10 @@ def generate_changes(
     try:
         # A: junctions (single evaluation serves J1 closest-points AND J2 ids)
         if new_ways is not None and existing is not None:
-            # checkpoint=True truncates lineage inside: every downstream stage
-            # re-references the junction frames many times, and the segment-join
-            # expression tree is deep — one materialization bounds Catalyst
-            # analysis cost for all consumers.
-            with _timed("A:junctions(build)"):
-                junction_nodes, junctions = synthesize_junctions(
-                    new_ways, existing, key_col=way_key_col,
-                    distance_buffer=distance_buffer, self_intersections=self_intersections,
-                    checkpoint=True, eager=False,
-                )
+            junction_nodes, junctions = synthesize_junctions(
+                new_ways, existing, key_col=key_col,
+                distance_buffer=distance_buffer, self_intersections=self_intersections,
+            )
         else:
             junction_nodes = spark.createDataFrame(
                 [], "rlon double, rlat double, lon double, lat double"
@@ -593,15 +522,12 @@ def generate_changes(
         cs.request_ids(junction_nodes, _K_JUNCTION, jkey)
 
         if fut_maxids is not None:
-            with _timed("head:max_pbf_ids"):
-                maxids = fut_maxids.result()
+            maxids = fut_maxids.result()
             check_id_collision(max(maxids.values()), id_offset, negative_ids)
 
         # B: new ways.  Way splitting happens on the member-KEY sequences, so
         # way ids can be requested in the same single resolve as node ids (the
         # chunk count depends only on member counts, not on resolved ids).
-        nb = None
-        chunked_members = None
         wkey = F.concat_ws(":", F.col("nkey"), F.col("chunk"))
         # Stages B and C are independent once the junction frame is
         # materialized; each ends in an eager localCheckpoint (a separate Spark
@@ -611,9 +537,8 @@ def generate_changes(
         # resolve() orders by (kind, key), so request order is immaterial.
         def _stage_b():
             nb_ = build_new_ways(
-                cs, new_ways, junction_nodes, junctions, key_col=way_key_col,
+                cs, new_ways, junction_nodes, junctions, key_col=key_col,
                 hstore_col=hstore_col,
-                node_limit=node_limit, chunk_size=chunk_size,
             )
             cm = split_ways(
                 nb_["ordered_members"], nds_col="mseq",
@@ -648,9 +573,6 @@ def generate_changes(
                 # (generator.py:608-621); an explicit --hstore overrides.
                 hstore_col=hstore_col if hstore_col is not None else "tags",
             )
-            from changegen_spark.geo.geometry import point_xy
-            from changegen_spark.operators.keys import feature_key
-
             # Row key: the id column when present AND non-null; else a
             # row-unique feature hash.  The reference iterates per-FID so a
             # NULL id column (e.g. its own new_points fixture) still yields one
@@ -678,20 +600,16 @@ def generate_changes(
             cs.request_ids(poly_parts["relations"], _K_RELATION, F.col("pkey"))
 
         # G: deletions
-        del_ways = del_nodes = None
+        del_elems = []
         if tables.get("deleted_ways") is not None:
-            del_ways, del_nodes = expand_deleted_ways(
-                tables["deleted_ways"], tables["pbf_ways"], skip_nodes=skip_delete_nodes
-            )
+            del_elems = _deletion_elements(tables, skip_delete_nodes)
 
         # join the overlapped B/C stages
         if fut_b is not None:
-            with _timed("B:build_new_ways"):
-                nb, chunked_members = fut_b.result()
+            nb, chunked_members = fut_b.result()
             cs.request_ids(chunked_members, _K_WAY, wkey)
         if fut_c is not None:
-            with _timed("C:modify_intersecting"):
-                mod_ways_seq = fut_c.result()
+            mod_ways_seq = fut_c.result()
             # hstore expansion applies to intersecting-way modifies exactly
             # as it does to new features (generator.py:190-203 → :812).
             mod_excl = (
@@ -710,8 +628,7 @@ def generate_changes(
         codegen_scope.__exit__(None, None, None)
 
     # --- resolve ids and assemble elements ---
-    with _timed("ids:resolve"):
-        ids = cs.resolve(id_offset, negative_ids).cache()
+    ids = cs.resolve(id_offset, negative_ids).cache()
 
     def with_id(df: DataFrame, kind: int, skey) -> DataFrame:
         keyed = df.withColumn("__skey", skey.cast("string"))
@@ -722,38 +639,34 @@ def generate_changes(
 
     empty_tags = F.create_map().cast("map<string,string>")
 
-    junction_node_elems = with_id(junction_nodes, _K_JUNCTION, jkey).select(
-        F.lit("create").alias("change_type"),
-        F.lit("node").alias("kind"),
-        F.col("new_id").alias("id"),
-        F.lit(1).alias("version"),
-        "lat", "lon",
-        empty_tags.alias("tags"),
-    )
-
-    vkey = F.concat_ws(":", F.col("nkey"), F.col("pos"))
-    vertex_elems = None
-    if nb is not None:
-        vertex_elems = with_id(nb["vertex_nodes"], _K_VERTEX, vkey).select(
-            F.lit("create").alias("change_type"),
+    creates = [
+        with_id(junction_nodes, _K_JUNCTION, jkey).select(
             F.lit("node").alias("kind"),
             F.col("new_id").alias("id"),
-            F.lit(1).alias("version"),
-            to_4326_lat(F.col("y")).alias("lat"),
-            to_4326_lon(F.col("x")).alias("lon"),
+            "lat", "lon",
             empty_tags.alias("tags"),
         )
+    ]
 
-    point_elems = None
+    vkey = F.concat_ws(":", F.col("nkey"), F.col("pos"))
+    if nb is not None:
+        creates.append(
+            with_id(nb["vertex_nodes"], _K_VERTEX, vkey).select(
+                F.lit("node").alias("kind"),
+                F.col("new_id").alias("id"),
+                to_4326_lat(F.col("y")).alias("lat"),
+                to_4326_lon(F.col("x")).alias("lon"),
+                empty_tags.alias("tags"),
+            )
+        )
+
     if pts is not None:
-        point_elems = with_id(
-            pts, _K_POINT, F.concat(F.lit("pt:"), F.col("pt_id"))
-        ).select(
-            F.lit("create").alias("change_type"),
-            F.lit("node").alias("kind"),
-            F.col("new_id").alias("id"),
-            F.lit(1).alias("version"),
-            "lat", "lon", "tags",
+        creates.append(
+            with_id(pts, _K_POINT, F.concat(F.lit("pt:"), F.col("pt_id"))).select(
+                F.lit("node").alias("kind"),
+                F.col("new_id").alias("id"),
+                "lat", "lon", "tags",
+            )
         )
 
     # new-way member resolution: junction members → junction node ids,
@@ -761,9 +674,7 @@ def generate_changes(
     jids = with_id(junction_nodes, _K_JUNCTION, jkey).select(
         "rlon", "rlat", F.col("new_id").alias("jid")
     )
-    with_id2 = with_id  # single resolve covers every element kind
 
-    new_way_elems = None
     if chunked_members is not None:
         vids = with_id(nb["vertex_nodes"], _K_VERTEX, vkey).select(
             "nkey", "pos", F.col("new_id").alias("vid")
@@ -784,22 +695,19 @@ def generate_changes(
             .withColumn("node_ref", F.when(F.col("is_junction"), F.col("jid")).otherwise(F.coalesce("vid", "jid")))
         )
         chunk_nds = mem.groupBy("nkey", "chunk", "way_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", "node_ref"))),
-                lambda s: s.getField("node_ref"),
-            ).alias("nds")
+            _ordered_values("seq", "node_ref").alias("nds")
         )
-        new_way_elems = chunk_nds.join(nb["way_tags"], "nkey").select(
-            F.lit("create").alias("change_type"),
-            F.lit("way").alias("kind"),
-            F.col("way_id").alias("id"),
-            F.lit(1).alias("version"),
-            "nds", "tags",
+        creates.append(
+            chunk_nds.join(nb["way_tags"], "nkey").select(
+                F.lit("way").alias("kind"),
+                F.col("way_id").alias("id"),
+                "nds", "tags",
+            )
         )
+    parts = [tag_change(df, "create") for df in creates]
 
     # modified existing ways: junction members → junction ids, vertex
     # members keep their PBF node id unless junction-replaced
-    mod_way_elems = None
     if mod_ways_seq is not None:
         mmem = mod_ways_seq.select(
             "osm_id", F.posexplode("mseq").alias("seq", "m")
@@ -813,59 +721,40 @@ def generate_changes(
             "node_ref", F.when(F.col("is_junction"), F.col("jid")).otherwise(F.col("node_id"))
         )
         mod_nds = mmem.groupBy("osm_id").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("seq", "node_ref"))),
-                lambda s: s.getField("node_ref"),
-            ).alias("nds")
+            _ordered_values("seq", "node_ref").alias("nds")
         )
-        mod_way_elems = mod_nds.join(mod_way_tags, "osm_id").select(
-            F.lit("modify").alias("change_type"),
+        mod_ways = mod_nds.join(mod_way_tags, "osm_id").select(
             F.lit("way").alias("kind"),
             F.col("osm_id").alias("id"),
-            F.lit(2).alias("version"),
             "nds", "tags",
         )
+        parts.append(tag_change(mod_ways, "modify"))
 
-    # deletions (version 99 placeholder, generator.py:919-925)
-    del_way_elems = del_node_elems = None
-    if del_ways is not None:
-        del_way_elems = del_ways.select(
-            F.lit("delete").alias("change_type"),
-            F.lit("way").alias("kind"),
-            F.col("id"),
-            F.lit(99).alias("version"),
-            empty_tags.alias("tags"),
-        )
-        del_node_elems = del_nodes.select(
-            F.lit("delete").alias("change_type"),
-            F.lit("node").alias("kind"),
-            F.col("id"),
-            F.lit(99).alias("version"),
-            F.lit(0.0).alias("lat"),
-            F.lit(0.0).alias("lon"),
-            empty_tags.alias("tags"),
-        )
-
-    with _timed("tail:union"):
-        parts = [
-        p
-        for p in (
-            junction_node_elems,
-            vertex_elems,
-            point_elems,
-            new_way_elems,
-            mod_way_elems,
-            del_way_elems,
-            del_node_elems,
-        )
-        if p is not None
-    ]
+    parts.extend(del_elems)
     if poly_parts is not None:
-        parts.extend(_assemble_polygons(poly_parts, with_id2, with_id))
+        parts.extend(_assemble_polygons(poly_parts, with_id))
 
     from changegen_spark.operators.changes import assemble_changeset
 
     return assemble_changeset(*parts)
+
+
+def _deletion_elements(tables: dict[str, DataFrame], skip_nodes: bool) -> list[DataFrame]:
+    """C5 way deletes, plus node deletes unless ``skip_nodes``: version 99
+    placeholder, lat/lon 0 on nodes (changegen/generator.py:919-925)."""
+    empty_tags = F.create_map().cast("map<string,string>")
+    ways, nodes = expand_deleted_ways(
+        tables["deleted_ways"], tables["pbf_ways"], skip_nodes=skip_nodes
+    )
+    way_elems = ways.select(F.lit("way").alias("kind"), F.col("id"), empty_tags.alias("tags"))
+    node_elems = nodes.select(
+        F.lit("node").alias("kind"),
+        F.col("id"),
+        F.lit(0.0).alias("lat"),
+        F.lit(0.0).alias("lon"),
+        empty_tags.alias("tags"),
+    )
+    return [tag_change(way_elems, "delete"), tag_change(node_elems, "delete")]
 
 
 def _build_polygons(cs: ChangeSet, polys: DataFrame) -> dict[str, DataFrame]:
@@ -907,37 +796,30 @@ def _build_polygons(cs: ChangeSet, polys: DataFrame) -> dict[str, DataFrame]:
     return {"verts": verts, "rings": rings, "relations": relations, "tags": tags}
 
 
-def _assemble_polygons(pp, with_id2, with_id) -> list[DataFrame]:
+def _assemble_polygons(pp, with_id) -> list[DataFrame]:
     """Stage E finish: nodes, closed ways, multipolygon relations."""
     empty_tags = F.create_map().cast("map<string,string>")
     nkey = F.concat_ws(":", F.lit("poly"), F.col("pkey"), F.col("ring_idx"), F.col("pos"))
     vid = with_id(pp["verts"], _K_POINT, nkey)
     node_elems = vid.select(
-        F.lit("create").alias("change_type"),
         F.lit("node").alias("kind"),
         F.col("new_id").alias("id"),
-        F.lit(1).alias("version"),
         to_4326_lat(F.col("y")).alias("lat"),
         to_4326_lon(F.col("x")).alias("lon"),
         empty_tags.alias("tags"),
     )
     # ordered nds per ring, closed by repeating the first node (M4)
     ring_nds = vid.groupBy("pkey", "ring_idx").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "new_id"))),
-            lambda s: s.getField("new_id"),
-        ).alias("open_nds")
+        _ordered_values("pos", "new_id").alias("open_nds")
     ).withColumn("nds", F.concat(F.col("open_nds"), F.slice(F.col("open_nds"), 1, 1)))
 
-    rid = with_id2(pp["rings"], _K_WAY, F.col("ring_key")).join(
+    rid = with_id(pp["rings"], _K_WAY, F.col("ring_key")).join(
         ring_nds, ["pkey", "ring_idx"]
     )
     simple_tags = pp["tags"].filter(F.col("__n_int") == 0).select("pkey", "tags")
     way_elems = rid.join(simple_tags, "pkey", "left").select(
-        F.lit("create").alias("change_type"),
         F.lit("way").alias("kind"),
         F.col("new_id").alias("id"),
-        F.lit(1).alias("version"),
         "nds",
         F.coalesce(F.col("tags"), empty_tags).alias("tags"),
     )
@@ -953,10 +835,7 @@ def _assemble_polygons(pp, with_id2, with_id) -> list[DataFrame]:
         "ring_idx",
     )
     rel_members = rel_members.groupBy("pkey").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct(F.col("ring_idx"), F.col("m")))),
-            lambda s: s.getField("m"),
-        ).alias("members")
+        _ordered_values("ring_idx", "m").alias("members")
     )
     holed_tags = pp["tags"].filter(F.col("__n_int") > 0).select(
         "pkey",
@@ -966,18 +845,16 @@ def _assemble_polygons(pp, with_id2, with_id) -> list[DataFrame]:
         ).alias("tags"),
     )
     rel_elems = (
-        with_id2(pp["relations"], _K_RELATION, F.col("pkey"))
+        with_id(pp["relations"], _K_RELATION, F.col("pkey"))
         .join(rel_members, "pkey")
         .join(holed_tags, "pkey")
         .select(
-            F.lit("create").alias("change_type"),
             F.lit("relation").alias("kind"),
             F.col("new_id").alias("id"),
-            F.lit(1).alias("version"),
             "members", "tags",
         )
     )
-    return [node_elems, way_elems, rel_elems]
+    return [tag_change(df, "create") for df in (node_elems, way_elems, rel_elems)]
 
 
 def generate_relation_changes(
@@ -1029,29 +906,19 @@ def generate_relation_changes(
             if "members" in mod.columns
             else F.col("__pbf_members")
         )
-        parts.append(
-            joined.select(
-                F.lit("modify").alias("change_type"),
-                F.lit("relation").alias("kind"),
-                F.col("osm_id").alias("id"),
-                F.lit(2).alias("version"),
-                members.alias("members"),
-                "tags",
-            )
+        rels = joined.select(
+            F.lit("relation").alias("kind"),
+            F.col("osm_id").alias("id"),
+            members.alias("members"),
+            "tags",
         )
+        parts.append(tag_change(rels, "modify"))
 
     dels = tables.get(del_table)
     if dels is not None:
         ids = dels.select(F.col("osm_id").cast("long").alias("id")).distinct()
-        parts.append(
-            ids.select(
-                F.lit("delete").alias("change_type"),
-                F.lit("relation").alias("kind"),
-                "id",
-                F.lit(99).alias("version"),
-                empty_tags.alias("tags"),
-            )
-        )
+        rels = ids.select(F.lit("relation").alias("kind"), "id", empty_tags.alias("tags"))
+        parts.append(tag_change(rels, "delete"))
     if not parts:
         raise ValueError(f"neither {mod_table} nor {del_table} present in tables")
     return assemble_changeset(*parts)
@@ -1074,13 +941,12 @@ def generate_modify_meta(
     )
     keyed = mod.select(F.col("osm_id"), tags.alias("tags"))
     pbf = tables["pbf_ways"].select(F.col("id").alias("osm_id"), "nds")
-    return keyed.join(pbf, "osm_id", "inner").select(  # missing pbf → skipped
-        F.lit("modify").alias("change_type"),
+    ways = keyed.join(pbf, "osm_id", "inner").select(  # missing pbf → skipped
         F.lit("way").alias("kind"),
         F.col("osm_id").alias("id"),
-        F.lit(2).alias("version"),
         "nds", "tags",
     )
+    return tag_change(ways, "modify")
 
 
 def generate_modify_points(
@@ -1090,20 +956,17 @@ def generate_modify_points(
 ) -> DataFrame:
     """C2 node-modify path (generator.py:608-621): keyed by osm_id,
     version 2, osm_id dropped from tags (P5)."""
-    from changegen_spark.geo.geometry import point_xy
-
     mod = tables[table_name]
     tags = _tags_map(mod, exclude=("id", "osm_id", "geom"), hstore_col="tags")
     px, py = point_xy(F.col("geom"))
-    return mod.select(
-        F.lit("modify").alias("change_type"),
+    nodes = mod.select(
         F.lit("node").alias("kind"),
         F.col("osm_id").alias("id"),
-        F.lit(2).alias("version"),
         to_4326_lat(py).alias("lat"),
         to_4326_lon(px).alias("lon"),
         tags.alias("tags"),
     )
+    return tag_change(nodes, "modify")
 
 
 def generate_deletions(
@@ -1112,28 +975,6 @@ def generate_deletions(
     skip_nodes: bool = True,
 ) -> DataFrame:
     """C5 standalone deletion flow (changegen/generator.py:876-927)."""
-    from changegen_spark.operators.changes import expand_deleted_ways
-
-    empty_tags = F.create_map().cast("map<string,string>")
-    ways, nodes = expand_deleted_ways(
-        tables["deleted_ways"], tables["pbf_ways"], skip_nodes=skip_nodes
-    )
-    way_elems = ways.select(
-        F.lit("delete").alias("change_type"),
-        F.lit("way").alias("kind"),
-        F.col("id"),
-        F.lit(99).alias("version"),
-        empty_tags.alias("tags"),
-    )
-    node_elems = nodes.select(
-        F.lit("delete").alias("change_type"),
-        F.lit("node").alias("kind"),
-        F.col("id"),
-        F.lit(99).alias("version"),
-        F.lit(0.0).alias("lat"),
-        F.lit(0.0).alias("lon"),
-        empty_tags.alias("tags"),
-    )
     from changegen_spark.operators.changes import assemble_changeset
 
-    return assemble_changeset(way_elems, node_elems)
+    return assemble_changeset(*_deletion_elements(tables, skip_nodes))

@@ -87,9 +87,9 @@ def _term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trigram-count UDF is CPU-bound Python inside the scan stage, and
     # locally the documents table is one parquet split, so the whole tf
     # pass (and the tfs fence materialization feeding it) would serialize
-    # on one core.  The per-doc Counter work is in the minhash cost
-    # regime, so the 16 KiB/task dial keeps the full-parallelism target
-    # that won the r13 A/B (3.23 -> 2.97 s); at scale splits >= cores and
+    # on one core.  The per-doc Counter work is in the medium cost regime:
+    # TRIGRAM_BYTES_PER_TASK (64 KiB/task, the r14 A/B winner recorded in
+    # functions/spread.py) sets the spread; at scale splits >= cores and
     # this is a no-op (text is never shuffled).
     from changegen_spark.functions.spread import (
         TRIGRAM_BYTES_PER_TASK,

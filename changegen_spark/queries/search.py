@@ -41,11 +41,6 @@ BM25_TERMS = ("spark", "join", "fast")
 BM25_K1 = 1.2
 BM25_B = 0.75
 BM25_TOPK = 20
-# Build-time dial for the bm25_scored one-pass fence (r13 verdict #4: the
-# fence helped q_bm25_multi but was suspected of pessimizing the single-
-# scorer consumers) — flipped by tools/ab_interleave.py; the shipped value
-# is the A/B winner recorded in OPTIMIZATION_r14.md.
-BM25_FENCE = True
 
 
 def bm25_scored(spark: SparkSession, sf_dir: str, topk: int) -> DataFrame:
@@ -70,9 +65,7 @@ def bm25_scored(spark: SparkSession, sf_dir: str, topk: int) -> DataFrame:
         "doc_id",
         F.size(toks).alias("dl"),
         F.filter(toks, lambda x: x.isin(*terms)).alias("mt"),
-    )
-    if BM25_FENCE:
-        base = base.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     lens = base.select("doc_id", "dl")
     stats = lens.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")

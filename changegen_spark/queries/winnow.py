@@ -47,10 +47,6 @@ from changegen_spark.sources.tables import load_table
 WINNOW_K = 4  # word-gram order
 WINNOW_W = 5  # hashes per winnowing window; guarantee length = W + K - 1 = 8
 MIN_SHARED = 3  # pair-candidate reporting threshold
-# Build-time dial (tools/ab_interleave.py): fence the selected-fingerprint
-# rows so the Arrow winnowing pass runs once per q_winnow_pairs run instead
-# of once per self-join side — shipped value is the A/B winner (r14).
-WINNOW_PAIR_FENCE = True
 
 
 def _winnow_doc(t: str | None, k: int, w: int) -> tuple[int, list[tuple[int, str]]]:
@@ -231,13 +227,14 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # q_winnow_pairs_final_after.txt pre-fence).  A lazy checkpoint fence
     # on the exploded (doc_id, fh) rows — KBs per document, never text —
     # guarantees ONE winnowing pass per run; both join sides read the
-    # fenced RDD.
+    # fenced RDD.  Caveat: the fence pins the whole exploded (doc_id, fh)
+    # set in executor-local storage and drops its lineage, so the set is
+    # not recomputed after an executor is lost — a fault-tolerance gap
+    # that grows with the pinned set at the 100 TB scale.
     hv = _doc_fps(spark, sf_dir).select(
         "doc_id",
         F.explode(F.array_distinct(F.col("fps").getField("fh"))).alias("fh"),
-    )
-    if WINNOW_PAIR_FENCE:
-        hv = hv.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     return (
         hv.alias("a")
         .join(

@@ -65,6 +65,25 @@ _CHANGE_ORDER = {"create": 0, "modify": 1, "delete": 2}
 _KIND_ORDER = {"node": 0, "way": 1, "relation": 2}
 
 
+def _to_element_schema(elements: DataFrame) -> DataFrame:
+    """The ``ELEMENT_SCHEMA`` columns in order; absent ones are typed nulls."""
+    return elements.select(
+        *[
+            F.col(f.name) if f.name in elements.columns
+            else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in ELEMENT_SCHEMA.fields
+        ]
+    )
+
+
+def _rank(order: dict[str, int], col: str):
+    """``order[col]`` as a column: the sort rank of a block or kind name."""
+    return F.element_at(
+        F.create_map(*[x for k, v in order.items() for x in (F.lit(k), F.lit(v))]),
+        F.col(col),
+    )
+
+
 def _esc(s: str) -> str:
     """XML attribute-value escaping (double-quoted attributes).
 
@@ -180,16 +199,8 @@ def write_osmchange_sharded(
 
     from pyspark.sql.types import StringType, StructField as SF, StructType as ST
 
-    missing = set(f.name for f in ELEMENT_SCHEMA.fields) - set(elements.columns)
-    for col in missing:
-        elements = elements.withColumn(
-            col, F.lit(None).cast(ELEMENT_SCHEMA[col].dataType)
-        )
-    elements = elements.select(*[f.name for f in ELEMENT_SCHEMA.fields])
-    order_kind = F.element_at(
-        F.create_map(*[x for k, v in _KIND_ORDER.items() for x in (F.lit(k), F.lit(v))]),
-        F.col("kind"),
-    )
+    elements = _to_element_schema(elements)
+    order_kind = _rank(_KIND_ORDER, "kind")
 
     def serialize(batches):
         import pandas as pd
@@ -272,21 +283,8 @@ def write_osmchange(
     sort is distributed (``orderBy`` before ``toLocalIterator``); the driver
     only streams.
     """
-    missing = set(f.name for f in ELEMENT_SCHEMA.fields) - set(elements.columns)
-    for col in missing:
-        elements = elements.withColumn(
-            col, F.lit(None).cast(ELEMENT_SCHEMA[col].dataType)
-        )
-    order_ct = F.element_at(
-        F.create_map(*[x for k, v in _CHANGE_ORDER.items() for x in (F.lit(k), F.lit(v))]),
-        F.col("change_type"),
-    )
-    order_kind = F.element_at(
-        F.create_map(*[x for k, v in _KIND_ORDER.items() for x in (F.lit(k), F.lit(v))]),
-        F.col("kind"),
-    )
-    ordered = elements.select(*[f.name for f in ELEMENT_SCHEMA.fields]).orderBy(
-        order_ct, order_kind, F.col("id")
+    ordered = _to_element_schema(elements).orderBy(
+        _rank(_CHANGE_ORDER, "change_type"), _rank(_KIND_ORDER, "kind"), F.col("id")
     )
 
     counts = {"create": 0, "modify": 0, "delete": 0}

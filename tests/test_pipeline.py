@@ -4,6 +4,7 @@ changefile, test/test_generator.py:94-230 — but with counts fixed by fixture
 construction per FIXTURES.md §8)."""
 
 import gzip
+import hashlib
 import os
 import xml.etree.ElementTree as ET
 
@@ -21,6 +22,9 @@ GOLDEN_CREATE_RELATIONS = 1
 GOLDEN_MODIFY_WAYS = 6
 GOLDEN_DELETE_WAYS = 2
 ID_OFFSET = 20_000
+# sha256 of the fixture run's whole .osc: pins ids, element order, tags,
+# node lists and polygons byte for byte
+GOLDEN_OSC_SHA256 = "5520f3cdfb731b41215a88540af6803b7ce34c90e7dc4a803405062d39a2d4e6"
 
 
 @pytest.fixture(scope="module")
@@ -170,6 +174,8 @@ def test_xml_sink_roundtrip(changeset, tmp_path):
     assert away.find("nd") is not None
     anode = root.find("./modify/way")
     assert anode.attrib["version"] == "2"
+    with open(out, "rb") as f:
+        assert hashlib.sha256(f.read()).hexdigest() == GOLDEN_OSC_SHA256
 
 
 def test_xml_sink_gzip(changeset, tmp_path):

@@ -49,3 +49,19 @@ def test_identity_when_size_unknown(spark):
     df = spark.range(10)  # in-memory: no input files
     assert scan_input_bytes(df) == 0
     assert spread_if_narrow(df, "id", 1) is df
+
+
+def test_byte_string_max_partition_bytes(spark, docs_scan):
+    """``spark.sql.files.maxPartitionBytes`` given as "64m" sizes the split
+    estimate at 64 MiB: a 100 MiB scan is then 2 splits, already as many as
+    a 2-task target, so the helper is identity (a 128 MiB fallback would
+    estimate 1 split and repartition)."""
+    mib = 1024 * 1024
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "64m")
+    try:
+        out = spread_if_narrow(docs_scan, "doc_id", 60 * mib, scan_bytes=100 * mib)
+    finally:
+        spark.conf.set(key, prev)
+    assert out is docs_scan

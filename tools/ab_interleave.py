@@ -16,7 +16,8 @@ Examples:
       changegen_spark.functions.spread:CDC_BYTES_PER_TASK=4194304,16384 \
       q_cdc_chunks
   python tools/ab_interleave.py 6 \
-      changegen_spark.queries.search:BM25_FENCE=True,False q_hybrid_search
+      changegen_spark.functions.spread:TRIGRAM_BYTES_PER_TASK=65536,16384 \
+      q_related_docs
 
 Dial values are parsed with ``ast.literal_eval``.  The dial must be read
 at query-BUILD time (constants imported inside the function body, module
@@ -35,10 +36,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CANARY_IDLE = 0.76  # bench.IDLE_CALIB_PAR_S
 # r13 third-session methodology: discard unless both canary reads < 1.2 s
 # ABSOLUTE (the box's mild-throttle floor sits ~0.9-1.1; a ratio gate on
-# the 0.76 idle constant discards everything in those windows)
+# bench.IDLE_CALIB_PAR_S, 0.76 s, discards everything in those windows)
 CANARY_MAX_S = 1.2
 
 

@@ -103,9 +103,7 @@ def main() -> None:
     t0 = time.time()
     spark.range(1 << 20).groupBy((F.col("id") % 7).alias("k")).count().collect()
     mini = build_network(spark, 2, 2)
-    _, mj = synthesize_junctions(
-        mini["new_ways"], mini["original_ways"], key_col="name", checkpoint=True
-    )
+    _, mj = synthesize_junctions(mini["new_ways"], mini["original_ways"], key_col="name")
     mj.count()
     t_warm = time.time() - t0
 
