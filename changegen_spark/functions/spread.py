@@ -70,23 +70,52 @@ POSGRAM_BYTES_PER_TASK = 64 * 1024
 CDC_BYTES_PER_TASK = 4 * 1024 * 1024
 
 
-def scan_input_bytes(df: DataFrame) -> int:
-    """Total on-disk bytes of the frame's input files, or 0 when unknown
-    (in-memory frames, non-local filesystems)."""
+def scan_file_sizes(df: DataFrame) -> list[int]:
+    """On-disk bytes of each of the frame's input files, or ``[]`` when
+    unknown (in-memory frames, non-local filesystems)."""
     try:
         files = df.inputFiles()
     except Exception:  # pragma: no cover - defensive (Connect, exotic plans)
-        return 0
-    total = 0
+        return []
+    sizes = []
     for uri in files:
         p = urlparse(uri)
         if p.scheme not in ("", "file"):
-            return 0
+            return []
         try:
-            total += os.path.getsize(unquote(p.path))
+            sizes.append(os.path.getsize(unquote(p.path)))
         except OSError:
-            return 0
-    return total
+            return []
+    return sizes
+
+
+def estimated_scan_partitions(spark, sizes: list[int]) -> int:
+    """The partition count Spark gives a file scan over files of ``sizes``.
+
+    Mirrors ``FilePartition.maxSplitBytes``: files split at
+    ``min(maxPartitionBytes, max(openCostInBytes, total / parallelism))``,
+    where each file counts its open cost in the total; the splits are then
+    packed, largest first, into partitions of at most that many bytes
+    (``FilePartition.getFilePartitions``)."""
+    # SQLConf parses byte strings such as "64m"; int() on the raw conf
+    # string would not.
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    total = sum(size + open_cost for size in sizes)
+    per_core = total // spark.sparkContext.defaultParallelism
+    max_split = min(conf.filesMaxPartitionBytes(), max(open_cost, per_core))
+    splits = [
+        min(max_split, size - offset)
+        for size in sizes
+        for offset in range(0, size, max_split)
+    ]
+    splits.sort(reverse=True)
+    parts, current = 0, math.inf
+    for split in splits:
+        if current + split > max_split:
+            parts, current = parts + 1, 0
+        current += split + open_cost
+    return parts
 
 
 def spread_if_narrow(
@@ -96,19 +125,15 @@ def spread_if_narrow(
     scan is narrower than that target; identity otherwise (always identity
     at scale — see module docstring).
 
-    ``scan_bytes`` lets call sites that know their input file pass the
-    size directly and skip the ``inputFiles`` plan walk.
+    ``scan_bytes`` lets call sites that know their (single) input file
+    pass its size directly and skip the ``inputFiles`` plan walk.
     """
     spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    size = scan_input_bytes(df) if scan_bytes is None else scan_bytes
+    sizes = scan_file_sizes(df) if scan_bytes is None else [scan_bytes]
+    size = sum(sizes)
     if size <= 0:
         return df
-    target = min(par, math.ceil(size / bytes_per_task))
-    # SQLConf parses byte strings such as "64m"; int() on the raw conf
-    # string would not.
-    max_split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
-    est_splits = max(1, math.ceil(size / max_split))
-    if target <= est_splits:
+    target = min(spark.sparkContext.defaultParallelism, math.ceil(size / bytes_per_task))
+    if target <= estimated_scan_partitions(spark, sizes):
         return df
     return df.repartition(target, key)

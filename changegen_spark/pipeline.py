@@ -628,7 +628,11 @@ def generate_changes(
         codegen_scope.__exit__(None, None, None)
 
     # --- resolve ids and assemble elements ---
-    ids = cs.resolve(id_offset, negative_ids).cache()
+    # Every element join reads this id table: fence it once, eagerly.  A
+    # ``.cache()`` here would stay registered in the session's CacheManager
+    # after the pass, pinning the table and the stage fences in its lineage
+    # for the life of the JVM; a checkpoint is released with its frame.
+    ids = cs.resolve(id_offset, negative_ids).localCheckpoint(eager=True)
 
     def with_id(df: DataFrame, kind: int, skey) -> DataFrame:
         keyed = df.withColumn("__skey", skey.cast("string"))

@@ -14,6 +14,15 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Entries in the JVM-wide generated-class cache (Spark's default is 100).
+# One changegen CLI pass on the perfbench seed-1 input generates ~430
+# distinct classes, so at 100 the LRU evicted each class before its reuse
+# and every warm pass recompiled as many as the cold one (521-525).  At
+# 1024 warm passes recompiled 18-26 (4 vCPUs).  The cache is a JVM
+# singleton sized at its first compile, so the value only takes effect
+# from the builder, before the JVM has compiled anything.
+CODEGEN_CACHE_ENTRIES = 1024
+
 
 def get_spark(
     app_name: str = "changegen_spark",
@@ -69,6 +78,7 @@ def get_spark(
         # An engine builds plans programmatically — the enriched frames
         # would point into our operator code anyway, so turn it off.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     # Extra driver jars (e.g. a JDBC driver for --jdbc live mode). Must be
     # supplied before JVM launch; comma-separated paths, also honored via

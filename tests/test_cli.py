@@ -5,35 +5,6 @@ import os
 import xml.etree.ElementTree as ET
 
 import pytest
-from pyspark.sql import functions as F
-
-
-@pytest.fixture(scope="module")
-def cli_dirs(spark, tmp_path_factory):
-    """Export the geometry fixtures as WKT-parquet, the CLI's input format."""
-    from changegen_spark.geo.geometry import wkt
-    from changegen_spark.sources.osm import fixture_tables
-
-    tables = fixture_tables(spark)
-    db = str(tmp_path_factory.mktemp("db"))
-    ext = str(tmp_path_factory.mktemp("extract"))
-
-    def export(name, df, geom_col):
-        out = df.withColumn(geom_col, wkt(F.col(geom_col)))
-        out.coalesce(1).write.mode("overwrite").parquet(os.path.join(db, f"{name}.parquet"))
-
-    export("trails_new", tables["new_ways"], "geometry")
-    export("pois_new", tables["new_points"], "geom")
-    export("meta_mod", tables["mod_ways"], "geometry")
-    export("original_ways", tables["original_ways"], "geometry")
-    tables["deleted_ways"].coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(db, "deleted_ways.parquet")
-    )
-    for name in ("nodes", "ways", "relations"):
-        tables[f"pbf_{name}"].coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(ext, f"{name}.parquet")
-        )
-    return db, ext
 
 
 @pytest.mark.slow
