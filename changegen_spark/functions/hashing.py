@@ -223,14 +223,8 @@ def minhash_candidates(
       engine-portable, the formulation the DuckDB oracle mirrors.  Its
       doc-id exchange is reused by both self-join sides, so the "extra"
       shuffle is effectively free in this topology.
-    * ``"fold"``: map-only single-pass array fold (``minhash_struct``).
-      Negative result, kept for the record: as the input to the bucketed
-      self-join it is ~2.4× SLOWER end-to-end than "sql" (11.2 s vs 4.6 s
-      at sf0.1) — with no exchange of its own, each of the three consumers
-      (bucket sizes + both join sides) re-runs the whole interpreted fold.
-      Use it only for single-consumer signature pipelines.
 
-    Older negative result (still valid): hashing token n-tuples directly
+    Negative result (still valid): hashing token n-tuples directly
     (no shingle strings) was ~2.5× slower than one concatenated string per
     shingle — per-seed hash input triples and the explode row widens.
     """
@@ -238,6 +232,8 @@ def minhash_candidates(
         raise ValueError("num_hashes must be a multiple of 4")
     if hash_fn not in ("md5", "xxhash64"):
         raise ValueError(f"unknown hash_fn {hash_fn!r}")
+    if impl not in ("pandas", "sql"):
+        raise ValueError(f"unknown impl {impl!r}")
     if impl == "pandas" and hash_fn == "md5":
         # scale-adaptive parallelism, cost-gated (guide §2, r14): the
         # signature UDF is the heaviest per-byte Python pass in the repo
@@ -272,15 +268,6 @@ def minhash_candidates(
             lambda i: F.concat_ws(" ", F.slice(toks, i, F.lit(ngram))),
         ),
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-    if impl == "fold":
-        sig = docs.select(
-            F.col(id_col).alias("id"),
-            minhash_struct(raw_shingles, num_hashes, hash_fn=hash_fn).alias("__sig"),
-        ).select(
-            "id", *[F.col(f"__sig.mh{s}").alias(f"mh{s}") for s in range(num_hashes)]
-        )
-        return _band_and_pair(sig, num_hashes, bands, max_bucket_size, hash_fn)
-
     # impl == "sql" (and the xxhash64 fast path): explode → partial-min agg.
     # No array_distinct before explode: min() is idempotent under duplicate
     # shingles, and skipping the distinct saves an O(n²)-ish array pass.
@@ -315,68 +302,6 @@ def minhash_candidates(
             ]
         )
     return _band_and_pair(sig, num_hashes, bands, max_bucket_size, hash_fn)
-
-
-def minhash_struct(shingles: Column, num_hashes: int, hash_fn: str = "md5") -> Column:
-    """All ``num_hashes`` mins in ONE map-side pass over the shingle array.
-
-    Previous shape (r1): explode → per-seed partial-min groupBy — correct
-    and scalable, but it materializes one row per (doc, shingle) and pays a
-    full shuffle keyed by doc id just to reassemble per-doc state.  Since a
-    MinHash signature is a per-document fold, it needs no shuffle at all:
-    a ``transform`` hashes each shingle exactly once (md5's 128 bits yield
-    four independent 32-bit hex windows, so num_hashes/4 md5 calls per
-    shingle), then ``aggregate`` folds ``least`` over the array with a
-    num_hashes-wide struct accumulator.  The whole signature stage becomes
-    a projection — per-row memory is O(num_hashes), rows stay independent,
-    and the only shuffle left in LSH is the (tiny) banded self-join.
-    Values are bit-identical to the explode/groupBy formulation (same
-    hashes, same mins), so oracles are unchanged.
-    """
-    if hash_fn == "md5":
-        n_md5 = num_hashes // 4
-        hashed = F.transform(
-            shingles,
-            lambda sh: F.struct(
-                *[
-                    F.md5(
-                        F.to_binary(F.concat(F.lit(f"{m}:"), sh), F.lit("utf-8"))
-                    ).alias(f"h{m}")
-                    for m in range(n_md5)
-                ]
-            ),
-        )
-        # "g" sorts after any hex char, so 8×"g" is +inf for 8-hex windows
-        init = F.struct(
-            *[F.lit("gggggggg").alias(f"mh{s}") for s in range(num_hashes)]
-        )
-        return F.aggregate(
-            hashed,
-            init,
-            lambda acc, h: F.struct(
-                *[
-                    F.least(
-                        acc[f"mh{s}"],
-                        F.substring(h[f"h{s // 4}"], (s % 4) * 8 + 1, 8),
-                    ).alias(f"mh{s}")
-                    for s in range(num_hashes)
-                ]
-            ),
-        )
-    # xxhash64 — JVM intrinsic, one seeded hash per permutation
-    init = F.struct(
-        *[F.lit(2**63 - 1).cast("long").alias(f"mh{s}") for s in range(num_hashes)]
-    )
-    return F.aggregate(
-        shingles,
-        init,
-        lambda acc, sh: F.struct(
-            *[
-                F.least(acc[f"mh{s}"], F.xxhash64(F.lit(s), sh)).alias(f"mh{s}")
-                for s in range(num_hashes)
-            ]
-        ),
-    )
 
 
 def lsh_band_frame(

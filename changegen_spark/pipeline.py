@@ -26,8 +26,6 @@ ordered XML sink.
 
 from __future__ import annotations
 
-import contextlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -45,58 +43,6 @@ from changegen_spark.operators.ways import (
     line_locate_fraction,
     split_ways,
 )
-
-# Input size (bytes, Catalyst plan stats) below which the pipeline plans
-# its checkpoint fences WITHOUT whole-stage codegen.  Janino compilation of
-# the segment-join subtrees costs ~2-3 s of driver-serial time per fence —
-# on a 100 TB run that is noise against minutes of execution (codegen
-# stays on), but on an interactive small-diff run it IS the latency floor,
-# and interpreted execution of a few thousand rows is equally fast.  The
-# same size-adaptive reasoning as AQE, applied to compile time.
-SMALL_INPUT_CODEGEN_OFF_BYTES = 256 * 1024 * 1024
-
-
-def _inputs_are_small(tables: dict) -> bool:
-    """True when every input table's Catalyst size estimate sums below the
-    interpreted-fence threshold (cheap: optimizer stats, no job)."""
-    total = 0
-    for df in tables.values():
-        if df is None:
-            continue
-        try:
-            total += int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            return False  # unknown size: assume big, keep codegen
-        if total >= SMALL_INPUT_CODEGEN_OFF_BYTES:
-            return False
-    return True
-
-
-@contextlib.contextmanager
-def _maybe_interpreted(spark: SparkSession, interpreted: bool):
-    """Scoped fence-planning trim for small inputs: whole-stage codegen off
-    (Janino compiles of throwaway fence subtrees cost seconds) and
-    constraint propagation off (inference over the deep segment-join
-    predicates is pure optimizer time; constraints only ADD optimization
-    opportunities, never change results — measured ~0.2-0.3 s/fence)."""
-    if not interpreted:
-        yield
-        return
-    keys = {
-        "spark.sql.codegen.wholeStage": "false",
-        "spark.sql.constraintPropagation.enabled": "false",
-    }
-    prev = {k: spark.conf.get(k) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-
 
 DISTANCE_BUFFER_DEFAULT = 5.0  # changegen/db.py:110 (meters in EPSG:3857)
 PRECISION = 6  # COORDINATE_PRECISION, changegen/generator.py:31
@@ -484,27 +430,16 @@ def generate_changes(
     # scan runs as an EXECUTOR-side job while the driver builds the
     # junction plan — py4j/Catalyst work — removing ~2 s of serial
     # wall-clock.  Collision check stays fail-fast: its result is read
-    # before any output exists.
-    pool = concurrent.futures.ThreadPoolExecutor(max_workers=4)
-    fut_maxids = pool.submit(max_pbf_ids, tables) if check_collision else None
+    # before any output exists.  Leaving the ``with`` block joins the
+    # pool, so any failure (including the collision guard's designed
+    # abort) leaves no pool thread running.
+    with concurrent.futures.ThreadPoolExecutor(max_workers=4) as pool:
+        fut_maxids = pool.submit(max_pbf_ids, tables) if check_collision else None
 
-    cs = ChangeSet(spark)
-    new_ways = tables.get("new_ways")
-    existing = tables.get("original_ways")
+        cs = ChangeSet(spark)
+        new_ways = tables.get("new_ways")
+        existing = tables.get("original_ways")
 
-    # Small inputs: plan the checkpoint fences interpreted (see
-    # SMALL_INPUT_CODEGEN_OFF_BYTES) — the conf stays off through the
-    # fence-building/materialization section below and is restored before
-    # the returned DataFrame is ever executed, so the big final plan (the
-    # one a 100 TB run spends its time in) still compiles.
-    interp = _inputs_are_small(tables)
-    codegen_scope = _maybe_interpreted(spark, interp)
-    codegen_scope.__enter__()
-
-    # ONE try/finally spans the whole fence-planning section: any failure
-    # (including the collision guard's designed abort) must restore the
-    # codegen conf and stop the pool threads, not leak them to the caller.
-    try:
         # A: junctions (single evaluation serves J1 closest-points AND J2 ids)
         if new_ways is not None and existing is not None:
             junction_nodes, junctions = synthesize_junctions(
@@ -623,9 +558,6 @@ def generate_changes(
                     existing, exclude=mod_excl, hstore_col=hstore_col
                 ).alias("tags"),
             )
-    finally:
-        pool.shutdown(wait=True)
-        codegen_scope.__exit__(None, None, None)
 
     # --- resolve ids and assemble elements ---
     # Every element join reads this id table: fence it once, eagerly.  A

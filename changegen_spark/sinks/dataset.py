@@ -38,23 +38,9 @@ uses internally)."""
 from __future__ import annotations
 
 import math
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-@contextmanager
-def _conf(spark: SparkSession, key: str, value: str):
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, value)
-    try:
-        yield
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
 
 
 def write_partitioned(
@@ -68,11 +54,12 @@ def write_partitioned(
     ``dynamic=True`` (the production default), overwrite replaces only the
     partitions present in ``df`` — untouched partitions survive."""
     mode = "dynamic" if dynamic else "static"
-    writer = df.write
+    # A writer option, not the session conf: it takes precedence over
+    # ``spark.sql.sources.partitionOverwriteMode`` for this write only.
+    writer = df.write.option("partitionOverwriteMode", mode)
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    with _conf(df.sparkSession, "spark.sql.sources.partitionOverwriteMode", mode):
-        writer.partitionBy(*partition_cols).mode("overwrite").parquet(path)
+    writer.partitionBy(*partition_cols).mode("overwrite").parquet(path)
 
 
 def compact_dataset(

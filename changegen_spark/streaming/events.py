@@ -35,8 +35,7 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from changegen_spark.sources.tables import load_table
 
-    batch = load_table(spark, sf_dir, "events")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    batch = load_table(spark, sf_dir, "events")  # also sets nanosAsLong
     src = os.path.join(sf_dir, "events.parquet")
     # The file source requires a directory; stage a symlink dir (no copy) —
     # in production this is the object-store drop directory itself.

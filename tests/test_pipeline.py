@@ -250,18 +250,31 @@ def test_deletions_with_node_expansion(spark, tables):
 
 
 def test_collision_abort_restores_session_state(spark, tables):
-    """The collision guard's fail-fast abort must not leak the pipeline's
-    scoped planning conf (whole-stage codegen off for small inputs) or
-    leave pool threads running — r3 regression guard for the overlapped
-    head's try/finally."""
-    import pytest as _pytest
+    """The collision guard's fail-fast abort must leave the session's
+    planning confs as they were and no stage-pool thread running — r3
+    regression guard for the overlapped head's pool, which the abort
+    leaves through its ``with`` block."""
+    import threading
 
     from changegen_spark.pipeline import generate_changes
 
-    prev = spark.conf.get("spark.sql.codegen.wholeStage")
-    with _pytest.raises(ValueError, match="collide"):
+    keys = (
+        "spark.sql.codegen.wholeStage",
+        "spark.sql.constraintPropagation.enabled",
+    )
+    prev = {k: spark.conf.get(k) for k in keys}
+    before = set(threading.enumerate())
+    with pytest.raises(ValueError, match="collide") as excinfo:
         generate_changes(spark, tables, id_offset=0)  # max pbf id > 0
-    assert spark.conf.get("spark.sql.codegen.wholeStage") == prev
+    assert {k: spark.conf.get(k) for k in keys} == prev
+    # The held traceback keeps the failed frame, and any pool it owns,
+    # alive, as a caller that keeps the error would: only an explicit join
+    # stops the workers (named "ThreadPoolExecutor-N_M").
+    leaked = [
+        t for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert not leaked, (leaked, excinfo.value)
 
 
 @pytest.mark.slow

@@ -87,24 +87,6 @@ def test_bbox_join_is_equi_join_not_cartesian(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_minhash_signature_is_shuffle_free(spark, sf_dir):
-    """The MinHash signature stage must be a pure projection — a per-doc
-    fold needs NO shuffle (r1 shape was explode → partial-min groupBy; the
-    single-pass aggregate removes the exchange entirely). The only shuffle
-    in LSH is the banded self-join."""
-    from changegen_spark.functions import hashing
-    from changegen_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    d = load_table(spark, sf_dir, "documents")
-    sig = d.select(
-        F.col("doc_id"),
-        hashing.minhash_struct(hashing.word_shingles(F.col("text")), 8).alias("sig"),
-    )
-    plan = _plan(sig)
-    assert "Exchange" not in plan
-
-
 def test_ann_broadcasts_query_side(spark, sf_dir):
     from changegen_spark.functions.similarity import brute_force_topk
     from changegen_spark.sources.tables import load_table

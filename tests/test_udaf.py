@@ -3,6 +3,7 @@
 built-in exact aggregate it reimplements."""
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -47,9 +48,9 @@ def test_udaf_in_window(spark, sf_dir):
 
 
 def test_minhash_impls_agree(spark, sf_dir):
-    """The three signature implementations (pandas UDF / SQL explode-agg /
-    map-only fold) must produce identical candidate pairs — they are the
-    same hash function in three execution shapes."""
+    """The two signature implementations (pandas UDF / SQL explode-agg)
+    must produce identical candidate pairs — they are the same hash
+    function in two execution shapes."""
     from changegen_spark.functions.hashing import minhash_candidates
     from changegen_spark.sources.tables import load_table
 
@@ -59,7 +60,9 @@ def test_minhash_impls_agree(spark, sf_dir):
             (r["id_a"], r["id_b"])
             for r in minhash_candidates(d, impl=impl).collect()
         )
-        for impl in ("pandas", "sql", "fold")
+        for impl in ("pandas", "sql")
     }
-    assert outs["pandas"] == outs["sql"] == outs["fold"]
+    assert outs["pandas"] == outs["sql"]
     assert len(outs["pandas"]) > 0
+    with pytest.raises(ValueError, match="unknown impl"):
+        minhash_candidates(d, impl="fold")  # deleted path fails loudly
