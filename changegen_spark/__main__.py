@@ -257,7 +257,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     suffixes = args.suffix or ["_new"]
 
-    from changegen_spark.operators.changes import assemble_changeset
     from changegen_spark.pipeline import (
         generate_changes,
         generate_deletions,
@@ -379,11 +378,10 @@ def main(argv: list[str] | None = None) -> int:
     tables = {**load_new_parts(spark, source, names), **ex_tables, **extract}
     if args.deletions:
         tables["deleted_ways"] = _union_by_name([source.load_plain(dl) for dl in args.deletions])
-    result = run_one(tables)
-    if result is None:
+    elements = run_one(tables)
+    if elements is None:
         raise SystemExit("nothing to do: no new tables, deletions, or modify_meta")
 
-    elements = assemble_changeset(result)
     counts = write_osmchange(elements, args.output, compress=args.compress)
     print(f"wrote {args.output}: {counts}", file=sys.stderr)
     return 0

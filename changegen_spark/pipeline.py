@@ -15,7 +15,14 @@ a row-at-a-time loop; here every stage is a whole-DataFrame transform:
 ID policy (W1, SURVEY §7 risk 1): one union of id requests gets a global
 ``row_number`` ordered by (kind, stable key) — ids are unique, dense from
 ``id_offset+1``, deterministic; exact interleaving parity with the
-reference's mutable counter is explicitly out of contract.
+reference's mutable counter is explicitly out of contract.  The id table
+is one eager fence, read by two joins.  The member-ref join resolves every
+way and relation member (junction cell, new-way vertex, polygon node,
+ring) to its id; modified ways keep their PBF node ids.  The element join
+gives every node, way and relation payload its id; modified ways keep
+their ``osm_id``.  Stage B's chunked member lists and stage C's rebuilt
+ways are eager fences built in their pool threads, so neither the id
+fence nor the sink recomputes them.
 
 Scale notes: every join is keyed (grid cell, rounded coordinate, osm_id);
 the only single-partition stage is the global id ``row_number`` over the
@@ -25,6 +32,8 @@ ordered XML sink.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -93,8 +102,6 @@ class ChangeSet:
 
     def resolve(self, id_offset: int, negative: bool) -> DataFrame:
         """(korder, skey) → new_id, dense from id_offset+1 (W1)."""
-        from functools import reduce
-
         allreq = reduce(lambda a, b: a.unionByName(b), self.requests).distinct()
         w = Window.orderBy("korder", "skey")
         seq = F.row_number().over(w).cast("long") + F.lit(id_offset)
@@ -273,12 +280,41 @@ def _ordered_members(members: DataFrame, key: str, extra: tuple[str, ...] = ()) 
     )
 
 
-def _ordered_values(order: str, value: str):
-    """Aggregate: the group's ``value`` column listed by ascending ``order``."""
-    return F.transform(
-        F.array_sort(F.collect_list(F.struct(order, value))),
-        lambda s: s.getField(value),
-    )
+def _null(dtype: str):
+    return F.lit(None).cast(dtype)
+
+
+def _cell_key(rlon, rlat):
+    """A junction node's id key: its 6-dp cell as a string.  Spark's
+    ``round`` yields +0.0 for a coordinate that rounds to zero from below,
+    so a cell never has a "-0.0" twin."""
+    return F.concat_ws(",", rlon, rlat)
+
+
+def _member_rows(
+    df: DataFrame, kind: str, change_type: str, owner, tags, seq, ref, role=None
+) -> DataFrame:
+    """``df`` as member-ref rows.  ``owner`` and ``ref`` are (korder,
+    skey, direct) column triples: an id request key, or a direct id."""
+    return tag_change(df.select(
+        F.lit(kind).alias("kind"),
+        *(c.alias(n) for c, n in zip(owner, ("okorder", "oskey", "odirect"))),
+        tags.alias("tags"),
+        seq.alias("seq"),
+        *(c.alias(n) for c, n in zip(ref, ("korder", "skey", "direct"))),
+        (role if role is not None else _null("string")).alias("role"),
+    ), change_type)
+
+
+def _way_members(ways: DataFrame, change_type: str, owner, vertex) -> DataFrame:
+    """Member rows of stage B/C ways (one row per way: ``mseq`` and
+    ``tags``).  A junction member refs the junction node of its 6-dp cell;
+    any other member refs ``vertex``, a (korder, skey, direct) triple."""
+    m = ways.select("*", F.posexplode("mseq").alias("seq", "m"))
+    junction = F.col("m.is_junction")
+    cell = (F.lit(_K_JUNCTION), _cell_key(F.col("m.rlon"), F.col("m.rlat")), _null("long"))
+    ref = [F.when(junction, j).otherwise(v) for j, v in zip(cell, vertex)]
+    return _member_rows(m, "way", change_type, owner, F.col("tags"), F.col("seq"), ref)
 
 
 def build_new_ways(
@@ -453,7 +489,7 @@ def generate_changes(
             junctions = spark.createDataFrame(
                 [], "nkey string, osm_id long, jx double, jy double, rlon double, rlat double"
             )
-        jkey = F.concat_ws(",", F.col("rlon"), F.col("rlat"))
+        jkey = _cell_key(F.col("rlon"), F.col("rlat"))
         cs.request_ids(junction_nodes, _K_JUNCTION, jkey)
 
         if fut_maxids is not None:
@@ -480,10 +516,20 @@ def generate_changes(
                 node_limit=node_limit, chunk_size=chunk_size,
                 joiner=split_joiner,
             )
-            return nb_, cm
+            # the id fence and the member-ref join both read the chunks
+            return nb_, cm.join(nb_["way_tags"], "nkey").localCheckpoint(eager=True)
 
         def _stage_c():
-            return modify_intersecting_ways(existing, junctions, tables["pbf_ways"])
+            # hstore expansion applies to intersecting-way modifies exactly
+            # as it does to new features (generator.py:190-203 → :812).
+            mod_excl = ("id", "geometry") if emit_osm_id_tag else ("id", "osm_id", "geometry")
+            mod_way_tags = existing.select(
+                F.col("osm_id"),
+                _tags_map(existing, exclude=mod_excl, hstore_col=hstore_col).alias("tags"),
+            )
+            # fenced here, so its job overlaps stage B's instead of the sink's
+            seq = modify_intersecting_ways(existing, junctions, tables["pbf_ways"])
+            return seq.join(mod_way_tags, "osm_id").localCheckpoint(eager=True)
 
         # Stages D/E/G below are pure driver-side plan building with no
         # dependency on B/C — they run while the pool's checkpoint jobs
@@ -491,7 +537,7 @@ def generate_changes(
         # (request_ids order is immaterial: resolve sorts by kind+key).
         fut_b = fut_c = None
         nb = chunked_members = None
-        mod_ways_seq = mod_way_tags = None
+        mod_ways_seq = None
         if new_ways is not None:
             fut_b = pool.submit(_stage_b)
         if existing is not None:
@@ -529,10 +575,7 @@ def generate_changes(
 
         # E: polygons
         polys = tables.get("new_polygons")
-        poly_parts = _build_polygons(cs, polys) if polys is not None else None
-        if poly_parts is not None:
-            cs.request_ids(poly_parts["rings"], _K_WAY, F.col("ring_key"))
-            cs.request_ids(poly_parts["relations"], _K_RELATION, F.col("pkey"))
+        poly_verts = _build_polygons(cs, polys) if polys is not None else None
 
         # G: deletions
         del_elems = []
@@ -545,130 +588,106 @@ def generate_changes(
             cs.request_ids(chunked_members, _K_WAY, wkey)
         if fut_c is not None:
             mod_ways_seq = fut_c.result()
-            # hstore expansion applies to intersecting-way modifies exactly
-            # as it does to new features (generator.py:190-203 → :812).
-            mod_excl = (
-                ("id", "geometry")
-                if emit_osm_id_tag
-                else ("id", "osm_id", "geometry")
-            )
-            mod_way_tags = existing.select(
-                F.col("osm_id"),
-                _tags_map(
-                    existing, exclude=mod_excl, hstore_col=hstore_col
-                ).alias("tags"),
-            )
 
     # --- resolve ids and assemble elements ---
-    # Every element join reads this id table: fence it once, eagerly.  A
-    # ``.cache()`` here would stay registered in the session's CacheManager
-    # after the pass, pinning the table and the stage fences in its lineage
-    # for the life of the JVM; a checkpoint is released with its frame.
+    # Both id joins read this table: fence it once, eagerly.  A ``.cache()``
+    # here would stay registered in the session's CacheManager after the
+    # pass, pinning the table and the stage fences in its lineage for the
+    # life of the JVM; a checkpoint is released with its frame.
     ids = cs.resolve(id_offset, negative_ids).localCheckpoint(eager=True)
 
-    def with_id(df: DataFrame, kind: int, skey) -> DataFrame:
-        keyed = df.withColumn("__skey", skey.cast("string"))
-        return keyed.join(
-            ids.filter(F.col("korder") == kind).withColumnRenamed("skey", "__skey"),
-            "__skey",
-        ).drop("__skey", "korder")
+    # Member-ref join: one row per way or relation member, carrying its
+    # owner element (okorder, oskey), or the owner's direct id for a
+    # modified way, with the owner's kind and tags; its place in the
+    # owner's list (seq); and its ref, a (korder, skey) id request or a
+    # direct PBF node id.  One left join resolves every ref, and one sorted
+    # list per owner rebuilds its nds or members.
+    members = []
+    if chunked_members is not None:
+        members.append(_way_members(
+            chunked_members, "create", (F.lit(_K_WAY), wkey, _null("long")),
+            (
+                F.lit(_K_VERTEX),
+                F.concat_ws(":", F.col("nkey"), F.col("m.pos")),
+                _null("long"),
+            ),
+        ))
+    if mod_ways_seq is not None:
+        no_request = (_null("int"), _null("string"))
+        members.append(_way_members(
+            mod_ways_seq, "modify", (*no_request, F.col("osm_id")),
+            (*no_request, F.col("m.node_id")),
+        ))
+    if poly_verts is not None:
+        members.extend(_polygon_members(poly_verts))
 
     empty_tags = F.create_map().cast("map<string,string>")
 
-    creates = [
-        with_id(junction_nodes, _K_JUNCTION, jkey).select(
-            F.lit("node").alias("kind"),
-            F.col("new_id").alias("id"),
-            "lat", "lon",
-            empty_tags.alias("tags"),
-        )
-    ]
+    def nodes(df: DataFrame, korder: int, skey, lat, lon, tags=empty_tags) -> DataFrame:
+        # every column the element select reads, so a run with no ways or
+        # relations still resolves it
+        return tag_change(df.select(
+            F.lit(korder).alias("korder"), skey.alias("skey"), F.lit("node").alias("kind"),
+            lat.alias("lat"), lon.alias("lon"), tags.alias("tags"),
+            _null("long").alias("direct"), _null("array<bigint>").alias("nds"),
+            _null("array<struct<ref:bigint,type:string,role:string>>").alias("members"),
+        ), "create")
 
-    vkey = F.concat_ws(":", F.col("nkey"), F.col("pos"))
+    payloads = [nodes(junction_nodes, _K_JUNCTION, jkey, F.col("lat"), F.col("lon"))]
     if nb is not None:
-        creates.append(
-            with_id(nb["vertex_nodes"], _K_VERTEX, vkey).select(
-                F.lit("node").alias("kind"),
-                F.col("new_id").alias("id"),
-                to_4326_lat(F.col("y")).alias("lat"),
-                to_4326_lon(F.col("x")).alias("lon"),
-                empty_tags.alias("tags"),
-            )
-        )
-
+        payloads.append(nodes(
+            nb["vertex_nodes"], _K_VERTEX, F.concat_ws(":", F.col("nkey"), F.col("pos")),
+            to_4326_lat(F.col("y")), to_4326_lon(F.col("x")),
+        ))
     if pts is not None:
-        creates.append(
-            with_id(pts, _K_POINT, F.concat(F.lit("pt:"), F.col("pt_id"))).select(
-                F.lit("node").alias("kind"),
-                F.col("new_id").alias("id"),
-                "lat", "lon", "tags",
-            )
+        payloads.append(nodes(
+            pts, _K_POINT, F.concat(F.lit("pt:"), F.col("pt_id")),
+            F.col("lat"), F.col("lon"), F.col("tags"),
+        ))
+    if poly_verts is not None:
+        payloads.append(nodes(
+            poly_verts, _K_POINT, F.col("node_key"),
+            to_4326_lat(F.col("y")), to_4326_lon(F.col("x")),
+        ))
+    if members:
+        resolved = reduce(DataFrame.unionByName, members).join(ids, ["korder", "skey"], "left")
+        owned = resolved.groupBy(
+            "okorder", "oskey", "odirect", "kind", "change_type", "version"
+        ).agg(
+            # every member row carries its owner's tags: any one will do,
+            # and seq picks one deterministically
+            F.min_by("tags", "seq").alias("tags"),
+            F.array_sort(F.collect_list(F.struct(
+                "seq", F.coalesce("direct", "new_id").alias("ref"), "role"
+            ))).alias("mseq"),
         )
+        payloads.append(owned.select(
+            F.col("okorder").alias("korder"),
+            F.col("oskey").alias("skey"),
+            F.col("odirect").alias("direct"),
+            "kind", "tags", "change_type", "version",
+            F.when(
+                F.col("kind") == "way", F.transform("mseq", lambda m: m["ref"])
+            ).alias("nds"),
+            F.when(F.col("kind") == "relation", F.transform(
+                "mseq",
+                lambda m: F.struct(
+                    m["ref"].alias("ref"), F.lit("way").alias("type"), m["role"].alias("role")
+                ),
+            )).alias("members"),
+        ))
 
-    # new-way member resolution: junction members → junction node ids,
-    # vertex members → vertex node ids; nds assembled per (way, chunk)
-    jids = with_id(junction_nodes, _K_JUNCTION, jkey).select(
-        "rlon", "rlat", F.col("new_id").alias("jid")
-    )
-
-    if chunked_members is not None:
-        vids = with_id(nb["vertex_nodes"], _K_VERTEX, vkey).select(
-            "nkey", "pos", F.col("new_id").alias("vid")
-        )
-        way_ids = with_id(chunked_members, _K_WAY, wkey).select(
-            "nkey", "chunk", F.col("new_id").alias("way_id"), "mseq"
-        )
-        mem = way_ids.select(
-            "nkey", "chunk", "way_id", F.posexplode("mseq").alias("seq", "m")
-        ).select(
-            "nkey", "chunk", "way_id", "seq",
-            F.col("m.rlon").alias("rlon"), F.col("m.rlat").alias("rlat"),
-            F.col("m.pos").alias("pos"), F.col("m.is_junction").alias("is_junction"),
-        )
-        mem = (
-            mem.join(jids, ["rlon", "rlat"], "left")
-            .join(vids, ["nkey", "pos"], "left")
-            .withColumn("node_ref", F.when(F.col("is_junction"), F.col("jid")).otherwise(F.coalesce("vid", "jid")))
-        )
-        chunk_nds = mem.groupBy("nkey", "chunk", "way_id").agg(
-            _ordered_values("seq", "node_ref").alias("nds")
-        )
-        creates.append(
-            chunk_nds.join(nb["way_tags"], "nkey").select(
-                F.lit("way").alias("kind"),
-                F.col("way_id").alias("id"),
-                "nds", "tags",
-            )
-        )
-    parts = [tag_change(df, "create") for df in creates]
-
-    # modified existing ways: junction members → junction ids, vertex
-    # members keep their PBF node id unless junction-replaced
-    if mod_ways_seq is not None:
-        mmem = mod_ways_seq.select(
-            "osm_id", F.posexplode("mseq").alias("seq", "m")
-        ).select(
-            "osm_id", "seq",
-            F.col("m.rlon").alias("rlon"), F.col("m.rlat").alias("rlat"),
-            F.col("m.is_junction").alias("is_junction"),
-            F.col("m.node_id").alias("node_id"),
-        )
-        mmem = mmem.join(jids, ["rlon", "rlat"], "left").withColumn(
-            "node_ref", F.when(F.col("is_junction"), F.col("jid")).otherwise(F.col("node_id"))
-        )
-        mod_nds = mmem.groupBy("osm_id").agg(
-            _ordered_values("seq", "node_ref").alias("nds")
-        )
-        mod_ways = mod_nds.join(mod_way_tags, "osm_id").select(
-            F.lit("way").alias("kind"),
-            F.col("osm_id").alias("id"),
-            "nds", "tags",
-        )
-        parts.append(tag_change(mod_ways, "modify"))
-
+    # Element join: every payload is keyed by its id request; modified
+    # ways miss and keep their direct id.
+    elements = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True), payloads
+    ).join(ids, ["korder", "skey"], "left")
+    parts = [elements.select(
+        "kind",
+        F.coalesce("direct", "new_id").alias("id"),
+        "lat", "lon", "tags", "change_type", "version", "nds", "members",
+    )]
     parts.extend(del_elems)
-    if poly_parts is not None:
-        parts.extend(_assemble_polygons(poly_parts, with_id))
 
     from changegen_spark.operators.changes import assemble_changeset
 
@@ -693,104 +712,73 @@ def _deletion_elements(tables: dict[str, DataFrame], skip_nodes: bool) -> list[D
     return [tag_change(way_elems, "delete"), tag_change(node_elems, "delete")]
 
 
-def _build_polygons(cs: ChangeSet, polys: DataFrame) -> dict[str, DataFrame]:
-    """Stage E prep: explode polygon rings; request node ids.
+def _build_polygons(cs: ChangeSet, polys: DataFrame) -> DataFrame:
+    """Stage E prep: explode polygon rings into vertex rows; request node,
+    ring and relation ids.
 
     Simple polygons (no interiors) → one closed way carrying the tags;
     holed polygons → one way per ring + a type=multipolygon relation with
     outer/inner roles (changegen/generator.py:683-753)."""
     polys = polys.withColumn("__n_int", F.size(F.col("geometry.rings")) - 1)
-    base = polys.select(
+    rings = polys.select(
         F.col("name").alias("pkey"),
         "__n_int",
+        _tags_map(polys, exclude=("geometry", "__n_int")).alias("tags"),
         F.posexplode(F.col("geometry.rings")).alias("ring_idx", "__ring"),
+    ).withColumn(
+        "ring_key", F.concat_ws(":", F.lit("polyring"), F.col("pkey"), F.col("ring_idx"))
     )
     # drop the closing duplicate coordinate for node synthesis (M4 inverse)
-    base = base.withColumn(
-        "__ring", F.slice(F.col("__ring"), 1, F.size(F.col("__ring")) - 1)
-    )
-    verts = base.select(
-        "pkey", "ring_idx", F.posexplode("__ring").alias("pos", "__pt")
+    open_ring = F.slice(F.col("__ring"), 1, F.size(F.col("__ring")) - 1)
+    verts = rings.select(
+        "pkey", "ring_idx", "ring_key", "__n_int", "tags",
+        F.size(open_ring).alias("n"),
+        F.posexplode(open_ring).alias("pos", "__pt"),
     ).select(
-        "pkey", "ring_idx", "pos",
+        "pkey", "ring_idx", "ring_key", "__n_int", "tags", "n", "pos",
         F.col("__pt.x").alias("x"), F.col("__pt.y").alias("y"),
+        F.concat_ws(
+            ":", F.lit("poly"), F.col("pkey"), F.col("ring_idx"), F.col("pos")
+        ).alias("node_key"),
     )
-    nkey = F.concat_ws(":", F.lit("poly"), F.col("pkey"), F.col("ring_idx"), F.col("pos"))
-    cs.request_ids(verts, _K_POINT, nkey)
-    rings = base.select(
-        "pkey", "ring_idx", "__n_int",
-        F.concat_ws(":", F.lit("polyring"), F.col("pkey"), F.col("ring_idx")).alias("ring_key"),
+    cs.request_ids(verts, _K_POINT, F.col("node_key"))
+    cs.request_ids(rings, _K_WAY, F.col("ring_key"))
+    cs.request_ids(
+        polys.filter(F.col("__n_int") > 0), _K_RELATION, F.col("name")
     )
-    relations = polys.filter(F.col("__n_int") > 0).select(
-        F.col("name").alias("pkey")
-    )
-    tags = polys.select(
-        F.col("name").alias("pkey"),
-        F.col("__n_int"),
-        _tags_map(polys, exclude=("geometry", "__n_int")).alias("tags"),
-    )
-    return {"verts": verts, "rings": rings, "relations": relations, "tags": tags}
+    return verts
 
 
-def _assemble_polygons(pp, with_id) -> list[DataFrame]:
-    """Stage E finish: nodes, closed ways, multipolygon relations."""
-    empty_tags = F.create_map().cast("map<string,string>")
-    nkey = F.concat_ws(":", F.lit("poly"), F.col("pkey"), F.col("ring_idx"), F.col("pos"))
-    vid = with_id(pp["verts"], _K_POINT, nkey)
-    node_elems = vid.select(
-        F.lit("node").alias("kind"),
-        F.col("new_id").alias("id"),
-        to_4326_lat(F.col("y")).alias("lat"),
-        to_4326_lon(F.col("x")).alias("lon"),
-        empty_tags.alias("tags"),
+def _polygon_members(verts: DataFrame) -> list[DataFrame]:
+    """Stage E member rows: each ring's nodes in order, closed by its first
+    node again (M4), and each multipolygon relation's rings, outer first,
+    then inner (M5).  A simple polygon's tags sit on its ring way, a holed
+    one's on its relation.  Both come from ``verts``, so a degenerate ring
+    (no vertices) is neither a way nor a member."""
+    # a ring's first node is also its last, at seq n
+    ring_nodes = verts.withColumn("seq", F.explode(
+        F.when(F.col("pos") == 0, F.array("pos", "n")).otherwise(F.array("pos"))
+    ))
+    ring_tags = F.when(F.col("__n_int") == 0, F.col("tags")).otherwise(
+        F.create_map().cast("map<string,string>")
     )
-    # ordered nds per ring, closed by repeating the first node (M4)
-    ring_nds = vid.groupBy("pkey", "ring_idx").agg(
-        _ordered_values("pos", "new_id").alias("open_nds")
-    ).withColumn("nds", F.concat(F.col("open_nds"), F.slice(F.col("open_nds"), 1, 1)))
-
-    rid = with_id(pp["rings"], _K_WAY, F.col("ring_key")).join(
-        ring_nds, ["pkey", "ring_idx"]
+    rel_tags = F.map_concat(
+        F.col("tags"),
+        F.create_map(F.lit("type"), F.lit("multipolygon")).cast("map<string,string>"),
     )
-    simple_tags = pp["tags"].filter(F.col("__n_int") == 0).select("pkey", "tags")
-    way_elems = rid.join(simple_tags, "pkey", "left").select(
-        F.lit("way").alias("kind"),
-        F.col("new_id").alias("id"),
-        "nds",
-        F.coalesce(F.col("tags"), empty_tags).alias("tags"),
-    )
-
-    # relations: members = ring ways with outer/inner roles (M5)
-    rel_members = rid.filter(F.col("__n_int") > 0).select(
-        "pkey",
-        F.struct(
-            F.col("new_id").alias("ref"),
-            F.lit("way").alias("type"),
-            F.when(F.col("ring_idx") == 0, F.lit("outer")).otherwise(F.lit("inner")).alias("role"),
-        ).alias("m"),
-        "ring_idx",
-    )
-    rel_members = rel_members.groupBy("pkey").agg(
-        _ordered_values("ring_idx", "m").alias("members")
-    )
-    holed_tags = pp["tags"].filter(F.col("__n_int") > 0).select(
-        "pkey",
-        F.map_concat(
-            F.col("tags"),
-            F.create_map(F.lit("type"), F.lit("multipolygon")).cast("map<string,string>"),
-        ).alias("tags"),
-    )
-    rel_elems = (
-        with_id(pp["relations"], _K_RELATION, F.col("pkey"))
-        .join(rel_members, "pkey")
-        .join(holed_tags, "pkey")
-        .select(
-            F.lit("relation").alias("kind"),
-            F.col("new_id").alias("id"),
-            "members", "tags",
-        )
-    )
-    return [tag_change(df, "create") for df in (node_elems, way_elems, rel_elems)]
+    role = F.when(F.col("ring_idx") == 0, F.lit("outer")).otherwise(F.lit("inner"))
+    return [
+        _member_rows(
+            ring_nodes, "way", "create",
+            (F.lit(_K_WAY), F.col("ring_key"), _null("long")), ring_tags, F.col("seq"),
+            (F.lit(_K_POINT), F.col("node_key"), _null("long")),
+        ),
+        _member_rows(
+            verts.filter((F.col("pos") == 0) & (F.col("__n_int") > 0)), "relation", "create",
+            (F.lit(_K_RELATION), F.col("pkey"), _null("long")), rel_tags, F.col("ring_idx"),
+            (F.lit(_K_WAY), F.col("ring_key"), _null("long")), role,
+        ),
+    ]
 
 
 def generate_relation_changes(

@@ -111,7 +111,8 @@ def test_sweep_sees_the_whole_package():
     F.first sites (the greedy loop became one applyInPandas pass); 61
     (42 mechanically safe) after the pipeline's six sorted collect_list
     aggregates were folded into two shared helpers (_ordered_members,
-    _ordered_values)."""
+    _ordered_values); still 61 once generate_changes' one member
+    aggregate replaced _ordered_values."""
     sites = sweep()
     assert len(sites) >= 61, len(sites)
     mech_safe = [s for s in sites if s[3]]

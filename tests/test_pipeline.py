@@ -132,6 +132,90 @@ def test_new_way_references_resolve(changeset):
     assert refs <= created_nodes
 
 
+def test_way_and_relation_refs_resolve(changeset, tables):
+    """No created or modified way has a null nd ref and no relation a null
+    member ref; relation members are created ways; and the changeset
+    applied to the fixture extract leaves no way node ref dangling."""
+    from changegen_spark.operators.apply import (
+        apply_changeset,
+        referential_integrity_report,
+    )
+
+    nd_refs = [
+        r["ref"]
+        for r in changeset.filter(
+            (F.col("kind") == "way") & F.col("change_type").isin("create", "modify")
+        )
+        .select(F.explode("nds").alias("ref"))
+        .collect()
+    ]
+    assert nd_refs and None not in nd_refs
+    member_refs = [
+        r["ref"]
+        for r in changeset.filter(F.col("kind") == "relation")
+        .select(F.explode("members.ref").alias("ref"))
+        .collect()
+    ]
+    created_ways = {
+        r["id"]
+        for r in changeset.filter(
+            (F.col("kind") == "way") & (F.col("change_type") == "create")
+        ).collect()
+    }
+    assert member_refs and set(member_refs) <= created_ways
+
+    nodes, ways = apply_changeset(tables["pbf_nodes"], tables["pbf_ways"], changeset)
+    assert referential_integrity_report(nodes, ways).count() == 0
+
+
+def test_junction_cell_at_zero_resolves(spark, tables):
+    """Member refs key a junction node by its 6-dp cell as a string.  A
+    junction at lon 0, lat 0 with a new-way vertex 3 mm south (or west) of
+    it: the vertex's rounded coordinate is a zero from below, and the way
+    must still reference the junction node.  Spark's ``round`` returns
+    +0.0 there, so the vertex cell's key equals the junction's; a -0.0
+    would key the cell "-0.0" and leave the ref null."""
+    from changegen_spark.pipeline import generate_changes
+    from changegen_spark.sources.osm import _geom, _ring
+
+    def line(*coords):
+        return _geom("LineString", _ring(list(coords)))
+
+    new_ways = spark.createDataFrame(
+        [
+            ("path", "south", "yes", line((0.0, -1000.0), (0.0, -0.003), (0.0, 1000.0))),
+            ("path", "west", "yes", line((-1000.0, 0.0), (-0.003, 0.0), (1000.0, 0.0))),
+        ],
+        tables["new_ways"].schema,
+    )
+    # one existing diagonal through the origin crosses both new ways there
+    existing = spark.createDataFrame(
+        [(1, 1, "path", "diagonal", line((-1000.0, -1000.0), (1000.0, 1000.0)))],
+        tables["original_ways"].schema,
+    )
+    cset = generate_changes(
+        spark,
+        {
+            "new_ways": new_ways,
+            "original_ways": existing,
+            "pbf_ways": spark.createDataFrame([(1, [1, 2], {})], tables["pbf_ways"].schema),
+        },
+        id_offset=ID_OFFSET,
+        check_collision=False,
+    ).collect()
+
+    at_origin = [
+        r["id"] for r in cset
+        if r["kind"] == "node" and abs(r["lat"]) < 1e-6 and abs(r["lon"]) < 1e-6
+    ]
+    assert len(at_origin) == 1  # the vertices reuse the junction node (J4)
+    ways = [r for r in cset if r["kind"] == "way"]
+    assert len(ways) == 3
+    for w in ways:
+        assert None not in w["nds"], w
+        assert at_origin[0] in w["nds"], w
+
+
 def test_relation_structure(changeset):
     rels = changeset.filter(F.col("kind") == "relation").collect()
     assert len(rels) == 1
@@ -247,6 +331,51 @@ def test_deletions_with_node_expansion(spark, tables):
     c = _counts(out)
     assert c[("delete", "way")] == 2
     assert c[("delete", "node")] == 22  # 2 ways × 11 distinct nodes
+
+
+def _pbf(tables):
+    return {k: tables[k] for k in ("pbf_nodes", "pbf_ways", "pbf_relations")}
+
+
+def test_points_only_run(spark, tables):
+    """A run with no ways and no polygons has only node payloads: its
+    elements are the created points."""
+    from changegen_spark.pipeline import generate_changes
+
+    out = generate_changes(
+        spark, {"new_points": tables["new_points"], **_pbf(tables)}, id_offset=ID_OFFSET
+    )
+    assert _counts(out) == {("create", "node"): N_POINT_NODES}
+
+
+def test_deletions_only_run(spark, tables):
+    from changegen_spark.pipeline import generate_changes
+
+    out = generate_changes(
+        spark, {"deleted_ways": tables["deleted_ways"], **_pbf(tables)}, id_offset=ID_OFFSET
+    )
+    assert _counts(out) == {("delete", "way"): GOLDEN_DELETE_WAYS}
+
+
+def test_degenerate_ring_is_not_a_member(spark, tables):
+    """A holed polygon whose inner ring is a single coordinate has no
+    vertices there, so no way for that ring: its relation lists the outer
+    ring only, and every member refs a created way."""
+    from changegen_spark.pipeline import generate_changes
+    from changegen_spark.sources.osm import _geom
+
+    square = [(0.0, 0.0), (500.0, 0.0), (500.0, 500.0), (0.0, 500.0), (0.0, 0.0)]
+    polys = spark.createDataFrame(
+        [("forest", "holed", _geom("Polygon", [square, [(250.0, 250.0)]]))],
+        tables["new_polygons"].schema,
+    )
+    out = generate_changes(
+        spark, {"new_polygons": polys, **_pbf(tables)}, id_offset=ID_OFFSET
+    ).collect()
+    way_ids = {r["id"] for r in out if r["kind"] == "way"}
+    assert len(way_ids) == 1
+    (rel,) = [r for r in out if r["kind"] == "relation"]
+    assert [(m["ref"], m["role"]) for m in rel["members"]] == [(min(way_ids), "outer")]
 
 
 def test_collision_abort_restores_session_state(spark, tables):

@@ -642,6 +642,22 @@ def test_two_phase_rank_sites_are_fenced(spark, sf_dir):
         )
 
 
+def test_changegen_elements_join_the_id_fence_at_most_twice(spark):
+    """The changegen element plan reads its eager id fence in two joins:
+    one resolves every way and relation member ref, one gives every
+    element its id.  A join per element frame (nine call sites) put 13
+    reads of the fence into the sink's single execution."""
+    import re
+
+    from changegen_spark.pipeline import generate_changes
+    from changegen_spark.sources.osm import fixture_tables
+
+    elements = generate_changes(spark, fixture_tables(spark), id_offset=20_000)
+    plan = elements._jdf.queryExecution().optimizedPlan().toString()
+    id_fence = re.findall(r"LogicalRDD \[korder#\d+, skey#\d+, new_id#\d+L\]", plan)
+    assert 1 <= len(id_fence) <= 2, plan
+
+
 def test_never_direct_propose_respects_lru_policy():
     """The mechanical rotation proposal (tools/never_direct.py --propose)
     must only pick names the window pin would accept: never-direct
