@@ -6,12 +6,14 @@ elements are ``<node>/<way>/<relation>`` with nested ``<tag>/<nd>/<member>``
 children, optionally gzip-compressed (``changewriter.py:120-123``).
 
 Spark-first shape: the change set is a DataFrame with the unified element
-schema (see ``ELEMENT_SCHEMA``); the sink is the one deliberately
-driver-side stage of the engine — ``toLocalIterator`` streams sorted
-partitions through a constant-memory serializer, so the driver never holds
-the full changefile.  Changefiles are ≪ cluster data by construction (they
-are diffs), so a single ordered file is the right contract; for huge diffs
-the same serializer can run per-partition to sharded files + concat.
+schema (see ``ELEMENT_SCHEMA``).  One serializer, ``_xml_fragment``, renders
+each element's XML as a single Spark SQL expression on the executors; both
+writers use it.  ``write_osmchange`` is the one deliberately driver-side
+stage of the engine — ``toLocalIterator`` streams the sorted fragments into
+the file, so the driver never holds the full changefile.  Changefiles are ≪
+cluster data by construction (they are diffs), so a single ordered file is
+the right contract; for huge diffs ``write_osmchange_sharded`` writes the
+fragments as text shards and the driver concatenates their bytes.
 
 Determinism contract (SURVEY §7 risk 2): block order create→modify→delete;
 within a block elements sort by (kind: node<way<relation, id).  Referential
@@ -23,7 +25,7 @@ from __future__ import annotations
 import gzip
 from typing import IO
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -84,104 +86,104 @@ def _rank(order: dict[str, int], col: str):
     )
 
 
-def _esc(s: str) -> str:
-    """XML attribute-value escaping (double-quoted attributes).
+# The document head both writers emit.
+_HEADER = (
+    '<?xml version="1.0" encoding="UTF-8"?>\n'
+    '<osmChange version="0.6" generator="changegen_spark">\n'
+)
+
+
+def _cat(*parts) -> Column:
+    """``concat`` of columns and literal strings."""
+    return F.concat(*[F.lit(p) if isinstance(p, str) else p for p in parts])
+
+
+def _str(c: Column) -> Column:
+    """``c`` as a string; null reads ``None``, as Python's ``str`` prints it."""
+    return F.coalesce(c.cast("string"), F.lit("None"))
+
+
+def _esc(c: Column) -> Column:
+    """XML attribute-value escaping (double-quoted attributes) of ``_str(c)``.
 
     Whitespace controls become character references — a literal newline in
     an attribute would be normalized to a space by any conforming parser.
     """
+    out = _str(c)
+    for ch, ref in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;"), ('"', "&quot;"),
+                    ("\n", "&#10;"), ("\r", "&#13;"), ("\t", "&#9;")):
+        out = F.replace(out, F.lit(ch), F.lit(ref))
+    return out
+
+
+def _coord(c: Column) -> Column:
+    """Fixed 9-dp coordinate, ``f"{v:.9f}"`` of ``coalesce(c, 0.0)``.
+
+    Delete placeholders carry lat/lon 0 (changegen/generator.py:925).
+    ``format_number`` rounds like Python everywhere but at exactly ±5e-10,
+    which the JVM prints as ±0.000000000 and Python as ±0.000000001.
+    """
+    v = F.coalesce(c, F.lit(0.0))
     return (
-        str(s)
-        .replace("&", "&amp;")
-        .replace("<", "&lt;")
-        .replace(">", "&gt;")
-        .replace('"', "&quot;")
-        .replace("\n", "&#10;")
-        .replace("\r", "&#13;")
-        .replace("\t", "&#9;")
+        F.when(v == 5e-10, "0.000000001")
+        .when(v == -5e-10, "-0.000000001")
+        .otherwise(F.call_function("format_number", v, F.lit("0.000000000")))
     )
 
 
-def _fmt_coord(v: float) -> str:
-    """Fixed 9-dp coordinate formatting — deterministic, sub-mm precision."""
-    return f"{v:.9f}"
+def _xml_fragment() -> Column:
+    """One element of ``ELEMENT_SCHEMA`` as its XML, without the last newline.
 
-
-def _write_element(f: IO[str], row) -> None:
-    kind = row["kind"]
-    attrs = [f'id="{row["id"]}"', f'version="{row["version"]}"']
-    if kind == "node":
-        # delete placeholders carry lat/lon 0 (changegen/generator.py:925)
-        lat = row["lat"] if row["lat"] is not None else 0.0
-        lon = row["lon"] if row["lon"] is not None else 0.0
-        attrs += [f'lat="{_fmt_coord(lat)}"', f'lon="{_fmt_coord(lon)}"']
-    tags = row["tags"] or {}
-    nds = row["nds"] or []
-    members = row["members"] or []
-    head = f'<{kind} {" ".join(attrs)}'
-    if not tags and not nds and not members:
-        f.write(head + "/>\n")
-        return
-    f.write(head + ">\n")
-    # <tag> children first, then <nd>/<member> — the reference writer's
-    # child order (changewriter.py:71-86), kept for byte-level comparability.
-    # canonical key order: map columns are unordered, the file is not
-    for k in sorted(tags):
-        f.write(f'  <tag k="{_esc(k)}" v="{_esc(tags[k])}"/>\n')
-    for nd in nds:
-        f.write(f'  <nd ref="{nd}"/>\n')
-    for m in members:
-        f.write(
-            f'  <member type="{_esc(m["type"])}" ref="{m["ref"]}" role="{_esc(m["role"])}"/>\n'
-        )
-    f.write(f"</{kind}>\n")
-
-
-def element_xml(row) -> str:
-    """One element serialized as an XML fragment (no block wrapper).
-
-    Accepts Row or pandas-record dicts; Arrow hands maps to pandas as
-    key/value tuple lists and missing doubles as NaN — normalized here so
-    the executor-side path emits byte-identical XML to the driver path.
+    ``<tag>`` children come first, then ``<nd>``/``<member>`` — the reference
+    writer's child order (changewriter.py:71-86).  Tags go in key order:
+    map columns are unordered, the file is not.  ``sort_array`` on strings
+    is code-point order, the same as Python's ``sorted``.
     """
-    import io
-
-    r = dict(row.asDict() if hasattr(row, "asDict") else row)
-    if isinstance(r.get("tags"), (list, tuple)):
-        r["tags"] = dict(r["tags"])
-    for k in ("lat", "lon"):
-        v = r.get(k)
-        if v is not None and v != v:  # NaN
-            r[k] = None
-    nds = r.get("nds")
-    if nds is not None and not isinstance(nds, list):
-        r["nds"] = list(nds)
-    members = r.get("members")
-    if members is not None:
-        r["members"] = [
-            m if isinstance(m, dict) else m.asDict() for m in members
-        ]
-    buf = io.StringIO()
-    _write_element(buf, r)
-    return buf.getvalue()
+    kind, tags = _str(F.col("kind")), F.col("tags")
+    head = _cat(
+        "<", kind, ' id="', _str(F.col("id")), '" version="', _str(F.col("version")), '"',
+        F.when(
+            kind == "node",
+            _cat(' lat="', _coord(F.col("lat")), '" lon="', _coord(F.col("lon")), '"'),
+        ).otherwise(""),
+    )
+    # concat_ws skips null arrays: an absent child list adds nothing
+    children = F.concat_ws(
+        "",
+        F.transform(
+            F.sort_array(F.map_keys(tags)),
+            lambda k: _cat('  <tag k="', _esc(k), '" v="', _esc(tags[k]), '"/>\n'),
+        ),
+        F.transform("nds", lambda ref: _cat('  <nd ref="', _str(ref), '"/>\n')),
+        F.transform(
+            "members",
+            lambda m: _cat(
+                '  <member type="', _esc(m["type"]), '" ref="', _str(m["ref"]),
+                '" role="', _esc(m["role"]), '"/>\n',
+            ),
+        ),
+    )
+    return (
+        F.when(children == "", _cat(head, "/>"))
+        .otherwise(_cat(head, ">\n", children, "</", kind, ">"))
+        .alias("xml")
+    )
 
 
 def write_osmchange_sharded(
     elements: DataFrame,
     path: str,
     shards_per_block: int = 8,
-    generator: str = "changegen_spark",
     timings: dict | None = None,
 ) -> dict[str, int]:
-    """Scale-path sink: serialization runs ON THE EXECUTORS.
+    """Scale-path sink: nothing but file bytes reach the driver.
 
     Per change block: range-partition by (kind, id) → sort within
-    partitions → mapInPandas serializes each element to an XML fragment
-    string → write.text shard files.  The driver only streams header +
-    shard bytes + footer into the final file (pure I/O concat, no parsing,
-    no row materialization) — the piece of the reference's streaming
-    ``etree.xmlfile`` contract (changewriter.py:133) that must NOT be
-    driver-bound at 100 TB.
+    partitions → ``_xml_fragment`` → write.text shard files.  The driver
+    only streams header + shard bytes + footer into the final file (pure
+    I/O concat, no parsing, no row materialization) — the piece of the
+    reference's streaming ``etree.xmlfile`` contract (changewriter.py:133)
+    that must NOT be driver-bound at 100 TB.
 
     Returns per-block counts.  Output is byte-identical to
     ``write_osmchange``.
@@ -197,21 +199,8 @@ def write_osmchange_sharded(
     import tempfile
     import time as _time
 
-    from pyspark.sql.types import StringType, StructField as SF, StructType as ST
-
     elements = _to_element_schema(elements)
     order_kind = _rank(_KIND_ORDER, "kind")
-
-    def serialize(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            # the text sink appends one newline per row — strip the
-            # fragment's own trailing newline so bytes match the driver sink
-            frags = [
-                element_xml(row).rstrip("\n") for row in pdf.to_dict("records")
-            ]
-            yield pd.DataFrame({"xml": frags})
 
     # ONE execution of the element plan: fence it, then the per-block
     # counts and the three shard writes all read the materialized rows.
@@ -234,10 +223,7 @@ def write_osmchange_sharded(
         # binary concat: the shard files are already UTF-8 bytes — a text-
         # mode copy would decode+re-encode every byte on the driver
         with open(path, "wb") as out:
-            out.write(b'<?xml version="1.0" encoding="UTF-8"?>\n')
-            out.write(
-                f'<osmChange version="0.6" generator="{_esc(generator)}">\n'.encode()
-            )
+            out.write(_HEADER.encode())
             for block in ("create", "modify", "delete"):
                 n = counts[block]
                 if n == 0:
@@ -245,12 +231,12 @@ def write_osmchange_sharded(
                 part = elements.filter(F.col("change_type") == block)
                 shard_dir = f"{tmp}/{block}"
                 t0 = _time.time()
+                # the text sink ends each fragment with its newline
                 (
                     part.withColumn("__ko", order_kind)
                     .repartitionByRange(shards_per_block, "__ko", "id")
                     .sortWithinPartitions("__ko", "id")
-                    .drop("__ko")
-                    .mapInPandas(serialize, ST([SF("xml", StringType())]))
+                    .select(_xml_fragment())
                     .write.mode("overwrite")
                     .text(shard_dir)
                 )
@@ -275,16 +261,17 @@ def write_osmchange(
     elements: DataFrame,
     path: str,
     compress: bool = False,
-    generator: str = "changegen_spark",
 ) -> dict[str, int]:
     """Serialize an element DataFrame to one ordered .osc file.
 
     Returns per-block element counts (handy for golden-count tests).  The
-    sort is distributed (``orderBy`` before ``toLocalIterator``); the driver
-    only streams.
+    sort and the XML rendering are distributed (``orderBy`` and
+    ``_xml_fragment`` before ``toLocalIterator``); the driver only streams.
     """
-    ordered = _to_element_schema(elements).orderBy(
-        _rank(_CHANGE_ORDER, "change_type"), _rank(_KIND_ORDER, "kind"), F.col("id")
+    fragments = (
+        _to_element_schema(elements)
+        .orderBy(_rank(_CHANGE_ORDER, "change_type"), _rank(_KIND_ORDER, "kind"), F.col("id"))
+        .select("change_type", _xml_fragment())
     )
 
     counts = {"create": 0, "modify": 0, "delete": 0}
@@ -295,17 +282,15 @@ def write_osmchange(
         f = open(path, "w", encoding="utf-8")
     current_block: str | None = None
     try:
-        f.write('<?xml version="1.0" encoding="UTF-8"?>\n')
-        f.write(f'<osmChange version="0.6" generator="{_esc(generator)}">\n')
-        for row in ordered.toLocalIterator():
-            block = row["change_type"]
+        f.write(_HEADER)
+        for block, xml in fragments.toLocalIterator():
             if block != current_block:
                 if current_block is not None:
                     f.write(f"</{current_block}>\n")
                 f.write(f"<{block}>\n")
                 current_block = block
             counts[block] += 1
-            _write_element(f, row)
+            f.write(xml + "\n")
         if current_block is not None:
             f.write(f"</{current_block}>\n")
         f.write("</osmChange>\n")

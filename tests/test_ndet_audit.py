@@ -35,7 +35,8 @@ from ndet_audit import sweep  # noqa: E402
 DISPOSITIONS = {
     ("changegen_spark/sinks/oscxml.py", "write_osmchange_sharded", "repartitionByRange"):
         (1, "single-action: per-block text write; upstream `elements` is "
-            "already fenced at oscxml.py:210, each block is one action"),
+            "already fenced by the function's own localCheckpoint(eager=False), "
+            "each block is one action"),
     ("changegen_spark/operators/asof.py", "_as_of_backward", "F.last"):
         (1, "ordered-window: last(ignorenulls) over orderBy(__ts_us, "
             "__side, __tie) — total key per partition group"),

@@ -658,6 +658,47 @@ def test_changegen_elements_join_the_id_fence_at_most_twice(spark):
     assert 1 <= len(id_fence) <= 2, plan
 
 
+def test_osc_sinks_plan_no_python_node(spark, tmp_path):
+    """Both .osc writers render every element's XML in the JVM: no SQL
+    execution either writer starts has a Python node in its physical plan
+    (the sharded writer once serialized through mapInPandas)."""
+    import os
+
+    from changegen_spark.sinks.oscxml import (
+        ELEMENT_SCHEMA,
+        write_osmchange,
+        write_osmchange_sharded,
+    )
+
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execution_plans():
+        it = store.executionsList().iterator()
+        plans = {}
+        while it.hasNext():
+            e = it.next()
+            plans[e.executionId()] = e.physicalPlanDescription()
+        return plans
+
+    df = spark.createDataFrame(
+        [
+            ("create", "node", 1, 1, 1.5, 2.5, None, None, {"a": "b"}),
+            ("create", "way", 2, 1, None, None, [1], None, None),
+            ("modify", "relation", 3, 2, None, None, None, [(2, "way", "outer")], None),
+            ("delete", "node", 4, 1, None, None, None, None, None),
+        ],
+        ELEMENT_SCHEMA,
+    )
+    before = set(execution_plans())
+    write_osmchange(df, os.path.join(tmp_path, "a.osc"))
+    write_osmchange_sharded(df, os.path.join(tmp_path, "b.osc"), shards_per_block=2)
+    ran = {i: p for i, p in execution_plans().items() if i not in before}
+    assert len(ran) >= 4  # driver stream + counts + one write per block
+    for plan in ran.values():
+        for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython", "PythonUDF"):
+            assert node.lower() not in plan.lower(), plan
+
+
 def test_never_direct_propose_respects_lru_policy():
     """The mechanical rotation proposal (tools/never_direct.py --propose)
     must only pick names the window pin would accept: never-direct
