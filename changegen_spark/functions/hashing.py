@@ -4,7 +4,8 @@ Design notes (100 TB): all operators are explode → hash → groupBy pipelines
 with map-side partial aggregation; candidate generation is LSH band-bucketing
 so the pair space is bucket-local (never O(n²) across the corpus).  Hashes
 are md5-based so every step is reproducible in any engine (duckdb oracle
-parity) — swap in xxhash64 for production throughput.
+parity).  An xxhash64 signature path was only ~16% faster, because hashing
+was never the bottleneck; it was deleted (GAPS.md keeps the result).
 
 MinHash trick: the minimum of md5(seed ‖ shingle) over a shingle set is a
 valid permutation-min — md5 acts as the random permutation of the shingle
@@ -204,7 +205,6 @@ def minhash_candidates(
     num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = None,
-    hash_fn: str = "md5",
     impl: str = "pandas",
 ) -> DataFrame:
     """End-to-end MinHash-LSH candidate pair generation.
@@ -213,7 +213,7 @@ def minhash_candidates(
     (id_a, id_b) with id_a < id_b, distinct.  The pair space stays
     bucket-local (never O(n²) across the corpus).
 
-    ``impl`` selects the signature stage (all value-identical for md5):
+    ``impl`` selects the signature stage (value-identical):
 
     * ``"pandas"`` (default): Arrow-batched UDF, ~17× the Catalyst
       signature throughput (see ``minhash_pandas_signature``); the sig
@@ -230,11 +230,9 @@ def minhash_candidates(
     """
     if num_hashes % 4 != 0:
         raise ValueError("num_hashes must be a multiple of 4")
-    if hash_fn not in ("md5", "xxhash64"):
-        raise ValueError(f"unknown hash_fn {hash_fn!r}")
     if impl not in ("pandas", "sql"):
         raise ValueError(f"unknown impl {impl!r}")
-    if impl == "pandas" and hash_fn == "md5":
+    if impl == "pandas":
         # scale-adaptive parallelism, cost-gated (guide §2, r14): the
         # signature UDF is the heaviest per-byte Python pass in the repo
         # (num_hashes md5 digests per document), so fine-grained spread
@@ -257,7 +255,7 @@ def minhash_candidates(
             )
             .repartition("id")
         )
-        return _band_and_pair(sig, num_hashes, bands, max_bucket_size, hash_fn)
+        return _band_and_pair(sig, num_hashes, bands, max_bucket_size)
 
     toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
     cnt = F.size(toks)
@@ -268,45 +266,35 @@ def minhash_candidates(
             lambda i: F.concat_ws(" ", F.slice(toks, i, F.lit(ngram))),
         ),
     ).otherwise(F.array(F.concat_ws(" ", toks)))
-    # impl == "sql" (and the xxhash64 fast path): explode → partial-min agg.
+    # impl == "sql": explode → partial-min agg.
     # No array_distinct before explode: min() is idempotent under duplicate
     # shingles, and skipping the distinct saves an O(n²)-ish array pass.
     sh = docs.select(F.col(id_col).alias("id"), F.explode(raw_shingles).alias("sh"))
-    if hash_fn == "md5":
-        # One md5 yields four independent 8-hex-char (32-bit) windows, so
-        # num_hashes permutations need num_hashes/4 md5 per shingle; the
-        # md5s are projection columns so each is computed once per row.
-        n_md5 = num_hashes // 4
-        hashed = sh.select(
-            "id",
-            *[
-                F.md5(
-                    F.to_binary(F.concat(F.lit(f"{m}:"), F.col("sh")), F.lit("utf-8"))
-                ).alias(f"h{m}")
-                for m in range(n_md5)
-            ],
-        )
-        sig = hashed.groupBy("id").agg(
-            *[
-                F.min(
-                    F.substring(F.col(f"h{s // 4}"), (s % 4) * 8 + 1, 8)
-                ).alias(f"mh{s}")
-                for s in range(num_hashes)
-            ]
-        )
-    else:  # xxhash64 — JVM intrinsic, one seeded hash per permutation
-        sig = sh.groupBy("id").agg(
-            *[
-                F.min(F.xxhash64(F.lit(s), F.col("sh"))).alias(f"mh{s}")
-                for s in range(num_hashes)
-            ]
-        )
-    return _band_and_pair(sig, num_hashes, bands, max_bucket_size, hash_fn)
+    # One md5 yields four independent 8-hex-char (32-bit) windows, so
+    # num_hashes permutations need num_hashes/4 md5 per shingle; the
+    # md5s are projection columns so each is computed once per row.
+    n_md5 = num_hashes // 4
+    hashed = sh.select(
+        "id",
+        *[
+            F.md5(
+                F.to_binary(F.concat(F.lit(f"{m}:"), F.col("sh")), F.lit("utf-8"))
+            ).alias(f"h{m}")
+            for m in range(n_md5)
+        ],
+    )
+    sig = hashed.groupBy("id").agg(
+        *[
+            F.min(
+                F.substring(F.col(f"h{s // 4}"), (s % 4) * 8 + 1, 8)
+            ).alias(f"mh{s}")
+            for s in range(num_hashes)
+        ]
+    )
+    return _band_and_pair(sig, num_hashes, bands, max_bucket_size)
 
 
-def lsh_band_frame(
-    sig: DataFrame, num_hashes: int, bands: int, hash_fn: str = "md5"
-) -> DataFrame:
+def lsh_band_frame(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """(id, mh0..mhN) signature frame → (id, band, bh) band-hash rows.
 
     Shared by the self-join candidate path (`_band_and_pair`) and
@@ -316,8 +304,6 @@ def lsh_band_frame(
 
     def band_hash(b: int):
         cols = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        if hash_fn == "xxhash64":
-            return F.xxhash64(F.lit(b), *cols).cast("string")
         return F.md5(F.to_binary(F.concat_ws("|", *cols), F.lit("utf-8")))
 
     return sig.select(
@@ -369,10 +355,9 @@ def _band_and_pair(
     num_hashes: int,
     bands: int,
     max_bucket_size: int | None,
-    hash_fn: str,
 ) -> DataFrame:
     """Band a (id, mh0..mhN) signature frame and self-join per bucket."""
-    banded = lsh_band_frame(sig, num_hashes, bands, hash_fn)
+    banded = lsh_band_frame(sig, num_hashes, bands)
     if max_bucket_size is not None:
         # Hot-bucket guard (production default at corpus scale): a
         # degenerate bucket of B docs costs B² pair rows; buckets past the

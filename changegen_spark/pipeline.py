@@ -35,14 +35,14 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from changegen_spark.geo.geometry import exterior, g_type, point_xy
 from changegen_spark.geo.mercator import to_4326_lat, to_4326_lon
 from changegen_spark.geo.segments import explode_segments, segment_distance_join
 from changegen_spark.operators.changes import expand_deleted_ways, tag_change
-from changegen_spark.operators.ids import check_id_collision
+from changegen_spark.operators.ids import assign_sequential_ids, check_id_collision
 from changegen_spark.operators.keys import feature_key
 from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
 from changegen_spark.operators.ways import (
@@ -91,8 +91,7 @@ def _rounded_lonlat(x, y):
 class ChangeSet:
     """Accumulates element DataFrames + id requests, then resolves ids."""
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
+    def __init__(self):
         self.requests: list[DataFrame] = []
 
     def request_ids(self, df: DataFrame, kind: int, skey) -> None:
@@ -103,16 +102,15 @@ class ChangeSet:
     def resolve(self, id_offset: int, negative: bool) -> DataFrame:
         """(korder, skey) → new_id, dense from id_offset+1 (W1)."""
         allreq = reduce(lambda a, b: a.unionByName(b), self.requests).distinct()
-        w = Window.orderBy("korder", "skey")
-        seq = F.row_number().over(w).cast("long") + F.lit(id_offset)
-        return allreq.withColumn("new_id", -seq if negative else seq)
+        return assign_sequential_ids(
+            allreq, order_by=["korder", "skey"], id_offset=id_offset, negative=negative
+        )
 
 
 def synthesize_junctions(
     new_ways: DataFrame,
     existing_ways: DataFrame,
     key_col: str,
-    distance_buffer: float = DISTANCE_BUFFER_DEFAULT,
     self_intersections: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Stage A: (junction_nodes keyed by rounded lon/lat, per-pair junctions).
@@ -134,7 +132,7 @@ def synthesize_junctions(
         F.col("__ring"),
         prefix="r",
     )
-    pairs = segment_distance_join(lsegs, rsegs, distance_buffer, dedup_pairs=False)
+    pairs = segment_distance_join(lsegs, rsegs, DISTANCE_BUFFER_DEFAULT, dedup_pairs=False)
     # one junction per (new, existing) pair: the globally closest approach
     best = pairs.groupBy("nkey", "osm_id").agg(
         F.min_by(
@@ -165,7 +163,7 @@ def synthesize_junctions(
             prefix="r",
         )
         self_pairs = segment_distance_join(
-            lsegs, osegs, distance_buffer, dedup_pairs=False
+            lsegs, osegs, DISTANCE_BUFFER_DEFAULT, dedup_pairs=False
         ).filter(
             F.col("nkey") != F.col("okey")
         )
@@ -435,10 +433,8 @@ def generate_changes(
     id_offset: int = 0,
     negative_ids: bool = False,
     self_intersections: bool = False,
-    distance_buffer: float = DISTANCE_BUFFER_DEFAULT,
     node_limit: int = NODE_LIMIT_DEFAULT,
     chunk_size: int = CHUNK_SIZE_DEFAULT,
-    skip_delete_nodes: bool = True,
     check_collision: bool = True,
     key_col: str = "name",
     hstore_col: str | None = None,
@@ -472,15 +468,14 @@ def generate_changes(
     with concurrent.futures.ThreadPoolExecutor(max_workers=4) as pool:
         fut_maxids = pool.submit(max_pbf_ids, tables) if check_collision else None
 
-        cs = ChangeSet(spark)
+        cs = ChangeSet()
         new_ways = tables.get("new_ways")
         existing = tables.get("original_ways")
 
         # A: junctions (single evaluation serves J1 closest-points AND J2 ids)
         if new_ways is not None and existing is not None:
             junction_nodes, junctions = synthesize_junctions(
-                new_ways, existing, key_col=key_col,
-                distance_buffer=distance_buffer, self_intersections=self_intersections,
+                new_ways, existing, key_col=key_col, self_intersections=self_intersections,
             )
         else:
             junction_nodes = spark.createDataFrame(
@@ -580,7 +575,7 @@ def generate_changes(
         # G: deletions
         del_elems = []
         if tables.get("deleted_ways") is not None:
-            del_elems = _deletion_elements(tables, skip_delete_nodes)
+            del_elems = _deletion_elements(tables, skip_nodes=True)
 
         # join the overlapped B/C stages
         if fut_b is not None:

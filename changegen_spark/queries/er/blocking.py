@@ -136,7 +136,7 @@ def er_pairs_for(people: DataFrame, extra_block_cols=()) -> DataFrame:
     exact-match fields (e.g. city) to the blocking key — the standard
     lever at population scale, where same-name-different-person mass is
     quadratic in name frequency and a single phonetic key's entropy
-    stops scaling with n (the ladder in bench.py measures both
+    stops scaling with n (the er ladder in tools/ladders.py measures both
     schemes).  The scale ladder drives this over
     sources/scaleup.build_er_records."""
     extra = list(extra_block_cols)

@@ -243,7 +243,7 @@ def bcubed_from_pairs(people: DataFrame, pairs: DataFrame) -> tuple:
     """(n, n_pred, n_true, p_e6, r_e6, f1_e6) B³ metrics of the clusters
     implied by ``pairs`` (CC, singletons map to themselves) against the
     planted entity_id of ``people`` — the computation behind
-    ``q_er_bcubed``, factored so bench.py's er_ladder can grade EVERY
+    ``q_er_bcubed``, factored so tools/ladders.py's er ladder can grade EVERY
     scheme at the entity level (r10 verdict #2), not just the shipped
     one.  Integer e12 arithmetic throughout (see q_er_bcubed)."""
     from changegen_spark.functions.clustering import connected_components

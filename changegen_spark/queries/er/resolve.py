@@ -47,7 +47,7 @@ INFORMATIVE:
 * ``toward_gap2`` — both.
 
 ``DRAIN_POLICY`` holds the default; the per-policy resolution precision
-is measured as first-class er_ladder columns (bench.py) and
+is measured as first-class er_ladder columns (tools/ladders.py) and
 q_er_drain_policy exposes the full policy × arrival disposition table
 with a DuckDB oracle.
 

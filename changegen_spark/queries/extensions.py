@@ -274,18 +274,6 @@ ORDER BY query_id, rank
 """
 
 
-def q_lsh_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH candidates on the xxhash64 production path — identical
-    plan to q_lsh_pairs with JVM-intrinsic hashing (no oracle: xxhash64 is
-    not reproducible in DuckDB; candidate quality properties are pinned in
-    tests, throughput in bench)."""
-    from changegen_spark.functions.hashing import minhash_candidates
-    from changegen_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    return minhash_candidates(d, hash_fn="xxhash64").orderBy("id_a", "id_b")
-
-
 def q_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming changefile emission e2e: event stream → foreachBatch →
     per-batch .osc shards → read back with the OSC reader.  Deterministic
@@ -445,7 +433,6 @@ ORDER BY s.vec_id
 QUERIES = {
     "q_change_feed": q_change_feed,
     "q_semantic_dedup": q_semantic_dedup,
-    "q_lsh_pairs_fast": q_lsh_pairs_fast,
     "q_ann_ivf": q_ann_ivf,
     "q_streaming_windows": q_streaming_windows,
     "q_streaming_sessions": q_streaming_sessions,

@@ -236,7 +236,7 @@ def dup_pairs_from_dhash(
     uncorrelated hashes collide on a band with prob ``b / 16^band_hex``,
     so 8×8-bit bands (complete at ≤7) cost ~n²/64 candidates while
     4×16-bit bands (complete at ≤3) cost ~n²/16384 — the media ladder in
-    bench.py measures both (SCALE.md)."""
+    tools/ladders.py measures both (SCALE.md)."""
     nbands = 16 // band_hex
     if ham > nbands - 1:
         raise ValueError(f"banding incomplete: ham={ham} > bands-1={nbands - 1}")
@@ -366,7 +366,7 @@ def dup_pairs_mih(d: DataFrame, ham: int = MIH_HAM) -> DataFrame:
     """Exact near-dup pairs at Hamming ≤ ``ham`` (≤ MIH_HAM for
     completeness) via multi-index candidates + exact 64-bit refine —
     byte-identical to the banded join's result filtered to the same
-    threshold, with a ~linear candidate volume (bench.py media ladder)."""
+    threshold, with a ~linear candidate volume (tools/ladders.py media ladder)."""
     if ham > MIH_HAM:
         raise ValueError(
             f"mih radius-1 probing is complete only for ham <= {MIH_HAM}, "
@@ -399,7 +399,7 @@ def q_media_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact dup (PNG pixels re-encoded as GIF, hamming 0) and a noised
     re-encode (hamming 1).  The O(10^4)-asset scale path over the same
     machinery is dup_pairs_from_dhash + sources/scaleup.build_media_assets
-    (bench.py media ladder)."""
+    (tools/ladders.py media ladder)."""
     from changegen_spark.multimodal.assets import dhash_images
 
     d = dhash_images(_assets(spark)).filter(F.col("ok")).select("asset_id", "dhash")

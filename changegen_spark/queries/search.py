@@ -356,8 +356,8 @@ def bm25_multi_scored(
       tokens are broadcast-semi-joined against the DISTINCT term set
       (map-side, no shuffle) before the tf aggregation, so only rows
       mentioning ANY query's terms shuffle — wall tracks matched
-      postings, not n_queries × corpus (measured: bench.py
-      bm25_multi_ladder, 8→32 queries over the same vocabulary is flat;
+      postings, not n_queries × corpus (measured: tools/ladders.py
+      bm25 ladder, 8→32 queries over the same vocabulary is flat;
       wall moves only when the matched-postings count moves).
     * Term scores are computed once per (doc, term) and fanned out to
       queries by a broadcast join on the (query_id, term) table — the
@@ -386,7 +386,7 @@ def bm25_multi_per_query(
     spark: SparkSession, sf_dir: str, queries
 ) -> DataFrame:
     """The pre-top-k (query_id, doc_id, n_terms_hit, score_e9) frame of
-    ``bm25_multi_scored`` — factored out so bench.py's bm25 ladder can
+    ``bm25_multi_scored`` — factored out so tools/ladders.py's bm25 ladder can
     measure the FAN-OUT volume (rows here = Σ_q matched docs of q, the
     quantity that actually grows with query count; the corpus-side tf
     pass is query-count-invariant)."""

@@ -18,11 +18,14 @@ fragments as text shards and the driver concatenates their bytes.
 Determinism contract (SURVEY §7 risk 2): block order create→modify→delete;
 within a block elements sort by (kind: node<way<relation, id).  Referential
 integrity across blocks is NOT enforced, matching ``changewriter.py:171-173``.
+A ``change_type`` other than create/modify/delete makes both writers raise
+the same ``ValueError`` and leave no file at ``path``.
 """
 
 from __future__ import annotations
 
 import gzip
+import os
 from typing import IO
 
 from pyspark.sql import Column, DataFrame
@@ -65,6 +68,14 @@ ELEMENT_SCHEMA = StructType(
 
 _CHANGE_ORDER = {"create": 0, "modify": 1, "delete": 2}
 _KIND_ORDER = {"node": 0, "way": 1, "relation": 2}
+
+
+def _check_block(block) -> None:
+    """Raise on a ``change_type`` that names no ``.osc`` block."""
+    if block not in _CHANGE_ORDER:
+        raise ValueError(
+            f"change_type must be one of {list(_CHANGE_ORDER)}, got {block!r}"
+        )
 
 
 def _to_element_schema(elements: DataFrame) -> DataFrame:
@@ -217,6 +228,8 @@ def write_osmchange_sharded(
         }
     )
     spark_s = _time.time() - t0
+    for block in counts:
+        _check_block(block)
     concat_s = 0.0
     tmp = tempfile.mkdtemp(prefix="osc_shards_")
     try:
@@ -285,6 +298,7 @@ def write_osmchange(
         f.write(_HEADER)
         for block, xml in fragments.toLocalIterator():
             if block != current_block:
+                _check_block(block)
                 if current_block is not None:
                     f.write(f"</{current_block}>\n")
                 f.write(f"<{block}>\n")
@@ -294,6 +308,9 @@ def write_osmchange(
         if current_block is not None:
             f.write(f"</{current_block}>\n")
         f.write("</osmChange>\n")
-    finally:
+    except BaseException:
         f.close()
+        os.remove(path)  # no truncated changefile
+        raise
+    f.close()
     return counts

@@ -14,8 +14,8 @@ every row group — nothing skips, every byte is read and filtered.
 ``rowgroup_prune_stats`` measures that skipping deterministically from
 the parquet footers themselves (the min/max stats readers prune with),
 not from wall clocks: footers are KB-sized per file, which is exactly why
-engines can afford pruning decisions before touching data.  bench.py's
-layout ladder records both the footer-level stats and the measured warm
+engines can afford pruning decisions before touching data.  The
+tools/ladders.py layout ladder records both the footer-level stats and the measured warm
 scan walls; tests/test_layout.py pins result equality across layouts
 (layout is invisible to correctness) and near-total pruning on the
 clustered copy.

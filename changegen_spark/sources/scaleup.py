@@ -9,7 +9,7 @@ scan/agg/window/text queries.  Join fan-outs whose selectivity depends on
 cross-copy collisions (l_partkey keeps its original domain) are noted in
 SCALE.md per query.
 
-Used by tools/bench_scaleup.py (full ladder, one-off) and bench.py's
+Used by tools/ladders.py (the scaleup ladder, one-off) and bench.py's
 per-round sf1 section (scale-sensitive headline subset).
 """
 
@@ -435,7 +435,7 @@ def build_web_urls(spark, out: str, n_urls: int, parts: int = 32) -> str:
     import os
 
     # exactly-2-spellings-per-page is the invariant every downstream
-    # correctness check (bench.py bad_groups == 0) rides on; an odd
+    # correctness check (the web ladder's bad_groups == 0) rides on; an odd
     # n_urls would wrap the last row via pmod onto page 0 as a silent
     # THIRD variant, so refuse it outright.
     if n_urls % 2 != 0:

@@ -10,6 +10,7 @@ import os
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 # (change_type, kind, id, version, lat, lon, nds, members, tags), unsorted
@@ -99,6 +100,30 @@ def test_osc_golden_bytes(spark, tmp_path):
         assert f.read() == GOLDEN
     with gzip.open(gz, "rb") as f:
         assert f.read() == GOLDEN
+
+
+@pytest.mark.parametrize("writer", ["driver", "sharded"])
+def test_unknown_change_type_raises_and_leaves_no_file(spark, tmp_path, writer):
+    """A ``change_type`` outside create/modify/delete is an error in both
+    writers, and no partial changefile is left behind."""
+    from changegen_spark.sinks.oscxml import (
+        ELEMENT_SCHEMA,
+        write_osmchange,
+        write_osmchange_sharded,
+    )
+
+    df = spark.createDataFrame(
+        [
+            ("create", "node", 1, 1, 1.0, 2.0, None, None, None),
+            ("Create", "node", 2, 1, 3.0, 4.0, None, None, None),
+        ],
+        ELEMENT_SCHEMA,
+    )
+    path = os.path.join(tmp_path, f"{writer}.osc")
+    write = write_osmchange if writer == "driver" else write_osmchange_sharded
+    with pytest.raises(ValueError, match="change_type .* got 'Create'"):
+        write(df, path)
+    assert not os.path.exists(path)
 
 
 def test_coord_matches_python_format(spark):

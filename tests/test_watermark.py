@@ -116,17 +116,3 @@ def test_lsh_hot_bucket_guard(spark):
     guarded = minhash_candidates(docs, max_bucket_size=10).count()
     assert unguarded == 30 * 29 // 2
     assert guarded == 0  # the degenerate bucket is dropped entirely
-
-
-def test_lsh_fast_path_quality(spark):
-    """xxhash64 path: identical docs always pair; disjoint docs don't."""
-    from changegen_spark.functions.hashing import minhash_candidates
-
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon"), (2, "alpha beta gamma delta epsilon"),
-         (3, "zeta eta theta iota kappa lambda")],
-        "doc_id long, text string",
-    )
-    pairs = {(r["id_a"], r["id_b"]) for r in minhash_candidates(docs, hash_fn="xxhash64").collect()}
-    assert (1, 2) in pairs
-    assert not any(3 in p for p in pairs)

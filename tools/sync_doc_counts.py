@@ -60,7 +60,7 @@ def main() -> None:
                 )
     # r13 (r12 verdict #8): quoted LADDER figures must agree with the
     # committed artifact they cite.  The r12 verdict found GAPS/SCALE
-    # quoting deep_cc at 18.0 s from an earlier run while bench_out.json
+    # quoting deep_cc at 18.0 s from an earlier run while the artifact
     # carried 14.1 s — rounds/components agreed, the wall was a stale
     # copy.  Every "N rounds (...), 1 component, X s" deep_cc quote in
     # GAPS.md/SCALE.md is checked against the committed cell (wall to
@@ -70,9 +70,10 @@ def main() -> None:
     import json
     import os
 
-    bench_path = os.path.join(os.path.dirname(__file__), "..", "bench_out.json")
-    if os.path.exists(bench_path):
-        cell = json.load(open(bench_path)).get("er_ladder", {}).get("deep_cc")
+    # the ladders' committed artifact (tools/ladders.py writes it)
+    ladders_path = os.path.join(os.path.dirname(__file__), "..", "ladders_out.json")
+    if os.path.exists(ladders_path):
+        cell = json.load(open(ladders_path)).get("er_ladder", {}).get("deep_cc")
         if cell:
             want_rounds, want_wall = cell["rounds"], round(cell["wall_s"], 1)
             for path in ("GAPS.md", "SCALE.md"):
@@ -93,7 +94,7 @@ def main() -> None:
         # 10k/100k/1M base, in either prose form ("X s at 10k base,
         # Y s at 100k, Z s at 1M" or "X/Y/Z s at 10k/100k/1M base"),
         # must match the committed per-rung retract cells to 2 dp.
-        rungs = json.load(open(bench_path)).get("er_ladder", {}).get("n", {})
+        rungs = json.load(open(ladders_path)).get("er_ladder", {}).get("n", {})
         want_r = tuple(
             round(rungs[k]["retract"]["wall_s"], 2)
             for k in ("10000", "100000", "1000000")
