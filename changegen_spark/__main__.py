@@ -9,8 +9,9 @@ variables exactly like the reference). In parquet mode the "database" is a
 directory of parquet tables (one per table,
 geometry as WKT strings in a ``geometry``/``geom`` column), the "extract" is
 a directory with ``nodes``/``ways``/``relations`` parquet (ingested from a
-``.pbf`` via ``changegen_spark.sources.pbf`` — or pass a ``.pbf`` path
-directly as ``--osmsrc`` and it is ingested on the fly).
+``.pbf`` with ``python -m changegen_spark.sources.pbf``), or a ``.pbf`` path
+passed directly as ``--osmsrc``, which is read on the fly through the
+``osmpbf`` Data Source (``sources/pbf.py:read_pbf_tables``).
 
     python -m changegen_spark DBDIR \
         --osmsrc EXTRACT_DIR_OR_PBF (--output changes.osc | --outdir DIR) \

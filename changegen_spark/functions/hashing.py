@@ -121,26 +121,6 @@ def hamming16(a: Column, b: Column) -> Column:
     return sum(bits[1:], start=bits[0]).cast("long")
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of the lowered text (array<string>).
-
-    Word-level shingles (vs char k-grams) are the right granularity when the
-    vocabulary is small relative to document length — char shingles saturate
-    and every pair collides, blowing up LSH buckets.
-    """
-    toks = F.split(F.trim(F.lower(text)), r"\s+")
-    cnt = F.size(toks)
-    return F.array_distinct(
-        F.when(
-            cnt >= n,
-            F.transform(
-                F.sequence(F.lit(1), cnt - F.lit(n) + 1),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, F.lit(n))),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", toks)))
-    )
-
-
 def minhash_pandas_signature(ngram: int = 3, num_hashes: int = 8):
     """Arrow-batched MinHash signature UDF: text → struct<mh0..mhN string>.
 

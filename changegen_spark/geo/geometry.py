@@ -37,13 +37,6 @@ GEOMETRY = StructType(
 )
 
 
-def g_point(x: Column, y: Column) -> Column:
-    return F.struct(
-        F.lit("Point").alias("gtype"),
-        F.array(F.array(F.struct(x.alias("x"), y.alias("y")))).alias("rings"),
-    )
-
-
 def g_type(geom: Column) -> Column:
     return geom.getField("gtype")
 
@@ -56,11 +49,6 @@ def exterior(geom: Column) -> Column:
 def interiors(geom: Column) -> Column:
     rs = geom.getField("rings")
     return F.slice(rs, 2, F.greatest(F.size(rs) - 1, F.lit(0)))
-
-
-def num_interior_rings(geom: Column) -> Column:
-    """ST_NumInteriorRings analog (SURVEY §2.2 P6)."""
-    return F.greatest(F.size(geom.getField("rings")) - 1, F.lit(0))
 
 
 def point_xy(geom: Column) -> tuple[Column, Column]:

@@ -44,21 +44,3 @@ def grid_dedup_points(
         .select("__row.*")
     )
     return out
-
-
-def exact_dedup(
-    df: DataFrame,
-    key_cols: list[str],
-    order_col: str,
-) -> DataFrame:
-    """Exact dedup keeping the minimum-``order_col`` row per key group.
-
-    Hash groupBy (shuffle on key hash) — at 100 TB this is the canonical
-    map-side-combine dedup; no sort, no window.
-    """
-    payload = F.struct(*[F.col(c) for c in df.columns])
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.min_by(payload, F.col(order_col)).alias("__row"))
-        .select("__row.*")
-    )

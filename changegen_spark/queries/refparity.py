@@ -4,8 +4,9 @@ end-to-end from its own fixture data.
 The inputs are the reference repo's shipped test fixture — the conflate
 database as a pg_dump custom archive (read natively by
 ``sources/pgdump.py``) and the OSM extract as a ``.pbf`` (read natively,
-blob-parallel, by ``sources/pbf.py``). The five pinned values are the
-reference's hand-verified goldens (``test/test_generator.py:101-230``):
+one partition per blob, by the ``osmpbf`` Data Source in
+``sources/pbf.py``). The five pinned values are the reference's
+hand-verified goldens (``test/test_generator.py:101-230``):
 10 create ways + 4 modify ways (new_ways × original_ways, self=True),
 213 create nodes (new_points), 22 modify ways (mod_ways, modify_meta),
 3 modify nodes (modified_points, modify_meta).
@@ -22,9 +23,9 @@ from changegen_spark.sources.refdata import reference_golden_counts
 
 def q_pbf_extract_stats(spark, sf_dir):
     """Native ``.pbf`` ingestion (S7/S8) exercised on the reference's real
-    extract: blob-parallel decode → per-kind counts and max ids.  The
-    pinned values are independently verifiable with any OSM tool (osmium
-    fileinfo) over the shipped fixture file."""
+    extract: ``read_pbf_tables`` (the CLI's ``.pbf`` path) → per-kind
+    counts and max ids.  The pinned values are independently verifiable
+    with any OSM tool (osmium fileinfo) over the shipped fixture file."""
     from pyspark.sql import functions as F
 
     from changegen_spark.sources.pbf import read_pbf_tables
@@ -49,22 +50,16 @@ def q_pbf_extract_stats(spark, sf_dir):
 
 def q_pbf_dsv2_stats(spark, sf_dir):
     """S7b driver row (r8 verdict #7): the SAME per-kind counts + max ids
-    as q_pbf_extract_stats, but read through the REGISTERED Python Data
-    Source — ``spark.read.format("osmpbf").load(...)`` — so the
-    DataSource V2 planning path (schema declaration, blob partition
-    enumeration, per-partition decode) is exercised end-to-end by the
-    oracle gate, not just pytest.  Oracle: the identical golden VALUES
-    table; a divergence between the two ingestion shapes shows up as one
-    row going red while its twin stays green.
-
-    r10: reads through the PRUNED scan — the query needs (kind, id)
-    only, so ``.option("columns", "kind,id")`` declares the 2-column
-    schema and the decode skips the tag stringtable, way refs, and
-    relation members entirely (sources/pbf_datasource.py; decode-time
-    delta pinned in tests/test_pbf_datasource.py)."""
+    as q_pbf_extract_stats, but read through the registered ``osmpbf``
+    format's PRUNED scan: the query needs (kind, id) only, so
+    ``.option("columns", "kind,id")`` declares the 2-column schema and
+    the decode skips the tag stringtable, way refs, and relation members
+    entirely (sources/pbf.py).  Oracle: the identical golden VALUES
+    table; a divergence between the full and the pruned decode shows up
+    as one row going red while its twin stays green."""
     from pyspark.sql import functions as F
 
-    from changegen_spark.sources.pbf_datasource import register
+    from changegen_spark.sources.pbf import register
     from changegen_spark.sources.refdata import REF_PBF
 
     register(spark)

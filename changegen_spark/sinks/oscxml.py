@@ -148,7 +148,9 @@ def _xml_fragment() -> Column:
     ``<tag>`` children come first, then ``<nd>``/``<member>`` — the reference
     writer's child order (changewriter.py:71-86).  Tags go in key order:
     map columns are unordered, the file is not.  ``sort_array`` on strings
-    is code-point order, the same as Python's ``sorted``.
+    is code-point order, the same as Python's ``sorted``.  A tag whose value
+    is null is dropped (as ``operators/tags.py`` drops null columns), and a
+    null member role prints as ``role=""``.
     """
     kind, tags = _str(F.col("kind")), F.col("tags")
     head = _cat(
@@ -163,14 +165,17 @@ def _xml_fragment() -> Column:
         "",
         F.transform(
             F.sort_array(F.map_keys(tags)),
-            lambda k: _cat('  <tag k="', _esc(k), '" v="', _esc(tags[k]), '"/>\n'),
+            lambda k: F.when(  # a null value's null fragment is skipped
+                tags[k].isNotNull(),
+                _cat('  <tag k="', _esc(k), '" v="', _esc(tags[k]), '"/>\n'),
+            ),
         ),
         F.transform("nds", lambda ref: _cat('  <nd ref="', _str(ref), '"/>\n')),
         F.transform(
             "members",
             lambda m: _cat(
                 '  <member type="', _esc(m["type"]), '" ref="', _str(m["ref"]),
-                '" role="', _esc(m["role"]), '"/>\n',
+                '" role="', _esc(F.coalesce(m["role"], F.lit(""))), '"/>\n',
             ),
         ),
     )

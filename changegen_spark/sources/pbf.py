@@ -1,25 +1,50 @@
-"""Native OSM ``.pbf`` ingestion — pure-Python decode, blob-parallel on Spark.
+"""Native OSM ``.pbf`` ingestion: a pure-Python decoder behind one Spark
+reader, the registered ``osmpbf`` Python Data Source.
 
-Replaces the "pre-converted parquet extract" assumption: the reference reads
-``.pbf`` directly (osmium handler ``changegen/generator.py:35-53``; metadata
-scan ``changegen/__main__.py:26-53``); this module gives the Spark engine the
-same capability from public format knowledge only (the OSM PBF wire format:
+The reference reads the extract through osmium callbacks (handler
+``changegen/generator.py:35-53``; metadata scan
+``changegen/__main__.py:26-53``).  This module does the same from public
+format knowledge only (the OSM PBF wire format:
 https://wiki.openstreetmap.org/wiki/PBF_Format — varint/zigzag protobuf
 encoding, zlib-compressed PrimitiveBlocks, DenseNodes delta coding).
 
-Scale design: a ``.pbf`` is a sequence of independently-decodable Blobs
-(≤32 MB each by spec). The driver does ONE cheap sequential pass reading the
-4-byte BlobHeader lengths (no decompression) to build a (offset, size) span
-list; the spans become a DataFrame and each executor decodes its blobs with
-``mapInPandas`` reading the shared file by offset — the blob is the split
-unit, so a planet-scale file fans out across the cluster with zero driver
-memory. Decoded elements land in a unified frame, persisted once, then
-filtered per kind (node/way/relation) — one decode pass, three outputs.
+``spark.read.format("osmpbf").load("extract.osm.pbf")`` (after
+:func:`register`) yields one row per element in ``_UNIFIED_SCHEMA``:
 
-The decoder is pure CPython over ``bytes`` — adequate for extracts; for
-planet-scale ingest the same span/mapInPandas scaffold holds and the
-per-blob decode body is the swap point for a vectorized (numpy) or native
-decoder.
+* **partition planning** — a ``.pbf`` is a sequence of independently
+  decodable Blobs (≤32 MB each by spec).  The driver reads only the blob
+  index (4-byte lengths and BlobHeaders, no decompression) and plans one
+  ``InputPartition`` per OSMData blob, so a planet file fans out across
+  the cluster with no repartition step and no driver memory;
+* **executor-side decode** — each task opens the file itself (shared
+  storage, the standard cluster layout; trivially true in local mode) and
+  yields rows directly;
+* **element-kind pruning** — ``.option("kinds", "way")`` makes the
+  loaded table the per-kind subset; the decode skips other
+  PrimitiveGroups before parsing their bodies, and a blob with no wanted
+  group never decodes its stringtable (the dominant cost);
+* **column pruning** — the Python Data Source API (4.1) has no planner
+  prune hook, so ``.option("columns", "kind,id")`` declares the pruned
+  schema and the decode skips unprojected tags, refs, members and coords.
+
+:func:`read_pbf_tables` reads the full scan once, fences it, and splits it
+into the engine's three extract tables.  The decoder is pure CPython over
+``bytes``: adequate for extracts; ``_decode_primitive_block`` is the swap
+point for a vectorized or native decoder.
+
+.. warning:: **Why this source does NOT implement ``pushFilters``**
+   (Spark 4.1.2): once a kind-filtered scan of a relation plans through
+   the pushdown worker, Spark REUSES that pushed read function for
+   subsequent UNFILTERED scans — on the reference extract ``df.count()``
+   after ``df.filter(kind='way').count()`` returned 2953 instead of
+   84137, silently dropping every node and relation.  The reuse even
+   follows a fresh ``.load()`` of the same path.  A mutable-pushdown
+   reader is therefore unusable for correctness on this Spark build; the
+   option-based subset is relation-scoped and immutable, so every scan of
+   a given relation decodes the same rows no matter what was planned
+   before it.  The test ``test_pushfilters_scan_reuse_is_still_broken``
+   pins the Spark behavior with a throwaway reader — when a Spark upgrade
+   fixes it, that test fails and pushFilters becomes adoptable.
 """
 
 from __future__ import annotations
@@ -30,14 +55,16 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-# unified mapInPandas output: tags/members as entry arrays (Arrow-friendly);
-# map columns are built Spark-side with map_from_entries.
+# one row per element; tags/members as parallel arrays, map and struct
+# columns are built Spark-side (read_pbf_tables)
 _UNIFIED_SCHEMA = (
     "kind string, id long, lat double, lon double, nds array<long>, "
     "mrefs array<long>, mtypes array<string>, mroles array<string>, "
     "tag_keys array<string>, tag_vals array<string>"
 )
+_ALL_COLS = tuple(c.split()[0] for c in _UNIFIED_SCHEMA.split(", "))
 
 _MEMBER_TYPES = ("node", "way", "relation")
 
@@ -169,25 +196,23 @@ def _decode_primitive_block(
 ) -> Iterator[tuple]:
     """PrimitiveBlock → element tuples in _UNIFIED_SCHEMA column order.
 
-    ``kinds`` (element-kind pushdown) and ``cols`` (column pruning) are
-    the DataSource-V2 scan hints (sources/pbf_datasource.py; the DSV2
-    twin of the reference's per-type filtered scan,
-    ``changegen/generator.py:35-53``).  With a ``kinds`` set, groups of
-    other kinds are skipped BEFORE their bodies are parsed — and when no
-    wanted group exists in the blob, the stringtable is never decoded
-    (the dominant cost: utf-8 of every unique tag string).  With a
+    ``kinds`` (element-kind pruning) and ``cols`` (column pruning) are
+    the ``osmpbf`` reader options (the twin of the reference's per-type
+    filtered scan, ``changegen/generator.py:35-53``).  With a ``kinds``
+    set, groups of other kinds are skipped BEFORE their bodies are
+    parsed — and when no wanted group exists in the blob, the
+    stringtable is never decoded (the dominant cost: utf-8 of every
+    unique tag string).  With a
     ``cols`` set, tag/nds/member/coord decode is skipped for
     unprojected columns; skipped slots yield None (the caller projects
-    them away).  Both default to None = decode everything — the
-    mapInPandas path and every pre-r10 caller are byte-identical.
+    them away).  Both default to None = decode everything.
     """
-    want = cols if cols is not None else None
-    need_tags = want is None or "tag_keys" in want or "tag_vals" in want
-    need_roles = want is None or "mroles" in want
-    need_mtypes = want is None or "mtypes" in want
-    need_mrefs = want is None or "mrefs" in want
-    need_coords = want is None or "lat" in want or "lon" in want
-    need_nds = want is None or "nds" in want
+    need_tags = cols is None or "tag_keys" in cols or "tag_vals" in cols
+    need_roles = cols is None or "mroles" in cols
+    need_mtypes = cols is None or "mtypes" in cols
+    need_mrefs = cols is None or "mrefs" in cols
+    need_coords = cols is None or "lat" in cols or "lon" in cols
+    need_nds = cols is None or "nds" in cols
 
     st_raw = None
     groups: list[bytes] = []
@@ -365,44 +390,108 @@ def iter_pbf_elements(path: str) -> Iterator[tuple]:
 
 # ---------------------------------------------------------------- Spark entry
 
-def read_pbf_unified(spark: SparkSession, path: str) -> DataFrame:
-    """Blob-parallel decode → unified element DataFrame (persisted).
+def _parse_columns(options) -> tuple[str, ...] | None:
+    raw = options.get("columns")
+    if not raw:
+        return None
+    cols = tuple(c.strip() for c in raw.split(",") if c.strip())
+    bad = [c for c in cols if c not in _ALL_COLS]
+    if bad:
+        raise ValueError(
+            f"osmpbf: unknown columns {bad}; available: {list(_ALL_COLS)}"
+        )
+    return cols
 
-    The file must be reachable at the same path on every executor (shared
-    storage — the standard cluster layout; trivially true in local mode)."""
-    apath = os.path.abspath(path)
-    spans = [
-        (off, size)
-        for btype, off, size in scan_blob_spans(apath)
-        if btype == "OSMData"
-    ]
-    nparts = max(1, min(len(spans), spark.sparkContext.defaultParallelism))
-    spans_df = spark.createDataFrame(spans, "off long, size long").repartition(
-        nparts, "off"
-    )
 
-    def decode(batches):
-        import pandas as pd
+def _parse_kinds(options) -> frozenset | None:
+    raw = options.get("kinds")
+    if not raw:
+        return None
+    kinds = frozenset(k.strip() for k in raw.split(",") if k.strip())
+    bad = sorted(kinds - set(_KIND_FNO))
+    if bad:
+        raise ValueError(
+            f"osmpbf: unknown kinds {bad}; available: {list(_KIND_FNO)}"
+        )
+    return kinds
 
-        cols = [c.split()[0] for c in _UNIFIED_SCHEMA.split(", ")]
-        with open(apath, "rb") as f:
-            for pdf in batches:
-                rows = []
-                for off, size in zip(pdf["off"], pdf["size"]):
-                    f.seek(int(off))
-                    rows.extend(_decode_primitive_block(_blob_raw(f.read(int(size)))))
-                yield pd.DataFrame(rows, columns=cols)
 
-    unified = spans_df.mapInPandas(decode, _UNIFIED_SCHEMA)
-    # one decode pass serves all three per-kind outputs
-    return unified.persist()
+class PbfBlobPartition(InputPartition):
+    """One OSMData blob: (byte offset, size) within the shared-path file."""
+
+    def __init__(self, off: int, size: int):
+        self.off = off
+        self.size = size
+
+
+class OsmPbfReader(DataSourceReader):
+    def __init__(self, options):
+        path = options.get("path")
+        if not path:
+            raise ValueError("osmpbf: .load(path) is required")
+        self.path = os.path.abspath(path)
+        self.columns = _parse_columns(options)
+        self.kinds = _parse_kinds(options)
+
+    def partitions(self):
+        return [
+            PbfBlobPartition(off, size)
+            for btype, off, size in scan_blob_spans(self.path)
+            if btype == "OSMData"
+        ]
+
+    def read(self, partition: PbfBlobPartition):
+        with open(self.path, "rb") as f:
+            f.seek(partition.off)
+            raw = _blob_raw(f.read(partition.size))
+        cols = self.columns
+        colset = frozenset(cols) if cols is not None else None
+        rows = _decode_primitive_block(raw, kinds=self.kinds, cols=colset)
+        if cols is None:
+            yield from rows
+        else:
+            idxs = tuple(_ALL_COLS.index(c) for c in cols)
+            for row in rows:
+                yield tuple(row[i] for i in idxs)
+
+
+class OsmPbfDataSource(DataSource):
+    """``format("osmpbf")`` — unified OSM element rows from a .pbf file."""
+
+    @classmethod
+    def name(cls) -> str:
+        return "osmpbf"
+
+    def schema(self) -> str:
+        _parse_kinds(self.options)  # validate eagerly at load time
+        cols = _parse_columns(self.options)
+        if cols is None:
+            return _UNIFIED_SCHEMA
+        by_name = dict(zip(_ALL_COLS, _UNIFIED_SCHEMA.split(", ")))
+        return ", ".join(by_name[c] for c in cols)
+
+    def reader(self, schema) -> OsmPbfReader:
+        return OsmPbfReader(self.options)
+
+
+def register(spark) -> None:
+    """Idempotently register the osmpbf format on this session."""
+    spark.dataSource.register(OsmPbfDataSource)
 
 
 def read_pbf_tables(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     """``.pbf`` → the engine's extract tables (``pbf_nodes`` /
     ``pbf_ways`` / ``pbf_relations``), schema-identical to a pre-ingested
-    parquet extract (``sources/osm.py`` PBF_*_SCHEMA)."""
-    u = read_pbf_unified(spark, path)
+    parquet extract (``sources/osm.py`` PBF_*_SCHEMA).
+
+    The file must be reachable at the same path on every executor."""
+    register(spark)
+    # one decode job serves all three per-kind selects
+    u = (
+        spark.read.format("osmpbf")
+        .load(os.path.abspath(path))
+        .localCheckpoint(eager=True)
+    )
     tags = F.map_from_arrays(F.col("tag_keys"), F.col("tag_vals")).alias("tags")
     nodes = u.filter(F.col("kind") == "node").select("id", "lat", "lon", tags)
     ways = u.filter(F.col("kind") == "way").select(

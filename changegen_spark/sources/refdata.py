@@ -32,7 +32,7 @@ def load_reference_tables(
     """All fixture tables, geometry parsed, id columns cast, extract decoded.
 
     Memoized per session: several parity checks each need the set, and the
-    pbf decode is one pass with a persisted unified frame."""
+    pbf decode is one fenced pass."""
     key = id(spark)
     if key in _CACHE:
         return dict(_CACHE[key])

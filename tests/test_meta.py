@@ -8,7 +8,6 @@ visible assertion instead of silently changing coverage.
 """
 
 import importlib.util
-import os
 import pathlib
 import re
 
@@ -24,18 +23,15 @@ def test_suite_skip_budget():
     """Exactly ONE test may skip in this container: the
     transformWithStateInPandas execution pin (Spark 4's state-server
     protocol imports google.protobuf, which this container doesn't ship
-    and pip is unavailable).  The other two gates (reference PBF
-    fixture, DuckDB JDBC jar) must be LIVE here — if either starts
-    skipping, coverage silently shrank and this pin says so."""
+    and pip is unavailable).  The other gate (DuckDB JDBC jar) must be
+    LIVE here — if it starts skipping, coverage silently shrank and this
+    pin says so."""
     # gate 1: the budgeted skip — protobuf absent in this container
     assert not _has_module("google.protobuf"), (
         "google.protobuf appeared: remove the skip budget and run "
         "test_capped_balance_stream_matches_batch unconditionally"
     )
-    # gates 2+3: must not skip
-    assert os.path.exists("/root/reference/test/data/osmdata.osm.pbf"), (
-        "PBF datasource tests would silently skip"
-    )
+    # gate 2: must not skip
     from test_jdbc_live import _find_jar
 
     assert _find_jar() is not None, "JDBC live tests would silently skip"
@@ -55,7 +51,6 @@ def test_skip_gates_are_enumerated():
         if n:
             found[p.name] = n
     assert found == {
-        "test_pbf_datasource.py": 1,  # reference PBF fixture gate
         "test_streaming.py": 1,  # google.protobuf gate (the 1 budgeted skip)
         "test_jdbc_live.py": 2,  # DuckDB JDBC jar gate (2 test classes)
     }, found

@@ -2,8 +2,9 @@
 coordinate expression against Python's ``f"{v:.9f}"``.
 
 The golden document was written by the Python-side formatter the sinks
-used before their XML moved into one Spark SQL expression; both writers
-and the gzip mode must still produce it byte for byte."""
+used before their XML moved into one Spark SQL expression, with its two
+null-value lines since corrected; both writers and the gzip mode must
+produce it byte for byte."""
 
 import gzip
 import os
@@ -32,7 +33,7 @@ ROWS = [
     ("delete", "way", 21, 1, None, None, None, None, {}),
 ]
 
-# A null tag value and a null member role print the literal ``None``.
+# A null tag value drops its tag; a null member role prints ``role=""``.
 GOLDEN = (
     '<?xml version="1.0" encoding="UTF-8"?>\n'
     '<osmChange version="0.6" generator="changegen_spark">\n'
@@ -44,7 +45,6 @@ GOLDEN = (
     "</node>\n"
     '<node id="2" version="1" lat="48.123456789" lon="-122.500000000"/>\n'
     '<way id="3" version="1">\n'
-    '  <tag k="a" v="None"/>\n'
     '  <tag k="é" v="ü"/>\n'
     '  <tag k="\uffff" v="bmp-max"/>\n'
     '  <tag k="\U0001d11e" v="astral"/>\n'
@@ -54,7 +54,7 @@ GOLDEN = (
     '<relation id="4" version="1">\n'
     '  <tag k="type" v="multipolygon"/>\n'
     '  <member type="way" ref="3" role="outer"/>\n'
-    '  <member type="node" ref="1" role="None"/>\n'
+    '  <member type="node" ref="1" role=""/>\n'
     '  <member type="node" ref="-5" role=""/>\n'
     "</relation>\n"
     "</create>\n"

@@ -10,10 +10,11 @@ Usage: python tools/check_oracle.py [query_name ...]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.01"
 

@@ -10,10 +10,12 @@ can't drift from the live registry.
 from __future__ import annotations
 
 import inspect
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def first_sentence(doc: str | None) -> str:
@@ -53,7 +55,7 @@ def main() -> None:
             s = first_sentence(moddoc)
             desc = f"*(module)* {s}" if s else ""
         lines.append(f"| `{name}` | {mark} | {mod} | {desc} |")
-    with open("/root/repo/QUERIES.md", "w") as f:
+    with open(os.path.join(REPO, "QUERIES.md"), "w") as f:
         f.write("\n".join(lines) + "\n")
     print(f"wrote QUERIES.md ({len(qs)} rows)")
 

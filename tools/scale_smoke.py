@@ -10,10 +10,11 @@ element counts and stage wall times; results recorded in SCALE.md.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def build_network(spark, n_orig: int, n_new: int):

@@ -4,10 +4,11 @@ registry — run after adding queries so the docs can't drift:
     python tools/sync_doc_counts.py
 """
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
@@ -68,7 +69,6 @@ def main() -> None:
     # reason as the close-note counts: these quotes are presented as run
     # evidence.
     import json
-    import os
 
     # the ladders' committed artifact (tools/ladders.py writes it)
     ladders_path = os.path.join(os.path.dirname(__file__), "..", "ladders_out.json")
