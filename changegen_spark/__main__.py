@@ -40,6 +40,7 @@ Polygon → polygon path — ``generator.py:603-756``).
 from __future__ import annotations
 
 import argparse
+import concurrent.futures
 import glob
 import os
 import sys
@@ -124,6 +125,17 @@ def _split_by_gtype(df: DataFrame, geom_col: str) -> dict[str, DataFrame]:
     }
 
 
+def _map_reads(read, items: list):
+    """``[read(x) for x in items]`` with the calls overlapped.  A parquet
+    read starts its own schema-inference job, so reads of independent
+    tables run side by side instead of one after another; results keep
+    the order of ``items``."""
+    if len(items) < 2:
+        return [read(x) for x in items]
+    with concurrent.futures.ThreadPoolExecutor(max_workers=min(len(items), 4)) as pool:
+        return list(pool.map(read, items))
+
+
 def _union_by_name(frames: list[DataFrame]) -> DataFrame:
     """Union tables by column name; a column missing from one is null."""
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
@@ -150,11 +162,14 @@ def load_new_parts(
     ``source`` is a ParquetSource or JdbcSource."""
     from changegen_spark.operators.keys import feature_key
 
-    points, lines, polys = [], [], []
-    for name in table_names:
+    def read(name: str) -> tuple[str, dict[str, DataFrame]]:
         df = source.load_geo(name)
         geom_col = "geometry" if "geometry" in df.columns else "geom"
-        for gtype, part in _split_by_gtype(df, geom_col).items():
+        return geom_col, _split_by_gtype(df, geom_col)
+
+    points, lines, polys = [], [], []
+    for geom_col, split in _map_reads(read, table_names):
+        for gtype, part in split.items():
             # stable row-unique feature key (see operators/keys.py)
             keyed = feature_key(part, geom_col)
             if gtype == "Point":
@@ -185,10 +200,12 @@ def load_extract(spark: SparkSession, osmsrc: str) -> dict[str, DataFrame]:
 
         tables.update(read_pbf_tables(spark, osmsrc))
     else:
-        for name in ("nodes", "ways", "relations"):
-            path = os.path.join(osmsrc, f"{name}.parquet")
-            if os.path.exists(path):
-                tables[f"pbf_{name}"] = spark.read.parquet(path)
+        paths = {
+            f"pbf_{name}": os.path.join(osmsrc, f"{name}.parquet")
+            for name in ("nodes", "ways", "relations")
+        }
+        paths = {key: path for key, path in paths.items() if os.path.exists(path)}
+        tables.update(zip(paths, _map_reads(spark.read.parquet, list(paths.values()))))
     if "pbf_ways" not in tables:
         raise SystemExit(f"extract {osmsrc} has no ways (need ways.parquet or a .pbf)")
     return tables
@@ -298,9 +315,29 @@ def main(argv: list[str] | None = None) -> int:
 
     extract = load_extract(spark, args.osmsrc)
 
+    names = source.discover(suffixes)
+    if not names and not args.deletions:
+        raise SystemExit(f"nothing to do: no tables matching *{suffixes} in {source.describe()} and no --deletions")
+
+    # The max-id scan's jobs run on a pool thread while the driver loads
+    # the tables; the collision guard reads its result before any output
+    # is written.
+    merged: dict[str, DataFrame] = {}
+    with concurrent.futures.ThreadPoolExecutor(max_workers=1) as pool:
+        fut_maxids = pool.submit(max_pbf_ids, extract)
+        ex_tables: dict[str, DataFrame] = {}
+        if args.existing:
+            ex_tables["original_ways"] = _union_by_name(_map_reads(source.load_geo, args.existing))
+        if args.output:
+            merged = {**load_new_parts(spark, source, names), **ex_tables, **extract}
+            if args.deletions:
+                merged["deleted_ways"] = _union_by_name(
+                    _map_reads(source.load_plain, args.deletions)
+                )
+        maxids = fut_maxids.result()
+
     # C6 collision guard, reference semantics (__main__.py:197-208): warn by
     # default, fatal only under --no_collisions.
-    maxids = max_pbf_ids(extract)
     existing_max = max(maxids.values()) if maxids else 0
     if not args.neg_id and args.id_offset <= existing_max:
         msg = (
@@ -339,14 +376,6 @@ def main(argv: list[str] | None = None) -> int:
             split_joiner="duplicate_first" if args.reference_bytes else "shared",
         )
 
-    names = source.discover(suffixes)
-    if not names and not args.deletions:
-        raise SystemExit(f"nothing to do: no tables matching *{suffixes} in {source.describe()} and no --deletions")
-
-    ex_tables: dict[str, DataFrame] = {}
-    if args.existing:
-        ex_tables["original_ways"] = _union_by_name([source.load_geo(ex) for ex in args.existing])
-
     wrote: list[str] = []
     if args.outdir:
         # reference mode: one {table}.osc per new-feature table
@@ -376,10 +405,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     # merged single-file mode
-    tables = {**load_new_parts(spark, source, names), **ex_tables, **extract}
-    if args.deletions:
-        tables["deleted_ways"] = _union_by_name([source.load_plain(dl) for dl in args.deletions])
-    elements = run_one(tables)
+    elements = run_one(merged)
     if elements is None:
         raise SystemExit("nothing to do: no new tables, deletions, or modify_meta")
 

@@ -94,21 +94,26 @@ def main(argv: list[str] | None = None) -> int:
         # incremental mode: this batch vs the persisted "seen" corpus —
         # the daily-increment contract (queries/scale.py): both corpus
         # sides are bucketed by their join key, so no corpus-side Exchange
+        from changegen_spark.operators.fence import fence_observed
         from changegen_spark.queries.scale import incremental_dedup_flags
 
-        # Fence the verdicts once (lazy localCheckpoint): the drop count
-        # below materializes it, and keep_ids/the pipeline's semi-join
-        # then REUSE the fenced rows — one execution of the dedup scan
-        # instead of three (count-before + count-after + pipeline), the
-        # same single-execution contract as the sinks.  sort=False: the
-        # CLI consumes verdicts programmatically, no presentation sort.
-        flags = incremental_dedup_flags(
-            docs,
-            spark.table(f"{args.against}_hashes"),
-            spark.table(f"{args.against}_bands"),
-            sort=False,
-        ).localCheckpoint(eager=False)
-        n_dropped_incremental = flags.filter(F.col("status") != "keep").count()
+        # Fence the verdicts once; the fence's own job counts the drops,
+        # and keep_ids/the pipeline's semi-join then REUSE the fenced rows —
+        # one execution of the dedup scan instead of three (count-before +
+        # count-after + pipeline), the same single-execution contract as
+        # the sinks.  sort=False: the CLI consumes verdicts
+        # programmatically, no presentation sort.
+        flags, seen = fence_observed(
+            incremental_dedup_flags(
+                docs,
+                spark.table(f"{args.against}_hashes"),
+                spark.table(f"{args.against}_bands"),
+                sort=False,
+            ),
+            "corpus incremental verdicts",
+            dropped=F.count_if(F.col("status") != "keep"),
+        )
+        n_dropped_incremental = seen["dropped"]
         keep_ids = flags.filter(F.col("status") == "keep").select("doc_id")
         docs = docs.join(keep_ids, "doc_id", "left_semi")
 

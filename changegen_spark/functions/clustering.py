@@ -5,8 +5,9 @@ Iterative min-label propagation on DataFrames: each node adopts the
 smallest label among itself and its neighbors until fixpoint.  This is the
 alternating-large/small-star algorithm's simple cousin — O(diameter)
 rounds, each round one shuffle keyed by node id; duplicate clusters in
-practice have tiny diameter, so 2-4 rounds.  ``localCheckpoint`` per round
-keeps lineage flat (the classic iterative-Spark requirement).
+practice have tiny diameter, so 2-4 rounds.  An eager fence per round
+keeps lineage flat (the classic iterative-Spark requirement) and counts
+the labels that moved in the same job.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence, fence_observed
 
 HALVE_AFTER = 6  # one-hop rounds before path-halving engages (≥ the
 # deepest measured production graph, so the common case never pays the
@@ -58,23 +60,23 @@ def connected_components(
     """
 
     def _step(labels: DataFrame, halve: bool) -> tuple[DataFrame, int]:
-        """One propagation round: returns (checkpointed new labels as
+        """One propagation round: returns (fenced new labels as
         (node, comp), labels moved this round)."""
-        neighbor_min = (
+        # sym carries a self-loop per node, so one join and one aggregate
+        # give the min over the node and its neighbours (scomp) and the
+        # node's own label (ocomp) — no second join back onto labels
+        stepped = (
             sym.join(labels, sym.b == labels.node)
             .groupBy("a")
-            .agg(F.min("comp").alias("nmin"))
-        )
-        stepped = labels.join(
-            neighbor_min, labels.node == neighbor_min.a, "left"
-        ).select(
-            "node",
-            F.least(
-                F.col("comp"), F.coalesce(F.col("nmin"), F.col("comp"))
-            ).alias("scomp"),
-            (F.coalesce(F.col("nmin"), F.col("comp")) < F.col("comp")).alias(
-                "smoved"
-            ),
+            .agg(
+                F.min("comp").alias("scomp"),
+                F.min(F.when(F.col("a") == F.col("b"), F.col("comp"))).alias("ocomp"),
+            )
+            .select(
+                F.col("a").alias("node"),
+                "scomp",
+                (F.col("scomp") < F.col("ocomp")).alias("smoved"),
+            )
         )
         if halve:
             # path-halving: comp ← comp's own label.  Every comp value
@@ -82,10 +84,10 @@ def connected_components(
             # always hits; the coalesce is for the final fixpoint where
             # comp maps to itself.  Engaged only once the round count
             # says the graph is deep — shallow graphs converge above
-            # and never pay this join.  Checkpoint BEFORE the self-join
+            # and never pay this join.  Fence BEFORE the self-join
             # (r12 advice): joining the un-materialized plan with itself
             # executed the one-hop join twice per halving round.
-            stepped = stepped.localCheckpoint(eager=True)
+            stepped = stepped.transform(fence, "connected_components halving")
             ptr = stepped.select(
                 F.col("node").alias("pnode"), F.col("scomp").alias("pcomp")
             )
@@ -106,26 +108,24 @@ def connected_components(
                 F.col("scomp2").alias("scomp"),
                 F.col("smoved2").alias("smoved"),
             )
-        # carry the moved flag through the checkpoint: the convergence
-        # check is then a filter+count over materialized rows instead of
-        # an extra new×old join per round (one job saved per round)
-        new_labels = stepped.select(
-            "node",
-            F.col("scomp").alias("new_comp"),
-            F.col("smoved").alias("moved"),
-        ).localCheckpoint(eager=True)
-        moved = new_labels.filter("moved").count()
-        return new_labels.select("node", F.col("new_comp").alias("comp")), moved
+        # the round's fence job counts the moved labels itself: no new×old
+        # join and no second count job per round
+        new_labels, seen = fence_observed(
+            stepped, "connected_components round", moved=F.count_if("smoved")
+        )
+        return new_labels.select("node", F.col("scomp").alias("comp")), seen["moved"]
 
-    # materialize the symmetric edge list ONCE, then derive nodes from the
-    # checkpointed rows — the r5 shape; deriving nodes from `edges` re-ran
-    # the full upstream candidate plan (LSH signatures + band join) a
-    # second time before the loop even started
+    # materialize the symmetric edge list, with a self-loop per node, ONCE,
+    # then derive nodes from the fenced rows — the r5 shape; deriving nodes
+    # from `edges` re-ran the full upstream candidate plan (LSH signatures +
+    # band join) a second time before the loop even started
+    ab = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        ab.unionByName(ab.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .unionByName(ab.select("a", F.col("a").alias("b")))
+        .unionByName(ab.select(F.col("b").alias("a"), "b"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(fence, "connected_components edges")
     )
     # sym holds both directions, so column `a` alone covers every node
     labels = sym.select(F.col("a").alias("node")).distinct().withColumn(

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -309,7 +311,7 @@ def ivf_topk(
             vectors, n_cells=n_cells, seed=seed, max_train=max_train,
             id_col=id_col, vec_col=vec_col, method=method,
         )
-    centroids = centroids.localCheckpoint(eager=False)
+    centroids = centroids.transform(fence, "ivf_topk centroids", eager=False)
     assigned = assign_ivf_cells(v, centroids)
 
     q = queries.select(
@@ -596,7 +598,7 @@ def ivfpq_topk(
             vectors, n_cells=n_cells, seed=seed, max_train=max_train,
             id_col=id_col, vec_col=vec_col, method=method,
         )
-    centroids = centroids.localCheckpoint(eager=False)
+    centroids = centroids.transform(fence, "ivfpq_topk centroids", eager=False)
     if codebooks is None:
         codebooks = pq_codebooks(
             vectors, m=m, ks=ks, dim=dim, id_col=id_col, vec_col=vec_col

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
+
 
 def as_of_join(
     left: DataFrame,
@@ -84,11 +86,11 @@ def as_of_join(
         # recombine backward/forward candidates on a SURROGATE key, not the
         # left columns: an all-columns equi-join silently drops left rows
         # containing any NULL (NULL never equals NULL) and multiplies
-        # duplicate left rows.  The id frame is checkpointed so both
+        # duplicate left rows.  The id frame is fenced so both
         # branches see the same (otherwise nondeterministic) ids.
         keyed = left.withColumn(
             "__asof_id", F.monotonically_increasing_id()
-        ).localCheckpoint(eager=False)
+        ).transform(fence, "as_of_join keyed", eager=False)
         back = as_of_join(
             keyed, right, on, ts_col, right_value_cols, tie_col, tolerance_us,
             direction="backward",

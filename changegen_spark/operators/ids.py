@@ -46,9 +46,9 @@ def assign_sequential_ids(
     executions (``repartitionByRange`` re-samples its boundaries with a
     fresh seed every execution), the offsets from one partitioning get
     applied to rows of another and the ids stop being a permutation.
-    Fence such inputs with ``localCheckpoint()`` first (see
-    queries/er.py ``_sn_ranked``); deterministic inputs (a parquet scan,
-    a hash repartition) need no fence.
+    Fence such inputs first (``operators/fence.py``; see
+    queries/er/sn.py ``_sn_ranked``); deterministic inputs (a parquet
+    scan, a hash repartition) need no fence.
     """
     if mode == "dense":
         w = Window.orderBy(*[F.col(c) for c in order_by])

@@ -42,6 +42,7 @@ from changegen_spark.geo.geometry import exterior, g_type, point_xy
 from changegen_spark.geo.mercator import to_4326_lat, to_4326_lon
 from changegen_spark.geo.segments import explode_segments, segment_distance_join
 from changegen_spark.operators.changes import expand_deleted_ways, tag_change
+from changegen_spark.operators.fence import fence
 from changegen_spark.operators.ids import assign_sequential_ids, check_id_collision
 from changegen_spark.operators.keys import feature_key
 from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
@@ -185,11 +186,11 @@ def synthesize_junctions(
     # stage re-references the junction frame, and the segment-join tree is
     # deep, so the fence bounds Catalyst analysis for all consumers.
     # junction_nodes stays a lazy (trivial) agg over the fenced rows — a
-    # second dedicated checkpoint job cost more than the per-consumer
+    # second dedicated fence job cost more than the per-consumer
     # re-agg.  Lazy: the fence exists at once, and the rows materialize
     # inside stage C's eager vertex fence, the frame's single plan-phase
     # consumer, so no two jobs race to compute them.
-    junctions = junctions.localCheckpoint(eager=False)
+    junctions = junctions.transform(fence, "changegen junctions", eager=False)
     # A3 grid dedup: one node per 6-dp cell
     junction_nodes = junctions.groupBy("rlon", "rlat").agg(
         F.min(to_4326_lon(F.col("jx"))).alias("lon"),
@@ -315,9 +316,26 @@ def _way_members(ways: DataFrame, change_type: str, owner, vertex) -> DataFrame:
     return _member_rows(m, "way", change_type, owner, F.col("tags"), F.col("seq"), ref)
 
 
+def new_way_vertices(new_ways: DataFrame, key_col: str) -> DataFrame:
+    """Stage B's vertex frame: every new way's vertices with their
+    fractions, fenced.  It feeds four downstream joins; truncating its
+    (windowed) lineage keeps every consumer's analysis tree shallow.
+    Eager (measured, see SCALE.md): a lazy fence lets several consumers
+    race to compute the same partitions.  The vertices derive from
+    ``new_ways`` only, so ``generate_changes`` runs this job on a pool
+    thread while the driver builds and fences the junction frame."""
+    geoms = new_ways.select(
+        F.col(key_col).alias("nkey"), exterior(F.col("geometry")).alias("__ring")
+    )
+    return _vertices_with_frac(geoms, ["nkey"]).transform(
+        fence, "changegen new-way vertices"
+    )
+
+
 def build_new_ways(
     cs: ChangeSet,
     new_ways: DataFrame,
+    verts: DataFrame,
     junction_nodes: DataFrame,
     junctions: DataFrame,
     key_col: str,
@@ -325,21 +343,12 @@ def build_new_ways(
 ) -> dict[str, DataFrame]:
     """Stage B: create-path ways + their nodes.
 
+    ``verts`` is ``new_way_vertices(new_ways, key_col)``.
     Returns dict with 'vertex_nodes' (unmatched vertices needing fresh ids),
     'ordered_members' (nkey, mseq), 'way_tags'.
     Junction handling: a junction equal to a way vertex at 6 dp reuses the
     junction node (J4, generator.py:430-443); otherwise it is inserted at
     its fractional position (W2/M2, generator.py:208-255,458-487)."""
-    geoms = new_ways.select(
-        F.col(key_col).alias("nkey"), exterior(F.col("geometry")).alias("__ring")
-    )
-    # verts feeds four downstream joins; truncating its (windowed) lineage
-    # keeps every consumer's analysis tree shallow.  Eager (measured, see
-    # SCALE.md): a lazy fence lets several consumers race to compute the
-    # same partitions.  verts derive from new_ways only, so this job cannot
-    # race the junction materialization.
-    verts = _vertices_with_frac(geoms, ["nkey"]).localCheckpoint(eager=True)
-
     jn = junction_nodes.select("rlon", "rlat")
     matched = verts.join(jn, ["rlon", "rlat"], "inner").select(
         "nkey", "pos", "frac", "rlon", "rlat",
@@ -404,7 +413,9 @@ def modify_intersecting_ways(
     # missing pbf → skipped; eager fence: the same multi-consumer fan-out
     # as the create path.  Its job also materializes the lazy junction
     # fence (this subtree reads hit_ways).
-    verts = verts.join(nds, ["osm_id", "pos"], "inner").localCheckpoint(eager=True)
+    verts = verts.join(nds, ["osm_id", "pos"], "inner").transform(
+        fence, "changegen modified-way vertices"
+    )
 
     way_j, inserted = _junction_inserts(verts, hit, "osm_id")
     # unlike the create path's global junction cells, a vertex here matches
@@ -471,6 +482,11 @@ def generate_changes(
         cs = ChangeSet()
         new_ways = tables.get("new_ways")
         existing = tables.get("original_ways")
+        # stage B's vertex fence needs no junctions: its job runs while the
+        # driver builds the junction plan below
+        fut_verts = (
+            pool.submit(new_way_vertices, new_ways, key_col) if new_ways is not None else None
+        )
 
         # A: junctions (single evaluation serves J1 closest-points AND J2 ids)
         if new_ways is not None and existing is not None:
@@ -496,14 +512,14 @@ def generate_changes(
         # chunk count depends only on member counts, not on resolved ids).
         wkey = F.concat_ws(":", F.col("nkey"), F.col("chunk"))
         # Stages B and C are independent once the junction frame is
-        # materialized; each ends in an eager localCheckpoint (a separate Spark
+        # materialized; each ends in an eager fence (a separate Spark
         # job with its own codegen compile).  Running them on two threads
         # overlaps those jobs — py4j releases the GIL on socket IO, and Spark
         # job submission is thread-safe.  cs.request_ids appends under the GIL;
         # resolve() orders by (kind, key), so request order is immaterial.
         def _stage_b():
             nb_ = build_new_ways(
-                cs, new_ways, junction_nodes, junctions, key_col=key_col,
+                cs, new_ways, fut_verts.result(), junction_nodes, junctions, key_col=key_col,
                 hstore_col=hstore_col,
             )
             cm = split_ways(
@@ -512,7 +528,9 @@ def generate_changes(
                 joiner=split_joiner,
             )
             # the id fence and the member-ref join both read the chunks
-            return nb_, cm.join(nb_["way_tags"], "nkey").localCheckpoint(eager=True)
+            return nb_, cm.join(nb_["way_tags"], "nkey").transform(
+                fence, "changegen new-way chunks"
+            )
 
         def _stage_c():
             # hstore expansion applies to intersecting-way modifies exactly
@@ -524,10 +542,12 @@ def generate_changes(
             )
             # fenced here, so its job overlaps stage B's instead of the sink's
             seq = modify_intersecting_ways(existing, junctions, tables["pbf_ways"])
-            return seq.join(mod_way_tags, "osm_id").localCheckpoint(eager=True)
+            return seq.join(mod_way_tags, "osm_id").transform(
+                fence, "changegen modified ways"
+            )
 
         # Stages D/E/G below are pure driver-side plan building with no
-        # dependency on B/C — they run while the pool's checkpoint jobs
+        # dependency on B/C — they run while the pool's fence jobs
         # execute; the B/C futures are joined just before resolve
         # (request_ids order is immaterial: resolve sorts by kind+key).
         fut_b = fut_c = None
@@ -585,11 +605,8 @@ def generate_changes(
             mod_ways_seq = fut_c.result()
 
     # --- resolve ids and assemble elements ---
-    # Both id joins read this table: fence it once, eagerly.  A ``.cache()``
-    # here would stay registered in the session's CacheManager after the
-    # pass, pinning the table and the stage fences in its lineage for the
-    # life of the JVM; a checkpoint is released with its frame.
-    ids = cs.resolve(id_offset, negative_ids).localCheckpoint(eager=True)
+    # Both id joins read this table: fence it once, eagerly.
+    ids = cs.resolve(id_offset, negative_ids).transform(fence, "changegen ids")
 
     # Member-ref join: one row per way or relation member, carrying its
     # owner element (okorder, oskey), or the owner's direct id for a

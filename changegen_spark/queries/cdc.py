@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 CDC_WIN = 16  # rolling-window width in chars
@@ -144,11 +145,11 @@ def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document CDC summary + cross-corpus chunk-level duplication:
     chunk count/size stats and the fraction of characters living in
     chunks whose content appears in >= 2 distinct documents."""
-    # checkpoint only what the aggregates read (cstart is unused here)
+    # fence only what the aggregates read (cstart is unused here)
     ch = (
         _doc_chunks(spark, sf_dir)
         .select("doc_id", "clen", "chash")
-        .localCheckpoint(eager=False)
+        .transform(fence, "q_cdc_chunks ch", eager=False)
     )
     shared = (
         ch.groupBy("chash")

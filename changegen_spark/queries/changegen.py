@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
+
 _ID_OFFSET = 20_000
 _CACHE: dict[int, DataFrame] = {}
 
@@ -23,7 +25,7 @@ def _changeset(spark: SparkSession):
 
         _CACHE[key] = generate_changes(
             spark, fixture_tables(spark), id_offset=_ID_OFFSET
-        ).localCheckpoint(eager=True)
+        ).transform(fence, "_changeset cache")
     return _CACHE[key]
 
 
@@ -147,9 +149,9 @@ def q_changegen_apply_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # six audit counts read the applied snapshot — fence it once instead
     # of re-running the apply plan per count
-    nodes2 = nodes2.localCheckpoint(eager=False)
-    ways2 = ways2.localCheckpoint(eager=False)
-    rels2 = rels2.localCheckpoint(eager=False)
+    nodes2 = nodes2.transform(fence, "q_changegen_apply_cycle nodes2", eager=False)
+    ways2 = ways2.transform(fence, "q_changegen_apply_cycle ways2", eager=False)
+    rels2 = rels2.transform(fence, "q_changegen_apply_cycle rels2", eager=False)
     dangling = referential_integrity_report(nodes2, ways2).count()
     rel_dangling = relation_integrity_report(nodes2, ways2, rels2).count()
     junction_refs = (

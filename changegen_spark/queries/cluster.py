@@ -23,7 +23,7 @@ single min(struct)) and one posexplode/groupBy hash shuffle of
 (cluster, dim) partial sums with map-side combine.  Nothing quadratic;
 the only driver-side artifact is the k×dim centroid table (the same
 bounded-collect contract as bpe_train / IVF).  The vector frame is
-persisted across rounds so the parquet scan happens once.
+fenced once, so the parquet scan happens once.
 """
 
 from __future__ import annotations
@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 K_CLUSTERS = 8
@@ -75,43 +76,37 @@ def kmeans_fit(
     spark = vecs.sparkSession
     from changegen_spark.queries.sketches import h60
 
-    vecs = vecs.persist()
-    try:
-        init = (
-            vecs.orderBy(h60(F.col("vec_id")), "vec_id").limit(k).collect()
-        )
-        cents: list[tuple[int, list[int]]] = [
-            (i, list(r["v"])) for i, r in enumerate(init)
-        ]
-        for _ in range(iters):
-            cent_df = spark.createDataFrame(
-                cents, "cluster INT, c array<bigint>"
+    # every round and the final assignment read the fenced vectors
+    vecs = vecs.transform(fence, "kmeans_fit vectors")
+    init = vecs.orderBy(h60(F.col("vec_id")), "vec_id").limit(k).collect()
+    cents: list[tuple[int, list[int]]] = [
+        (i, list(r["v"])) for i, r in enumerate(init)
+    ]
+    for _ in range(iters):
+        cent_df = spark.createDataFrame(cents, "cluster INT, c array<bigint>")
+        best = _assign(vecs, cent_df)
+        upd = (
+            best.join(vecs, "vec_id")
+            .select("cluster", F.posexplode("v").alias("dim", "val"))
+            .groupBy("cluster", "dim")
+            .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
+            .select("cluster", "dim", F.expr("s div n").alias("cv"))
+            .groupBy("cluster")
+            .agg(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("dim", "cv"))),
+                    lambda x: x["cv"],
+                ).alias("c")
             )
-            best = _assign(vecs, cent_df)
-            upd = (
-                best.join(vecs, "vec_id")
-                .select("cluster", F.posexplode("v").alias("dim", "val"))
-                .groupBy("cluster", "dim")
-                .agg(F.sum("val").alias("s"), F.count("*").alias("n"))
-                .select("cluster", "dim", F.expr("s div n").alias("cv"))
-                .groupBy("cluster")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("dim", "cv"))),
-                        lambda x: x["cv"],
-                    ).alias("c")
-                )
-                .collect()
-            )
-            new = {r["cluster"]: list(r["c"]) for r in upd}
-            # empty clusters keep their previous centroid
-            cents = [(cid, new.get(cid, old)) for cid, old in cents]
-        final = _assign(
-            vecs, spark.createDataFrame(cents, "cluster INT, c array<bigint>")
+            .collect()
         )
-        return final, cents
-    finally:
-        vecs.unpersist()
+        new = {r["cluster"]: list(r["c"]) for r in upd}
+        # empty clusters keep their previous centroid
+        cents = [(cid, new.get(cid, old)) for cid, old in cents]
+    final = _assign(
+        vecs, spark.createDataFrame(cents, "cluster INT, c array<bigint>")
+    )
+    return final, cents
 
 
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -188,7 +183,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(rank, vec_id, radius_d2): the KC_K greedy k-center picks in order;
     ``radius_d2`` is the exact integer max-min squared distance at the
     moment of selection (0 for the seed), non-increasing by construction."""
-    v = _vecs_e6(spark, sf_dir).localCheckpoint(eager=True)
+    v = _vecs_e6(spark, sf_dir).transform(fence, "q_kcenter_coreset v")
     sel = (
         v.orderBy("vec_id")
         .limit(1)
@@ -222,7 +217,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(t).cast("long").alias("rank"),
             F.col("mind").alias("radius_d2"),
         )
-        sel = sel.unionByName(pick).localCheckpoint(eager=True)
+        sel = sel.unionByName(pick).transform(fence, "q_kcenter_coreset sel")
     return sel.select("rank", "vec_id", "radius_d2").orderBy("rank")
 
 

@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 
@@ -151,13 +152,13 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialization.  Fencing `joined` first makes the sampling pass
     # materialize the scored rows once and the shuffle read them back
     # (guide §2.4: at corpus scale this halves the work feeding the rank).
-    joined = joined.localCheckpoint(eager=False)
-    # localCheckpoint fence = CORRECTNESS (r9 postmortem, ids.py note):
+    joined = joined.transform(fence, "q_ccnet_buckets joined", eager=False)
+    # fence = CORRECTNESS (r9 postmortem, ids.py note):
     # the two-phase rank executes this frame twice (counts + join) and
     # repartitionByRange re-samples boundaries per execution
     ranged = joined.repartitionByRange(
         nparts, "lang", "nll", "doc_id"
-    ).localCheckpoint(eager=False)
+    ).transform(fence, "q_ccnet_buckets ranged", eager=False)
     tagged = ranged.withColumn("__part", F.spark_partition_id())
     local_w = Window.partitionBy("__part", "lang").orderBy("nll", "doc_id")
     tagged = tagged.withColumn("__rn", F.row_number().over(local_w).cast("long"))

@@ -70,6 +70,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.queries.er.blocking import (
     FIXDIR,
     LEV_MAX,
@@ -335,7 +336,7 @@ def resolve_ambiguous(
         # execute once per consumer
         assigned = incremental_assign_margin(
             arrivals, base, margin=margin
-        ).localCheckpoint(eager=False)
+        ).transform(fence, "resolve_ambiguous assigned", eager=False)
     amb = _parked_pool(assigned, arrivals)
     golden = updated_golden_names(
         arrivals, base, margin=margin, assigned=assigned
@@ -358,12 +359,14 @@ def drain_policy_outcomes(
     if assigned is None:
         assigned = incremental_assign_margin(
             arrivals, base, margin=margin
-        ).localCheckpoint(eager=False)
+        ).transform(fence, "drain_policy_outcomes assigned", eager=False)
     amb = _parked_pool(assigned, arrivals)
     golden = updated_golden_names(
         arrivals, base, margin=margin, assigned=assigned
     )
-    scored = _reprobe_scored(amb, golden).localCheckpoint(eager=False)
+    scored = _reprobe_scored(amb, golden).transform(
+        fence, "drain_policy_outcomes scored", eager=False
+    )
     out = None
     for p in DRAIN_POLICIES:
         disp = apply_drain_policy(scored, margin=margin, policy=p).select(
@@ -409,7 +412,7 @@ def new_entity_merge(
             F.coalesce(F.lower("name"), F.lit("")).alias("fname"),
             F.coalesce("city", F.lit("")).alias("fcity"),
         )
-        .localCheckpoint(eager=True)
+        .transform(fence, "new_entity_merge fresh")
     )
     keyed = _inc_keyed(
         fresh.select(

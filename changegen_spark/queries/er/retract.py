@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.queries.er.blocking import (
     LEV_MAX,
     block_key_sql,
@@ -66,7 +67,7 @@ def golden_retract(
 
     if pairs is None:
         pairs = er_pairs_for(people)
-    pairs = pairs.select("rec_a", "rec_b").localCheckpoint(eager=True)
+    pairs = pairs.select("rec_a", "rec_b").transform(fence, "golden_retract pairs")
     comp = connected_components(pairs, src="rec_a", dst="rec_b")
     assign = people.select("rec_id").join(
         comp, people.rec_id == comp.node, "left"
@@ -76,10 +77,10 @@ def golden_retract(
     dels = deletes.select("rec_id").distinct()
     touched = (
         assign.join(dels, "rec_id").select("entity").distinct()
-    ).localCheckpoint(eager=True)
+    ).transform(fence, "golden_retract touched")
     members_t = assign.join(F.broadcast(touched), "entity")
-    remaining = members_t.join(dels, "rec_id", "left_anti").localCheckpoint(
-        eager=True
+    remaining = members_t.join(dels, "rec_id", "left_anti").transform(
+        fence, "golden_retract remaining"
     )
     rem_ids = remaining.select("rec_id")
     sub_edges = (

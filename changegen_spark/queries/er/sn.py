@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.queries.er.blocking import (
     _FIRSTNAME,
     _LASTNAME,
@@ -52,7 +53,7 @@ def _sn_ranked(people: DataFrame) -> DataFrame:
     repartitionByRange on the key (range partitions concatenate to the
     global order) + the ids.py distributed two-phase prefix sum.
 
-    The localCheckpoint fence after the range exchange is CORRECTNESS,
+    The fence after the range exchange is CORRECTNESS,
     not caching (r9 postmortem): repartitionByRange samples its
     boundaries with a fresh random seed per execution, and the
     distributed rank executes its input TWICE (per-partition counts,
@@ -66,7 +67,7 @@ def _sn_ranked(people: DataFrame) -> DataFrame:
     k = (
         _sn_keyed(people)
         .repartitionByRange(32, "skey")
-        .localCheckpoint(eager=False)
+        .transform(fence, "_sn_ranked k", eager=False)
     )
     return assign_sequential_ids(
         k, order_by=["skey"], out_col="rank", mode="distributed"
@@ -112,7 +113,7 @@ def _window_pairs(
     Shared by the single-pass, multi-pass, and refined SN schemes."""
     if refine:
         ranked = ranked.join(people.select("rec_id", *refine), "rec_id")
-    ranked = ranked.localCheckpoint(eager=False)
+    ranked = ranked.transform(fence, "_window_pairs ranked", eager=False)
     probes = ranked.select(
         F.col("rec_id").alias("id_a"),
         F.col("nname").alias("na"),
@@ -166,7 +167,9 @@ def _sn_ranked2(people: DataFrame) -> DataFrame:
     # double-executes its input, and unfenced range boundaries are
     # re-sampled per execution
     return assign_sequential_ids(
-        keyed2.repartitionByRange(32, "skey").localCheckpoint(eager=False),
+        keyed2.repartitionByRange(32, "skey").transform(
+            fence, "_sn_ranked2 keyed", eager=False
+        ),
         order_by=["skey"],
         out_col="rank",
         mode="distributed",
@@ -583,7 +586,9 @@ def _sn_ranked3(people: DataFrame) -> DataFrame:
         ).alias("skey"),
     )
     return assign_sequential_ids(
-        keyed3.repartitionByRange(32, "skey").localCheckpoint(eager=False),
+        keyed3.repartitionByRange(32, "skey").transform(
+            fence, "_sn_ranked3 keyed", eager=False
+        ),
         order_by=["skey"],
         out_col="rank",
         mode="distributed",

@@ -14,6 +14,8 @@ import itertools
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
+
 _COUNTER = itertools.count()
 
 
@@ -195,7 +197,7 @@ def q_multimodal_features_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Both join sides (corpus vectors and the %25 query slice) derive from
     # feats — without a fence the Python feature-extraction pass runs
     # twice (guide §2.4/§4; at scale that is two decodes of every asset).
-    feats = feats.localCheckpoint(eager=False)
+    feats = feats.transform(fence, "q_multimodal_features_ann feats", eager=False)
     vectors = feats.withColumnRenamed("asset_id", "vec_id")
     queries = vectors.filter(F.col("vec_id") % 25 == 0).withColumnRenamed(
         "vec_id", "query_id"
@@ -357,12 +359,12 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     va = assign_ivf_cells_arrow(v, cents)
     # The assignment subtree is consumed three times (self-join left side,
     # right side, final left join) — without a fence each consumer re-runs
-    # the Arrow kernel and its scan.  A lazy localCheckpoint materializes
+    # the Arrow kernel and its scan.  A lazy fence materializes
     # the (vec_id, cell, v) assignment ONCE per run (per-run, inside the
     # timed region — not cross-run caching); at scale this trades one
     # write+read of the assignment for two re-scans of the corpus plus two
     # extra Arrow passes (guide §2.4 / §5).
-    va = va.localCheckpoint(eager=False)
+    va = va.transform(fence, "q_semantic_dedup va", eager=False)
     lo = va.select(
         F.col("cell").alias("cell_a"),
         F.col("vec_id").alias("id_a"),

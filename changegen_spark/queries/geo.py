@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from changegen_spark.geo.join import grid_distance_join
 from changegen_spark.geo.mercator import to_3857_x, to_3857_y, to_4326_lat, to_4326_lon
 from changegen_spark.operators.dedup import grid_dedup_points
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 # Deterministic synthetic point field: 100×100 units, ~1 point per unit².
@@ -836,7 +837,7 @@ def q_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") % 10 == 0)
     lon = F.lit(-118.48) + ((F.col("event_id") * 7) % 560).cast("double") / 1000.0
     lat = F.lit(48.43) + ((F.col("event_id") * 11) % 420).cast("double") / 1000.0
-    # localCheckpoint fence = CORRECTNESS (r9 postmortem, ids.py note):
+    # fence = CORRECTNESS (r9 postmortem, ids.py note):
     # intra-pairs and the boundary-stitch frame double-execute pts; with
     # re-sampled boundaries the pairs dropped at exec-A's boundaries
     # would not match the pairs stitched from exec-B's
@@ -844,7 +845,7 @@ def q_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.select(F.col("event_id").alias("pid"), lon.alias("lon"), lat.alias("lat"))
         .repartitionByRange(8, "pid")
         .withColumn("__part", F.spark_partition_id())
-        .localCheckpoint(eager=False)
+        .transform(fence, "q_haversine pts", eager=False)
     )
     wp = Window.partitionBy("__part").orderBy("pid")
     intra = (

@@ -19,15 +19,15 @@ re-plan, or engine gives the identical result — the same scaled-integer
 discipline the TPC-H money aggregates use (queries/__init__ conventions).
 
 Scale design (100 TB web graph, 1000 executors): the edge list is FENCED
-(lazy localCheckpoint) before iterating, so the graph is derived once, not
+(lazily) before iterating, so the graph is derived once, not
 re-scanned per step.  Ranks carry the static out-degree, so each iteration
 is ONE |E|-sized equi-join on ``src`` (pre-bucketing edges by src makes it
 map-side) plus one ``groupBy(dst)`` whose integer SUM combines map-side;
 re-attaching the out-degree costs a |V|-sized join, skipped on the final
 step.  The loop is unrolled a FIXED number of times (3), keeping
 Catalyst's plan finite; a production run at higher iteration counts
-inserts an eager checkpoint every ~5 iterations to cut lineage, exactly
-like operators/dedup's component loop.
+inserts an eager fence every ~5 iterations to cut lineage, exactly
+like functions/clustering's component loop.
 """
 
 from __future__ import annotations
@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# aliased: pagerank's ``fence`` flag would shadow the function
+from changegen_spark.operators.fence import fence as _fence, fence_observed
 from changegen_spark.sources.tables import load_table
 
 PR_ITERS = 3
@@ -70,7 +72,7 @@ def pagerank(
     with mirrored arcs the dst set equals the node set, so each step's
     aggregation re-emits every node.
 
-    ``fence`` cuts the edge lineage with a lazy localCheckpoint before
+    ``fence`` cuts the edge lineage with a lazy fence before
     iterating — the same fence idiom as the pipeline's junction stage.
     Without it every iteration re-derives the edge list from source scans
     (measured at sf0.1: 28 FileScans and zero exchange reuse in the
@@ -80,15 +82,15 @@ def pagerank(
     an iterative algorithm and an accident.
 
     ``checkpoint_every`` bounds PLAN growth at depth: every N iterations
-    the rank frame is eagerly localCheckpoint-ed, cutting both the lineage
+    the rank frame is eagerly fenced, cutting both the lineage
     (a 20-iteration unrolled join tree otherwise re-optimizes and
     re-codegens the whole prefix each AQE re-plan) and the driver's
     per-iteration Catalyst cost from O(iters^2) to O(iters).  Ranks are
     a |V|-sized frame, so the materialization is the cheap side of the
     trade — the standard iterative-algorithm discipline (same idiom as
-    operators/dedup's component loop)."""
+    functions/clustering's component loop)."""
     if fence:
-        edges = edges.localCheckpoint(eager=False)
+        edges = edges.transform(_fence, "pagerank edges", eager=False)
     weighted = "w" in edges.columns
     # out-degree generalizes to out-strength (sum of edge weights) on a
     # weighted graph; share(u->v) = (rank * w_uv) div strength_u — still
@@ -124,7 +126,7 @@ def pagerank(
                 F.col("dst").alias("node"), new_rank.alias("rank_e9")
             )
         if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < iters:
-            ranks = ranks.localCheckpoint(eager=True)
+            ranks = ranks.transform(_fence, "pagerank ranks")
     return ranks
 
 
@@ -299,7 +301,7 @@ def triangle_counts(e: DataFrame) -> DataFrame:
         # NO fence here, deliberately: the three consumers (both wedge
         # sides + the closing-edge probe) are identical subtrees, so
         # ReuseExchange already deduplicates the derivation — a lazy
-        # localCheckpoint measured SLOWER (8.9 s → 11.2 s at sf0.1: the
+        # fence measured SLOWER (8.9 s → 11.2 s at sf0.1: the
         # RDD fence blocks whole-stage codegen fusion and adds a
         # materialization, while saving nothing that wasn't already
         # reused).  Contrast with pagerank/setsim, whose consumers differ.
@@ -418,7 +420,7 @@ def pagerank_converged(
     threshold test across runs.  Lineage is cut every
     ``checkpoint_every`` steps exactly as ``pagerank(checkpoint_every)``.
     """
-    edges = edges.localCheckpoint(eager=False)
+    edges = edges.transform(_fence, "pagerank_converged edges", eager=False)
     weighted = "w" in edges.columns
     if weighted:
         outdeg = edges.groupBy("src").agg(F.sum("w").alias("od"))
@@ -428,7 +430,7 @@ def pagerank_converged(
         share = F.expr("rank_e9 div od")
     ranks = outdeg.select(
         F.col("src").alias("node"), "od", F.lit(INIT_E9).cast("long").alias("rank_e9")
-    ).localCheckpoint(eager=True)
+    ).transform(_fence, "pagerank_converged ranks")
     it = 0
     while it < max_iters:
         it += 1
@@ -443,7 +445,7 @@ def pagerank_converged(
             F.col("dst").alias("node"), "od", new_rank.alias("rank_e9")
         )
         if it % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=True)
+            nxt = nxt.transform(_fence, "pagerank_converged nxt")
         delta = (
             nxt.alias("n")
             .join(ranks.alias("p"), F.col("n.node") == F.col("p.node"))
@@ -476,8 +478,9 @@ def bfs_hops(
     equi-join on src, then a left-anti against the visited set so the
     frontier carries only newly discovered nodes (work per hop is
     proportional to the NEW frontier, the textbook distributed BFS).
-    Both accumulators are |V|-bounded and eagerly checkpointed per hop —
-    bounded lineage, same discipline as pagerank(checkpoint_every)."""
+    Both accumulators are |V|-bounded and eagerly fenced per hop —
+    bounded lineage, same discipline as pagerank(checkpoint_every); the
+    frontier's fence job also counts it, so the stop test runs no job."""
     visited = edges.sparkSession.createDataFrame(
         [(source, 0)], "node string, hops int"
     )
@@ -490,10 +493,10 @@ def bfs_hops(
             .join(visited.select("node"), "node", "left_anti")
             .withColumn("hops", F.lit(hop))
         )
-        nxt = nxt.localCheckpoint(eager=True)
-        if not nxt.take(1):
+        nxt, seen = fence_observed(nxt, "bfs_hops frontier", n=F.count("*"))
+        if not seen["n"]:
             break
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        visited = visited.unionByName(nxt).transform(_fence, "bfs_hops visited")
         frontier = nxt
     return visited
 

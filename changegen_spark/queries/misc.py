@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import TABLES, load_table, load_tables
 
 
@@ -252,10 +253,10 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     recent = orders.filter(F.col("o_orderdate") >= "2000-01-01").select(
         F.col("o_custkey").alias("k")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().transform(fence, "q_set_ops recent", eager=False)
     big = orders.filter(F.col("o_totalprice") > 350_000).select(
         F.col("o_custkey").alias("k")
-    ).distinct().localCheckpoint(eager=False)
+    ).distinct().transform(fence, "q_set_ops big", eager=False)
     u = recent.union(big).distinct().count()
     i = recent.intersect(big).count()
     e = recent.exceptAll(big).distinct().count()
@@ -654,12 +655,12 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: one row (n_customers, total_cents, gini_e6)."""
     o = load_table(spark, sf_dir, "orders")
-    # localCheckpoint fence = CORRECTNESS (r9 postmortem, ids.py note)
+    # fence = CORRECTNESS (r9 postmortem, ids.py note)
     rev = (
         o.groupBy("o_custkey")
         .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
         .repartitionByRange(8, "cents", "o_custkey")
-        .localCheckpoint(eager=False)
+        .transform(fence, "q_gini rev", eager=False)
     )
     part = F.spark_partition_id()
     win = Window.partitionBy("__part").orderBy("cents", "o_custkey")

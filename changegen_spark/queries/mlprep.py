@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.queries.sketches import _H60_SQL
 from changegen_spark.sources.tables import load_table
 
@@ -236,7 +237,7 @@ def fuzzy_decon_candidates(spark: SparkSession, sf_dir: str) -> dict:
         "doc_id",
         F.explode(distinct_ngrams_pandas(DECON_N)(F.col("text"))).alias("ng"),
     ).distinct()
-    sigs = fuzzy_minhash_sigs(grams).localCheckpoint()
+    sigs = fuzzy_minhash_sigs(grams).transform(fence, "fuzzy_decon_candidates sigs")
     is_eval = F.col("doc_id") % 19 == 3
     ev = sigs.filter(is_eval).groupBy("k", "mh").agg(
         F.count("*").alias("ec")
@@ -626,12 +627,12 @@ def q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact counts are contractual."""
     d = _docs(spark, sf_dir)
     hk = F.md5(F.col("doc_id").cast("string"))
-    # localCheckpoint fence = CORRECTNESS (r9 postmortem, ids.py note):
+    # fence = CORRECTNESS (r9 postmortem, ids.py note):
     # counts + join double-execute this frame; unfenced range boundaries
     # are re-sampled per execution
     rows = d.select("doc_id", "lang", hk.alias("hk")).repartitionByRange(
         8, "lang", "hk", "doc_id"
-    ).localCheckpoint(eager=False)
+    ).transform(fence, "q_stratified_split rows", eager=False)
     win = Window.partitionBy("__part", "lang").orderBy("hk", "doc_id")
     tagged = rows.withColumn("__part", F.spark_partition_id()).withColumn(
         "__rn", F.row_number().over(win).cast("long")
@@ -1168,12 +1169,12 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     global single-partition pass ever touches the data; the result is
     partitioning-invariant because the prefix sum is defined by the global
     doc_id order, not by where partition boundaries fall."""
-    # localCheckpoint fence = CORRECTNESS (r9 postmortem, ids.py note)
+    # fence = CORRECTNESS (r9 postmortem, ids.py note)
     d = (
         _docs(spark, sf_dir)
         .select("doc_id", F.col("n_chars").cast("long").alias("w"))
         .repartitionByRange(8, "doc_id")
-        .localCheckpoint(eager=False)
+        .transform(fence, "q_weighted_sample d", eager=False)
     )
     part = F.spark_partition_id()
     win = Window.partitionBy("__part").orderBy("doc_id")
@@ -1426,7 +1427,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         _dsir_occ(spark, sf_dir)
         .groupBy("doc_id", "source", "b")
         .agg(F.count("*").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(fence, "q_dsir_weights docb", eager=False)
     )
     per_b = docb.groupBy("b").agg(
         F.sum("c").alias("c_r"),

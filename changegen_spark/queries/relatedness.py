@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 REL_N = 3  # word n-gram terms
@@ -112,7 +113,7 @@ def q_related_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # feeds three more (norms and both self-join sides) — without the
     # fences each consumer re-runs the Arrow tf UDF / the kept join
     # (the setsim lesson: fence exactly when consumers DIFFER).
-    tfs = _term_freqs(spark, sf_dir).localCheckpoint(eager=False)
+    tfs = _term_freqs(spark, sf_dir).transform(fence, "q_related_docs tfs", eager=False)
     n_docs = tfs.select("doc_id").distinct().agg(
         F.count("*").cast("long").alias("n_docs")
     )
@@ -154,7 +155,7 @@ def q_related_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("w") * F.col("w"))
         .over(Window.partitionBy("doc_id"))
         .cast("long"),
-    ).localCheckpoint(eager=False)
+    ).transform(fence, "q_related_docs w2", eager=False)
     a = w2.select(
         F.col("doc_id").alias("da"),
         "term",
@@ -174,7 +175,7 @@ def q_related_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # mirror each aggregated pair in place with a 2-element explode
     # (dot unchanged, norms swap).  The explode keeps the aggregate a
     # SINGLE consumer subtree (a self-union would re-execute the join:
-    # ReuseExchange cannot canonicalize across localCheckpoint RDD scans,
+    # ReuseExchange cannot canonicalize across fenced RDD scans,
     # the same AQE gap the window-norms pass fixed).  Row-for-row
     # identical output: the (x, y) cell with x < y is the old
     # (da=x, db=y) cell, its mirror the old (da=y, db=x) cell.

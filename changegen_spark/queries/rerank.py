@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 MMR_K = 4
@@ -98,7 +99,7 @@ def _greedy_rerank(pool: DataFrame) -> DataFrame:
     ``MMR_POOL`` rows, so the whole k-round loop runs inside ONE
     ``applyInPandas`` pass keyed by query_id — one exchange total,
     replacing MMR_K−1 rounds of (left_anti join + join + groupBy +
-    window + union + eager localCheckpoint), each of which was a full
+    window + union + eager fence), each of which was a full
     Spark job whose fixed cost dominated the 16-row-per-query work.  At
     100 TB the shape is unchanged-or-better: per-query state is bounded
     by MMR_POOL and queries spread across tasks; the former loop's
@@ -230,7 +231,7 @@ def q_mmr_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-``MMR_POOL``, then greedily reranked exactly like ``q_mmr_topk``.
     Corpus-side work is O(n·bands) map + O(collisions) — no
     BroadcastNestedLoopJoin over the corpus (plan-pinned)."""
-    v = _vecs_e6(spark, sf_dir).localCheckpoint(eager=True)
+    v = _vecs_e6(spark, sf_dir).transform(fence, "q_mmr_topk_lsh v")
     q = _queries_frame(v)
     return _greedy_rerank(_lsh_pool(v, q))
 

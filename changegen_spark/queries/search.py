@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.queries.mlprep import _toks
 from changegen_spark.sources.tables import load_table
 
@@ -59,13 +60,13 @@ def bm25_scored(spark: SparkSession, sf_dir: str, topk: int) -> DataFrame:
     # tokens) frame — without the fence each consumer re-scanned and
     # re-tokenized the corpus (3 passes; guide §2.4/§6.2).  The matched-
     # token filter runs BEFORE the explode, so only query-term hits fan
-    # out, and the checkpoint payload is two longs + the (tiny) hit list
+    # out, and the fenced payload is two longs + the (tiny) hit list
     # per document, never the text.
     base = docs.select(
         "doc_id",
         F.size(toks).alias("dl"),
         F.filter(toks, lambda x: x.isin(*terms)).alias("mt"),
-    ).localCheckpoint(eager=False)
+    ).transform(fence, "bm25_scored base", eager=False)
     lens = base.select("doc_id", "dl")
     stats = lens.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -403,7 +404,7 @@ def bm25_multi_per_query(
         "doc_id",
         F.size(toks).alias("dl"),
         F.filter(toks, lambda x: x.isin(*terms)).alias("mt"),
-    ).localCheckpoint(eager=False)
+    ).transform(fence, "bm25_multi_per_query base", eager=False)
     lens = base.select("doc_id", "dl")
     stats = lens.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -544,12 +545,14 @@ def q_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     terms = list(BM25_TERMS)
+    # grades feed the ranked join, the ideal top-k and mrr
     grades = (
         docs.select("doc_id", F.explode(_toks(F.col("text"))).alias("w"))
         .filter(F.col("w").isin(terms))
         .groupBy("doc_id")
         .agg(F.countDistinct("w").cast("long").alias("rel"))
-    ).localCheckpoint(eager=False)  # feeds ranked-join, ideal, and mrr
+        .transform(fence, "q_retrieval_eval grades", eager=False)
+    )
     disc = spark.createDataFrame(
         [(i + 1, _DISC_E6[i]) for i in range(NDCG_K)],
         "rank long, disc_e6 long",

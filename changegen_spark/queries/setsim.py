@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 T_NUM, T_DEN = 7, 10  # Jaccard threshold t = 0.7 as an exact rational
@@ -98,9 +99,8 @@ def ordered_shingle_sets(docs: DataFrame, id_col: str, text_col: str) -> DataFra
         )
         # fence: 4 consumers (both prefix join sides + both verify sides)
         # would otherwise re-run the shingle UDF + frequency join + sort
-        # aggregate 4x — the same lazy-localCheckpoint idiom as the
-        # pipeline's junction stage and PageRank's edge fence
-        .localCheckpoint(eager=False)
+        # aggregate 4x
+        .transform(fence, "ordered_shingle_sets sets", eager=False)
     )
     return sets
 

@@ -21,7 +21,7 @@ Scale design: each round is (a) one self-equi-join on (doc_id, pos+2^j)
 to fetch the partner rank and (b) one dense rank of the DISTINCT pair
 set via the two-phase range-partition rank (same machinery as q_gini —
 no single-partition sort of the data), behind a per-round lazy
-localCheckpoint fence (the PageRank lineage idiom).  Total cost is
+fence (the PageRank lineage idiom).  Total cost is
 O(log maxlen) shuffles of n rows — the accepted distributed-SA price.
 Equal suffixes (possible across documents) legitimately share a dense
 rank; the recurrence preserves ties exactly, matching dense_rank over
@@ -40,6 +40,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 SUB_MOD = 25  # sub-corpus slice: doc_id % SUB_MOD == 0 (~20 docs at sf0.01)
@@ -60,11 +61,11 @@ def _two_phase_dense_rank(distinct_keys: DataFrame, cols: list[str]) -> DataFram
     """rank 1..K for the already-DISTINCT key frame, ordered by ``cols``
     ascending — range-partitioned so no single partition ever holds the
     full set (q_gini's exact two-phase rank, reused)."""
-    # localCheckpoint fence = CORRECTNESS (r9 postmortem, ids.py note):
+    # fence = CORRECTNESS (r9 postmortem, ids.py note):
     # counts + join double-execute this frame; unfenced range boundaries
     # are re-sampled per execution
-    d = distinct_keys.repartitionByRange(8, *cols).localCheckpoint(
-        eager=False
+    d = distinct_keys.repartitionByRange(8, *cols).transform(
+        fence, "_two_phase_dense_rank d", eager=False
     )
     win = Window.partitionBy("__part").orderBy(*cols)
     tagged = d.withColumn("__part", F.spark_partition_id()).withColumn(
@@ -96,7 +97,7 @@ def suffix_ranks(docs: DataFrame) -> DataFrame:
     r = chars.join(
         _two_phase_dense_rank(chars.select("c").distinct(), ["c"]), "c"
     ).select("doc_id", "pos", "rank")
-    r = r.localCheckpoint(eager=False)
+    r = r.transform(fence, "suffix_ranks r", eager=False)
 
     max_len = docs.agg(F.max(F.length("s"))).collect()[0][0] or 1
     rounds = max(1, math.ceil(math.log2(max_len))) if max_len > 1 else 0
@@ -117,7 +118,7 @@ def suffix_ranks(docs: DataFrame) -> DataFrame:
             paired.select("ra", "rb").distinct(), ["ra", "rb"]
         )
         r = paired.join(ranks, ["ra", "rb"]).select("doc_id", "pos", "rank")
-        r = r.localCheckpoint(eager=False)
+        r = r.transform(fence, "suffix_ranks r", eager=False)
         k *= 2
     return r
 

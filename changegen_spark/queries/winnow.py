@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
 from changegen_spark.sources.tables import load_table
 
 WINNOW_K = 4  # word-gram order
@@ -224,7 +225,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: the r13 comment claimed AQE would reuse one fh exchange across
     # the self-join sides; the POST-execution plan disproves it (two
     # ArrowEvalPython + two fh exchanges — plans/r14/
-    # q_winnow_pairs_final_after.txt pre-fence).  A lazy checkpoint fence
+    # q_winnow_pairs_final_after.txt pre-fence).  A lazy fence
     # on the exploded (doc_id, fh) rows — KBs per document, never text —
     # guarantees ONE winnowing pass per run; both join sides read the
     # fenced RDD.  Caveat: the fence pins the whole exploded (doc_id, fh)
@@ -234,7 +235,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hv = _doc_fps(spark, sf_dir).select(
         "doc_id",
         F.explode(F.array_distinct(F.col("fps").getField("fh"))).alias("fh"),
-    ).localCheckpoint(eager=False)
+    ).transform(fence, "q_winnow_pairs hv", eager=False)
     return (
         hv.alias("a")
         .join(

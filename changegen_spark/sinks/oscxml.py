@@ -41,6 +41,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from changegen_spark.operators.fence import fence
+
 ELEMENT_SCHEMA = StructType(
     [
         StructField("change_type", StringType()),  # create | modify | delete
@@ -223,7 +225,9 @@ def write_osmchange_sharded(
     # (The r3 shape ran the full upstream plan up to six times — a count
     # plus a write per change block — measured as the dominant e2e cost
     # at 300×200: sink 13.0 s, of which ~10 s was plan re-execution.)
-    elements = elements.localCheckpoint(eager=False)
+    elements = elements.transform(
+        fence, "write_osmchange_sharded elements", eager=False
+    )
     t0 = _time.time()
     counts = {"create": 0, "modify": 0, "delete": 0}
     counts.update(
@@ -286,8 +290,13 @@ def write_osmchange(
     sort and the XML rendering are distributed (``orderBy`` and
     ``_xml_fragment`` before ``toLocalIterator``); the driver only streams.
     """
+    # The global sort reads its input twice, once to sample the range
+    # boundaries and once to shuffle it; behind a lazy fence the sample job
+    # stores the element rows and the shuffle reads them back instead of
+    # re-running the element plan's last stage.
     fragments = (
         _to_element_schema(elements)
+        .transform(fence, "write_osmchange elements", eager=False)
         .orderBy(_rank(_CHANGE_ORDER, "change_type"), _rank(_KIND_ORDER, "kind"), F.col("id"))
         .select("change_type", _xml_fragment())
     )

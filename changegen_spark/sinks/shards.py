@@ -28,6 +28,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
+
 
 def write_training_shards(
     df: DataFrame,
@@ -41,7 +43,9 @@ def write_training_shards(
     # fence once: the JSON write and the manifest aggregate both read the
     # materialized rows instead of re-running the (possibly corpus-scale)
     # upstream plan twice
-    tagged = df.withColumn("shard", shard).localCheckpoint(eager=False)
+    tagged = df.withColumn("shard", shard).transform(
+        fence, "write_training_shards tagged", eager=False
+    )
     sharded = tagged.repartition(n_shards, "shard").sortWithinPartitions(
         "shard", key_col
     )
@@ -141,7 +145,7 @@ def write_epoch_shards(
         .withColumn(
             "shard", F.pmod(F.col("pos"), F.lit(n_shards)).cast("int")
         )
-        .localCheckpoint(eager=False)
+        .transform(fence, "write_epoch_shards tagged", eager=False)
     )
     sharded = tagged.repartition(n_shards, "shard").sortWithinPartitions(
         "shard", "pos"

@@ -57,6 +57,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
+from changegen_spark.operators.fence import fence
+
 # one row per element; tags/members as parallel arrays, map and struct
 # columns are built Spark-side (read_pbf_tables)
 _UNIFIED_SCHEMA = (
@@ -490,7 +492,7 @@ def read_pbf_tables(spark: SparkSession, path: str) -> dict[str, DataFrame]:
     u = (
         spark.read.format("osmpbf")
         .load(os.path.abspath(path))
-        .localCheckpoint(eager=True)
+        .transform(fence, "read_pbf_tables decode")
     )
     tags = F.map_from_arrays(F.col("tag_keys"), F.col("tag_vals")).alias("tags")
     nodes = u.filter(F.col("kind") == "node").select("id", "lat", "lon", tags)

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
+
 REF_DUMP = "/root/reference/test/data/dbdump.tar"
 REF_PBF = "/root/reference/test/data/osmdata.osm.pbf"
 
@@ -50,8 +52,8 @@ def load_reference_tables(
         for gcol in ("geometry", "geom"):
             if gcol in df.columns:
                 df = df.withColumn(gcol, parse_wkt(F.col(gcol)))
-        # cache: tiny driver-built frames re-joined many times downstream
-        tables[name] = df.localCheckpoint(eager=True)
+        # tiny driver-built frames re-joined many times downstream
+        tables[name] = df.transform(fence, f"load_reference_tables {name}")
 
     tables.update(read_pbf_tables(spark, pbf_path))
     _CACHE[key] = tables

@@ -25,6 +25,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from changegen_spark.operators.fence import fence
+
 
 def stage_arrival_files(spark: SparkSession, n_files: int = 4) -> str:
     """Write the fixture's arrival records (rec_id ≥ 400) as ``n_files``
@@ -288,7 +290,7 @@ def resolve_maintenance_stream(
             F.coalesce("city", F.lit("")).alias("city"),
             "matched_entity",
             "lev",
-        ).localCheckpoint(eager=True)
+        ).transform(fence, "resolve_maintenance_stream arr")
         batch_members = arr.filter(F.col("matched_entity") != -2).select(
             F.when(F.col("matched_entity") >= 0, F.col("matched_entity"))
             .otherwise(F.col("rec_id"))
@@ -337,7 +339,9 @@ def resolve_maintenance_stream(
             F.col("name_mode").alias("name"),
             F.col("city_latest").alias("city"),
         )
-        decisions = reprobe_pool(pool_in, golden).localCheckpoint(eager=True)
+        decisions = reprobe_pool(pool_in, golden).transform(
+            fence, "resolve_maintenance_stream decisions"
+        )
         drained = decisions.filter(F.col("matched_entity") != -2)
         drained_members = drained.join(pool_in, "rec_id").select(
             F.when(F.col("matched_entity") >= 0, F.col("matched_entity"))
@@ -426,13 +430,13 @@ def rehome_touched(
     dels = deletes.select("rec_id").distinct()
     touched = (
         membership.join(dels, "rec_id").select("entity").distinct()
-    ).localCheckpoint(eager=True)
+    ).transform(fence, "rehome_touched touched")
     remaining = membership.join(F.broadcast(touched), "entity").join(
         dels, "rec_id", "left_anti"
     )
     sub_people = people.join(
         remaining.select("rec_id"), "rec_id"
-    ).localCheckpoint(eager=True)
+    ).transform(fence, "rehome_touched sub_people")
     sub_edges = pairs_fn(sub_people).select("rec_a", "rec_b")
     subcomp = connected_components(sub_edges, src="rec_a", dst="rec_b")
     return remaining.select("rec_id").join(
@@ -456,7 +460,7 @@ def retract_membership(
     dels = deletes.select("rec_id").distinct()
     touched = (
         membership.join(dels, "rec_id").select("entity").distinct()
-    ).localCheckpoint(eager=True)
+    ).transform(fence, "retract_membership touched")
     untouched = membership.join(F.broadcast(touched), "entity", "left_anti")
     rehomed = rehome_touched(membership, deletes, people)
     return untouched.select("rec_id", "entity").unionByName(rehomed)
@@ -553,10 +557,10 @@ def retract_stream(
             membership.join(batch_df.select("rec_id").distinct(), "rec_id")
             .select("entity")
             .distinct()
-        ).localCheckpoint(eager=True)
+        ).transform(fence, "retract_stream old_touched")
         new_membership = retract_membership(
             membership, batch_df, people
-        ).localCheckpoint(eager=True)
+        ).transform(fence, "retract_stream new_membership")
         new_membership.write.mode("overwrite").parquet(
             os.path.join(members_dir, f"batch={batch_id}")
         )
@@ -592,7 +596,7 @@ def retract_stream(
                 "city_latest",
                 "bucket",
             )
-            .localCheckpoint(eager=True)
+            .transform(fence, "retract_stream rows")
         )
         # per-bucket explicit overwrite, NOT dynamic-partition-overwrite:
         # retraction can empty a bucket (its only entity tombstoned), and
@@ -955,7 +959,7 @@ def lifecycle_stream(
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         snap = _records_before(batch_id)
         spark.catalog.refreshByPath(snap)
-        prev = spark.read.parquet(snap).localCheckpoint(eager=True)
+        prev = spark.read.parquet(snap).transform(fence, "lifecycle_stream prev")
         prev_id = _latest_pool_batch(pool_dir, batch_id)
         if prev_id is None:
             pool = spark.createDataFrame([], pool_schema)
@@ -965,12 +969,12 @@ def lifecycle_stream(
             pool = spark.read.parquet(psnap)
         dels = (
             batch_df.filter("kind = 'delete'").select("rec_id").distinct()
-        ).localCheckpoint(eager=True)
+        ).transform(fence, "lifecycle_stream dels")
         # (1) retraction: drop deleted records AND deleted pool entries,
         # re-head entities whose surviving members lost their head
         old_touched = (
             prev.join(dels, "rec_id").select("entity").distinct()
-        ).localCheckpoint(eager=True)
+        ).transform(fence, "lifecycle_stream old_touched")
         kept = prev.join(dels, "rec_id", "left_anti")
         reheaded = (
             kept.join(F.broadcast(old_touched), "entity")
@@ -985,7 +989,7 @@ def lifecycle_stream(
                 "city",
                 F.coalesce("new_entity", F.col("entity")).alias("entity"),
             )
-        ).localCheckpoint(eager=True)
+        ).transform(fence, "lifecycle_stream after_del")
         pool = pool.join(dels, "rec_id", "left_anti")
         if tombstone_window is not None:
             # retraction-shadow tombstones: golden names of entities
@@ -1061,7 +1065,7 @@ def lifecycle_stream(
             F.coalesce("city", F.lit("")).alias("city"),
             "matched_entity",
             "lev",
-        ).localCheckpoint(eager=True)
+        ).transform(fence, "lifecycle_stream arr_n")
         arr_members = arr_n.filter("matched_entity != -2").select(
             "rec_id",
             "nname",
@@ -1089,8 +1093,8 @@ def lifecycle_stream(
             F.col("name_mode").alias("name"),
             F.col("city_latest").alias("city"),
         )
-        decisions = reprobe_pool(pool, golden_new).localCheckpoint(
-            eager=True
+        decisions = reprobe_pool(pool, golden_new).transform(
+            fence, "lifecycle_stream decisions"
         )
         drained = decisions.filter("matched_entity != -2")
         drained_members = drained.join(pool, "rec_id").select(
@@ -1102,8 +1106,8 @@ def lifecycle_stream(
             .cast("long")
             .alias("entity"),
         )
-        new_records = with_arr.unionByName(drained_members).localCheckpoint(
-            eager=True
+        new_records = with_arr.unionByName(drained_members).transform(
+            fence, "lifecycle_stream new_records"
         )
         still = (
             decisions.filter("matched_entity = -2")
@@ -1152,7 +1156,7 @@ def lifecycle_stream(
             .unionByName(drained_members.select("entity"))
             .select(F.pmod("entity", F.lit(GOLDEN_BUCKETS)).alias("bucket"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(fence, "lifecycle_stream touched")
         )
         rows = (
             _bucketed(
@@ -1161,7 +1165,7 @@ def lifecycle_stream(
                 )
             )
             .join(F.broadcast(touched), "bucket", "left_semi")
-            .localCheckpoint(eager=True)
+            .transform(fence, "lifecycle_stream rows")
         )
         # explicit per-bucket overwrite: a delete batch can EMPTY a
         # bucket, which dynamic partition overwrite would leave stale

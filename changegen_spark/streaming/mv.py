@@ -37,6 +37,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from changegen_spark.operators.fence import fence
+
 VIEW_BUCKETS = 8
 
 # unified CDC record: side A = orders (l_linenumber/l_returnflag/cents
@@ -338,7 +340,7 @@ def mv_join_maintenance_stream(
                 F.pmod("o_orderkey", F.lit(VIEW_BUCKETS)).alias("bucket")
             )
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(fence, "mv_join_maintenance_stream touched")
         )
         spark.catalog.refreshByPath(cdc_dir)
         log = (
@@ -368,7 +370,7 @@ def mv_join_maintenance_stream(
             .withColumn(
                 "bucket", F.pmod("o_orderkey", F.lit(VIEW_BUCKETS))
             )
-            .localCheckpoint(eager=True)
+            .transform(fence, "mv_join_maintenance_stream rows")
         )
         # explicit per-bucket overwrite (bounded by VIEW_BUCKETS)
         for b in sorted(r.bucket for r in touched.collect()):

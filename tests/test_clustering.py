@@ -78,3 +78,94 @@ def test_cc_deep_chain_converges_and_cap_raises(spark):
     assert st["rounds"] <= 20
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(chain, max_iter=4)
+
+
+def _jobs_started(spark, fn):
+    """(fn(), number of Spark jobs fn started on this thread)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"cc-jobs-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cc_round_counts_moves_in_its_fence_job(spark):
+    """A 6-node chain, an 8-node star and one pair reach the fixpoint on
+    round 5, so the call runs 6 rounds.  Each round is one join and one
+    aggregate behind one fence whose job also counts the labels that
+    moved: 32 jobs here, where a second join and a count job per round
+    made it 56."""
+    from changegen_spark.functions.clustering import connected_components
+
+    chain = [(i, i + 1) for i in range(1, 6)]
+    star = [(10, leaf) for leaf in range(11, 18)]
+    edges = spark.createDataFrame(chain + star + [(20, 21)], "id_a long, id_b long")
+    st = {}
+    comp, jobs = _jobs_started(
+        spark, lambda: connected_components(edges, stats=st)
+    )
+    assert st["rounds"] == 6
+    assert jobs <= 40, jobs
+    assert {r["node"]: r["comp"] for r in comp.collect()} == {
+        **{i: 1 for i in range(1, 7)},
+        **{i: 10 for i in range(10, 18)},
+        20: 20,
+        21: 20,
+    }
+
+
+def _union_find(edges):
+    """{node: min node id of its component}, computed without Spark."""
+    parent = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
+def test_cc_deep_path_matches_union_find(spark):
+    """A 40-node path needs more rounds than HALVE_AFTER, so the halving
+    rounds run; with two small components beside it the labels must equal
+    a plain union-find's (component = min node id)."""
+    from changegen_spark.functions.clustering import HALVE_AFTER, connected_components
+
+    path = [(100 + i, 101 + i) for i in range(39)]
+    edges = path + [(7, 9), (9, 3), (50, 60)]
+    st = {}
+    got = connected_components(
+        spark.createDataFrame(edges, "id_a long, id_b long"), stats=st
+    )
+    assert {r["node"]: r["comp"] for r in got.collect()} == _union_find(edges)
+    assert st["rounds"] > HALVE_AFTER
+
+
+@pytest.mark.xfail(
+    strict=True,
+    raises=RuntimeError,
+    reason="path-halving only shortcuts a path whose ids rise along it: on "
+    "this 40-node path with shuffled ids the labels still move after "
+    "max_iter=20 rounds (a pure-Python replay of the rounds needs 25), "
+    "so the call raises instead of returning the union-find labels",
+)
+def test_cc_shuffled_deep_path_matches_union_find(spark):
+    import random
+
+    from changegen_spark.functions.clustering import connected_components
+
+    ids = random.Random(0).sample(range(400), 40)
+    edges = list(zip(ids, ids[1:]))
+    got = connected_components(spark.createDataFrame(edges, "id_a long, id_b long"))
+    assert {r["node"]: r["comp"] for r in got.collect()} == _union_find(edges)

@@ -12,8 +12,8 @@ test fail until the site is reviewed and its disposition recorded —
 the audit cannot silently rot.
 
 Disposition vocabulary:
-- fenced: localCheckpoint(eager=False) immediately downstream, so all
-  consumers read ONE materialization (the r9 fix class).
+- fenced: a ``fence`` (operators/fence.py) immediately downstream, so
+  all consumers read ONE materialization (the r9 fix class).
 - single-action: the frame is consumed by exactly one action (write
   path), so there is no second execution to diverge from.
 - value-irrelevant: the nondeterministic value never reaches the

@@ -36,7 +36,7 @@ Hazard constructs and their mechanical rules:
   ``monotonically_increasing_id`` / ``uuid`` /
   ``repartitionByRange``: re-evaluated per action with fresh
   seeds/boundaries/layout.  Never mechanically safe; each site must be
-  disposed (single-action, fenced with localCheckpoint, or
+  disposed (single-action, fenced through operators/fence.py, or
   value-irrelevant).
 
 Run: ``python tools/ndet_audit.py`` — prints the inventory and exits
