@@ -297,6 +297,7 @@ def _calibration_s() -> float:
 # canary runs the same machinery the drifting queries run: 32 Arrow
 # pandas-UDF tasks across the executor threads.
 IDLE_CALIB_PAR_S = 0.76  # min-of-3 after warm, measured idle at r13 (0.756-0.775 across 4 fresh sessions)
+IDLE_CALIB_PAR_CPUS = 32  # the defaultParallelism it was measured at
 
 
 def _parallel_calibration_s(spark) -> float:
@@ -439,10 +440,14 @@ def main() -> None:
     # of queries apart still bracket ambient drift at the tail.
     calib_par_1 = _parallel_calibration_s(spark)
     calib_par_2 = _parallel_calibration_s(spark)
-    calib_par_ratio = max(
-        1.0,
-        round(((calib_par_1 + calib_par_2) / 2) / IDLE_CALIB_PAR_S, 3),
-    )
+    # the idle reading is the 32-core host's: on another core count the
+    # ratio would measure the cores, not the load, so it is not computed
+    calib_par_ratio = None
+    if spark.sparkContext.defaultParallelism == IDLE_CALIB_PAR_CPUS:
+        calib_par_ratio = max(
+            1.0,
+            round(((calib_par_1 + calib_par_2) / 2) / IDLE_CALIB_PAR_S, 3),
+        )
     total = round(sum(timings.values()), 3)
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     try:
@@ -506,11 +511,16 @@ def main() -> None:
             "post2": calib_par_2,
         },
         "calib_par_idle_s": IDLE_CALIB_PAR_S,
+        "calib_par_idle_cpus": IDLE_CALIB_PAR_CPUS,
         "calib_par_ratio": calib_par_ratio,
         # timings divided by calib_ratio — the cross-round comparable view
         "queries_norm": timings_norm,
         "value_norm": round(sum(timings_norm.values()), 3),
-        "value_norm_par": round(sum(timings.values()) / calib_par_ratio, 3),
+        "value_norm_par": (
+            round(sum(timings.values()) / calib_par_ratio, 3)
+            if calib_par_ratio
+            else None
+        ),
     }
     if sf1 is not None:
         out["sf1"] = sf1

@@ -369,7 +369,7 @@ ORDER BY id_a, id_b
 
 def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The full near-dup dedup decision: MinHash-LSH candidate pairs →
-    connected components (iterative min-label propagation) → keep the
+    connected components (large-star/small-star rounds) → keep the
     min-id doc per cluster.  Only clustered docs emitted (unpaired docs
     are trivially kept)."""
     from changegen_spark.functions.clustering import dedup_keep_list

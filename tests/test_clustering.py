@@ -58,11 +58,9 @@ def test_keep_best_prefers_longest_then_min_id(spark):
 
 @pytest.mark.slow
 def test_cc_deep_chain_converges_and_cap_raises(spark):
-    """r11: path-halving engages past HALVE_AFTER one-hop rounds, so a
-    deep path graph converges within the default cap (the one-hop
-    version needed rounds = diameter and silently returned split
-    clusters at the cap); a cap too small to converge must RAISE, never
-    return wrong labels."""
+    """A deep path graph converges within the default cap (rounds are
+    bounded by O(log² n), not by the diameter); a cap too small to
+    converge must RAISE, never return wrong labels."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -95,11 +93,10 @@ def _jobs_started(spark, fn):
 
 
 def test_cc_round_counts_moves_in_its_fence_job(spark):
-    """A 6-node chain, an 8-node star and one pair reach the fixpoint on
-    round 5, so the call runs 6 rounds.  Each round is one join and one
-    aggregate behind one fence whose job also counts the labels that
-    moved: 32 jobs here, where a second join and a count job per round
-    made it 56."""
+    """A 6-node chain, an 8-node star and one pair reach the star forest
+    on round 3, so the call runs 4 rounds.  Each round is two windows and
+    one aggregate behind one fence whose job also counts the edges the
+    round added, so no round runs a second job to test the fixpoint."""
     from changegen_spark.functions.clustering import connected_components
 
     chain = [(i, i + 1) for i in range(1, 6)]
@@ -109,7 +106,7 @@ def test_cc_round_counts_moves_in_its_fence_job(spark):
     comp, jobs = _jobs_started(
         spark, lambda: connected_components(edges, stats=st)
     )
-    assert st["rounds"] == 6
+    assert st["rounds"] == 4
     assert jobs <= 40, jobs
     assert {r["node"]: r["comp"] for r in comp.collect()} == {
         **{i: 1 for i in range(1, 7)},
@@ -136,36 +133,40 @@ def _union_find(edges):
     return {n: find(n) for n in parent}
 
 
-def test_cc_deep_path_matches_union_find(spark):
-    """A 40-node path needs more rounds than HALVE_AFTER, so the halving
-    rounds run; with two small components beside it the labels must equal
-    a plain union-find's (component = min node id)."""
-    from changegen_spark.functions.clustering import HALVE_AFTER, connected_components
-
-    path = [(100 + i, 101 + i) for i in range(39)]
-    edges = path + [(7, 9), (9, 3), (50, 60)]
-    st = {}
-    got = connected_components(
-        spark.createDataFrame(edges, "id_a long, id_b long"), stats=st
-    )
-    assert {r["node"]: r["comp"] for r in got.collect()} == _union_find(edges)
-    assert st["rounds"] > HALVE_AFTER
-
-
-@pytest.mark.xfail(
-    strict=True,
-    raises=RuntimeError,
-    reason="path-halving only shortcuts a path whose ids rise along it: on "
-    "this 40-node path with shuffled ids the labels still move after "
-    "max_iter=20 rounds (a pure-Python replay of the rounds needs 25), "
-    "so the call raises instead of returning the union-find labels",
-)
-def test_cc_shuffled_deep_path_matches_union_find(spark):
-    import random
-
+def _cc_labels(spark, edges, **kw):
     from changegen_spark.functions.clustering import connected_components
 
-    ids = random.Random(0).sample(range(400), 40)
+    got = connected_components(
+        spark.createDataFrame(edges, "id_a long, id_b long"), **kw
+    )
+    return {r["node"]: r["comp"] for r in got.collect()}
+
+
+def test_cc_deep_path_matches_union_find(spark):
+    """A 40-node path beside two small components: the labels must equal
+    a plain union-find's (component = min node id)."""
+    path = [(100 + i, 101 + i) for i in range(39)]
+    edges = path + [(7, 9), (9, 3), (50, 60)]
+    assert _cc_labels(spark, edges) == _union_find(edges)
+
+
+@pytest.mark.parametrize("n,id_range", [(40, 400), (1000, 100_000)])
+def test_cc_shuffled_deep_path_matches_union_find(spark, n, id_range):
+    """A path whose ids are shuffled converges at the default max_iter:
+    the star rounds' bound does not depend on the order of the ids along
+    a path (6 rounds for 40 nodes, 9 for 1,000)."""
+    import random
+
+    ids = random.Random(0).sample(range(id_range), n)
     edges = list(zip(ids, ids[1:]))
-    got = connected_components(spark.createDataFrame(edges, "id_a long, id_b long"))
-    assert {r["node"]: r["comp"] for r in got.collect()} == _union_find(edges)
+    assert _cc_labels(spark, edges) == _union_find(edges)
+
+
+def test_cc_self_loop_and_empty(spark):
+    """A node whose only edge is a self-loop is its own component; an
+    empty edge list gives no labels."""
+    edges = [(5, 5), (1, 2)]
+    assert _cc_labels(spark, edges) == {1: 1, 2: 1, 5: 5}
+    st = {}
+    assert _cc_labels(spark, [], stats=st) == {}
+    assert st["rounds"] == 1

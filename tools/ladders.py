@@ -679,13 +679,12 @@ def er_ladder(spark, queries):
             cell["drain_policy"] = DRAIN_POLICY
             cell["drain_policies"] = _policy_cells(adp, adv_lo)
     er["adversarial_100k"] = arow
-    # r12 (r11 verdict #3): deep-component CC at bench scale — a
-    # 100k-node CHAIN (the versioned-page near-dup model: each
-    # revision near-dups its neighbors only), diameter 10^5.  The
-    # one-hop propagation needed diameter rounds and silently
-    # returned split clusters at max_iter (the r11 hazard);
-    # path-halving must converge in ~6 + log2(10^5) ≈ 23 rounds.
-    # Single run; rounds + wall + component count in the artifact.
+    # deep-component CC at bench scale — a 100k-node CHAIN (the
+    # versioned-page near-dup model: each revision near-dups its
+    # neighbors only), diameter 10^5.  Large/small-star rounds are
+    # bounded by O(log² n), not by the diameter, so it converges well
+    # inside max_iter=40.  Single run; rounds + wall + component count in the
+    # artifact.
     chain_n = 100_000
     chain_edges = spark.range(chain_n - 1).select(
         _F.col("id").alias("id_a"), (_F.col("id") + 1).alias("id_b")
@@ -705,8 +704,9 @@ def er_ladder(spark, queries):
         "wall_s": round(time.time() - t0, 3),
         "note": (
             "one-hop min-label needed 10^5 rounds here and returned "
-            "SPLIT clusters at any real budget; adaptive path-halving "
-            "(clustering.py) converges in 6 one-hop + O(log d) rounds"
+            "SPLIT clusters at any real budget; large/small-star rounds "
+            "(clustering.py, Kiveris et al. 2014) converge in O(log^2 n) "
+            "rounds whatever the order of the ids"
         ),
     }
 

@@ -63,7 +63,7 @@ def main() -> None:
     # committed artifact they cite.  The r12 verdict found GAPS/SCALE
     # quoting deep_cc at 18.0 s from an earlier run while the artifact
     # carried 14.1 s — rounds/components agreed, the wall was a stale
-    # copy.  Every "N rounds (...), 1 component, X s" deep_cc quote in
+    # copy.  Every "N star rounds, 1 component, X s" deep_cc quote in
     # GAPS.md/SCALE.md is checked against the committed cell (wall to
     # one decimal, rounds exact).  Checked, not rewritten, for the same
     # reason as the close-note counts: these quotes are presented as run
@@ -79,8 +79,7 @@ def main() -> None:
             for path in ("GAPS.md", "SCALE.md"):
                 text = re.sub(r"[*\n]", " ", open(path).read())
                 for m in re.finditer(
-                    r"(\d+) rounds \(6 one-hop \+ \d+ halving\), 1 "
-                    r"component, ([\d.]+)\s*s",
+                    r"(\d+) star rounds, 1 component, ([\d.]+)\s*s",
                     text,
                 ):
                     rounds, wall = int(m.group(1)), float(m.group(2))
