@@ -1,4 +1,4 @@
-"""Global sequential ID assignment (SURVEY §2.5 W1).
+"""Ordered prefix sums and global sequential ids (SURVEY §2.5 W1).
 
 Parity target: the reference's infinite counter ``_id_gen(id_offset, neg_id)``
 (``changegen/generator.py:161-166``) consumed interleaved across element
@@ -6,19 +6,96 @@ kinds.  The distributed contract we preserve (SURVEY §7 risk 1): uniqueness,
 density starting at ``id_offset + 1``, sign, and no collision with existing
 extract ids (``changegen/__main__.py:197-208``).
 
-Scale note: a single global ``row_number`` means a one-partition shuffle of
-the *keys only* — acceptable for changefile-sized outputs (≪ memory), which is
-the only place dense ids are required.  For 100 TB-scale id assignment use
-``mode="distributed"``: ``monotonically_increasing_id`` gives per-partition
-unique (sparse) ids with zero shuffle, then an optional per-partition-offset
-pass (two tiny jobs: count per partition → prefix sum broadcast) yields dense
-ids without a global sort.
+One operator computes every ordered rank and running sum in the package:
+``prefix_sum`` is Blelloch's block scan ("Prefix Sums and Their
+Applications", 1990) — scan each block, scan the block sums, add them
+back.  The blocks are range partitions of the order key, so no stage ever
+holds more than one partition of data rows; the only partition-less
+window runs over the (partition, group) sums, one row per block.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from changegen_spark.operators.fence import fence
+
+
+def prefix_sum(
+    df: DataFrame,
+    order_by: list[str],
+    value: str | None = None,
+    by: list[str] | tuple[str, ...] = (),
+) -> DataFrame:
+    """``df`` plus ``run`` and ``total``.
+
+    ``run`` is the inclusive running sum of ``value`` within each ``by``
+    group in ``order_by`` order, or the 1-based rank when ``value`` is
+    None; ``total`` is the group's sum (its row count when ``value`` is
+    None).  ``by + order_by`` must be a total order of the rows, or ties
+    are numbered arbitrarily.  Groups compare null-safely: a null ``by``
+    key is a group of its own.
+
+    Five steps: range-partition on ``by + order_by`` (the session's
+    shuffle partitions, coalesced by adaptive execution — coalescing
+    merges neighbouring ranges, so partition ids stay in key order);
+    fence the ranged rows; one window within each (partition, group);
+    a prefix window over the per-(partition, group) sums; one broadcast
+    join of those offsets back.
+
+    The fence is correctness, not caching: the ranged rows are read
+    twice (the block sums and the join probe), and ``repartitionByRange``
+    samples its boundaries afresh per execution.  Unfenced, offsets from
+    one partitioning get added to rows of another and the ranks stop
+    being a permutation (measured at 100k sorted-neighbourhood records:
+    168318/168318/168300/168305 pairs over four counts).
+    """
+    by = list(by)
+    mby = [f"__mby{i}" for i in range(len(by))]
+    ranged = (
+        df.repartitionByRange(*by, *order_by)
+        .transform(fence, "prefix_sum ranged", eager=False)
+        .withColumn("__part", F.spark_partition_id())
+    )
+    local = Window.partitionBy("__part", *by).orderBy(*order_by)
+    if value is None:
+        step = F.row_number().over(local).cast("long")
+        block = F.count("*")
+    else:
+        step = F.sum(value).over(
+            local.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        block = F.sum(value)
+    blocks = ranged.groupBy("__part", *by).agg(block.alias("__blk"))
+    scan = Window.partitionBy(*by).orderBy("__part")
+    meta = blocks.select(
+        F.col("__part").alias("__mpart"),
+        *[F.col(c).alias(m) for c, m in zip(by, mby)],
+        (
+            F.sum("__blk").over(
+                scan.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+            )
+            - F.col("__blk")
+        ).alias("__off"),
+        F.sum("__blk")
+        .over(scan.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing))
+        .alias("total"),
+    )
+    on = reduce(
+        and_,
+        [F.col(c).eqNullSafe(F.col(m)) for c, m in zip(by, mby)],
+        F.col("__part") == F.col("__mpart"),
+    )
+    return (
+        ranged.withColumn("__step", step)
+        .join(F.broadcast(meta), on)
+        .withColumn("run", F.col("__step") + F.col("__off"))
+        .drop("__part", "__step", "__mpart", "__off", *mby)
+    )
 
 
 def assign_sequential_ids(
@@ -27,62 +104,16 @@ def assign_sequential_ids(
     out_col: str = "new_id",
     id_offset: int = 0,
     negative: bool = False,
-    mode: str = "dense",
 ) -> DataFrame:
-    """Attach globally unique ids.
-
-    ``mode="dense"``: ids are exactly ``id_offset+1 .. id_offset+N`` in
-    ``order_by`` order (single-partition window — deterministic, for
-    changefile-scale outputs).
-
-    ``mode="distributed"``: dense ids with no global sort — compute partition
-    row-counts, broadcast the prefix sums, add to a per-partition row index.
-    Order follows current partitioning (still unique + dense, not globally
-    ordered by ``order_by``).
-
-    CORRECTNESS HAZARD (r9 postmortem): distributed mode executes its
-    input TWICE — once for the per-partition counts, once as the join
-    probe.  If the input's partitioning is nondeterministic across
-    executions (``repartitionByRange`` re-samples its boundaries with a
-    fresh seed every execution), the offsets from one partitioning get
-    applied to rows of another and the ids stop being a permutation.
-    Fence such inputs first (``operators/fence.py``; see
-    queries/er/sn.py ``_sn_ranked``); deterministic inputs (a parquet
-    scan, a hash repartition) need no fence.
-    """
-    if mode == "dense":
-        w = Window.orderBy(*[F.col(c) for c in order_by])
-        rn = F.row_number().over(w).cast("long")
-    elif mode == "distributed":
-        # Dense ids without a global shuffle: spark_partition_id + intra-
-        # partition row_number, then remap partition offsets driver-side.
-        part = F.spark_partition_id()
-        w = Window.partitionBy(part).orderBy(*[F.col(c) for c in order_by])
-        tagged = df.withColumn("__part", part).withColumn(
-            "__rn", F.row_number().over(w).cast("long")
-        )
-        # Per-partition offsets as a broadcast join against a tiny
-        # (partition, offset) frame — NOT a driver collect() + create_map
-        # literal: at 100k partitions that literal is a 200k-node expression
-        # tree and the collect is a driver round-trip.  The prefix sum runs
-        # as a single-partition window over num_partitions rows (tiny).
-        counts = tagged.groupBy("__part").agg(F.count("*").alias("__cnt"))
-        prefix = Window.orderBy("__part").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offs = counts.select(
-            "__part",
-            F.coalesce(F.sum("__cnt").over(prefix), F.lit(0)).cast("long").alias("__off"),
-        )
-        out = tagged.join(F.broadcast(offs), "__part")
-        seq = (F.col("__rn") + F.col("__off") + F.lit(id_offset)).cast("long")
-        out = out.withColumn(out_col, -seq if negative else seq)
-        return out.drop("__part", "__rn", "__off")
-    else:
-        raise ValueError(f"unknown id mode: {mode}")
-
-    seq = rn + F.lit(id_offset)
-    return df.withColumn(out_col, (-seq if negative else seq).cast("long"))
+    """``df`` plus ``out_col``: ids exactly ``id_offset+1 .. id_offset+N``
+    in ``order_by`` order (negated when ``negative``), from
+    ``prefix_sum``'s rank."""
+    seq = F.col("run") + F.lit(id_offset)
+    return (
+        prefix_sum(df, order_by)
+        .withColumn(out_col, (-seq if negative else seq).cast("long"))
+        .drop("run", "total")
+    )
 
 
 def check_id_collision(existing_max_id: int, id_offset: int, negative: bool) -> None:

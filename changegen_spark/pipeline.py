@@ -25,10 +25,9 @@ ways are eager fences built in their pool threads, so neither the id
 fence nor the sink recomputes them.
 
 Scale notes: every join is keyed (grid cell, rounded coordinate, osm_id);
-the only single-partition stage is the global id ``row_number`` over the
-*id-request keys only* (a changefile ≪ cluster memory by construction —
-see ``operators/ids.py`` for the distributed-mode alternative) and the
-ordered XML sink.
+the only single-partition stages are the ordered XML sink and, in the
+global ids (a range-partitioned prefix sum over the id-request keys,
+``operators/ids.py``), the scan of one count per range partition.
 """
 
 from __future__ import annotations

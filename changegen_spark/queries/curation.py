@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from changegen_spark.operators.fence import fence
+from changegen_spark.operators.ids import prefix_sum
 from changegen_spark.sources.tables import load_table
 
 
@@ -132,56 +133,31 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang ...)`` forces an entire language through ONE window task — at
     100 TB a dominant language is billions of rows in a single sort.
     Instead the (doc_id, lang, nll, ppl) rank payload (text never enters
-    the shuffle) is RANGE-partitioned on the total order
-    (lang, nll, doc_id), ranked per-partition, and stitched into exact
-    global per-language ranks with broadcast prefix-sum offsets (the
-    distributed-ids idiom, operators/ids.py).  Tercile assignment is then
-    map-side arithmetic against broadcast per-language counts using
-    ntile's exact size rule (first ``n%3`` buckets get ``n//3 + 1``), so
-    the result is byte-identical to the oracle's ntile — with the
-    dominant language's sort spread across the whole cluster."""
+    the shuffle) goes through ``operators/ids.prefix_sum`` by lang:
+    RANGE-partitioned on the total order (lang, nll, doc_id), ranked
+    per-partition, and stitched into exact global per-language ranks
+    with broadcast prefix-sum offsets that also carry each language's
+    count.  Tercile assignment is then map-side arithmetic using ntile's
+    exact size rule (first ``n%3`` buckets get ``n//3 + 1``), so the
+    result is byte-identical to the oracle's ntile — with the dominant
+    language's sort spread across the whole cluster."""
     from changegen_spark.queries.lm import q_lm_score
 
     scored = q_lm_score(spark, sf_dir).select("doc_id", "nll", "ppl")
     langs = _docs(spark, sf_dir).select("doc_id", "lang")
     joined = scored.join(langs, "doc_id")
 
-    nparts = max(spark.sparkContext.defaultParallelism, 8)
-    # repartitionByRange SAMPLES its child to pick boundaries, then
-    # shuffles it — two executions of the upstream lm_score pipeline per
-    # materialization.  Fencing `joined` first makes the sampling pass
-    # materialize the scored rows once and the shuffle read them back
-    # (guide §2.4: at corpus scale this halves the work feeding the rank).
+    # prefix_sum's repartitionByRange SAMPLES its child to pick
+    # boundaries, then shuffles it — two executions of the upstream
+    # lm_score pipeline per materialization.  Fencing `joined` first makes
+    # the sampling pass materialize the scored rows once and the shuffle
+    # read them back (guide §2.4: at corpus scale this halves the work
+    # feeding the rank).
     joined = joined.transform(fence, "q_ccnet_buckets joined", eager=False)
-    # fence = CORRECTNESS (r9 postmortem, ids.py note):
-    # the two-phase rank executes this frame twice (counts + join) and
-    # repartitionByRange re-samples boundaries per execution
-    ranged = joined.repartitionByRange(
-        nparts, "lang", "nll", "doc_id"
-    ).transform(fence, "q_ccnet_buckets ranged", eager=False)
-    tagged = ranged.withColumn("__part", F.spark_partition_id())
-    local_w = Window.partitionBy("__part", "lang").orderBy("nll", "doc_id")
-    tagged = tagged.withColumn("__rn", F.row_number().over(local_w).cast("long"))
-
-    # (partitions × languages) rows — KB-sized, broadcastable.  Prefix
-    # offsets AND per-language totals come out of the SAME aggregate via
-    # two windows over it (r6 verdict #5 shave: the old offs/totals pair
-    # re-traversed counts and cost the main path a second broadcast join).
-    counts = tagged.groupBy("__part", "lang").agg(F.count("*").alias("__cnt"))
-    prefix = Window.partitionBy("lang").orderBy("__part").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    meta = counts.select(
-        "__part",
-        "lang",
-        F.coalesce(F.sum("__cnt").over(prefix), F.lit(0)).cast("long").alias("__off"),
-        F.sum("__cnt").over(Window.partitionBy("lang")).cast("long").alias("__n"),
-    )
-
-    ranked = tagged.join(F.broadcast(meta), ["__part", "lang"])
-    rank = F.col("__rn") + F.col("__off")
-    base = F.floor(F.col("__n") / 3).cast("long")
-    rem = F.col("__n") % 3
+    ranked = prefix_sum(joined, ["nll", "doc_id"], by=["lang"])
+    rank = F.col("run")
+    base = F.floor(F.col("total") / 3).cast("long")
+    rem = F.col("total") % 3
     s1 = base + (rem >= 1).cast("long")
     s2 = s1 + base + (rem >= 2).cast("long")
     tercile = (

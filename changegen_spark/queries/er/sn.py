@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from changegen_spark.operators.fence import fence
+from changegen_spark.operators.ids import prefix_sum
 from changegen_spark.queries.er.blocking import (
     _FIRSTNAME,
     _LASTNAME,
@@ -48,30 +49,19 @@ def _sn_keyed(people: DataFrame) -> DataFrame:
     )
 
 
-def _sn_ranked(people: DataFrame) -> DataFrame:
-    """Global dense rank in skey order WITHOUT a single-partition window:
-    repartitionByRange on the key (range partitions concatenate to the
-    global order) + the ids.py distributed two-phase prefix sum.
-
-    The fence after the range exchange is CORRECTNESS,
-    not caching (r9 postmortem): repartitionByRange samples its
-    boundaries with a fresh random seed per execution, and the
-    distributed rank executes its input TWICE (per-partition counts,
-    then the offset join).  Unfenced, the two executions can see
-    different boundaries, so offsets from one partitioning get applied
-    to rows of another — ranks stop being a permutation and the SN pair
-    set wobbles run to run (measured at 100k: 168318/168318/168300/
-    168305 across four counts; byte-stable after the fence)."""
-    from changegen_spark.operators.ids import assign_sequential_ids
-
-    k = (
-        _sn_keyed(people)
-        .repartitionByRange(32, "skey")
-        .transform(fence, "_sn_ranked k", eager=False)
+def _skey_rank(keyed: DataFrame) -> DataFrame:
+    """(rec_id, nname, rank): global dense rank in skey order WITHOUT a
+    single-partition window — ``operators/ids.prefix_sum`` (range
+    partitions on skey concatenate to the global order; its fence keeps
+    the SN pair set byte-stable run to run)."""
+    return prefix_sum(keyed, ["skey"]).select(
+        "rec_id", "nname", F.col("run").alias("rank")
     )
-    return assign_sequential_ids(
-        k, order_by=["skey"], out_col="rank", mode="distributed"
-    ).select("rec_id", "nname", "rank")
+
+
+def _sn_ranked(people: DataFrame) -> DataFrame:
+    """First-pass global rank: the ``_sn_keyed`` sort key."""
+    return _skey_rank(_sn_keyed(people))
 
 
 def er_pairs_sn(
@@ -147,9 +137,7 @@ def q_er_pairs_sn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sn_ranked2(people: DataFrame) -> DataFrame:
     """Second-pass global rank: CITY-FIRST sort key (city | block_key |
-    name | id), same distributed two-phase machinery as _sn_ranked."""
-    from changegen_spark.operators.ids import assign_sequential_ids
-
+    name | id)."""
     keyed2 = with_block(people).join(
         people.select("rec_id", "city"), "rec_id"
     ).select(
@@ -163,17 +151,7 @@ def _sn_ranked2(people: DataFrame) -> DataFrame:
             F.lpad(F.col("rec_id").cast("string"), 12, "0"),
         ).alias("skey"),
     )
-    # same correctness fence as _sn_ranked: the distributed rank
-    # double-executes its input, and unfenced range boundaries are
-    # re-sampled per execution
-    return assign_sequential_ids(
-        keyed2.repartitionByRange(32, "skey").transform(
-            fence, "_sn_ranked2 keyed", eager=False
-        ),
-        order_by=["skey"],
-        out_col="rank",
-        mode="distributed",
-    ).select("rec_id", "nname", "rank")
+    return _skey_rank(keyed2)
 
 
 def er_pairs_sn_multi(
@@ -568,12 +546,7 @@ def suffix_key_sql(duck: bool) -> str:
 
 def _sn_ranked3(people: DataFrame) -> DataFrame:
     """Third-pass global rank: SUFFIX sort key (city | phonetic(last
-    minus first letter) | first name | id), same distributed two-phase
-    machinery — and the same correctness fence (the rank
-    double-executes its input; unfenced range boundaries re-sample per
-    execution)."""
-    from changegen_spark.operators.ids import assign_sequential_ids
-
+    minus first letter) | first name | id)."""
     keyed3 = people.select(
         "rec_id",
         F.lower("name").alias("nname"),
@@ -585,14 +558,7 @@ def _sn_ranked3(people: DataFrame) -> DataFrame:
             F.lpad(F.col("rec_id").cast("string"), 12, "0"),
         ).alias("skey"),
     )
-    return assign_sequential_ids(
-        keyed3.repartitionByRange(32, "skey").transform(
-            fence, "_sn_ranked3 keyed", eager=False
-        ),
-        order_by=["skey"],
-        out_col="rank",
-        mode="distributed",
-    ).select("rec_id", "nname", "rank")
+    return _skey_rank(keyed3)
 
 
 def er_pairs_sn_suffix(

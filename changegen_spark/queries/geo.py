@@ -829,7 +829,8 @@ def q_haversine(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE-identical across these engines at 3-dp rounding — the same
     contract q_mercator already relies on.
 
-    Consecutive-pair pairing uses the same two-phase pattern as q_gini:
+    Consecutive-pair pairing has the block shape of
+    ``operators/ids.prefix_sum`` with a lag in place of a sum:
     range-partition by pid, lag WITHIN each partition, then stitch the
     partition boundaries from a tiny per-partition first/last frame (the
     only global window runs over ≤ N_PARTITIONS rows).  No

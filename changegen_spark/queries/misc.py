@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from changegen_spark.operators.fence import fence
+from changegen_spark.operators.ids import prefix_sum
 from changegen_spark.sources.tables import TABLES, load_table, load_tables
 
 
@@ -646,35 +647,20 @@ def q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     revenue — Gini = (2·Σ rank·x) / (n·Σx) - (n+1)/n over revenues sorted
     ascending with a (revenue, custkey) total tie-break.
 
-    The global rank uses the SAME two-phase pattern as q_weighted_sample
-    (range-partition by the sort key, intra-partition row_number, tiny
-    per-partition offset frame broadcast back) — no single-partition sort
-    of the data ever happens, yet the rank is exact and
-    partitioning-invariant.  Revenue is integer cents; Σ rank·x and Σx are
-    exact integer sums, so the final double division is engine-identical.
+    The global rank is ``operators/ids.prefix_sum`` (range partitions,
+    partition-local row_number, a broadcast per-partition offset frame) —
+    no single-partition sort of the data ever happens, yet the rank is
+    exact and partitioning-invariant.  Revenue is integer cents; Σ rank·x
+    and Σx are exact integer sums, so the final double division is
+    engine-identical.
 
     Output: one row (n_customers, total_cents, gini_e6)."""
     o = load_table(spark, sf_dir, "orders")
-    # fence = CORRECTNESS (r9 postmortem, ids.py note)
-    rev = (
-        o.groupBy("o_custkey")
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents"))
-        .repartitionByRange(8, "cents", "o_custkey")
-        .transform(fence, "q_gini rev", eager=False)
+    rev = o.groupBy("o_custkey").agg(
+        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("cents")
     )
-    part = F.spark_partition_id()
-    win = Window.partitionBy("__part").orderBy("cents", "o_custkey")
-    tagged = rev.withColumn("__part", part).withColumn(
-        "__rn", F.row_number().over(win).cast("long")
-    )
-    counts = tagged.groupBy("__part").agg(F.count("*").alias("__cnt"))
-    prefix = Window.orderBy("__part").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "__part",
-        F.coalesce(F.sum("__cnt").over(prefix), F.lit(0)).cast("long").alias("__off"),
-    )
-    ranked = tagged.join(F.broadcast(offs), "__part").select(
-        "cents", (F.col("__rn") + F.col("__off")).alias("rank")
+    ranked = prefix_sum(rev, ["cents", "o_custkey"]).select(
+        "cents", F.col("run").alias("rank")
     )
     agg = ranked.agg(
         F.count("*").alias("n_customers"),

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from changegen_spark.operators.fence import fence
+from changegen_spark.operators.ids import prefix_sum
 from changegen_spark.queries.sketches import _H60_SQL
 from changegen_spark.sources.tables import load_table
 
@@ -616,47 +617,24 @@ def q_stratified_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tiny strata, contractual eval sizes).
 
     Assignment is a pure function of doc_id (md5 order), so retries and
-    incremental reruns agree.  The per-stratum rank uses the same
-    two-phase pattern as ``q_gini``/``q_weighted_sample``:
-    range-partition on (lang, hash), intra-partition row_number, tiny
-    per-(partition, lang) offset frame broadcast back — strata SPAN
-    partitions, so one hot language never serializes onto one partition
-    (the Window.partitionBy(lang) shape would; that hazard is exactly
-    why ``q_hash_sample``'s per-source rank is only for tiny-k picks).
-    At 100 TB prefer the threshold split (``q_hash_sample``) unless
-    exact counts are contractual."""
+    incremental reruns agree.  The per-stratum rank and stratum size are
+    ``operators/ids.prefix_sum`` by lang: range partitions on (lang,
+    hash), a partition-local row_number and a broadcast per-(partition,
+    lang) offset frame — strata SPAN partitions, so one hot language
+    never serializes onto one partition (the Window.partitionBy(lang)
+    shape would; that hazard is exactly why ``q_hash_sample``'s
+    per-source rank is only for tiny-k picks).  At 100 TB prefer the
+    threshold split (``q_hash_sample``) unless exact counts are
+    contractual."""
     d = _docs(spark, sf_dir)
     hk = F.md5(F.col("doc_id").cast("string"))
-    # fence = CORRECTNESS (r9 postmortem, ids.py note):
-    # counts + join double-execute this frame; unfenced range boundaries
-    # are re-sampled per execution
-    rows = d.select("doc_id", "lang", hk.alias("hk")).repartitionByRange(
-        8, "lang", "hk", "doc_id"
-    ).transform(fence, "q_stratified_split rows", eager=False)
-    win = Window.partitionBy("__part", "lang").orderBy("hk", "doc_id")
-    tagged = rows.withColumn("__part", F.spark_partition_id()).withColumn(
-        "__rn", F.row_number().over(win).cast("long")
-    )
-    counts = tagged.groupBy("__part", "lang").agg(F.count("*").alias("__cnt"))
-    prefix = (
-        Window.partitionBy("lang")
-        .orderBy("__part")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offs = counts.select(
-        "__part",
-        "lang",
-        F.coalesce(F.sum("__cnt").over(prefix), F.lit(0)).cast("long").alias("__off"),
-    )
-    totals = counts.groupBy("lang").agg(F.sum("__cnt").cast("long").alias("n"))
-    ranked = tagged.join(F.broadcast(offs), ["__part", "lang"]).select(
-        "doc_id", "lang", (F.col("__rn") + F.col("__off")).alias("rank")
-    )
+    ranked = prefix_sum(
+        d.select("doc_id", "lang", hk.alias("hk")), ["hk", "doc_id"], by=["lang"]
+    ).select("doc_id", "lang", F.col("run").alias("rank"), F.col("total").alias("n"))
     n_train = F.expr("(8 * n) div 10")
     n_val = F.expr("(9 * n) div 10")
     return (
-        ranked.join(F.broadcast(totals), "lang")
-        .select(
+        ranked.select(
             "doc_id",
             "lang",
             "rank",
@@ -751,9 +729,9 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     into fixed 64-token training sequences; each document reports the
     sequence it starts in, its offset there, and how many sequences it
     spans.  One prefix-sum window PER SOURCE — packing parallelizes across
-    sources, and a single giant source would swap in the two-phase
-    per-partition prefix sum used by ``operators/ids.py`` distributed mode
-    (per-partition counts + broadcast offsets) rather than a global sort."""
+    sources, and a single giant source would swap in
+    ``operators/ids.prefix_sum`` by source (per-partition sums + broadcast
+    offsets) rather than one task per source."""
     from changegen_spark.functions.text import token_count
 
     d = _docs(spark, sf_dir)
@@ -1162,43 +1140,23 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil((c_i+w_i)·m / W) - ceil(c_i·m / W) with ceil(a/b) =
     (a + b - 1) div b — engine-exact, and Σ n_picks = m by telescoping.
 
-    Scale shape: the exclusive prefix sum c_i is the two-phase distributed
-    pattern (operators/ids.py mode="distributed"): range-partition by
-    doc_id, intra-partition running sum, then per-partition offsets from a
-    window over the TINY (num_partitions)-row frame broadcast back.  No
-    global single-partition pass ever touches the data; the result is
-    partitioning-invariant because the prefix sum is defined by the global
-    doc_id order, not by where partition boundaries fall."""
-    # fence = CORRECTNESS (r9 postmortem, ids.py note)
-    d = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.col("n_chars").cast("long").alias("w"))
-        .repartitionByRange(8, "doc_id")
-        .transform(fence, "q_weighted_sample d", eager=False)
+    Scale shape: the exclusive prefix sum c_i = run - w_i and the total
+    weight W are ``operators/ids.prefix_sum`` over doc_id: range
+    partitions, a partition-local running sum, then per-partition offsets
+    from a window over the TINY (num_partitions)-row frame broadcast
+    back.  No global single-partition pass ever touches the data; the
+    result is partitioning-invariant because the prefix sum is defined by
+    the global doc_id order, not by where partition boundaries fall."""
+    d = _docs(spark, sf_dir).select(
+        "doc_id", F.col("n_chars").cast("long").alias("w")
     )
-    part = F.spark_partition_id()
-    win = Window.partitionBy("__part").orderBy("doc_id")
-    tagged = d.withColumn("__part", part).withColumn(
-        "__c_intra",
-        F.coalesce(
-            F.sum("w").over(win.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    )
-    counts = tagged.groupBy("__part").agg(F.sum("w").alias("__pw"))
-    prefix = Window.orderBy("__part").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "__part",
-        F.coalesce(F.sum("__pw").over(prefix), F.lit(0)).cast("long").alias("__off"),
-    )
-    tot = d.agg(F.sum("w").cast("long").alias("tw"))
-    m = F.lit(WS_SAMPLES).cast("long")
-    c = (F.col("__c_intra") + F.col("__off")).cast("long")
     ceil_div = lambda a: F.expr(f"({a} + tw - 1) div tw")  # noqa: E731
     return (
-        tagged.join(F.broadcast(offs), "__part")
-        .crossJoin(F.broadcast(tot))
-        .withColumn("c", c)
+        prefix_sum(d, ["doc_id"], value="w")
+        .select(
+            "doc_id", "w", (F.col("run") - F.col("w")).alias("c"),
+            F.col("total").alias("tw"),
+        )
         .withColumn(
             "n_picks",
             (

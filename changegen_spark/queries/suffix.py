@@ -19,8 +19,8 @@ definitional sort.
 
 Scale design: each round is (a) one self-equi-join on (doc_id, pos+2^j)
 to fetch the partner rank and (b) one dense rank of the DISTINCT pair
-set via the two-phase range-partition rank (same machinery as q_gini —
-no single-partition sort of the data), behind a per-round lazy
+set via ``operators/ids.prefix_sum`` (range partitions, no
+single-partition sort of the data), behind a per-round lazy
 fence (the PageRank lineage idiom).  Total cost is
 O(log maxlen) shuffles of n rows — the accepted distributed-SA price.
 Equal suffixes (possible across documents) legitimately share a dense
@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from changegen_spark.operators.fence import fence
+from changegen_spark.operators.ids import prefix_sum
 from changegen_spark.sources.tables import load_table
 
 SUB_MOD = 25  # sub-corpus slice: doc_id % SUB_MOD == 0 (~20 docs at sf0.01)
@@ -57,29 +58,10 @@ def _sub_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _two_phase_dense_rank(distinct_keys: DataFrame, cols: list[str]) -> DataFrame:
+def _dense_rank(distinct_keys: DataFrame, cols: list[str]) -> DataFrame:
     """rank 1..K for the already-DISTINCT key frame, ordered by ``cols``
-    ascending — range-partitioned so no single partition ever holds the
-    full set (q_gini's exact two-phase rank, reused)."""
-    # fence = CORRECTNESS (r9 postmortem, ids.py note):
-    # counts + join double-execute this frame; unfenced range boundaries
-    # are re-sampled per execution
-    d = distinct_keys.repartitionByRange(8, *cols).transform(
-        fence, "_two_phase_dense_rank d", eager=False
-    )
-    win = Window.partitionBy("__part").orderBy(*cols)
-    tagged = d.withColumn("__part", F.spark_partition_id()).withColumn(
-        "__rn", F.row_number().over(win).cast("long")
-    )
-    counts = tagged.groupBy("__part").agg(F.count("*").alias("__cnt"))
-    prefix = Window.orderBy("__part").rowsBetween(Window.unboundedPreceding, -1)
-    offs = counts.select(
-        "__part",
-        F.coalesce(F.sum("__cnt").over(prefix), F.lit(0)).cast("long").alias("__off"),
-    )
-    return tagged.join(F.broadcast(offs), "__part").select(
-        *cols, (F.col("__rn") + F.col("__off")).alias("rank")
-    )
+    ascending."""
+    return prefix_sum(distinct_keys, cols).select(*cols, F.col("run").alias("rank"))
 
 
 def suffix_ranks(docs: DataFrame) -> DataFrame:
@@ -95,7 +77,7 @@ def suffix_ranks(docs: DataFrame) -> DataFrame:
 
     # round 0: rank by the single character
     r = chars.join(
-        _two_phase_dense_rank(chars.select("c").distinct(), ["c"]), "c"
+        _dense_rank(chars.select("c").distinct(), ["c"]), "c"
     ).select("doc_id", "pos", "rank")
     r = r.transform(fence, "suffix_ranks r", eager=False)
 
@@ -114,7 +96,7 @@ def suffix_ranks(docs: DataFrame) -> DataFrame:
             .join(partner, ["doc_id", "pos"], "left")
             .withColumn("rb", F.coalesce("rb", F.lit(0)))
         )
-        ranks = _two_phase_dense_rank(
+        ranks = _dense_rank(
             paired.select("ra", "rb").distinct(), ["ra", "rb"]
         )
         r = paired.join(ranks, ["ra", "rb"]).select("doc_id", "pos", "rank")

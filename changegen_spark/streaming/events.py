@@ -173,10 +173,10 @@ def batch_to_change_elements(batch_df: DataFrame, base_id: int) -> DataFrame:
     """One micro-batch of events → `<create>` node elements with dense ids
     from ``base_id``.
 
-    Ids come from ``assign_sequential_ids(mode="distributed")``
-    (partition-local row_number + broadcast prefix offsets,
-    ``operators/ids.py:46-70``) — no per-batch global window, so a hot
-    micro-batch never funnels through one task."""
+    Ids come from ``assign_sequential_ids`` in ``event_id`` order (range
+    partitions, partition-local row_number and broadcast prefix offsets:
+    ``operators/ids.prefix_sum``) — no per-batch global window over the
+    events, so a hot micro-batch never funnels through one task."""
     from changegen_spark.operators.ids import assign_sequential_ids
 
     eid = F.col("event_id")
@@ -187,7 +187,6 @@ def batch_to_change_elements(batch_df: DataFrame, base_id: int) -> DataFrame:
         order_by=["event_id"],
         out_col="__id",
         id_offset=base_id,
-        mode="distributed",
     )
     return ided.select(
         F.lit("create").alias("change_type"),

@@ -43,6 +43,9 @@ DISPOSITIONS = {
     ("changegen_spark/operators/asof.py", "as_of_join", "monotonically_increasing_id"):
         (1, "fenced: __asof_id frame localCheckpoint'd before the "
             "backward/forward branches join back on it"),
+    ("changegen_spark/operators/ids.py", "prefix_sum", "repartitionByRange"):
+        (1, "fenced (r9 site): the one ordered prefix sum; its ranged rows "
+            "are fenced before the block sums and the join probe read them"),
     ("changegen_spark/operators/skew.py", "two_phase_agg", "monotonically_increasing_id"):
         (1, "value-irrelevant: salt only routes rows to partial-agg "
             "buckets; sum/min/max merge is associative-commutative, so "
@@ -55,33 +58,17 @@ DISPOSITIONS = {
     ("changegen_spark/sources/layout.py", "write_clustered", "repartitionByRange"):
         (1, "single-action: clustered parquet write; one write action "
             "consumes the range exchange"),
-    ("changegen_spark/queries/curation.py", "q_ccnet_buckets", "repartitionByRange"):
-        (1, "fenced (r9 site)"),
-    ("changegen_spark/queries/er/sn.py", "_sn_ranked", "repartitionByRange"):
-        (1, "fenced (r9 site)"),
-    ("changegen_spark/queries/er/sn.py", "_sn_ranked2", "repartitionByRange"):
-        (1, "fenced (r9 site)"),
-    ("changegen_spark/queries/er/sn.py", "_sn_ranked3", "repartitionByRange"):
-        (1, "fenced (r10 suffix pass; same shape as _sn_ranked)"),
     ("changegen_spark/queries/geo.py", "q_convex_hulls", "collect_list"):
         (2, "order-insensitive consumer: hull_stats and size() are set "
             "functions of the points; xs/ys stay row-aligned because "
             "both lists fill in the same single aggregate pass"),
     ("changegen_spark/queries/geo.py", "q_haversine", "repartitionByRange"):
         (1, "fenced (r9 site)"),
-    ("changegen_spark/queries/misc.py", "q_gini", "repartitionByRange"):
-        (1, "fenced (r9 site)"),
     ("changegen_spark/queries/misc.py", "q_mad_outliers", "F.first"):
         (2, "const-per-group: med_e6/n broadcast-joined on event_type, "
             "the group key"),
-    ("changegen_spark/queries/mlprep.py", "q_stratified_split", "repartitionByRange"):
-        (1, "fenced (r9 site)"),
-    ("changegen_spark/queries/mlprep.py", "q_weighted_sample", "repartitionByRange"):
-        (1, "fenced (r9 site)"),
     # (rerank.py _greedy_rerank F.first ×2 removed r13: the greedy loop
     # became a single applyInPandas pass — no grouped F.first remains)
-    ("changegen_spark/queries/suffix.py", "_two_phase_dense_rank", "repartitionByRange"):
-        (1, "fenced (r9 site)"),
 }
 
 
@@ -113,9 +100,14 @@ def test_sweep_sees_the_whole_package():
     (42 mechanically safe) after the pipeline's six sorted collect_list
     aggregates were folded into two shared helpers (_ordered_members,
     _ordered_values); still 61 once generate_changes' one member
-    aggregate replaced _ordered_values."""
+    aggregate replaced _ordered_values; 54 (42 mechanically safe) once
+    the eight hand-rolled range-and-fence ranks (q_gini, q_ccnet_buckets,
+    q_stratified_split, q_weighted_sample, the suffix-array rank and the
+    three sorted-neighbourhood passes) became calls of the one
+    operators/ids.prefix_sum, whose single repartitionByRange replaces
+    them."""
     sites = sweep()
-    assert len(sites) >= 61, len(sites)
+    assert len(sites) >= 54, len(sites)
     mech_safe = [s for s in sites if s[3]]
     assert len(mech_safe) >= 42, len(mech_safe)
 

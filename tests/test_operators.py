@@ -3,7 +3,9 @@
 golden: test/test_generator.py:234-252)."""
 
 import math
+import random
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -114,25 +116,99 @@ def test_grid_dedup_last_wins(spark):
     assert kept == [2, 3]
 
 
-def test_assign_sequential_ids_dense_and_negative(spark):
+def _expected_prefix_sums(rows, value):
+    """{key: (run, total)} by a pure-Python sort-and-accumulate within each
+    group (None is a group of its own)."""
+    out = {}
+    for g in {r[1] for r in rows}:
+        grp = sorted(r for r in rows if r[1] == g)
+        total = sum(1 if value is None else r[2] for r in grp)
+        run = 0
+        for r in grp:
+            run += 1 if value is None else r[2]
+            out[r[0]] = (run, total)
+    return out
+
+
+@pytest.fixture
+def uncoalesced(spark):
+    """Keep every shuffle partition, so a small input spans several range
+    blocks and the offset scan is exercised."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    yield spark
+    spark.conf.set(key, prev)
+
+
+@pytest.mark.parametrize("splits", [1, 3, 7])
+@pytest.mark.parametrize("value", [None, "v"], ids=["rank", "sum"])
+@pytest.mark.parametrize("by", [(), ("g",)], ids=["ungrouped", "by_g"])
+def test_prefix_sum_matches_sort_and_accumulate(uncoalesced, splits, value, by):
+    from changegen_spark.operators.ids import prefix_sum
+
+    rng = random.Random(splits)
+    keys = list(range(300))
+    rng.shuffle(keys)
+    groups = ["a", "b", None] if by else ["a"]
+    rows = [(k, rng.choice(groups), rng.randint(1, 1000)) for k in keys]
+    df = uncoalesced.createDataFrame(rows, "k long, g string, v long").repartition(
+        splits
+    )
+    out = prefix_sum(df, ["k"], value=value, by=by)
+    assert out.columns == ["k", "g", "v", "total", "run"]
+    got = {r.k: (r.run, r.total) for r in out.collect()}
+    want = _expected_prefix_sums(
+        [(k, g if by else None, v) for k, g, v in rows], value
+    )
+    assert got == want
+
+
+def test_assign_sequential_ids_numbers_in_key_order(uncoalesced):
+    """Key i of a shuffled 7-partition input gets id_offset + rank(i),
+    negated for negative ids."""
     from changegen_spark.operators.ids import assign_sequential_ids
 
-    df = spark.createDataFrame([(c,) for c in "cabd"], "k string")
+    keys = [f"k{i:04d}" for i in range(500)]
+    shuffled = keys[:]
+    random.Random(7).shuffle(shuffled)
+    df = uncoalesced.createDataFrame([(k,) for k in shuffled], "k string").repartition(7)
     out = assign_sequential_ids(df, ["k"], id_offset=100)
-    assert {r["k"]: r["new_id"] for r in out.collect()} == {
-        "a": 101, "b": 102, "c": 103, "d": 104,
+    assert out.columns == ["k", "new_id"]
+    assert {r.k: r.new_id for r in out.collect()} == {
+        k: 101 + i for i, k in enumerate(keys)
     }
-    neg = assign_sequential_ids(df, ["k"], negative=True)
-    assert sorted(r["new_id"] for r in neg.collect()) == [-4, -3, -2, -1]
+    neg = assign_sequential_ids(df, ["k"], out_col="nid", negative=True)
+    assert {r.k: r.nid for r in neg.collect()} == {
+        k: -(1 + i) for i, k in enumerate(keys)
+    }
 
 
-def test_assign_sequential_ids_distributed_dense(spark):
-    from changegen_spark.operators.ids import assign_sequential_ids
+def test_changeset_ids_have_no_global_window(spark, monkeypatch):
+    """The changegen id table is ranked inside range partitions: the only
+    partition-less Window in its plan scans the per-partition counts
+    (``__blk``), never the (korder, skey) id requests."""
+    import re
 
-    df = spark.range(0, 1000).repartition(7)
-    out = assign_sequential_ids(df, ["id"], id_offset=50, mode="distributed")
-    ids = sorted(r["new_id"] for r in out.collect())
-    assert ids == list(range(51, 1051))
+    from changegen_spark import pipeline
+    from changegen_spark.sources.osm import fixture_tables
+
+    resolved = []
+    resolve = pipeline.ChangeSet.resolve
+
+    def spy(self, *a, **k):
+        resolved.append(resolve(self, *a, **k))
+        return resolved[-1]
+
+    monkeypatch.setattr(pipeline.ChangeSet, "resolve", spy)
+    pipeline.generate_changes(spark, fixture_tables(spark), id_offset=20_000)
+    plan = resolved[0]._jdf.queryExecution().executedPlan().toString()
+    windows = re.findall(r".*windowspecdefinition.*", plan)
+    assert windows, plan
+    for ln in windows:
+        first = ln.split("windowspecdefinition(")[1].split(", ")[0]
+        partitioned = not re.search(r" (ASC|DESC)|^specifiedwindowframe", first)
+        assert partitioned or "__blk" in ln, ln
 
 
 def test_check_id_collision():

@@ -402,13 +402,14 @@ def test_cdc_chunker_is_single_map_pass(spark, sf_dir):
 
 
 def test_stratified_split_broadcasts_frames_no_stratum_sort(spark, sf_dir):
-    """The offset and totals frames must broadcast (they are tiny), and
-    the rank must come from the range partition — no global single-
+    """The offset frame, which also carries each stratum's size, must
+    broadcast (it is tiny) — one join, no second frame for the totals —
+    and the rank must come from the range partition — no global single-
     partition sort of the data."""
     from changegen_spark.queries.mlprep import q_stratified_split
 
     plan = _plan(q_stratified_split(spark, sf_dir))
-    assert plan.count("BroadcastHashJoin") >= 2
+    assert plan.count("BroadcastHashJoin") == 1
     # r9: the (lang, hk) range exchange sits BELOW a localCheckpoint
     # fence (correctness — the ids.py double-execution hazard), so
     # explain shows its materialized form (existingrdd scan) instead of
@@ -622,14 +623,18 @@ def test_two_phase_rank_sites_are_fenced(spark, sf_dir):
     # count of materialized scans per site, so removing any single fence
     # (count drops by one) fails, and pin that the only surviving
     # rangepartitioning exchange is the final presentation orderBy
-    # (single-action, no re-sampling hazard) — at most one.
+    # (single-action, no re-sampling hazard) — at most one.  Every rank
+    # site goes through operators/ids.prefix_sum, whose fenced rows are
+    # read twice (block sums, join probe); q_stratified_split and
+    # q_weighted_sample read them a third time for their totals until
+    # prefix_sum's offset frame carried the totals.
     for name, fn, n_scans in (
         ("q_er_pairs_sn", q_er_pairs_sn, 2),
         # three rank fences + three _window_pairs fences (r10 suffix pass)
         ("q_er_pairs_sn_suffix", q_er_pairs_sn_suffix, 6),
         ("q_ccnet_buckets", q_ccnet_buckets, 2),
-        ("q_stratified_split", q_stratified_split, 3),
-        ("q_weighted_sample", q_weighted_sample, 3),
+        ("q_stratified_split", q_stratified_split, 2),
+        ("q_weighted_sample", q_weighted_sample, 2),
         ("q_suffix_ranks", q_suffix_ranks, 1),
         ("q_gini", q_gini, 2),
         ("q_haversine", q_haversine, 2),

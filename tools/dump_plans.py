@@ -36,7 +36,7 @@ ANNOTATED = {
     "q_dsir_weights": "4096-row log-ratio table broadcast; top-k via TakeOrderedAndProject — no corpus-wide sort or shuffle join",
     "q_hard_negatives_lsh": "band collisions are bucket equi-joins with the anchor side broadcast; no cartesian, scoring only collided candidates",
     "q_embedding_dedup_lsh": "candidates from the (band, bucket) signature equi-join — the exact twin's BroadcastNestedLoopJoin is gone; exact rescoring only on collisions",
-    "q_ccnet_buckets": "no ntile/per-lang window: range-partitioned rank payload, row_number per (range-partition, lang), broadcast prefix-offset stitch; tercile assignment map-side — a dominant language spans many tasks (r6 de-skew).  r9: the (lang, nll) range exchange and the q_lm_score subplan below it sit under a localCheckpoint fence (scan ExistingRDD here) — correctness, not caching: the two-phase rank double-executes its input and repartitionByRange re-samples boundaries per execution (ids.py hazard note); the fenced subplan's own optimization is unchanged and its shape is pinned by the r6-r8 PLANS.md history",
+    "q_ccnet_buckets": "no ntile/per-lang window: the rank is operators/ids.prefix_sum by lang — row_number per (range-partition, lang), one null-safe broadcast join of a frame whose prefix window over the per-(partition, lang) counts carries both the offset and the language total; tercile assignment map-side — a dominant language spans many tasks (r6 de-skew).  The (lang, nll, doc_id) range exchange sits under the operator's fence (scan ExistingRDD here) — correctness, not caching: the block counts and the join probe both read it and repartitionByRange re-samples boundaries per execution; the q_lm_score subplan sits under its own fence below it, so the range sampling pass does not re-run it",
     "q_er_pairs": "phonetic block key computed map-side (regexp chains, no UDF); refine is a hash equi-join on the block key — no cartesian; candidate volume = Σ block², audited by q_er_blocks",
     "q_sq8_recall": "dim stats one 64-row aggregate broadcast back; byte codes map-side; both rankings window per query over the broadcast-query score frame",
     "q_skew_profile": "aggregate-only: one groupBy per key column + KB finishing aggregates; no Sort/Window touches the base table",
