@@ -1,11 +1,13 @@
 """MinHash / SimHash / shingling for near-duplicate detection at scale.
 
-Design notes (100 TB): all operators are explode → hash → groupBy pipelines
-with map-side partial aggregation; candidate generation is LSH band-bucketing
-so the pair space is bucket-local (never O(n²) across the corpus).  Hashes
-are md5-based so every step is reproducible in any engine (duckdb oracle
-parity).  An xxhash64 signature path was only ~16% faster, because hashing
-was never the bottleneck; it was deleted (GAPS.md keeps the result).
+Design notes (100 TB): the MinHash signature is one Arrow-batched UDF
+(map-only, O(num_hashes) state per row); shingle sets, SimHash and the
+exact-Jaccard check are built-in expressions and shuffle-partitioned
+joins.  Candidate generation is LSH band-bucketing, so the pair space is
+bucket-local (never O(n²) across the corpus).  Hashes are md5-based so
+every step is reproducible in any engine (duckdb oracle parity).  An
+xxhash64 signature path was only ~16% faster, because hashing was never
+the bottleneck; it was deleted (GAPS.md keeps the result).
 
 MinHash trick: the minimum of md5(seed ‖ shingle) over a shingle set is a
 valid permutation-min — md5 acts as the random permutation of the shingle
@@ -129,12 +131,12 @@ def minhash_pandas_signature(ngram: int = 3, num_hashes: int = 8):
     shingle construction runs in interpreted higher-order functions
     (transform/aggregate get no whole-stage codegen); this UDF does the
     same work in 0.19 s — Python's split + set + C md5 over Arrow batches,
-    parallel per partition. Values are bit-identical to the SQL
-    formulation (same ``md5(f"{m}:{shingle}")`` 8-hex windows, same mins),
-    so the DuckDB oracles are unchanged. At cluster scale this is a
-    map-only stage with O(num_hashes) state per row — the UDF is the rare
-    case where the Arrow path beats codegen because the built-in expression
-    of the semantics is interpreter-bound, not because the work differs.
+    parallel per partition. Values are bit-identical to the DuckDB
+    oracles' SQL (same ``md5(f"{m}:{shingle}")`` 8-hex windows, same
+    mins). At cluster scale this is a map-only stage with O(num_hashes)
+    state per row — the UDF is the rare case where the Arrow path beats
+    codegen because the built-in expression of the semantics is
+    interpreter-bound, not because the work differs.
     """
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
@@ -177,6 +179,16 @@ def minhash_pandas_signature(ngram: int = 3, num_hashes: int = 8):
     return mh_sig
 
 
+def _signature_frame(
+    docs: DataFrame, id_col: str, text_col: str, ngram: int, num_hashes: int
+) -> DataFrame:
+    """(id, mh0..mhN) MinHash signature frame of ``docs``."""
+    sig_udf = minhash_pandas_signature(ngram, num_hashes)
+    return docs.select(
+        F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("g")
+    ).select("id", *[F.col(f"g.mh{s}").alias(f"mh{s}") for s in range(num_hashes)])
+
+
 def minhash_candidates(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -185,92 +197,37 @@ def minhash_candidates(
     num_hashes: int = 8,
     bands: int = 4,
     max_bucket_size: int | None = None,
-    impl: str = "pandas",
 ) -> DataFrame:
     """End-to-end MinHash-LSH candidate pair generation.
 
     word-shingle → signature → band → self-join per band bucket.  Returns
     (id_a, id_b) with id_a < id_b, distinct.  The pair space stays
-    bucket-local (never O(n²) across the corpus).
+    bucket-local (never O(n²) across the corpus).  The signature stage is
+    the Arrow-batched UDF (see ``minhash_pandas_signature``); the sig
+    frame is repartitioned by id so the banded self-join reuses one
+    exchange instead of re-running the UDF per consumer.
 
-    ``impl`` selects the signature stage (value-identical):
-
-    * ``"pandas"`` (default): Arrow-batched UDF, ~17× the Catalyst
-      signature throughput (see ``minhash_pandas_signature``); the sig
-      frame is repartitioned by id so the banded self-join reuses one
-      exchange instead of re-running the UDF per consumer.
-    * ``"sql"``: explode → per-seed partial-min groupBy — pure built-ins,
-      engine-portable, the formulation the DuckDB oracle mirrors.  Its
-      doc-id exchange is reused by both self-join sides, so the "extra"
-      shuffle is effectively free in this topology.
-
-    Negative result (still valid): hashing token n-tuples directly
-    (no shingle strings) was ~2.5× slower than one concatenated string per
-    shingle — per-seed hash input triples and the explode row widens.
+    Negative results (still valid): an all-built-in signature (explode →
+    md5 → per-seed partial-min ``groupBy``) was 1.3–4.6× slower end to
+    end (GAPS.md); hashing token n-tuples directly (no shingle strings)
+    was ~2.5× slower than one concatenated string per shingle — per-seed
+    hash input triples and the explode row widens.
     """
-    if num_hashes % 4 != 0:
-        raise ValueError("num_hashes must be a multiple of 4")
-    if impl not in ("pandas", "sql"):
-        raise ValueError(f"unknown impl {impl!r}")
-    if impl == "pandas":
-        # scale-adaptive parallelism, cost-gated (guide §2, r14): the
-        # signature UDF is the heaviest per-byte Python pass in the repo
-        # (num_hashes md5 digests per document), so fine-grained spread
-        # keeps winning (r13 driver: q_dedup_clusters 1.31x, q_lsh_pairs
-        # 1.27x at full parallelism) — the 16 KiB/task dial reproduces the
-        # full-parallelism target locally while staying a no-op at scale
-        # (splits >= cores; the text is never shuffled there, the only
-        # exchange stays the post-UDF signature repartition).
-        from changegen_spark.functions.spread import (
-            MINHASH_BYTES_PER_TASK,
-            spread_if_narrow,
-        )
-
-        docs = spread_if_narrow(docs, id_col, MINHASH_BYTES_PER_TASK)
-        sig_udf = minhash_pandas_signature(ngram, num_hashes)
-        sig = (
-            docs.select(F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("g"))
-            .select(
-                "id", *[F.col(f"g.mh{s}").alias(f"mh{s}") for s in range(num_hashes)]
-            )
-            .repartition("id")
-        )
-        return _band_and_pair(sig, num_hashes, bands, max_bucket_size)
-
-    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-    cnt = F.size(toks)
-    raw_shingles = F.when(
-        cnt >= ngram,
-        F.transform(
-            F.sequence(F.lit(1), cnt - F.lit(ngram) + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, F.lit(ngram))),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", toks)))
-    # impl == "sql": explode → partial-min agg.
-    # No array_distinct before explode: min() is idempotent under duplicate
-    # shingles, and skipping the distinct saves an O(n²)-ish array pass.
-    sh = docs.select(F.col(id_col).alias("id"), F.explode(raw_shingles).alias("sh"))
-    # One md5 yields four independent 8-hex-char (32-bit) windows, so
-    # num_hashes permutations need num_hashes/4 md5 per shingle; the
-    # md5s are projection columns so each is computed once per row.
-    n_md5 = num_hashes // 4
-    hashed = sh.select(
-        "id",
-        *[
-            F.md5(
-                F.to_binary(F.concat(F.lit(f"{m}:"), F.col("sh")), F.lit("utf-8"))
-            ).alias(f"h{m}")
-            for m in range(n_md5)
-        ],
+    # scale-adaptive parallelism, cost-gated (guide §2, r14): the
+    # signature UDF is the heaviest per-byte Python pass in the repo
+    # (num_hashes md5 digests per document), so fine-grained spread
+    # keeps winning (r13 driver: q_dedup_clusters 1.31x, q_lsh_pairs
+    # 1.27x at full parallelism) — the 16 KiB/task dial reproduces the
+    # full-parallelism target locally while staying a no-op at scale
+    # (splits >= cores; the text is never shuffled there, the only
+    # exchange stays the post-UDF signature repartition).
+    from changegen_spark.functions.spread import (
+        MINHASH_BYTES_PER_TASK,
+        spread_if_narrow,
     )
-    sig = hashed.groupBy("id").agg(
-        *[
-            F.min(
-                F.substring(F.col(f"h{s // 4}"), (s % 4) * 8 + 1, 8)
-            ).alias(f"mh{s}")
-            for s in range(num_hashes)
-        ]
-    )
+
+    docs = spread_if_narrow(docs, id_col, MINHASH_BYTES_PER_TASK)
+    sig = _signature_frame(docs, id_col, text_col, ngram, num_hashes).repartition("id")
     return _band_and_pair(sig, num_hashes, bands, max_bucket_size)
 
 
@@ -314,10 +271,7 @@ def folded_band_artifact(
     Shared by the batch incremental-dedup path and the streaming
     near-dup twin so both sides of a stream-static join compute
     byte-identical keys."""
-    sig_udf = minhash_pandas_signature(ngram, num_hashes)
-    sig = docs.select(
-        F.col(id_col).alias("id"), sig_udf(F.col(text_col)).alias("g")
-    ).select("id", *[F.col(f"g.mh{s}").alias(f"mh{s}") for s in range(num_hashes)])
+    sig = _signature_frame(docs, id_col, text_col, ngram, num_hashes)
     banded = lsh_band_frame(sig, num_hashes, bands)
     return banded.select(
         "id",

@@ -158,48 +158,17 @@ def train_ivf_centroids(
 
 
 def assign_ivf_cells(
-    v: DataFrame, centroids: DataFrame, vec_expr: str = "v"
+    v: DataFrame, centroids: DataFrame, vec_col: str = "v"
 ) -> DataFrame:
     """Nearest-centroid cell per row, map-side only.
 
-    The centroid table is kilobytes, so it is collected and inlined as
-    literal arrays; the argmin is ``F.least`` over (d2, cell) structs — a
-    pure projection with ZERO shuffle over the (possibly 100 TB) vector
-    side.  This is the "broadcast persisted centroids" deployment shape:
-    no model object, no cross-join row blowup, no groupBy to reassemble.
-    Ties break toward the smaller cell id (matches the SQL oracle's
-    ``row_number() OVER (ORDER BY d2, cell)``)."""
-    cents = centroids.select("cell", "centroid").orderBy("cell").collect()
-    if not cents:  # empty training input (empty table/partition): no cells
-        return v.withColumn("cell", F.lit(None).cast("int"))
-    structs = [
-        F.struct(
-            l2sq(
-                F.col(vec_expr),
-                F.array(*[F.lit(float(x)) for x in r["centroid"]]),
-            ).alias("d2"),
-            F.lit(int(r["cell"])).alias("cell"),
-        )
-        for r in cents
-    ]
-    best = F.least(*structs) if len(structs) > 1 else structs[0]
-    return v.withColumn("cell", best["cell"])
-
-
-def assign_ivf_cells_arrow(
-    v: DataFrame, centroids: DataFrame, vec_col: str = "v"
-) -> DataFrame:
-    """Arrow-kernel twin of :func:`assign_ivf_cells` — BIT-IDENTICAL cell
-    assignment, built for large cell counts.
-
-    The Catalyst path inlines k × dim literal arrays into a k-way
-    ``least`` tree: at k=78/dim=64 that is ~5,000 driver-side Column
-    constructions (py4j round-trips) to BUILD and an interpreted
-    higher-order fold per (row, cell) to RUN — measured ~3 s build +
-    the dominant execute cost of q_semantic_dedup at sf0.1.  This kernel
-    collects the same KB-sized centroid table once and does the argmin in
-    numpy — but replays the EXACT arithmetic of the SQL/Catalyst fold so
-    the choice of cell can never differ by an ulp:
+    The centroid table is kilobytes, so it is collected once and the
+    argmin runs in numpy inside an Arrow UDF — a pure projection with ZERO
+    shuffle over the (possibly 100 TB) vector side.  This is the
+    "broadcast persisted centroids" deployment shape: no model object, no
+    cross-join row blowup, no groupBy to reassemble.  The kernel replays
+    the exact arithmetic of the SQL oracle, so the choice of cell can
+    never differ by an ulp:
 
     * every dot product accumulates dimension-by-dimension in order
       (``acc += v_d*c_d`` per d — elementwise numpy ops, no BLAS
@@ -208,9 +177,14 @@ def assign_ivf_cells_arrow(
     * d2 combines as ``(aa - 2.0*ab) + cc`` — the ``⟨a,a⟩ - 2⟨a,b⟩ +
       ⟨b,b⟩`` expansion in the same association order as ``l2sq``;
     * ties break to the smallest cell id (``np.argmin`` first-minimum
-      over cell-ordered columns — the ``least(struct(d2, cell))`` rule).
+      over cell-ordered columns — the oracle's ``row_number() OVER
+      (ORDER BY d2, cell)``).
 
-    tests/test_similarity.py pins arrow == catalyst assignment row-for-row.
+    Not Catalyst: a ``least`` over k literal (d2, cell) structs costs
+    seconds of driver-side Column construction for its k × dim literal
+    tree and an interpreted fold per (row, cell); it measured 1.3× slower
+    on q_ann_ivf and 2.8× on q_semantic_dedup (GAPS.md).
+    tests/test_similarity.py pins the assignment to the DuckDB oracles.
     """
     import numpy as np
     import pandas as pd

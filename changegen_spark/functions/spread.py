@@ -51,23 +51,15 @@ from pyspark.sql import DataFrame
 #: heaviest per-byte pass; fine-grained spread kept winning (r13 driver:
 #: q_dedup_clusters 1.31x, q_lsh_pairs 1.27x at full parallelism).
 MINHASH_BYTES_PER_TASK = 16 * 1024
-#: Trigram tf counting (relatedness): Arrow pass with a per-doc Counter —
-#: r14 canary-guarded A/B on q_related_docs: the ~10-way shape beat the
-#: r13 full-parallelism one 8/8 (medians 3.29 vs 3.64 s; a second 4-clean
-#: session read 3.90 vs 4.43), so the tf pass sits in the medium regime.
-TRIGRAM_BYTES_PER_TASK = 64 * 1024
-#: Winnowing selection: pure-Python deque + one md5 per gram — medium
-#: cost; the r13 driver measured the 8-way shape (0.98 s) beating the
-#: 32-way one (2.21 s) at sf0.1.
-WINNOW_BYTES_PER_TASK = 64 * 1024
-#: Positioned-gram md5 hashing (dup_spans): medium cost, one md5 per
-#: token window but numpy-free; r13 driver had 8-way beating 32-way.
-POSGRAM_BYTES_PER_TASK = 64 * 1024
-#: CDC chunking: whole-batch vectorized numpy rolling hash + one md5 per
-#: ~32-char chunk — cheap per byte; the r13 driver showed the unspread
-#: single-split pass (0.89 s) beating both 8-way (1.30 s) and 32-way
-#: (1.97 s) at sf0.1, so a task needs megabytes to be worth its overhead.
-CDC_BYTES_PER_TASK = 4 * 1024 * 1024
+#: The medium-cost per-gram passes, one md5 or Counter update per gram:
+#: trigram tf counting (relatedness; r14 A/B on q_related_docs: the ~10-way
+#: shape beat the r13 full-parallelism one 8/8, medians 3.29 vs 3.64 s),
+#: winnowing selection (r13 driver: 8-way 0.98 s against 32-way 2.21 s at
+#: sf0.1) and positioned-gram hashing (dup_spans; r13 driver had 8-way
+#: beating 32-way).  The spread pays: unspread at sf0.1 on 4 vCPUs,
+#: q_winnow_fingerprints took 3.04 s against 1.78 s, q_dup_spans 1.88 s
+#: against 1.37 s and q_winnow_pairs 1.47 s against 1.17 s.
+GRAM_BYTES_PER_TASK = 64 * 1024
 
 
 def scan_file_sizes(df: DataFrame) -> list[int]:

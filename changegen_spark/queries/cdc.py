@@ -116,29 +116,18 @@ def chunk_rows(df: DataFrame) -> DataFrame:
                 ["doc_id", "cstart", "clen", "chash"],
             )
 
-    # input contract is already (doc_id, text): callers project before the
-    # (possible) spread exchange so only those two columns ever move
+    # input contract is already (doc_id, text): callers project first so
+    # only those two columns reach the Arrow pass
     return df.mapInArrow(
         chunks, "doc_id long, cstart long, clen long, chash string"
     )
 
 
 def _doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from changegen_spark.functions.spread import (
-        CDC_BYTES_PER_TASK,
-        spread_if_narrow,
-    )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # Scale-adaptive parallelism, cost-gated (guide §2, r14): the chunking
-    # pass is whole-batch vectorized numpy — cheap per byte — so a task
-    # needs megabytes of text before a spread exchange pays for itself.
-    # The r13 unconditional spread-to-parallelism was a driver-measured
-    # regression here (0.89 s unspread in r12 vs 1.97 s at 32-way / 1.30 s
-    # at 8-way in r13); with the 4 MiB/task dial the sf0.1 scan stays
-    # unspread and at 100 TB the helper is a no-op (splits >= cores).
-    d = spread_if_narrow(d, "doc_id", CDC_BYTES_PER_TASK)
-    return chunk_rows(d)
+    # No spread: the chunking pass is whole-batch vectorized numpy — cheap
+    # per byte — and spreading it was a driver-measured regression (0.89 s
+    # unspread vs 1.97 s at 32-way / 1.30 s at 8-way, sf0.1).
+    return chunk_rows(load_table(spark, sf_dir, "documents").select("doc_id", "text"))
 
 
 def q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -341,7 +341,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from changegen_spark.functions.similarity import (
         as_double,
-        assign_ivf_cells_arrow,
+        assign_ivf_cells,
         cosine_arrow,
         train_ivf_centroids,
     )
@@ -353,10 +353,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb, n_cells=n_cells, method="medoid", max_train=1 << 40
     )
     v = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    # Arrow assignment kernel: bit-identical to the Catalyst/SQL argmin
-    # (sequential-fold arithmetic replayed in numpy), without the k×dim
-    # literal expression tree — see assign_ivf_cells_arrow's docstring.
-    va = assign_ivf_cells_arrow(v, cents)
+    va = assign_ivf_cells(v, cents)
     # The assignment subtree is consumed three times (self-join left side,
     # right side, final left join) — without a fence each consumer re-runs
     # the Arrow kernel and its scan.  A lazy fence materializes

@@ -110,11 +110,11 @@ def q_dup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the 64 KiB/task dial caps the sf0.1 target near the 8-way shape; at
     # 100 TB the helper is a no-op (splits >= cores).
     from changegen_spark.functions.spread import (
-        POSGRAM_BYTES_PER_TASK,
+        GRAM_BYTES_PER_TASK,
         spread_if_narrow,
     )
 
-    docs = spread_if_narrow(docs, "doc_id", POSGRAM_BYTES_PER_TASK)
+    docs = spread_if_narrow(docs, "doc_id", GRAM_BYTES_PER_TASK)
     grams = docs.select(
         "doc_id",
         F.explode(pos_gram_hashes_pandas(DUP_N)(F.col("text"))).alias("g"),

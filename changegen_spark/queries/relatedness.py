@@ -89,15 +89,15 @@ def _term_freqs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # locally the documents table is one parquet split, so the whole tf
     # pass (and the tfs fence materialization feeding it) would serialize
     # on one core.  The per-doc Counter work is in the medium cost regime:
-    # TRIGRAM_BYTES_PER_TASK (64 KiB/task, the r14 A/B winner recorded in
+    # GRAM_BYTES_PER_TASK (64 KiB/task, the r14 A/B winner recorded in
     # functions/spread.py) sets the spread; at scale splits >= cores and
     # this is a no-op (text is never shuffled).
     from changegen_spark.functions.spread import (
-        TRIGRAM_BYTES_PER_TASK,
+        GRAM_BYTES_PER_TASK,
         spread_if_narrow,
     )
 
-    d = spread_if_narrow(d, "doc_id", TRIGRAM_BYTES_PER_TASK)
+    d = spread_if_narrow(d, "doc_id", GRAM_BYTES_PER_TASK)
     return d.select(
         "doc_id", F.explode(trigram_tf_pandas()(F.col("text"))).alias("s")
     ).select(

@@ -148,12 +148,12 @@ def _docs_parallel(spark: SparkSession, sf_dir: str) -> DataFrame:
     8-way shape; at scale splits >= cores and no repartition happens —
     the pass stays map-only."""
     from changegen_spark.functions.spread import (
-        WINNOW_BYTES_PER_TASK,
+        GRAM_BYTES_PER_TASK,
         spread_if_narrow,
     )
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return spread_if_narrow(docs, "doc_id", WINNOW_BYTES_PER_TASK)
+    return spread_if_narrow(docs, "doc_id", GRAM_BYTES_PER_TASK)
 
 
 def _doc_fps(spark: SparkSession, sf_dir: str) -> DataFrame:

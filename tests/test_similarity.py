@@ -267,26 +267,45 @@ def test_dim_standardize_zscores_bounded_and_centered(spark):
     assert sum(r["n_clipped"] for r in rows) < 0.05 * 64 * len(rows)
 
 
-def test_arrow_cell_assignment_matches_catalyst(spark):
-    """assign_ivf_cells_arrow must agree with the Catalyst least-struct
-    argmin on every row — it replays the same sequential-fold arithmetic,
-    so not even an ulp-level tie may differ."""
-    from pyspark.sql import functions as F
+def test_minhash_and_ivf_queries_match_oracle(spark, sf_dir):
+    """The one MinHash signature kernel and the one IVF assignment kernel,
+    pinned to their independent DuckDB references: full oracle parity at
+    sf0.001 under the driver's normalization, on non-empty results."""
+    import duckdb
 
-    from changegen_spark.functions.similarity import (
-        as_double,
-        assign_ivf_cells,
-        assign_ivf_cells_arrow,
-        train_ivf_centroids,
-    )
+    from changegen_spark.queries import extensions, textops
+    from tools.check_oracle import normalize
+
+    con = duckdb.connect()
+    for t in ("documents", "embeddings"):
+        con.execute(f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    for mod, name in (
+        (textops, "q_lsh_pairs"),
+        (textops, "q_dedup_clusters"),
+        (extensions, "q_ann_ivf"),
+        (extensions, "q_semantic_dedup"),
+    ):
+        sdf = normalize(mod.QUERIES[name](spark, sf_dir).toPandas())
+        ddf = normalize(con.execute(mod.ORACLES[name]).df())
+        assert len(sdf) > 0, name
+        assert list(sdf.columns) == list(ddf.columns), name
+        assert len(sdf) == len(ddf), name
+        assert sdf.equals(ddf), f"{name}: value mismatch"
+
+
+def test_medoid_training_is_a_top_n(spark, sf_dir):
+    """The medoid quantizer's row_number over every vector plans as a
+    top-n (TakeOrderedAndProject), so no full-input single-partition
+    exchange feeds the window."""
+    from changegen_spark.functions.similarity import train_ivf_centroids
     from changegen_spark.sources.tables import load_table
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = load_table(spark, sf_dir, "embeddings")
     cents = train_ivf_centroids(emb, n_cells=8, method="medoid", max_train=1 << 40)
-    v = emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-    a = {r.vec_id: r.cell for r in assign_ivf_cells(v, cents).collect()}
-    b = {r.vec_id: r.cell for r in assign_ivf_cells_arrow(v, cents).collect()}
-    assert a == b
+    assert len(cents.collect()) == 8
+    plan = cents._jdf.queryExecution().executedPlan().toString()
+    assert "TakeOrderedAndProject(limit=8" in plan
+    assert "Exchange SinglePartition" not in plan
 
 
 def test_arrow_cosine_matches_catalyst(spark):

@@ -3,7 +3,6 @@
 built-in exact aggregate it reimplements."""
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -45,24 +44,3 @@ def test_udaf_in_window(spark, sf_dir):
         F.round(F.avg(F.col("l_quantity").cast("double")).over(w), 6).alias("b"),
     )
     assert out.filter(F.col("m") != F.col("b")).count() == 0
-
-
-def test_minhash_impls_agree(spark, sf_dir):
-    """The two signature implementations (pandas UDF / SQL explode-agg)
-    must produce identical candidate pairs — they are the same hash
-    function in two execution shapes."""
-    from changegen_spark.functions.hashing import minhash_candidates
-    from changegen_spark.sources.tables import load_table
-
-    d = load_table(spark, sf_dir, "documents")
-    outs = {
-        impl: sorted(
-            (r["id_a"], r["id_b"])
-            for r in minhash_candidates(d, impl=impl).collect()
-        )
-        for impl in ("pandas", "sql")
-    }
-    assert outs["pandas"] == outs["sql"]
-    assert len(outs["pandas"]) > 0
-    with pytest.raises(ValueError, match="unknown impl"):
-        minhash_candidates(d, impl="fold")  # deleted path fails loudly

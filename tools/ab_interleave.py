@@ -13,10 +13,10 @@ Usage:
 
 Examples:
   python tools/ab_interleave.py 6 \
-      changegen_spark.functions.spread:CDC_BYTES_PER_TASK=4194304,16384 \
-      q_cdc_chunks
+      changegen_spark.functions.spread:MINHASH_BYTES_PER_TASK=16384,65536 \
+      q_lsh_pairs
   python tools/ab_interleave.py 6 \
-      changegen_spark.functions.spread:TRIGRAM_BYTES_PER_TASK=65536,16384 \
+      changegen_spark.functions.spread:GRAM_BYTES_PER_TASK=65536,16384 \
       q_related_docs
 
 Dial values are parsed with ``ast.literal_eval``.  The dial must be read
