@@ -275,6 +275,7 @@ def main(argv: list[str] | None = None) -> int:
     )
     suffixes = args.suffix or ["_new"]
 
+    from changegen_spark.operators.ids import check_id_collision
     from changegen_spark.pipeline import (
         generate_changes,
         generate_deletions,
@@ -339,7 +340,9 @@ def main(argv: list[str] | None = None) -> int:
     # C6 collision guard, reference semantics (__main__.py:197-208): warn by
     # default, fatal only under --no_collisions.
     existing_max = max(maxids.values()) if maxids else 0
-    if not args.neg_id and args.id_offset <= existing_max:
+    try:
+        check_id_collision(existing_max, args.id_offset, args.neg_id)
+    except ValueError:
         msg = (
             f"Chosen ID offset {args.id_offset} may cause collisions with "
             f"existing OSM IDs (max ids: {maxids})."
@@ -371,9 +374,7 @@ def main(argv: list[str] | None = None) -> int:
             node_limit=node_limit,
             key_col="__fkey",
             hstore_col=args.hstore_tags,
-            check_collision=False,  # handled above with warn/fatal semantics
-            emit_osm_id_tag=args.reference_bytes,
-            split_joiner="duplicate_first" if args.reference_bytes else "shared",
+            reference_bytes=args.reference_bytes,
         )
 
     wrote: list[str] = []

@@ -129,38 +129,9 @@ def _encode_word(word: str, ranks: dict[tuple[str, str], int]) -> list[str]:
     return sym
 
 
-def bpe_encode_udf(merges: list[tuple[str, str, str, int]]):
-    """Arrow-batched encoder: text → array<string> of BPE tokens.
-
-    The merge ranks ride the UDF closure (broadcast with the task); a
-    per-batch word→tokens memo collapses the Zipf head so most words
-    encode once per batch."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {(l, r): i for i, (l, r, _m, _c) in enumerate(merges)}
-
-    @pandas_udf("array<string>")
-    def encode(texts):
-        memo: dict[str, list[str]] = {}
-        out = []
-        for t in texts:
-            toks: list[str] = []
-            for w in (t or "").strip().split():
-                got = memo.get(w)
-                if got is None:
-                    got = _encode_word(w, ranks)
-                    memo[w] = got
-                toks.extend(got)
-            out.append(toks)
-        return pd.Series(out)
-
-    return encode
-
-
 def bpe_encode_count_udf(merges: list[tuple[str, str, str, int]]):
     """Arrow-batched encoder returning only the per-document BPE token
-    COUNT — ``size(bpe_encode_udf(...)(text))`` without materializing or
+    COUNT — the encoded token array's size, without materializing or
     shipping the token arrays across the Python↔JVM boundary (r13, guide
     §4.1/§2.3: q_bpe_encode_stats consumes nothing but the size, yet paid
     Arrow transfer of every token string).  Iterator form so the per-task

@@ -53,31 +53,6 @@ def minhash_signature(shingles: Column, num_hashes: int = 8) -> Column:
     )
 
 
-def lsh_band_hashes(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Band the signature: array<struct<band:int, bh:string>> — docs sharing
-    any (band, bh) are near-dup candidates."""
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.to_binary(
-                        F.concat_ws(
-                            "|",
-                            *[
-                                F.element_at(signature, b * rows_per_band + r + 1)
-                                for r in range(rows_per_band)
-                            ],
-                        ),
-                        F.lit("utf-8"),
-                    )
-                ).alias("bh"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
 def simhash16(tokens: Column) -> Column:
     """16-bit SimHash over a token array.
 
@@ -268,9 +243,8 @@ def folded_band_artifact(
     band hash (``md5(band:bh)``) — the canonical persisted dedup-corpus
     artifact (single join key, so a bh-bucketed table satisfies the join
     distribution outright; see queries/scale.persist_dedup_corpus).
-    Shared by the batch incremental-dedup path and the streaming
-    near-dup twin so both sides of a stream-static join compute
-    byte-identical keys."""
+    The corpus artifact and each increment's probe rows both come from
+    here, so both sides of the join compute byte-identical keys."""
     sig = _signature_frame(docs, id_col, text_col, ngram, num_hashes)
     banded = lsh_band_frame(sig, num_hashes, bands)
     return banded.select(

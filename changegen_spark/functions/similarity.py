@@ -533,78 +533,3 @@ def pq_topk(
             "query_id", "vec_id", "est_d2", F.col("rank").cast("long").alias("rank")
         )
     )
-
-
-def ivfpq_topk(
-    vectors: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_cells: int = 8,
-    n_probe: int = 4,
-    m: int = 16,
-    ks: int = 64,
-    dim: int = 64,
-    seed: int = 42,
-    centroids: DataFrame | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    method: str = "kmeans",
-    max_train: int = 20_000,
-) -> DataFrame:
-    """IVF + PQ — the standard production composite (FAISS's IVFPQ): the
-    coarse quantizer prunes the search to ``n_probe`` cells, PQ codes
-    score the survivors by asymmetric distance.  Search cost is
-    (n_probe/n_cells) of a scan over m-byte codes instead of a full scan
-    over dim×4-byte vectors — the two orthogonal reductions composed.
-
-    Both artifacts are ingest-time products: persist the centroid table
-    and the (cell, vec_id, codes) frame; per-query work is an equi-join
-    on cell id + an Arrow ADC projection + one top-k window."""
-    from pyspark.sql import Window
-
-    v = vectors.select(
-        F.col(id_col).alias("vec_id"), as_double(F.col(vec_col)).alias("v")
-    )
-    if centroids is None:
-        centroids = train_ivf_centroids(
-            vectors, n_cells=n_cells, seed=seed, max_train=max_train,
-            id_col=id_col, vec_col=vec_col, method=method,
-        )
-    centroids = centroids.transform(fence, "ivfpq_topk centroids", eager=False)
-    if codebooks is None:
-        codebooks = pq_codebooks(
-            vectors, m=m, ks=ks, dim=dim, id_col=id_col, vec_col=vec_col
-        )
-    # the persisted artifact: cell assignment + PQ codes, both map-side
-    coded = assign_ivf_cells(v, centroids).select("vec_id", "cell", "v")
-    codes = pq_encode(
-        coded.select("vec_id", F.col("v").alias(vec_col)), codebooks,
-        id_col="vec_id", vec_col=vec_col,
-    ).join(coded.select("vec_id", "cell"), "vec_id")
-
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), as_double(F.col(vec_col)).alias("q")
-    )
-    qc = q.crossJoin(F.broadcast(centroids)).withColumn(
-        "cdist", l2sq(F.col("q"), F.col("centroid"))
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("cdist"), F.asc("cell"))
-    probes = (
-        qc.withColumn("crank", F.row_number().over(wq))
-        .filter(F.col("crank") <= n_probe)
-        .select("query_id", "q", "cell")
-    )
-
-    adc = pq_adc_udf(codebooks)
-    scored = codes.join(probes, "cell").filter(F.col("vec_id") != F.col("query_id"))
-    scored = scored.withColumn("est_d2", F.round(adc(F.col("q"), F.col("codes")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.asc("est_d2"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id", "vec_id", "est_d2", F.col("rank").cast("long").alias("rank")
-        )
-    )

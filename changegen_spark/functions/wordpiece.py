@@ -151,32 +151,6 @@ def encode_word(word: str, pieces: set[str]) -> list[str]:
     return out
 
 
-def wordpiece_encode_udf(pieces: set[str]):
-    """Arrow-batched encoder: text → array<string> of WordPiece tokens
-    (piece inventory rides the closure; per-batch word memo)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    frozen = frozenset(pieces)
-
-    @pandas_udf("array<string>")
-    def encode(texts):
-        memo: dict[str, list[str]] = {}
-        out = []
-        for t in texts:
-            toks: list[str] = []
-            for w in (t or "").strip().split():
-                got = memo.get(w)
-                if got is None:
-                    got = encode_word(w, frozen)
-                    memo[w] = got
-                toks.extend(got)
-            out.append(toks)
-        return pd.Series(out)
-
-    return encode
-
-
 def wordpiece_encode_stats_udf(pieces: set[str]):
     """Arrow-batched encoder returning per-document (n_pieces, n_unk)
     only — q_wordpiece_encode_stats consumes nothing else, so shipping

@@ -46,11 +46,6 @@ def exterior(geom: Column) -> Column:
     return F.element_at(geom.getField("rings"), 1)
 
 
-def interiors(geom: Column) -> Column:
-    rs = geom.getField("rings")
-    return F.slice(rs, 2, F.greatest(F.size(rs) - 1, F.lit(0)))
-
-
 def point_xy(geom: Column) -> tuple[Column, Column]:
     p = F.element_at(exterior(geom), 1)
     return p.getField("x"), p.getField("y")

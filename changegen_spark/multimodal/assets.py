@@ -326,9 +326,6 @@ def extract_features(assets: DataFrame, dim: int = 16) -> DataFrame:
     return assets.select("asset_id", "payload").mapInPandas(fn, FEATURES_SCHEMA)
 
 
-FRAMES_SCHEMA = "asset_id long, frame_idx int, frame bytes, mean_px double"
-
-
 def sample_frames(assets: DataFrame, every: int = 2) -> DataFrame:
     """Frame sampling: video payload → one row per kept frame (every k-th).
     Dispatches on magic: real Y4M streams (luma plane per frame, integer-

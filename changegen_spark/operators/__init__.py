@@ -1,7 +1,6 @@
 from changegen_spark.operators.ids import assign_sequential_ids, check_id_collision
-from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore, unpivot_tags
+from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
 from changegen_spark.operators.ways import (
-    close_ring,
     cumulative_fraction,
     insertion_index,
     split_ways,
@@ -13,8 +12,6 @@ __all__ = [
     "check_id_collision",
     "merge_hstore_tags",
     "parse_hstore",
-    "unpivot_tags",
-    "close_ring",
     "cumulative_fraction",
     "insertion_index",
     "split_ways",

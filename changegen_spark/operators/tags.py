@@ -1,20 +1,17 @@
 """Tag projection and hstore handling (SURVEY §2.2 P1/P2, §2.7 F12).
 
-Parity targets:
-  * P1 tag projection with exclusion list — every column (minus excludes and
-    the hstore column) becomes a string tag (``changegen/generator.py:169-205``).
-  * P2 hstore parse + merge with column precedence — hstore keys are added
-    only when not already present as a column tag
-    (``changegen/db.py:7-25``, ``changegen/generator.py:190-203``).
+Parity target: P2 hstore parse + merge with column precedence — hstore
+keys are added only when not already present as a column tag
+(``changegen/db.py:7-25``, ``changegen/generator.py:190-203``).  P1, the
+column-to-tag projection, is ``pipeline._tags_map``.
 
 Spark-first: the per-row dict building becomes whole-column ``map_*``
-expressions; the unpivot is ``stack``-based so Catalyst keeps it inside
-codegen.  No UDFs.
+expressions.  No UDFs.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -35,29 +32,6 @@ def parse_hstore(col: Column) -> Column:
         ),
     )
     return F.map_from_entries(kv)
-
-
-def unpivot_tags(
-    df: DataFrame,
-    key_cols: list[str],
-    exclude: tuple[str, ...] = (),
-    tag_col: str = "tags",
-) -> DataFrame:
-    """P1: fold attribute columns into a string→string tag map column.
-
-    Null and empty-string values are dropped, matching the reference's skip
-    of unset fields (``generator.py:183-189``); every value is cast to string
-    (``generator.py:185`` GetFieldAsString).
-    """
-    cols = [c for c in df.columns if c not in exclude and c != tag_col]
-    entries = F.array(
-        *[
-            F.struct(F.lit(c).alias("key"), F.col(c).cast("string").alias("value"))
-            for c in cols
-        ]
-    )
-    kept = F.filter(entries, lambda e: e.value.isNotNull() & (e.value != F.lit("")))
-    return df.select(*key_cols, F.map_from_entries(kept).alias(tag_col))
 
 
 def merge_hstore_tags(col_tags: Column, hstore_map: Column) -> Column:

@@ -8,7 +8,6 @@ Parity targets:
   * W2 point insertion index (``changegen/generator.py:208-255``): where to
     insert a junction point into a linestring — fractional position of the
     point along the line vs per-vertex cumulative fractional distance.
-  * M4 ring closing (``generator.py:278-280``): append first node to close.
 
 Correctness hazard handled here (SURVEY §7 risk 3): vertex order is always
 carried explicitly as a ``pos`` column / array index — never implicit row
@@ -17,16 +16,11 @@ order, which shuffles do not preserve.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 NODE_LIMIT_DEFAULT = 2000   # --max_nodes_per_way, changegen/__main__.py:148
 CHUNK_SIZE_DEFAULT = 500    # max_new_len, changegen/generator.py:274
-
-
-def close_ring(nds: Column) -> Column:
-    """Append the first element so the way forms a closed ring (M4)."""
-    return F.concat(nds, F.slice(nds, 1, 1))
 
 
 def split_ways(

@@ -42,7 +42,7 @@ from changegen_spark.geo.mercator import to_4326_lat, to_4326_lon
 from changegen_spark.geo.segments import explode_segments, segment_distance_join
 from changegen_spark.operators.changes import expand_deleted_ways, tag_change
 from changegen_spark.operators.fence import fence
-from changegen_spark.operators.ids import assign_sequential_ids, check_id_collision
+from changegen_spark.operators.ids import assign_sequential_ids
 from changegen_spark.operators.keys import feature_key
 from changegen_spark.operators.tags import merge_hstore_tags, parse_hstore
 from changegen_spark.operators.ways import (
@@ -445,39 +445,33 @@ def generate_changes(
     self_intersections: bool = False,
     node_limit: int = NODE_LIMIT_DEFAULT,
     chunk_size: int = CHUNK_SIZE_DEFAULT,
-    check_collision: bool = True,
     key_col: str = "name",
     hstore_col: str | None = None,
-    emit_osm_id_tag: bool = False,
-    split_joiner: str = "shared",
+    reference_bytes: bool = False,
 ) -> DataFrame:
     """Full run: create new ways/points/polygons, modify intersecting
     existing ways, apply deletions.  Returns the unified element DataFrame
     (sink-ready, see sinks.oscxml.ELEMENT_SCHEMA).
 
-    ``emit_osm_id_tag=True`` re-emits the source feature's ``osm_id`` field
-    as a tag on modified intersecting ways, matching the reference's
-    actual output (``_generate_tags_from_feature`` is called with no
-    exclude list on the modify path, ``generator.py:812-813``).  Default
-    off: the id is join metadata, not cargo (GAPS.md deviation note).
-    ``split_joiner="duplicate_first"`` likewise selects the reference's
-    byte behavior for over-long way splitting (see operators.ways).
-    Together these two flags make the output byte-compatible with the
-    reference (the CLI's ``--reference-bytes``)."""
+    The id offset is not checked against the extract's ids here: the
+    CLI runs that guard where ``--id_offset`` enters
+    (``operators.ids.check_id_collision``).
+
+    ``reference_bytes=True`` makes the output byte-compatible with the
+    reference's actual behavior (the CLI's ``--reference-bytes``), in
+    two places.  Modified intersecting ways re-emit the source feature's
+    ``osm_id`` field as a tag (``_generate_tags_from_feature`` is called
+    with no exclude list on the modify path, ``generator.py:812-813``);
+    by default the id is join metadata, not cargo (GAPS.md deviation
+    note).  Over-long ways split with each chunk's first node duplicated
+    instead of a shared boundary node (``split_ways(joiner=
+    "duplicate_first")``, see operators.ways)."""
     import concurrent.futures
 
-    from changegen_spark.sources.osm import max_pbf_ids
-
-    # Overlapped head (r3, measured on scale_smoke 300×200): the max-id
-    # scan runs as an EXECUTOR-side job while the driver builds the
-    # junction plan — py4j/Catalyst work — removing ~2 s of serial
-    # wall-clock.  Collision check stays fail-fast: its result is read
-    # before any output exists.  Leaving the ``with`` block joins the
-    # pool, so any failure (including the collision guard's designed
-    # abort) leaves no pool thread running.
+    # Stages B and C run on this pool while the driver builds the rest of
+    # the plan.  Leaving the ``with`` block joins the pool, so any stage
+    # failure leaves no pool thread running.
     with concurrent.futures.ThreadPoolExecutor(max_workers=4) as pool:
-        fut_maxids = pool.submit(max_pbf_ids, tables) if check_collision else None
-
         cs = ChangeSet()
         new_ways = tables.get("new_ways")
         existing = tables.get("original_ways")
@@ -502,10 +496,6 @@ def generate_changes(
         jkey = _cell_key(F.col("rlon"), F.col("rlat"))
         cs.request_ids(junction_nodes, _K_JUNCTION, jkey)
 
-        if fut_maxids is not None:
-            maxids = fut_maxids.result()
-            check_id_collision(max(maxids.values()), id_offset, negative_ids)
-
         # B: new ways.  Way splitting happens on the member-KEY sequences, so
         # way ids can be requested in the same single resolve as node ids (the
         # chunk count depends only on member counts, not on resolved ids).
@@ -524,7 +514,7 @@ def generate_changes(
             cm = split_ways(
                 nb_["ordered_members"], nds_col="mseq",
                 node_limit=node_limit, chunk_size=chunk_size,
-                joiner=split_joiner,
+                joiner="duplicate_first" if reference_bytes else "shared",
             )
             # the id fence and the member-ref join both read the chunks
             return nb_, cm.join(nb_["way_tags"], "nkey").transform(
@@ -534,7 +524,7 @@ def generate_changes(
         def _stage_c():
             # hstore expansion applies to intersecting-way modifies exactly
             # as it does to new features (generator.py:190-203 → :812).
-            mod_excl = ("id", "geometry") if emit_osm_id_tag else ("id", "osm_id", "geometry")
+            mod_excl = ("id", "geometry") if reference_bytes else ("id", "osm_id", "geometry")
             mod_way_tags = existing.select(
                 F.col("osm_id"),
                 _tags_map(existing, exclude=mod_excl, hstore_col=hstore_col).alias("tags"),
@@ -790,73 +780,6 @@ def _polygon_members(verts: DataFrame) -> list[DataFrame]:
             (F.lit(_K_WAY), F.col("ring_key"), _null("long")), role,
         ),
     ]
-
-
-def generate_relation_changes(
-    spark: SparkSession,
-    tables: dict[str, DataFrame],
-    mod_table: str = "mod_relations",
-    del_table: str = "deleted_relations",
-    hstore_col: str | None = None,
-) -> DataFrame:
-    """Relation modify/delete flows (beyond-parity surface: the reference
-    only CREATES relations, ``changegen/generator.py:732-741``).
-
-    ``mod_table`` rows are keyed by ``osm_id``; tags come from the row's
-    attribute columns (hstore merged).  Member lists: a ``members`` column
-    on the table replaces the relation's members outright; otherwise the
-    extract's member list (``pbf_relations``) is reused — the tags-only
-    modify, symmetric with the way ``--modify_meta`` flow.  ``del_table``
-    ids emit ``<delete>`` relations (version 99).  Apply-side semantics and
-    the member-aware prune live in ``operators/apply.py``.
-    """
-    from changegen_spark.operators.changes import assemble_changeset
-
-    member_t = "array<struct<ref:bigint,type:string,role:string>>"
-    empty_tags = F.create_map().cast("map<string,string>")
-    parts: list[DataFrame] = []
-
-    mod = tables.get(mod_table)
-    if mod is not None:
-        tags = _tags_map(
-            mod,
-            exclude=("id", "osm_id", "members", "geometry"),
-            hstore_col=hstore_col if hstore_col is not None else "tags",
-        )
-        keyed = mod.select(
-            F.col("osm_id"),
-            tags.alias("tags"),
-            *(
-                [F.col("members").cast(member_t).alias("__new_members")]
-                if "members" in mod.columns
-                else []
-            ),
-        )
-        pbf = tables["pbf_relations"].select(
-            F.col("id").alias("osm_id"), F.col("members").cast(member_t).alias("__pbf_members")
-        )
-        joined = keyed.join(pbf, "osm_id", "inner")  # missing in extract → skipped
-        members = (
-            F.coalesce(F.col("__new_members"), F.col("__pbf_members"))
-            if "members" in mod.columns
-            else F.col("__pbf_members")
-        )
-        rels = joined.select(
-            F.lit("relation").alias("kind"),
-            F.col("osm_id").alias("id"),
-            members.alias("members"),
-            "tags",
-        )
-        parts.append(tag_change(rels, "modify"))
-
-    dels = tables.get(del_table)
-    if dels is not None:
-        ids = dels.select(F.col("osm_id").cast("long").alias("id")).distinct()
-        rels = ids.select(F.lit("relation").alias("kind"), "id", empty_tags.alias("tags"))
-        parts.append(tag_change(rels, "delete"))
-    if not parts:
-        raise ValueError(f"neither {mod_table} nor {del_table} present in tables")
-    return assemble_changeset(*parts)
 
 
 def generate_modify_meta(

@@ -201,8 +201,6 @@ ORDER BY doc_id
 
 # --- temperature-scaled mixture ----------------------------------------------
 
-MIX_ALPHA_NOTE = "alpha = 1/2 (sqrt: IEEE-exact on both engines)"
-
 
 def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source sampling plan: p_i ∝ n_tokens_i^(1/2) —

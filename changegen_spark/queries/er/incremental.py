@@ -94,8 +94,7 @@ def _inc_refined(arrivals: DataFrame, base: DataFrame) -> DataFrame:
 
 
 def incremental_assign(arrivals: DataFrame, base: DataFrame) -> DataFrame:
-    """Core of incremental ER, reused by the batch query and the
-    streaming twin (streaming/er.py): each arrival probes ``base``
+    """Core of incremental ER: each arrival probes ``base``
     through BOTH candidate keys — city | phonetic block key, and the
     r10 suffix key (city | phonetic(last minus first letter) | first)
     so first-letter corruptions still reach their entity — then city +
@@ -133,7 +132,7 @@ def q_er_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     regime — at 100 TB the base is petabyte-class and never re-CC'd).
     Base = the fixture's original records (rec_id < 400, each its own
     entity); arrivals = the planted duplicates (rec_id ≥ 400).  Logic
-    in ``incremental_assign`` (shared with the streaming twin)."""
+    in ``incremental_assign``."""
     ppl = _people(spark)
     return incremental_assign(
         ppl.filter(F.col("rec_id") >= 400), ppl.filter(F.col("rec_id") < 400)

@@ -19,7 +19,7 @@ of three states:
                         refine threshold: insert as a new entity;
 * ``still_ambiguous`` — the tie persists, or it broke without
                         informative evidence: stay parked (the
-                        streaming twin carries these across
+                        streaming lifecycle carries these across
                         micro-batches).
 
 The re-probe target is the WHOLE updated golden table — untouched base
@@ -292,8 +292,9 @@ def reprobe_pool(
     the first-pass lev the arrival was parked at; ``golden``: (entity,
     name, city).  Returns (rec_id, matched_entity, lev, margin,
     n_matches, status) — the shared core of the batch query and the
-    streaming pool-maintenance twin (streaming/er.py), so the two can
-    never drift on candidate keys, refine, or the acceptance policy."""
+    streaming lifecycle's pool drain (streaming/er.lifecycle_stream), so
+    the two can never drift on candidate keys, refine, or the acceptance
+    policy."""
     return apply_drain_policy(
         _reprobe_scored(amb, golden), margin=margin, policy=policy
     )

@@ -401,67 +401,6 @@ ORDER BY bucket
 """
 
 
-def pagerank_converged(
-    edges: DataFrame,
-    eps_e9: int = 1_000_000,  # stop when max |Δrank| < 0.001 in e9 units
-    max_iters: int = 50,
-    checkpoint_every: int = 5,
-) -> tuple[DataFrame, int]:
-    """PageRank iterated to convergence: stops when the largest absolute
-    rank change falls below ``eps_e9``.  Returns (ranks, iterations_run).
-
-    The convergence test is a driver-side loop with one tiny aggregate
-    action per iteration (max over a |V|-row frame) — the price of a
-    data-dependent stop, which is why the ORACLE-able contract shape is
-    the fixed-depth unroll (q_pagerank); this is the production variant.
-    Integer exactness makes the stop decision deterministic: the same
-    graph converges after the identical iteration count on any cluster,
-    partitioning, or retry — a float implementation could flip the
-    threshold test across runs.  Lineage is cut every
-    ``checkpoint_every`` steps exactly as ``pagerank(checkpoint_every)``.
-    """
-    edges = edges.transform(_fence, "pagerank_converged edges", eager=False)
-    weighted = "w" in edges.columns
-    if weighted:
-        outdeg = edges.groupBy("src").agg(F.sum("w").alias("od"))
-        share = F.expr("(rank_e9 * w) div od")
-    else:
-        outdeg = edges.groupBy("src").agg(F.count("*").alias("od"))
-        share = F.expr("rank_e9 div od")
-    ranks = outdeg.select(
-        F.col("src").alias("node"), "od", F.lit(INIT_E9).cast("long").alias("rank_e9")
-    ).transform(_fence, "pagerank_converged ranks")
-    it = 0
-    while it < max_iters:
-        it += 1
-        sums = (
-            edges.join(ranks, edges.src == ranks.node)
-            .select(F.col("dst"), share.alias("share"))
-            .groupBy("dst")
-            .agg(F.sum("share").alias("s"))
-        )
-        new_rank = F.expr("CAST(150000000 + (85 * s + 50) div 100 AS BIGINT)")
-        nxt = sums.join(outdeg, sums.dst == outdeg.src).select(
-            F.col("dst").alias("node"), "od", new_rank.alias("rank_e9")
-        )
-        if it % checkpoint_every == 0:
-            nxt = nxt.transform(_fence, "pagerank_converged nxt")
-        delta = (
-            nxt.alias("n")
-            .join(ranks.alias("p"), F.col("n.node") == F.col("p.node"))
-            .agg(
-                F.max(
-                    F.abs(F.col("n.rank_e9") - F.col("p.rank_e9"))
-                ).alias("d")
-            )
-            .collect()[0]["d"]
-        )
-        ranks = nxt
-        if delta < eps_e9:
-            break
-    return ranks.select("node", "rank_e9"), it
-
-
 # --- BFS hop distances (graph traversal) -------------------------------------
 
 BFS_SOURCE = "c1"

@@ -236,7 +236,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     window sum over (w1, w2) — one exchange, single consumer of the Arrow
     UDF — instead of a groupBy + self-join pair.  Skew note (r14, ADVICE
     r13): the window shape FORFEITS the join-side skew mitigations — AQE
-    skew-join splitting and operators/skew.salted_join do not apply to a
+    skew-join splitting and key salting do not apply to a
     window exchange, and windows get no map-side partial aggregation, so
     every (doc, bigram) row of a Zipf-hot bigram lands in one sorted
     task.  The exposure is bounded (rows are pre-aggregated per doc, so a
@@ -345,8 +345,8 @@ def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13: the query consumes only the token COUNT, so the encode stage is
     ``bpe_encode_count_udf`` — one long per doc crosses the Python↔JVM
     boundary instead of the full token-string array (guide §4.1); the
-    count equals ``size(bpe_encode_udf(...))`` by construction (pinned in
-    tests/test_lm.py)."""
+    count equals the encoded token array's size by construction (pinned
+    in tests/test_lm.py)."""
     from changegen_spark.functions.bpe import (
         bpe_encode_count_udf,
         bpe_train,

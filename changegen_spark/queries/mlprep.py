@@ -1187,7 +1187,6 @@ ORDER BY doc_id
 """
 
 
-
 RS_K = 50
 _TWO60F = float(1 << 60)
 
@@ -1337,23 +1336,6 @@ def _dsir_ratio_from_per_bucket(per_b: DataFrame) -> DataFrame:
         .cast("long")
         .alias("term_e6"),
     )
-
-
-def _dsir_ratio_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The learned (bucket, e6-integer log p/q ratio) table — the KB-sized
-    DSIR model artifact (also exported to the streaming scorer via
-    ``streaming.corpus.dsir_ratio_terms``).
-
-    One corpus pass (r14, guide §2.4): both distributions come from a
-    single bucket-keyed aggregate with a conditional target count — the
-    r13 shape ran the tokenize+explode twice (raw and the filtered tgt)
-    and stitched them with a left join."""
-    occ = _dsir_occ(spark, sf_dir)
-    per_b = occ.groupBy("b").agg(
-        F.count("*").alias("c_r"),
-        F.count(F.when(F.col("source") == DSIR_TARGET, True)).alias("c_t"),
-    )
-    return _dsir_ratio_from_per_bucket(per_b)
 
 
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

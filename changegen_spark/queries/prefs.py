@@ -40,9 +40,7 @@ E12 = E6 * E6
 def comps_frame(events: DataFrame) -> DataFrame:
     """(ia, ib, a_wins) — one deterministic judgment per event with
     distinct items.  h60 is non-negative, so ``%`` and ``pmod`` agree.
-    Pure expression work over any events frame — the streaming twin
-    (streaming/events.win_matrix_stream) applies it to an unbounded
-    source unchanged."""
+    Pure expression work over any events frame."""
     eid = F.col("event_id").cast("string")
     ia = F.pmod(h60(F.concat(eid, F.lit(":pa"))), F.lit(N_ITEMS))
     ib = F.pmod(h60(F.concat(eid, F.lit(":pb"))), F.lit(N_ITEMS))
@@ -75,8 +73,7 @@ _COMPS_SQL = f"""
 
 def win_matrix_frame(comps: DataFrame) -> DataFrame:
     """The win-matrix aggregation over a (ia, ib, a_wins) frame — counts
-    and sums only, so it is micro-batch merge-safe: the streaming twin
-    runs it in complete mode and must equal the batch result exactly."""
+    and sums only, so it is micro-batch merge-safe."""
     lo_wins = F.when(
         F.col("ia") < F.col("ib"), F.col("a_wins")
     ).otherwise(~F.col("a_wins"))
@@ -239,8 +236,7 @@ def _rater_label(eid, a_wins, r: int):
 def labeled_frame(events: DataFrame) -> DataFrame:
     """(ia, ib, l0..l{R-1}) — every rater's (possibly flipped) judgment
     for each distinct-item event.  Pure expression work over any events
-    frame, so the streaming twin (streaming/events.rater_agreement_stream)
-    applies it to an unbounded source unchanged."""
+    frame."""
     eid = F.col("event_id").cast("string")
     ia = F.pmod(h60(F.concat(eid, F.lit(":pa"))), F.lit(N_ITEMS))
     ib = F.pmod(h60(F.concat(eid, F.lit(":pb"))), F.lit(N_ITEMS))
@@ -261,9 +257,8 @@ def labeled_frame(events: DataFrame) -> DataFrame:
 
 def label_sums(labeled: DataFrame) -> DataFrame:
     """ONE aggregate row of kappa's sufficient statistics: n, per-rater
-    positives, pairwise agreement counts.  Counts and sums only —
-    micro-batch merge-safe, so the streaming twin runs it in complete
-    mode and must equal the batch result exactly."""
+    positives, pairwise agreement counts.  Counts and sums only, so
+    micro-batch merge-safe."""
     return labeled.agg(
         F.count("*").alias("n"),
         *[F.sum(f"l{r}").alias(f"p{r}") for r in range(N_RATERS)],
@@ -403,14 +398,6 @@ Q_RATER_AGREEMENT_SQL = _kappa_sql()
 # 300× inside int64 at the sf0.1 fixture and safe to ~1e7 events.
 
 RATER_W_DIV = 10_000  # kappa_e6 → percent units
-
-
-def rater_weights_e2(spark: SparkSession, sf_dir: str) -> list:
-    """Per-rater reliability weight in percent units, from the measured
-    pairwise kappas.  KB-sized artifact (3 rows) — driver-side math."""
-    rows = q_rater_agreement(spark, sf_dir).collect()
-    k = {(r.rater_a, r.rater_b): int(r.kappa_e6) for r in rows}
-    return _weights_from_kappas(k)
 
 
 def _weights_from_kappas(k: dict) -> list:

@@ -336,9 +336,10 @@ def dedup_bands_of(docs: DataFrame) -> DataFrame:
     column can never reuse the bucket layout —
     ``requireAllClusterKeysForCoPartition`` defaults true, and a post-join
     band filter gets re-fused into the join keys by the optimizer (both
-    observed; this construction is the fix).  Construction shared with the
-    streaming twin via ``hashing.folded_band_artifact`` so stream-static
-    joins against the persisted artifact compute byte-identical keys."""
+    observed; this construction is the fix).  Built by
+    ``hashing.folded_band_artifact``, as are the increment's probe rows,
+    so joins against the persisted artifact compute byte-identical
+    keys."""
     from changegen_spark.functions.hashing import folded_band_artifact
 
     return folded_band_artifact(docs, INC_NGRAM, INC_HASHES, INC_BANDS)

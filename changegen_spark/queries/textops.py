@@ -16,7 +16,6 @@ from changegen_spark.functions.hashing import (
     char_shingles,
     hamming16,
     jaccard_pairs,
-    lsh_band_hashes,
     minhash_candidates,
     minhash_signature,
     simhash16,

@@ -168,22 +168,6 @@ def _doc_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def winnow_fingerprints(docs: DataFrame) -> DataFrame:
-    """(doc_id, fpos, fh): the distinct selected fingerprints of a
-    (doc_id, text) frame — the per-document Arrow pass exploded to rows
-    (kept for tests/ad-hoc use; the registry queries consume the arrays
-    directly to keep the explode out of their plans)."""
-    return (
-        docs.select(
-            "doc_id",
-            F.explode(winnow_select_pandas()(F.col("text")).getField("fps")).alias(
-                "f"
-            ),
-        )
-        .select("doc_id", F.col("f.fpos").alias("fpos"), F.col("f.fh").alias("fh"))
-    )
-
-
 def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document winnowing summary: gram count, full-window count,
     selected-fingerprint count, and selection density (the winnowing

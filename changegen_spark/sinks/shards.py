@@ -111,51 +111,3 @@ def verify_training_shards(spark, path: str) -> dict:
     }
     exp_shards = {int(k): v for k, v in expected["shards"].items()}
     return {"ok": actual == exp_shards, "expected": exp_shards, "actual": actual}
-
-
-def write_epoch_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    epoch: int,
-    n_shards: int = 8,
-) -> dict:
-    """Epoch-ordered training shards — the consumer the Feistel shuffle
-    (queries/ordering.py) exists for (r7 verdict #7).
-
-    ``pos = feistel(id, epoch)`` is a bijection on the id domain, so:
-
-    * ``shard = pos % n_shards`` balances shards by the permutation's
-      uniformity — no extra hash, and q_shuffle_shards is the audit;
-    * within a shard, rows are written in ``pos`` order
-      (sortWithinPartitions after the shard repartition — per-task sort,
-      NO global exchange), so a trainer streaming shard K reads its
-      subsequence of the epoch order, and the concatenation across
-      shards round-robins the full permutation;
-    * everything is a pure function of (id, epoch): re-runs and task
-      retries produce byte-identical shard files, and a NEW epoch is a
-      new permutation with zero data movement upstream (just a different
-      literal in the expression).
-
-    Returns {"epoch", "n_shards", "shards": {K: n_rows}}."""
-    from changegen_spark.queries.ordering import feistel_pos
-
-    tagged = (
-        df.withColumn("pos", feistel_pos(id_col, epoch))
-        .withColumn(
-            "shard", F.pmod(F.col("pos"), F.lit(n_shards)).cast("int")
-        )
-        .transform(fence, "write_epoch_shards tagged", eager=False)
-    )
-    sharded = tagged.repartition(n_shards, "shard").sortWithinPartitions(
-        "shard", "pos"
-    )
-    sharded.write.partitionBy("shard").mode("overwrite").json(path)
-    counts = {
-        int(r["shard"]): int(r["n"])
-        for r in tagged.groupBy("shard").agg(F.count("*").alias("n")).collect()
-    }
-    manifest = {"epoch": epoch, "n_shards": n_shards, "shards": counts}
-    with open(os.path.join(path, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    return manifest

@@ -1,3 +1,3 @@
-from changegen_spark.sources.tables import TABLES, load_table, load_tables, register_views
+from changegen_spark.sources.tables import TABLES, load_table, load_tables
 
-__all__ = ["TABLES", "load_table", "load_tables", "register_views"]
+__all__ = ["TABLES", "load_table", "load_tables"]

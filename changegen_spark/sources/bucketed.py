@@ -14,7 +14,7 @@ Exchange.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -43,20 +43,3 @@ def write_bucketed(
         .format("parquet")
         .saveAsTable(table)
     )
-
-
-def colocate_fact_tables(
-    spark: SparkSession,
-    lineitem: DataFrame,
-    orders: DataFrame,
-    num_buckets: int = 16,
-    prefix: str = "colocated",
-) -> tuple[DataFrame, DataFrame]:
-    """Bucket lineitem and orders identically on the order key.
-
-    Returns the catalog-backed DataFrames; joining them on the key plans
-    with no Exchange on either side.
-    """
-    write_bucketed(lineitem, f"{prefix}_lineitem", "l_orderkey", num_buckets)
-    write_bucketed(orders, f"{prefix}_orders", "o_orderkey", num_buckets)
-    return spark.table(f"{prefix}_lineitem"), spark.table(f"{prefix}_orders")

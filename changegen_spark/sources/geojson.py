@@ -1,13 +1,9 @@
 """GeoJSON ingestion (SURVEY §2.1 S9 — the reference reads test fixtures
 via ``ogr.Open('….geojson')``).
 
-Two paths:
-  * ``read_geojsonl`` — newline-delimited GeoJSON features, the
-    scale-friendly form: a distributed text scan + ``from_json`` schema
-    projection, geometry assembled with pure column expressions;
-  * ``read_feature_collection`` — a single FeatureCollection document
-    (the fixture format): parsed driver-side (it is one JSON object by
-    definition) into the same schema.
+``read_feature_collection`` reads a single FeatureCollection document
+(the reference's fixture format), parsed driver-side: it is one JSON
+object by definition.
 
 Properties land as a ``map<string,string>`` tag map — the engine's
 open-schema convention (§1.3); geometry becomes the struct model of
@@ -21,13 +17,6 @@ from __future__ import annotations
 import json
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-# geometry.coordinates nesting depth varies by type; parse the union shape
-_FEATURE_SCHEMA = (
-    "type string, properties map<string,string>, "
-    "geometry struct<type:string, coordinates:string>"
-)
 
 
 def _coords_to_rings(gtype: str, coords) -> list[list[dict]]:
@@ -65,38 +54,4 @@ def read_feature_collection(spark: SparkSession, path: str) -> DataFrame:
         )
     return spark.createDataFrame(
         rows, f"tags map<string,string>, geometry {GEOMETRY.simpleString()}"
-    )
-
-
-def read_geojsonl(spark: SparkSession, path: str) -> DataFrame:
-    """Newline-delimited GeoJSON features — fully distributed parse.
-
-    The coordinates array is schema-polymorphic, so it is kept as a raw
-    JSON string per feature and decoded by geometry type with from_json —
-    all executor-side, no driver materialization.
-    """
-    raw = spark.read.text(path)
-    parsed = raw.select(
-        F.from_json(
-            F.col("value"),
-            "type string, properties map<string,string>, geometry struct<type:string>",
-        ).alias("f"),
-        F.get_json_object(F.col("value"), "$.geometry.coordinates").alias("cj"),
-    ).filter(F.col("f.type") == "Feature")
-
-    pt = F.from_json(F.col("cj"), "array<double>")
-    line = F.from_json(F.col("cj"), "array<array<double>>")
-    poly = F.from_json(F.col("cj"), "array<array<array<double>>>")
-    to_coord = lambda arr: F.struct(  # noqa: E731
-        F.element_at(arr, 1).alias("x"), F.element_at(arr, 2).alias("y")
-    )
-    gtype = F.col("f.geometry.type")
-    rings = (
-        F.when(gtype == "Point", F.array(F.array(to_coord(pt))))
-        .when(gtype == "LineString", F.array(F.transform(line, to_coord)))
-        .when(gtype == "Polygon", F.transform(poly, lambda r: F.transform(r, to_coord)))
-    )
-    return parsed.select(
-        F.col("f.properties").alias("tags"),
-        F.struct(gtype.alias("gtype"), rings.alias("rings")).alias("geometry"),
     )

@@ -5,8 +5,8 @@ object-store-scan parallelism), but parity with the reference means being
 able to point at the imposm3 PostGIS database directly.  This module builds
 the partitioned-read plan.  The execution path runs LIVE in
 tests/test_jdbc_live.py against a real JDBC endpoint (the container's
-DuckDB JDBC driver): suffix discovery, the 4-partition read, predicate
-pushdown, and snapshot_to_parquet all execute against an actual database.
+DuckDB JDBC driver): suffix discovery, the 4-partition read and predicate
+pushdown all execute against an actual database.
 Only the PostGIS-specific ST_AsBinary export leg remains environmental
 (no Postgres server or pg JDBC driver in the container).
 
@@ -187,17 +187,3 @@ class JdbcCatalog:
             geometry_column=None,
             properties=self.properties,
         ).load()
-
-
-def snapshot_to_parquet(
-    spark: SparkSession,
-    url: str,
-    table: str,
-    out_path: str,
-    **reader_kwargs,
-) -> None:
-    """One-time snapshot: partitioned JDBC read → parquet — the ingest step
-    that turns the live database into this engine's canonical input."""
-    jdbc_table_reader(spark, url, table, **reader_kwargs).load().write.mode(
-        "overwrite"
-    ).parquet(out_path)

@@ -85,7 +85,6 @@ def reference_golden_counts(spark: SparkSession) -> DataFrame:
         spark,
         t1,
         self_intersections=True,
-        check_collision=False,
         key_col="__fkey",
     )
     ways_counts = ways_run.filter(F.col("kind") == "way").groupBy("change_type").agg(
@@ -99,7 +98,7 @@ def reference_golden_counts(spark: SparkSession) -> DataFrame:
         "pbf_nodes": ref["pbf_nodes"],
         "pbf_relations": ref["pbf_relations"],
     }
-    pts_run = generate_changes(spark, t2, check_collision=False)
+    pts_run = generate_changes(spark, t2)
     pts_count = pts_run.filter(
         (F.col("kind") == "node") & (F.col("change_type") == "create")
     ).agg(F.count("*").alias("value"))

@@ -75,9 +75,3 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         if os.path.exists(path):
             out[name] = load_table(spark, sf_dir, name)
     return out
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each table as a temp view for spark.sql access."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)

@@ -1,248 +1,17 @@
-"""Streaming twins of the training-data prep family (documents table).
+"""Streaming twin of the training-data prep family (documents table).
 
 A corpus ingestion pipeline at 100 TB is a stream: new crawl drops land in
-an object store and must be deduplicated, quality-filtered, and scrubbed
-incrementally, not by recomputing the corpus.  Structured Streaming gives
-this for free where the batch expression is stateless (quality, PII — the
-batch column expressions ARE the streaming plan), and via keyed state for
-exact dedup:
-
-  * ``dedup_stream`` — first-writer-wins exact dedup on a content hash.
-    ``dropDuplicates`` keyed state; the watermarked variant
-    (``dropDuplicatesWithinWatermark`` over an ingest-time column) bounds
-    state for production where re-crawls arrive within a bounded horizon.
-  * ``quality_filter_stream`` / ``pii_scrub_stream`` — stateless map-only
-    reuse of the exact batch expressions from ``queries/mlprep`` and
-    ``functions/text``.
-
-Tests stage file-source directories (the object-store drop-dir interface)
-and assert batch parity.
+an object store and must be sampled incrementally, not by recomputing the
+corpus.  ``reservoir_per_source_stream`` keeps a bounded per-source
+reservoir in ``applyInPandasWithState``; the registry query
+``q_streaming_reservoir`` drives it over a file-source directory (the
+object-store drop-dir interface) and the tests assert batch parity.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def stream_documents(spark: SparkSession, src_dir: str) -> DataFrame:
-    """documents parquet directory as an unbounded file-source stream."""
-    return spark.readStream.schema(DOC_SCHEMA).parquet(src_dir)
-
-
-def content_hash(text: F.Column) -> F.Column:
-    """Exact-dedup key: md5 of the trimmed text (same key as the batch
-    ``q_exact_dedup``)."""
-    return F.md5(F.trim(text))
-
-
-def dedup_stream(
-    docs: DataFrame, watermark_col: str | None = None, horizon: str = "1 hour"
-) -> DataFrame:
-    """First-writer-wins streaming exact dedup on the content hash.
-
-    Without ``watermark_col`` the keyed state is unbounded (fine for a
-    bounded backfill run via ``availableNow``); with it, state older than
-    ``horizon`` is evicted — the production mode when duplicate arrivals
-    are known to cluster in time (re-crawls, retry storms).
-    """
-    hashed = docs.withColumn("content_hash", content_hash(F.col("text")))
-    if watermark_col is None:
-        return hashed.dropDuplicates(["content_hash"])
-    return hashed.withWatermark(watermark_col, horizon).dropDuplicatesWithinWatermark(
-        ["content_hash"]
-    )
-
-
-def corpus_band_frame(
-    corpus: DataFrame, ngram: int = 3, num_hashes: int = 8, bands: int = 4
-) -> DataFrame:
-    """(bh) folded LSH bucket rows of the persisted corpus — the static
-    side of the stream-static near-dup join, the SAME single-key artifact
-    `queries/scale.persist_dedup_corpus` writes bucketed by ``bh`` (r3
-    unification: one corpus artifact serves the batch daily-increment
-    dedup and the streaming twin; a bh-bucketed table joins with zero
-    corpus-side shuffle in both).  Here derived on the fly from docs;
-    production reads ``spark.table(…_bands)``."""
-    from changegen_spark.functions.hashing import folded_band_artifact
-
-    return folded_band_artifact(corpus, ngram, num_hashes, bands).select(
-        "bh"
-    ).distinct()
-
-
-def near_dup_hits_stream(
-    docs: DataFrame,
-    corpus_bands: DataFrame,
-    ngram: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-) -> DataFrame:
-    """Streaming near-dup detection against a static corpus: emit one
-    (doc_id, band, bh) hit event per stream document band that lands in an
-    existing corpus LSH bucket — the streaming twin of
-    ``queries/scale.q_incremental_dedup``'s band join.
-
-    The signature UDF and band explode are stateless maps, and the
-    left-semi join against the static bucket frame needs no streaming
-    state at all (stream-static joins keep nothing across micro-batches),
-    so this runs with bounded memory at any corpus size.  Downstream
-    per-doc consolidation is the consumer's choice: at-least-once hit
-    events as emitted here, or ``dropDuplicatesWithinWatermark`` on
-    doc_id when exactly-one-flag-per-doc matters.  Batch parity: the same
-    function applied to a batch DataFrame computes the identical result
-    (pinned in tests).
-
-    ``corpus_bands`` carries the folded single-key ``bh`` (r3) — the
-    exact artifact ``persist_dedup_corpus`` bucket-writes, so pointing
-    this at ``spark.table("…_bands")`` joins each micro-batch with zero
-    corpus-side shuffle."""
-    from changegen_spark.functions.hashing import folded_band_artifact
-
-    stream_bands = folded_band_artifact(docs, ngram, num_hashes, bands)
-    return (
-        stream_bands.withColumnRenamed("id", "doc_id")
-        .join(corpus_bands.select("bh"), "bh", "left_semi")
-        .select("doc_id", "bh")
-    )
-
-
-def quality_filter_stream(docs: DataFrame, min_tokens: int = 10) -> DataFrame:
-    """Stateless streaming quality gate: identical expressions to the batch
-    quality scorer (``functions.text.quality_features``) — no state, no
-    watermark, pure map."""
-    from changegen_spark.functions.text import quality_features
-
-    feats = quality_features(F.col("text"))  # includes n_tokens
-    out = docs.select(
-        "doc_id",
-        "source",
-        *[expr.alias(name) for name, expr in feats.items()],
-    )
-    return out.filter(F.col("n_tokens") >= min_tokens)
-
-
-def pii_scrub_stream(docs: DataFrame) -> DataFrame:
-    """Stateless streaming PII redaction: the batch regex expressions from
-    ``queries/mlprep`` applied to the raw text column (no synthetic
-    augmentation here — the stream scrubs what arrives)."""
-    from changegen_spark.queries.mlprep import EMAIL_RE, IP_RE, PHONE_RE
-
-    redacted = F.regexp_replace(
-        F.regexp_replace(
-            F.regexp_replace(F.col("text"), EMAIL_RE, "<EMAIL>"),
-            PHONE_RE,
-            "<PHONE>",
-        ),
-        IP_RE,
-        "<IP>",
-    )
-    return docs.select(
-        "doc_id",
-        "source",
-        F.regexp_count(F.col("text"), F.lit(EMAIL_RE)).alias("n_email"),
-        F.regexp_count(F.col("text"), F.lit(PHONE_RE)).alias("n_phone"),
-        F.regexp_count(F.col("text"), F.lit(IP_RE)).alias("n_ip"),
-        redacted.alias("redacted"),
-    )
-
-
-def dsir_ratio_terms(spark, sf_dir: str) -> list[int]:
-    """The batch-learned (bucket → e6-integer log-ratio) DSIR table as a
-    dense list indexed by bucket — the KB-sized model artifact the
-    streaming scorer closes over.  Buckets absent from the corpus get 0
-    (no evidence either way)."""
-    from changegen_spark.queries.mlprep import DSIR_BUCKETS
-    from changegen_spark.queries.mlprep import _dsir_ratio_frame
-
-    terms = [0] * DSIR_BUCKETS
-    for r in _dsir_ratio_frame(spark, sf_dir).collect():
-        terms[int(r["b"])] = int(r["term_e6"])
-    return terms
-
-
-def dsir_weight_stream(docs: DataFrame, ratio_terms: list[int]) -> DataFrame:
-    """Stateless streaming DSIR scorer: each arriving document gets its
-    importance weight from the batch-learned ratio table — the online
-    data-selection gate (admit/queue/drop by weight) in front of a
-    training-data pipeline.
-
-    Same bucket expressions as the batch query (bigrams → h60 → pmod);
-    the per-doc sum runs in one Arrow-batched numpy take over the
-    bucket array, so the op is a pure map — no state, no watermark, and
-    batch parity is exact integer equality (pinned in tests)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from changegen_spark.queries.mlprep import DSIR_BUCKETS, _toks, word_ngrams
-    from changegen_spark.queries.sketches import h60
-
-    terms = np.asarray(ratio_terms, dtype=np.int64)
-
-    @pandas_udf("struct<n_grams:long, logw_e6:long>")
-    def weigh(buckets):
-        n, w = [], []
-        for bs in buckets:
-            if bs is None or len(bs) == 0:
-                n.append(0)
-                w.append(0)
-            else:
-                idx = np.asarray(bs, dtype=np.int64)
-                n.append(len(idx))
-                w.append(int(terms[idx].sum()))
-        return pd.DataFrame({"n_grams": n, "logw_e6": w})
-
-    toks = _toks(F.col("text"))
-    buckets = F.transform(
-        word_ngrams(toks, 2), lambda g: F.pmod(h60(g), F.lit(DSIR_BUCKETS))
-    )
-    # Mirror the batch scorer's eligibility gate (_dsir_occ drops docs
-    # whose trimmed source is NULL) so stream/batch parity holds for ALL
-    # inputs, not just the non-null-source rows the parity test feeds.
-    out = (
-        docs.filter(F.trim(F.col("source")).isNotNull())
-        .select("doc_id", "source", weigh(buckets).alias("s"))
-        .select("doc_id", "source", F.col("s.n_grams").alias("n_grams"), F.col("s.logw_e6").alias("logw_e6"))
-    )
-    return out.filter(F.col("n_grams") > 0)
-
-
-def countmin_stream(docs: DataFrame) -> DataFrame:
-    """Streaming count-min sketch of word frequencies: ONE stateful agg
-    over (depth row j, bucket) — cell counts are SUM-mergeable, so the
-    per-micro-batch partial Structured Streaming folds in is exactly the
-    sketch's merge law.  State is the sketch itself: depth × width cells
-    TOTAL, however many distinct words the stream carries — the
-    bounded-state alternative to a streaming exact word count (same
-    argument as streaming/events.hll_registers_stream, sum instead of
-    max).  Point estimates (min over the depth cells) fold statelessly
-    downstream.  Batch twin: the identical cell expressions underlying
-    the oracle-backed q_countmin_topk (queries/scale.py:218) —
-    test_countmin_stream_matches_batch pins cell-for-cell equality."""
-    from changegen_spark.queries.scale import CMS_DEPTH, CMS_HEX
-
-    words = docs.select(
-        F.explode(F.split(F.trim("text"), r"\s+")).alias("w")
-    ).filter(F.col("w") != "")
-    stacked = words.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(j).alias("j"),
-                        F.substring(
-                            F.md5(F.concat(F.col("w"), F.lit(f"#{j}"))), 1, CMS_HEX
-                        ).alias("b"),
-                    )
-                    for j in range(1, CMS_DEPTH + 1)
-                ]
-            )
-        ).alias("s")
-    ).select("s.j", "s.b")
-    return stacked.groupBy("j", "b").agg(F.count("*").alias("c"))
 
 
 def reservoir_per_source_stream(docs: DataFrame, k: int = 10) -> DataFrame:
@@ -320,41 +89,3 @@ def reservoir_per_source_stream(docs: DataFrame, k: int = 10) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def gopher_filter_stream(docs: DataFrame) -> DataFrame:
-    """Stateless streaming Gopher quality gate: the EXACT batch column
-    expressions from queries/curation.q_gopher_rules applied to arriving
-    documents — pure map, no state, no watermark; batch parity is exact
-    (same Catalyst expressions, pinned in tests)."""
-    from changegen_spark.queries.curation import (
-        GOPHER_MIN_ALPHA_FRAC,
-        GOPHER_MIN_MWL,
-        GOPHER_MAX_MWL,
-        GOPHER_MIN_STOP_HITS,
-        GOPHER_MIN_WORDS,
-        GOPHER_MAX_WORDS,
-        GOPHER_STOPWORDS,
-    )
-
-    t = F.split(F.trim("text"), r"\s+")
-    n = F.when(F.trim("text") == "", F.lit(0)).otherwise(F.size(t)).cast("long")
-    sum_len = F.aggregate(t, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x))
-    mwl = F.when(n > 0, sum_len.cast("double") / n).otherwise(F.lit(0.0))
-    n_alpha = F.size(F.filter(t, lambda x: x.rlike("[a-zA-Z]"))).cast("long")
-    alpha_frac = F.when(n > 0, n_alpha.cast("double") / n).otherwise(F.lit(0.0))
-    stop_hits = sum(
-        [F.array_contains(t, s).cast("int") for s in GOPHER_STOPWORDS],
-        start=F.lit(0),
-    ).cast("long")
-    keep = (
-        (n >= GOPHER_MIN_WORDS)
-        & (n <= GOPHER_MAX_WORDS)
-        & (mwl >= GOPHER_MIN_MWL)
-        & (mwl <= GOPHER_MAX_MWL)
-        & (alpha_frac >= GOPHER_MIN_ALPHA_FRAC)
-        & (stop_hits >= GOPHER_MIN_STOP_HITS)
-    )
-    return docs.select(
-        "doc_id", "source", n.alias("n_words"), keep.cast("long").alias("keep")
-    ).filter(F.col("keep") == 1)

@@ -1,100 +1,23 @@
-"""Streaming incremental entity resolution (r10).
+"""Streaming entity-resolution lifecycle (r13).
 
-The batch-append regime of `queries/er.q_er_incremental`, expressed as
-Structured Streaming's canonical STREAM-STATIC pattern: arrivals land as
-files in a drop directory, each micro-batch joins the (static, broadcast-
-sized-keys) base entity table through the two candidate keys, refines,
-and emits one assignment row per arrival.  `foreachBatch` is the right
-shape here — the per-batch work IS a batch join, and production upserts
-its output into the golden table (a MERGE on a transactional table
-format, which this sandbox does not ship) — so the sink below is a
-pluggable callback and the tests collect to memory.
-
-State: NONE.  Unlike the Elo/HLL/session twins this operator keeps no
-streaming state at all — every arrival's assignment depends only on the
-static base, so restarts are trivially exactly-once per the file-source
-commit log.  At 100 TB the base side is a bucketed table whose keyed
-projection is re-derived per batch (or cached); arrivals per trigger are
-the small side.
+``lifecycle_stream`` maintains one ER store under a single event stream
+that interleaves arrival and delete batches: retraction, margin
+assignment against the current golden rows, a drain of the carried pool
+and a touched-bucket golden rewrite, per micro-batch in
+``foreachBatch``.  Every piece of state is derived and batch-keyed, so
+restarts are exactly-once under the file-source commit log.
+``rehome_touched`` is the touched-only core of record retraction, and
+``stage_lifecycle_frames`` stages an event sequence as one file per
+batch.  ``tools/ladders.py``'s ``er`` ladder times all three.
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 
 from changegen_spark.operators.fence import fence
-
-
-def stage_arrival_files(spark: SparkSession, n_files: int = 4) -> str:
-    """Write the fixture's arrival records (rec_id ≥ 400) as ``n_files``
-    parquet files under a staging drop directory (idempotent) so
-    maxFilesPerTrigger=1 yields multiple micro-batches."""
-    from changegen_spark.queries.er import ER_PATH, _people
-
-    # the staging key folds in the fixture's size+mtime (r10 advice): a
-    # regenerated er_people fixture must invalidate the cached staging
-    # dir, or the stream silently replays stale arrivals across sessions
-    st = os.stat(ER_PATH)
-    stage = os.path.join(
-        "/tmp",
-        "changegen_spark_er_stream_"
-        + hashlib.md5(
-            f"{ER_PATH}|{n_files}|{st.st_size}|{st.st_mtime_ns}".encode()
-        ).hexdigest()[:8],
-    )
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
-        arrivals = _people(spark).filter("rec_id >= 400")
-        # deterministic file split: route by rec_id, not round-robin
-        (
-            arrivals.repartition(n_files, "rec_id")
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return stage
-
-
-def incremental_er_stream(
-    spark: SparkSession,
-    on_batch,
-    n_files: int = 4,
-    checkpoint: str | None = None,
-    stage_dir: str | None = None,
-):
-    """Run the stream-static incremental-ER pipeline over the staged
-    arrival drop directory; ``on_batch(assignments_df, batch_id)`` is
-    invoked per micro-batch with the assignment frame (rec_id,
-    matched_entity, lev, n_matches).  Returns the started query (caller
-    drives processAllAvailable/stop).  ``stage_dir`` overrides the
-    default fixture staging (used by the arrival-order permutation
-    parity test: assignment is stateless per arrival, so file-drop
-    ORDER must not change the final table)."""
-    from changegen_spark.queries.er import _people, incremental_assign
-
-    base = _people(spark).filter("rec_id < 400")
-    stage = stage_dir or stage_arrival_files(spark, n_files=n_files)
-    schema = spark.read.parquet(stage).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-
-    def emit(batch_df: DataFrame, batch_id: int) -> None:
-        on_batch(incremental_assign(batch_df, base), batch_id)
-
-    writer = arrivals.writeStream.foreachBatch(emit).trigger(availableNow=True)
-    if checkpoint:
-        # production restart semantics: the file-source commit log makes
-        # re-runs exactly-once (tested); without it Spark uses a fresh
-        # temporary checkpoint and reprocesses everything
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
 
 
 GOLDEN_BUCKETS = 16  # entity-hash partitions of the maintained tables
@@ -153,32 +76,6 @@ def _golden_rows(members: DataFrame) -> DataFrame:
     )
 
 
-def stage_ambig_files(spark: SparkSession, n_files: int = 3) -> str:
-    """Stage the er_ambig fixture's arrivals (rec_id ≥ 400) as a drop
-    directory, mirroring stage_arrival_files (size+mtime-keyed cache)."""
-    from changegen_spark.queries.er import ER_AMBIG_PATH
-
-    st = os.stat(ER_AMBIG_PATH)
-    stage = os.path.join(
-        "/tmp",
-        "changegen_spark_er_ambig_stream_"
-        + hashlib.md5(
-            f"{ER_AMBIG_PATH}|{n_files}|{st.st_size}|{st.st_mtime_ns}".encode()
-        ).hexdigest()[:8],
-    )
-    done = os.path.join(stage, "_STAGED")
-    if not os.path.exists(done):
-        arrivals = spark.read.parquet(ER_AMBIG_PATH).filter("rec_id >= 400")
-        (
-            arrivals.repartition(n_files, "rec_id")
-            .write.mode("overwrite")
-            .parquet(stage)
-        )
-        with open(done, "w") as fh:
-            fh.write("ok")
-    return stage
-
-
 def _latest_pool_batch(pool_dir: str, before: int) -> int | None:
     """Largest committed pool snapshot id strictly below ``before`` —
     the pool state this batch inherits (a RETRIED batch must not read
@@ -194,213 +91,6 @@ def _latest_pool_batch(pool_dir: str, before: int) -> int | None:
     return max(ids) if ids else None
 
 
-def resolve_maintenance_stream(
-    spark: SparkSession,
-    state_dir: str,
-    n_files: int = 3,
-    checkpoint: str | None = None,
-    stage_dir: str | None = None,
-):
-    """Golden maintenance WITH a carried ambiguous pool (r11 verdict #1)
-    — the streaming twin of queries/er/resolve.q_er_ambiguous_resolve.
-    Per micro-batch: (1) margin-assign the arrivals against the static
-    base; (2) confident merges and −1 arrivals become member rows, −2
-    arrivals join the POOL; (3) the whole pool (inherited snapshot ∪
-    this batch's parkings) is re-probed via the SHARED
-    ``reprobe_pool`` core against the updated golden names (base ∪ all
-    members including this batch's) — resolved/new pooled arrivals
-    become members with a terminal disposition, still-ambiguous ones
-    are written as this batch's pool snapshot; (4) the touched golden
-    buckets are dynamic-partition-overwritten as in
-    golden_maintenance_stream.
-
-    State layout under ``state_dir`` (all derived, all idempotent —
-    batch-keyed overwrites + pure recomputes, so retries are safe and
-    the file-source checkpoint gives exactly-once):
-      members/batch=<id>/  member rows added by that batch
-      pool/batch=<id>/     FULL pool snapshot after that batch
-      drained/batch=<id>/  terminal dispositions decided in that batch
-      golden/bucket=*/     the maintained golden table
-
-    Ordering semantics, stated honestly: re-resolution is EAGER — a
-    pooled arrival resolves with the information available at its
-    batch, so a tie that a later batch's merge would have re-broken
-    differently is decided early (the order-dependence test pins this).
-    When every confident arrival lands no later than the batch that
-    drains its dependent tie, the terminal dispositions equal the
-    one-shot batch operator's exactly (the parity test).
-
-    100 TB shape: the pool snapshot is small (the abstention rate of
-    the margin dial) and the re-probe is the same two key-equality hash
-    joins as the first pass; members/golden maintenance is touched-
-    bucket work as in golden_maintenance_stream."""
-    from pyspark.sql import functions as F
-
-    from changegen_spark.queries.er import ER_AMBIG_PATH
-    from changegen_spark.queries.er.incremental import (
-        incremental_assign_margin,
-    )
-    from changegen_spark.queries.er.resolve import reprobe_pool
-
-    base = spark.read.parquet(ER_AMBIG_PATH).filter("rec_id < 400")
-    members_dir = os.path.join(state_dir, "members")
-    pool_dir = os.path.join(state_dir, "pool")
-    drained_dir = os.path.join(state_dir, "drained")
-    table_dir = os.path.join(state_dir, "golden")
-
-    # seed: every base entity a singleton golden row, marker keyed on the
-    # fixture's size+mtime (same invalidation as golden_maintenance_stream)
-    st = os.stat(ER_AMBIG_PATH)
-    seed_key = f"{ER_AMBIG_PATH}|{st.st_size}|{st.st_mtime_ns}"
-    marker = os.path.join(state_dir, "_SEEDED")
-    os.makedirs(state_dir, exist_ok=True)
-    stale = True
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            stale = fh.read() != seed_key
-    if stale:
-        (
-            _bucketed(_golden_rows(_member_rows(base, F.col("rec_id"))))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(table_dir)
-        )
-        with open(marker, "w") as fh:
-            fh.write(seed_key)
-
-    stage = stage_dir or stage_ambig_files(spark, n_files=n_files)
-    schema = spark.read.parquet(stage).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-    # park_lev rides in the snapshot: an arrival re-probed in a LATER
-    # batch still carries the lev it was parked at — the 'toward'
-    # policy's evidence baseline (queries/er/resolve.py)
-    pool_schema = "rec_id long, aname string, acity string, park_lev long"
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = incremental_assign_margin(batch_df, base).select(
-            "rec_id", "matched_entity", "lev"
-        )
-        arr = batch_df.join(assigned, "rec_id").select(
-            "rec_id",
-            F.coalesce(F.lower("name"), F.lit("")).alias("nname"),
-            F.coalesce("city", F.lit("")).alias("city"),
-            "matched_entity",
-            "lev",
-        ).transform(fence, "resolve_maintenance_stream arr")
-        batch_members = arr.filter(F.col("matched_entity") != -2).select(
-            F.when(F.col("matched_entity") >= 0, F.col("matched_entity"))
-            .otherwise(F.col("rec_id"))
-            .cast("long")
-            .alias("entity"),
-            "rec_id",
-            "nname",
-            "city",
-        )
-        parked = arr.filter(F.col("matched_entity") == -2).select(
-            "rec_id",
-            F.col("nname").alias("aname"),
-            F.col("city").alias("acity"),
-            F.col("lev").cast("long").alias("park_lev"),
-        )
-        prev = _latest_pool_batch(pool_dir, batch_id)
-        if prev is None:
-            pool_in = spark.createDataFrame([], pool_schema)
-        else:
-            snap = os.path.join(pool_dir, f"batch={prev}")
-            spark.catalog.refreshByPath(snap)
-            pool_in = spark.read.parquet(snap)
-        pool_in = pool_in.unionByName(parked)
-        # golden names INCLUDING this batch's members (parity with the
-        # batch operator, which re-probes after its merges)
-        prior = spark.createDataFrame(
-            [], "entity long, rec_id long, nname string, city string"
-        )
-        if os.path.isdir(members_dir) and any(
-            d.startswith("batch=") for d in os.listdir(members_dir)
-        ):
-            spark.catalog.refreshByPath(members_dir)
-            prior = (
-                spark.read.option("basePath", members_dir)
-                .parquet(members_dir)
-                .filter(F.col("batch") < batch_id)
-                .select("entity", "rec_id", "nname", "city")
-            )
-        all_members = (
-            _member_rows(base, F.col("rec_id"))
-            .unionByName(prior)
-            .unionByName(batch_members)
-        )
-        golden = _golden_rows(all_members).select(
-            "entity",
-            F.col("name_mode").alias("name"),
-            F.col("city_latest").alias("city"),
-        )
-        decisions = reprobe_pool(pool_in, golden).transform(
-            fence, "resolve_maintenance_stream decisions"
-        )
-        drained = decisions.filter(F.col("matched_entity") != -2)
-        drained_members = drained.join(pool_in, "rec_id").select(
-            F.when(F.col("matched_entity") >= 0, F.col("matched_entity"))
-            .otherwise(F.col("rec_id"))
-            .cast("long")
-            .alias("entity"),
-            "rec_id",
-            F.col("aname").alias("nname"),
-            F.col("acity").alias("city"),
-        )
-        out_members = batch_members.unionByName(drained_members)
-        out_members.write.mode("overwrite").parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
-        )
-        still = decisions.filter(F.col("matched_entity") == -2).select(
-            "rec_id"
-        ).join(pool_in, "rec_id")
-        still.write.mode("overwrite").parquet(
-            os.path.join(pool_dir, f"batch={batch_id}")
-        )
-        drained.write.mode("overwrite").parquet(
-            os.path.join(drained_dir, f"batch={batch_id}")
-        )
-        # golden-table bucket maintenance (as golden_maintenance_stream)
-        spark.catalog.refreshByPath(members_dir)
-        final_members = _member_rows(base, F.col("rec_id")).unionByName(
-            spark.read.option("basePath", members_dir)
-            .parquet(members_dir)
-            .filter(F.col("batch") <= batch_id)
-            .select("entity", "rec_id", "nname", "city")
-        )
-        touched = (
-            out_members.select(
-                F.pmod("entity", F.lit(GOLDEN_BUCKETS)).alias("bucket")
-            )
-            .distinct()
-        )
-        rows = _bucketed(
-            _golden_rows(
-                _bucketed(final_members)
-                .join(F.broadcast(touched), "bucket")
-                .select("entity", "rec_id", "nname", "city")
-            )
-        )
-        (
-            rows.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(table_dir)
-        )
-
-    writer = (
-        arrivals.writeStream.foreachBatch(merge).trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
 def rehome_touched(
     membership: DataFrame,
     deletes: DataFrame,
@@ -412,14 +102,14 @@ def rehome_touched(
     lost a record — pair generation re-run on just that record subset,
     CC on the induced subgraph, components re-headed by min rec_id.
     This frame is all the retraction WORK there is (the er_ladder
-    ``retract`` cell times exactly it); everything else in
-    retract_membership is untouched-row passthrough.
+    ``retract`` cell times exactly it); every untouched entity's rows
+    pass through unchanged.
 
     ``pairs_fn`` (people_subset → (rec_a, rec_b) pairs) is the pair rule
     the membership was BUILT with — retraction must regenerate edges
     under the same rule or the rehomed subgraph belongs to a different
     pipeline than the one being maintained (r12 advice).  Defaults to
-    plain ``er_pairs_for``, the rule ``retract_stream`` seeds with."""
+    plain ``er_pairs_for``."""
     from pyspark.sql import functions as F
 
     from changegen_spark.functions.clustering import connected_components
@@ -446,304 +136,6 @@ def rehome_touched(
     )
 
 
-def retract_membership(
-    membership: DataFrame,
-    deletes: DataFrame,
-    people: DataFrame,
-) -> DataFrame:
-    """One retraction step over a (rec_id, entity) membership table:
-    remove the deleted records, re-home the touched entities' remaining
-    members (``rehome_touched``), pass untouched entities through
-    byte-identical.  Returns the new full membership."""
-    from pyspark.sql import functions as F
-
-    dels = deletes.select("rec_id").distinct()
-    touched = (
-        membership.join(dels, "rec_id").select("entity").distinct()
-    ).transform(fence, "retract_membership touched")
-    untouched = membership.join(F.broadcast(touched), "entity", "left_anti")
-    rehomed = rehome_touched(membership, deletes, people)
-    return untouched.select("rec_id", "entity").unionByName(rehomed)
-
-
-def retract_stream(
-    spark: SparkSession,
-    state_dir: str,
-    deletes_stage: str,
-    checkpoint: str | None = None,
-):
-    """Streaming golden-table RETRACTION (r11 verdict #4): delete
-    batches arrive as files of (rec_id) rows; each micro-batch removes
-    those members, re-runs CC on the touched entities' remaining
-    subgraph, and maintains BOTH the membership table (full snapshot
-    per batch — fixture-small here; at scale a bucket-partitioned
-    upsert like the golden table's) and the bucket-partitioned golden
-    table (touched buckets dynamic-partition-overwritten, so a split
-    entity's new heads appear and a emptied entity's row vanishes with
-    its bucket rewrite).
-
-    Idempotent by construction: membership snapshots are batch-keyed
-    overwrites, golden buckets are a pure function of the snapshot, and
-    the file-source checkpoint prevents reprocessing — a retried batch
-    reads its PREDECESSOR's snapshot (never its own failed write) and
-    rewrites exactly its own outputs."""
-    from pyspark.sql import functions as F
-
-    from changegen_spark.functions.clustering import connected_components
-    from changegen_spark.queries.er import ER_AMBIG_PATH
-    from changegen_spark.queries.er.blocking import er_pairs_for
-
-    people = spark.read.parquet(ER_AMBIG_PATH)
-    members_dir = os.path.join(state_dir, "membership")
-    table_dir = os.path.join(state_dir, "golden")
-
-    # seed: the full CC assignment + golden table (fixture-keyed marker)
-    st = os.stat(ER_AMBIG_PATH)
-    seed_key = f"{ER_AMBIG_PATH}|{st.st_size}|{st.st_mtime_ns}"
-    marker = os.path.join(state_dir, "_SEEDED")
-    os.makedirs(state_dir, exist_ok=True)
-    stale = True
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            stale = fh.read() != seed_key
-    seed_dir = os.path.join(members_dir, "seed")
-    if stale:
-        comp = connected_components(
-            er_pairs_for(people).select("rec_a", "rec_b"),
-            src="rec_a",
-            dst="rec_b",
-        )
-        assign = people.select("rec_id").join(
-            comp, people.rec_id == comp.node, "left"
-        ).select(
-            "rec_id", F.coalesce("comp", F.col("rec_id")).alias("entity")
-        )
-        assign.write.mode("overwrite").parquet(seed_dir)
-        spark.catalog.refreshByPath(seed_dir)
-        seeded = spark.read.parquet(seed_dir)
-        members = _member_rows(people.join(seeded, "rec_id"), F.col("entity"))
-        (
-            _bucketed(_golden_rows(members))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(table_dir)
-        )
-        with open(marker, "w") as fh:
-            fh.write(seed_key)
-
-    schema = spark.read.parquet(deletes_stage).schema
-    deletes = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(deletes_stage)
-    )
-
-    def _snapshot_before(batch_id: int) -> str:
-        ids = [
-            int(d.split("=", 1)[1])
-            for d in os.listdir(members_dir)
-            if d.startswith("batch=")
-        ]
-        ids = [i for i in ids if i < batch_id]
-        if ids:
-            return os.path.join(members_dir, f"batch={max(ids)}")
-        return seed_dir
-
-    def apply_deletes(batch_df: DataFrame, batch_id: int) -> None:
-        snap = _snapshot_before(batch_id)
-        spark.catalog.refreshByPath(snap)
-        membership = spark.read.parquet(snap).select("rec_id", "entity")
-        old_touched = (
-            membership.join(batch_df.select("rec_id").distinct(), "rec_id")
-            .select("entity")
-            .distinct()
-        ).transform(fence, "retract_stream old_touched")
-        new_membership = retract_membership(
-            membership, batch_df, people
-        ).transform(fence, "retract_stream new_membership")
-        new_membership.write.mode("overwrite").parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
-        )
-        # touched buckets: old entity ids (rows may vanish) + the new
-        # entity ids of every record those entities used to own
-        new_heads = (
-            new_membership.join(
-                membership.join(F.broadcast(old_touched), "entity").select(
-                    "rec_id"
-                ),
-                "rec_id",
-            )
-            .select("entity")
-            .distinct()
-        )
-        touched_buckets = (
-            old_touched.select("entity")
-            .unionByName(new_heads)
-            .select(F.pmod("entity", F.lit(GOLDEN_BUCKETS)).alias("bucket"))
-            .distinct()
-        )
-        members = _member_rows(
-            people.join(new_membership, "rec_id"), F.col("entity")
-        )
-        rows = (
-            _bucketed(_golden_rows(members))
-            .join(F.broadcast(touched_buckets), "bucket", "left_semi")
-            .select(
-                "entity",
-                "n_members",
-                "name_mode",
-                "name_longest",
-                "city_latest",
-                "bucket",
-            )
-            .transform(fence, "retract_stream rows")
-        )
-        # per-bucket explicit overwrite, NOT dynamic-partition-overwrite:
-        # retraction can empty a bucket (its only entity tombstoned), and
-        # dynamic mode never rewrites a partition it has no rows for — the
-        # stale golden row would survive.  The bucket list is collect()ed
-        # but bounded by GOLDEN_BUCKETS, not data.
-        for b in sorted(
-            r.bucket for r in touched_buckets.distinct().collect()
-        ):
-            (
-                rows.filter(F.col("bucket") == b)
-                .drop("bucket")
-                .write.mode("overwrite")
-                .parquet(os.path.join(table_dir, f"bucket={b}"))
-            )
-
-    writer = (
-        deletes.writeStream.foreachBatch(apply_deletes).trigger(
-            availableNow=True
-        )
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
-def golden_maintenance_stream(
-    spark: SparkSession,
-    golden_dir: str,
-    n_files: int = 4,
-    checkpoint: str | None = None,
-    stage_dir: str | None = None,
-):
-    """Maintain a PERSISTENT golden table from the arrival drop stream —
-    the full production loop the assignment stream only emits rows for:
-    per micro-batch, (1) margin-assign the arrivals against the static
-    base, (2) write the batch's member rows idempotently under
-    ``members/batch=<id>/`` (a retried batch OVERWRITES its own
-    directory — foreachBatch's standard exactly-once-write recipe on a
-    non-transactional store), (3) recompute survivorship for every
-    entity in the BUCKETS this batch touches and dynamic-partition-
-    overwrite exactly those buckets of ``golden/``.
-
-    This is the classic pre-Delta MERGE: the golden table is
-    hash-partitioned on entity (``GOLDEN_BUCKETS``), so an upsert
-    rewrites only the affected partitions, never the table — at 100 TB
-    the rewrite cost per batch is (touched buckets / total buckets) of
-    the golden table, and buckets scale with the table.  On a
-    transactional format (Delta/Iceberg) steps 2-3 collapse into one
-    MERGE; the bucket-overwrite shape is the same plan underneath.
-
-    Restart safety: derived state only.  Member dirs are keyed by
-    batch_id (idempotent overwrite), golden buckets are a pure function
-    of base ∪ members (idempotent recompute), and the file-source
-    commit log (``checkpoint``) prevents reprocessing on restart."""
-    from pyspark.sql import functions as F
-
-    from changegen_spark.queries.er import (
-        _people,
-        incremental_assign_margin,
-    )
-
-    from changegen_spark.queries.er import ER_PATH
-
-    base = _people(spark).filter("rec_id < 400")
-    members_dir = os.path.join(golden_dir, "members")
-    table_dir = os.path.join(golden_dir, "golden")
-    # seed: every base entity is a singleton golden row (idempotent).
-    # The marker records the fixture's size+mtime (r11 advice — the same
-    # invalidation stage_arrival_files uses): a regenerated er_people
-    # fixture with a reused golden_dir must RESEED, not silently keep
-    # stale base rows.
-    st = os.stat(ER_PATH)
-    seed_key = f"{ER_PATH}|{st.st_size}|{st.st_mtime_ns}"
-    marker = os.path.join(golden_dir, "_SEEDED")
-    stale = True
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            stale = fh.read() != seed_key
-    if stale:
-        seed_members = _member_rows(base, F.col("rec_id"))
-        (
-            _bucketed(_golden_rows(seed_members))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(table_dir)
-        )
-        with open(marker, "w") as fh:
-            fh.write(seed_key)
-
-    stage = stage_dir or stage_arrival_files(spark, n_files=n_files)
-    schema = spark.read.parquet(stage).schema
-    arrivals = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(stage)
-    )
-
-    def merge(batch_df: DataFrame, batch_id: int) -> None:
-        assigned = incremental_assign_margin(batch_df, base).select(
-            "rec_id", "matched_entity"
-        )
-        batch_members = _member_rows(
-            batch_df.join(assigned, "rec_id"),
-            F.when(
-                F.col("matched_entity") >= 0, F.col("matched_entity")
-            ).otherwise(F.col("rec_id")),
-        )
-        # (2) idempotent member write: retrying batch N rewrites ONLY
-        # members/batch=N — never appends duplicates
-        batch_members.write.mode("overwrite").parquet(
-            os.path.join(members_dir, f"batch={batch_id}")
-        )
-        # (3) recompute the touched buckets from base ∪ all members
-        spark.catalog.refreshByPath(members_dir)
-        all_members = _member_rows(base, F.col("rec_id")).unionByName(
-            spark.read.option("basePath", members_dir)
-            .parquet(members_dir)
-            .select("entity", "rec_id", "nname", "city")
-        )
-        touched = (
-            batch_members.select(
-                F.pmod("entity", F.lit(GOLDEN_BUCKETS)).alias("bucket")
-            )
-            .distinct()
-        )
-        rows = _bucketed(
-            _golden_rows(
-                _bucketed(all_members).join(F.broadcast(touched), "bucket")
-                .select("entity", "rec_id", "nname", "city")
-            )
-        )
-        (
-            rows.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("bucket")
-            .parquet(table_dir)
-        )
-
-    writer = (
-        arrivals.writeStream.foreachBatch(merge).trigger(availableNow=True)
-    )
-    if checkpoint:
-        writer = writer.option("checkpointLocation", checkpoint)
-    return writer.start()
-
-
 def stage_lifecycle_frames(
     spark: SparkSession, out_dir: str, frames, t0: float
 ) -> str:
@@ -765,40 +157,6 @@ def stage_lifecycle_frames(
         shutil.rmtree(tmp)
         os.utime(dst, (t0 + i, t0 + i))
     return out_dir
-
-
-def stage_lifecycle_files(spark: SparkSession, out_dir: str, batches) -> str:
-    """Stage a composed-lifecycle event sequence: each element of
-    ``batches`` is a list of (kind, rec_id) pairs — kind 'arrive' pulls
-    the fixture row, kind 'delete' stages a bare retraction key.  One
-    file per batch, mtimes pinned in order."""
-    from pyspark.sql import functions as F
-
-    from changegen_spark.queries.er import ER_AMBIG_PATH
-
-    ppl = spark.read.parquet(ER_AMBIG_PATH)
-    frames = []
-    for evs in batches:
-        arr_ids = [r for k, r in evs if k == "arrive"]
-        del_ids = [r for k, r in evs if k == "delete"]
-        df = ppl.filter(F.col("rec_id").isin(arr_ids or [-1])).select(
-            F.lit("arrive").alias("kind"), "rec_id", "name", "city"
-        )
-        if del_ids:
-            df = df.unionByName(
-                spark.createDataFrame(
-                    [(int(r),) for r in del_ids], "rec_id long"
-                ).select(
-                    F.lit("delete").alias("kind"),
-                    "rec_id",
-                    F.lit(None).cast("string").alias("name"),
-                    F.lit(None).cast("string").alias("city"),
-                )
-            )
-        frames.append(df)
-    return stage_lifecycle_frames(
-        spark, out_dir, frames, os.stat(ER_AMBIG_PATH).st_mtime + 10
-    )
 
 
 def lifecycle_stream(
@@ -871,7 +229,7 @@ def lifecycle_stream(
     retraction a fresh observation legitimately starts a new entity.
 
     100 TB shape: the fixture-scale record snapshot stands in for a
-    bucketed upsert (same substitution as retract_stream); every probe
+    bucketed upsert; every probe
     is the two-key hash join of the batch operators, the drain is
     pool-sized, retraction work is touched-entity-sized, and golden
     rewrites are touched-bucket-sized."""

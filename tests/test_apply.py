@@ -80,36 +80,6 @@ def _rel_tables(spark):
     return nodes, ways, rels
 
 
-def test_relation_modify_delete_apply(spark):
-    """Relation modify (tags-only, extract members reused) + delete, folded
-    back through the member-aware apply."""
-    from changegen_spark.operators.apply import apply_changeset
-    from changegen_spark.pipeline import generate_relation_changes
-
-    nodes, ways, rels = _rel_tables(spark)
-    tables = {
-        "pbf_relations": rels,
-        "mod_relations": spark.createDataFrame(
-            [(100, "renamed", '"surface"=>"gravel"')],
-            "osm_id long, name string, tags string",
-        ),
-        "deleted_relations": spark.createDataFrame([(101,)], "osm_id long"),
-    }
-    cset = generate_relation_changes(spark, tables)
-    got = {r["id"]: r for r in cset.collect()}
-    assert got[100]["change_type"] == "modify" and got[100]["version"] == 2
-    assert got[100]["tags"]["name"] == "renamed"
-    assert got[100]["tags"]["surface"] == "gravel"  # hstore expanded
-    assert [m["ref"] for m in got[100]["members"]] == [10, 11]  # extract reuse
-    assert got[101]["change_type"] == "delete" and got[101]["version"] == 99
-
-    out = apply_changeset(nodes, ways, cset, pbf_relations=rels)
-    assert len(out) == 3
-    rels2 = {r["id"]: r for r in out[2].collect()}
-    assert set(rels2) == {100}  # 101 deleted
-    assert rels2[100]["tags"]["name"] == "renamed"
-
-
 @pytest.mark.slow
 def test_member_aware_prune_on_way_delete(spark):
     """Deleting a way referenced by a surviving relation: prune drops the

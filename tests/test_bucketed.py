@@ -7,12 +7,15 @@ from pyspark.sql import functions as F
 
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
-    from changegen_spark.sources.bucketed import colocate_fact_tables
+    from changegen_spark.sources.bucketed import write_bucketed
     from changegen_spark.sources.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem")
     orders = load_table(spark, sf_dir, "orders")
-    bli, bord = colocate_fact_tables(spark, li, orders, num_buckets=8)
+    # bucket both fact tables identically on the order key
+    write_bucketed(li, "colocated_lineitem", "l_orderkey", 8)
+    write_bucketed(orders, "colocated_orders", "o_orderkey", 8)
+    bli, bord = spark.table("colocated_lineitem"), spark.table("colocated_orders")
 
     # disable auto-broadcast so the big-big (sort-merge) case is exercised —
     # that's the join shape bucketing exists for

@@ -139,6 +139,27 @@ def test_cli_no_collisions_fatal(cli_dirs, tmp_path):
     assert not os.path.exists(out)
 
 
+def test_cli_collision_warns_by_default(cli_dirs, tmp_path, capsys):
+    """The same colliding --id_offset without --no_collisions only warns:
+    the run goes on and writes the changefile."""
+    from changegen_spark.__main__ import main
+
+    db, ext = cli_dirs
+    out = os.path.join(tmp_path, "collide.osc")
+    rc = main(
+        [
+            db,
+            "--osmsrc", ext,
+            "--output", out,
+            "--suffix", "_new",
+            "--id_offset", "0",
+        ]
+    )
+    assert rc == 0
+    assert "WARNING: Chosen ID offset 0 may cause collisions" in capsys.readouterr().err
+    assert os.path.getsize(out) > 0
+
+
 def test_cli_rejects_multi_geometries(spark, tmp_path):
     from changegen_spark.__main__ import _split_by_gtype
     from changegen_spark.geo.geometry import GEOMETRY

@@ -1200,7 +1200,7 @@ def test_new_entity_merge_consolidates_intra_batch_duplicates(spark):
 def test_retract_iterated_local_recompute_equals_global_property():
     """Property (pure Python, no Spark): the retraction algorithm's
     compositional claim — applying delete batches one at a time with
-    the TOUCHED-ENTITIES-ONLY recompute (retract_membership's logic:
+    the TOUCHED-ENTITIES-ONLY recompute (streaming/er.rehome_touched's logic:
     remaining members of touched entities, edges restricted to them,
     re-CC, min-id heads; untouched entities pass through) converges to
     exactly the global CC over the surviving nodes, for ANY graph and

@@ -1,5 +1,5 @@
-"""GeoJSON ingestion: FeatureCollection (fixture format) and geojsonl
-(distributed path) must parse to identical geometry structs."""
+"""GeoJSON ingestion of a FeatureCollection (the reference's fixture
+format): tags and geometry structs, and a feed into the pipeline."""
 
 import json
 
@@ -36,46 +36,18 @@ def gj(tmp_path_factory):
     d = tmp_path_factory.mktemp("gj")
     fc = d / "fixture.geojson"
     fc.write_text(json.dumps({"type": "FeatureCollection", "features": features}))
-    jl = d / "fixture.geojsonl"
-    jl.write_text("\n".join(json.dumps(f) for f in features))
-    return str(fc), str(jl)
+    return str(fc)
 
 
 def test_feature_collection_roundtrip(spark, gj):
     from changegen_spark.sources.geojson import read_feature_collection
 
-    fc, _ = gj
+    fc = gj
     rows = read_feature_collection(spark, fc).collect()
     assert len(rows) == 3
     line = next(r for r in rows if r["geometry"]["gtype"] == "LineString")
     assert line["tags"] == {"highway": "path", "name": "t1", "width": "2"}
     assert [(p["x"], p["y"]) for p in line["geometry"]["rings"][0]][0] == (-118.1, 48.5)
-
-
-def test_geojsonl_matches_feature_collection(spark, gj):
-    from changegen_spark.sources.geojson import (
-        read_feature_collection,
-        read_geojsonl,
-    )
-
-    fc, jl = gj
-    a = sorted(
-        (r["geometry"]["gtype"], str(r["geometry"]["rings"]))
-        for r in read_feature_collection(spark, fc).collect()
-    )
-    b = sorted(
-        (r["geometry"]["gtype"], str(r["geometry"]["rings"]))
-        for r in read_geojsonl(spark, jl).collect()
-    )
-    assert a == b
-
-
-def test_geojsonl_is_distributed_scan(spark, gj):
-    from changegen_spark.sources.geojson import read_geojsonl
-
-    _, jl = gj
-    plan = read_geojsonl(spark, jl)._jdf.queryExecution().executedPlan().toString()
-    assert "FileScan text" in plan  # executor-side parse, no driver collect
 
 
 def test_feature_collection_feeds_pipeline(spark, gj):
@@ -85,7 +57,7 @@ def test_feature_collection_feeds_pipeline(spark, gj):
     from changegen_spark.geo.mercator import to_3857_x, to_3857_y
     from changegen_spark.sources.geojson import read_feature_collection
 
-    fc, _ = gj
+    fc = gj
     df = read_feature_collection(spark, fc)
     lines = df.filter(F.col("geometry.gtype") == "LineString").select(
         F.posexplode(F.element_at("geometry.rings", 1)).alias("pos", "p")

@@ -153,33 +153,3 @@ def test_bfs_hops_shortest_distances(spark):
     # depth 4 reaches f
     got4 = {r["node"]: r["hops"] for r in bfs_hops(df, "a", max_hops=4).collect()}
     assert got4["f"] == 4
-
-
-def test_pagerank_converged_matches_reference_stop(spark):
-    """The convergence loop must stop at exactly the iteration where the
-    dict reference's max |delta| drops below eps, and produce identical
-    ranks — the integer recurrence makes the stop decision deterministic."""
-    from changegen_spark.queries.graph import INIT_E9, pagerank_converged
-
-    eps = 5_000_000  # 0.005 in e9 units — converges in a few iterations
-    # reference loop with the same stop rule
-    outdeg = {}
-    for s, _d in ARCS:
-        outdeg[s] = outdeg.get(s, 0) + 1
-    ranks = {n: INIT_E9 for n in outdeg}
-    ref_iters = 0
-    while ref_iters < 50:
-        ref_iters += 1
-        sums = {}
-        for s, d in ARCS:
-            sums[d] = sums.get(d, 0) + ranks[s] // outdeg[s]
-        new = {n: 150_000_000 + (85 * v + 50) // 100 for n, v in sums.items()}
-        delta = max(abs(new[n] - ranks[n]) for n in new)
-        ranks = new
-        if delta < eps:
-            break
-
-    df = spark.createDataFrame(ARCS, "src string, dst string")
-    got, iters = pagerank_converged(df, eps_e9=eps, checkpoint_every=2)
-    assert iters == ref_iters
-    assert {r["node"]: r["rank_e9"] for r in got.collect()} == ranks

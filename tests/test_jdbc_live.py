@@ -4,9 +4,8 @@ The container has no PostGIS server or Postgres JDBC driver, but it does
 ship the DuckDB JDBC driver — a genuine JDBC endpoint, which turns the
 r2 verdict's "a user pointing the CLI at a real database would be on
 untested code" into a live-tested path: discovery SQL, the partitioned
-read (4 real connections), predicate pushdown through the JDBC source,
-and the snapshot-to-parquet ingest all execute against an actual
-database file.  PostGIS-specific bits (ST_AsBinary export leg) remain
+read (4 real connections) and predicate pushdown through the JDBC
+source all execute against an actual database file.  PostGIS-specific bits (ST_AsBinary export leg) remain
 environmental.
 
 Runs in a subprocess: the JDBC jar must be on the driver classpath at
@@ -63,9 +62,7 @@ spark = (
     .getOrCreate()
 )
 
-from changegen_spark.sources.jdbc import (
-    discovery_query, jdbc_table_reader, snapshot_to_parquet,
-)
+from changegen_spark.sources.jdbc import discovery_query, jdbc_table_reader
 
 url = f"jdbc:duckdb:{dbfile}"
 props = {"driver": "org.duckdb.DuckDBDriver"}
@@ -100,19 +97,6 @@ assert flt.count() == 49
 # per-partition row balance: bounds stride 250 each
 sizes = df.rdd.glom().map(len).collect()
 assert sorted(sizes) == [250, 250, 250, 250], sizes
-
-# ingest: live DB -> parquet snapshot (the canonical-input path)
-out = os.path.join(workdir, "snap.parquet")
-snapshot_to_parquet(
-    spark, url, "original_ways_new", out,
-    partition_column="id", lower_bound=1, upper_bound=1001,
-    num_partitions=4, geometry_column=None, properties=props,
-)
-back = spark.read.parquet(out)
-assert back.count() == 1000
-assert {r["name"] for r in back.filter("id <= 3").collect()} == {
-    "way-1", "way-2", "way-3"
-}
 
 print("JDBC_LIVE_OK")
 """

@@ -76,17 +76,27 @@ def test_encode_matches_trained_vocab_state(spark):
         assert _encode_word(word, ranks) == rep[word], word
 
 
+def _bpe_tokens(text, merges):
+    """Driver-side BPE encoding of one document with trained merges."""
+    from changegen_spark.functions.bpe import _encode_word
+
+    ranks = {(l, r): i for i, (l, r, _m, _c) in enumerate(merges)}
+    return [t for w in text.split() for t in _encode_word(w, ranks)]
+
+
 def test_encode_udf_rebuilds_words(spark):
-    from changegen_spark.functions.bpe import bpe_encode_udf, bpe_train, word_counts
+    """Trained merges encode each document into tokens that concatenate
+    back to its words, and the count UDF counts exactly those tokens."""
+    from changegen_spark.functions.bpe import bpe_encode_count_udf, bpe_train, word_counts
 
     docs = spark.createDataFrame([(i, t) for i, t in enumerate(CORPUS)], "doc_id long, text string")
     merges = bpe_train(word_counts(docs), num_merges=8)
-    enc = bpe_encode_udf(merges)
-    out = docs.select("doc_id", enc(F.col("text")).alias("toks")).collect()
-    by_id = {r.doc_id: r.toks for r in out}
+    cnt = bpe_encode_count_udf(merges)
+    by_id = {r.doc_id: r.n for r in docs.select("doc_id", cnt(F.col("text")).alias("n")).collect()}
     for i, text in enumerate(CORPUS):
-        rebuilt = [w for w in "".join(by_id[i]).split("</w>") if w]
-        assert rebuilt == text.split()
+        toks = _bpe_tokens(text, merges)
+        assert [w for w in "".join(toks).split("</w>") if w] == text.split()
+        assert by_id[i] == len(toks)
 
 
 def test_encode_no_merges_is_chars(spark):
@@ -279,55 +289,43 @@ def test_kn_distributes_exactly_unit_mass_per_context(spark, sf_dir):
 
 
 def test_encode_count_udf_equals_array_size(spark):
-    """bpe_encode_count_udf must return exactly size(bpe_encode_udf) —
-    the r13 boundary optimization changes what crosses Arrow, not what is
-    computed."""
+    """bpe_encode_count_udf must return exactly the size of the encoded
+    token array, empty and blank documents included — the r13 boundary
+    optimization changes what crosses Arrow, not what is computed."""
     from changegen_spark.functions.bpe import (
         bpe_encode_count_udf,
-        bpe_encode_udf,
         bpe_train,
         word_counts,
     )
 
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(CORPUS)] + [(99, ""), (100, "   ")],
-        "doc_id long, text string",
-    )
+    texts = dict(enumerate(CORPUS)) | {99: "", 100: "   "}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     merges = bpe_train(word_counts(docs), num_merges=8)
-    arr = bpe_encode_udf(merges)
     cnt = bpe_encode_count_udf(merges)
-    rows = docs.select(
-        "doc_id",
-        F.size(arr(F.col("text"))).alias("n_arr"),
-        cnt(F.col("text")).alias("n_cnt"),
-    ).collect()
-    assert rows and all(r.n_arr == r.n_cnt for r in rows)
+    rows = docs.select("doc_id", cnt(F.col("text")).alias("n_cnt")).collect()
+    assert len(rows) == len(texts)
+    assert all(r.n_cnt == len(_bpe_tokens(texts[r.doc_id], merges)) for r in rows)
 
 
 def test_wordpiece_stats_udf_equals_array_form(spark):
-    """wordpiece_encode_stats_udf must equal (size(pieces),
-    size(filter(pieces, == UNK))) of the array encoder."""
+    """wordpiece_encode_stats_udf must equal the (length, UNK count) of
+    each document's encoded piece array."""
     from changegen_spark.functions.bpe import word_counts
     from changegen_spark.functions.wordpiece import (
         UNK,
+        encode_word,
         wordpiece_encode_stats_udf,
-        wordpiece_encode_udf,
         wordpiece_train,
     )
 
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(CORPUS)] + [(99, "zzz qqq")],
-        "doc_id long, text string",
-    )
+    texts = dict(enumerate(CORPUS)) | {99: "zzz qqq"}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
     _m, pieces = wordpiece_train(word_counts(docs), 8)
-    arr = wordpiece_encode_udf(pieces)
     st = wordpiece_encode_stats_udf(pieces)
-    rows = docs.select(
-        F.size(arr(F.col("text"))).alias("n_arr"),
-        F.size(F.filter(arr(F.col("text")), lambda x: x == UNK)).alias("u_arr"),
-        st(F.col("text")).alias("st"),
-    ).collect()
-    assert rows
+    rows = docs.select("doc_id", st(F.col("text")).alias("st")).collect()
+    assert len(rows) == len(texts)
+    frozen = frozenset(pieces)
     for r in rows:
-        assert r.st.n_pieces == r.n_arr
-        assert r.st.n_unk == r.u_arr
+        arr = [p for w in texts[r.doc_id].split() for p in encode_word(w, frozen)]
+        assert r.st.n_pieces == len(arr)
+        assert r.st.n_unk == arr.count(UNK)

@@ -3,35 +3,18 @@
 A skipped test is invisible in a green run; this file makes every skip
 gate explicit and re-evaluates each gate's LIVE condition, so a
 silently-broken test cannot hide among accreting skips and an
-environment change (protobuf appearing, a fixture vanishing) flips a
+environment change (a driver jar or a fixture vanishing) flips a
 visible assertion instead of silently changing coverage.
 """
 
-import importlib.util
 import pathlib
 import re
 
 
-def _has_module(name: str) -> bool:
-    try:
-        return importlib.util.find_spec(name) is not None
-    except ModuleNotFoundError:
-        return False
-
-
 def test_suite_skip_budget():
-    """Exactly ONE test may skip in this container: the
-    transformWithStateInPandas execution pin (Spark 4's state-server
-    protocol imports google.protobuf, which this container doesn't ship
-    and pip is unavailable).  The other gate (DuckDB JDBC jar) must be
-    LIVE here — if it starts skipping, coverage silently shrank and this
-    pin says so."""
-    # gate 1: the budgeted skip — protobuf absent in this container
-    assert not _has_module("google.protobuf"), (
-        "google.protobuf appeared: remove the skip budget and run "
-        "test_capped_balance_stream_matches_batch unconditionally"
-    )
-    # gate 2: must not skip
+    """No test may skip in this container.  The one gate (DuckDB JDBC
+    jar) must be LIVE here — if it starts skipping, coverage silently
+    shrank and this pin says so."""
     from test_jdbc_live import _find_jar
 
     assert _find_jar() is not None, "JDBC live tests would silently skip"
@@ -51,6 +34,5 @@ def test_skip_gates_are_enumerated():
         if n:
             found[p.name] = n
     assert found == {
-        "test_streaming.py": 1,  # google.protobuf gate (the 1 budgeted skip)
         "test_jdbc_live.py": 2,  # DuckDB JDBC jar gate (2 test classes)
     }, found

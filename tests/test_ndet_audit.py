@@ -17,8 +17,7 @@ Disposition vocabulary:
 - single-action: the frame is consumed by exactly one action (write
   path), so there is no second execution to diverge from.
 - value-irrelevant: the nondeterministic value never reaches the
-  result (0.0-multiplied codegen marker; salt under an associative
-  merge).
+  result (0.0-multiplied codegen marker).
 - const-per-group: F.first/last reads a column functionally dependent
   on the group key.
 - ordered-window: F.last over a window whose ORDER BY is a total key.
@@ -46,10 +45,6 @@ DISPOSITIONS = {
     ("changegen_spark/operators/ids.py", "prefix_sum", "repartitionByRange"):
         (1, "fenced (r9 site): the one ordered prefix sum; its ranged rows "
             "are fenced before the block sums and the join probe read them"),
-    ("changegen_spark/operators/skew.py", "two_phase_agg", "monotonically_increasing_id"):
-        (1, "value-irrelevant: salt only routes rows to partial-agg "
-            "buckets; sum/min/max merge is associative-commutative, so "
-            "ANY per-execution assignment yields the same final rows"),
     ("changegen_spark/geo/segments.py", "closest_point_cols", "rand"):
         (1, "value-irrelevant: dist + rand(7)*0.0 == dist (rand is "
             "finite); deliberate nondeterminism marker that stops "
@@ -105,11 +100,13 @@ def test_sweep_sees_the_whole_package():
     q_stratified_split, q_weighted_sample, the suffix-array rank and the
     three sorted-neighbourhood passes) became calls of the one
     operators/ids.prefix_sum, whose single repartitionByRange replaces
-    them."""
+    them; 52 (41 mechanically safe) once the code no entry point calls
+    was deleted, taking operators/skew.two_phase_agg's salt and
+    operators/quarantine.with_quarantine's ordered limit with it."""
     sites = sweep()
-    assert len(sites) >= 54, len(sites)
+    assert len(sites) >= 52, len(sites)
     mech_safe = [s for s in sites if s[3]]
-    assert len(mech_safe) >= 42, len(mech_safe)
+    assert len(mech_safe) >= 41, len(mech_safe)
 
 
 def test_sweep_rules_catch_known_shapes(tmp_path):

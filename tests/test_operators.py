@@ -45,13 +45,6 @@ def test_split_ways_short_way_passthrough(spark):
     assert out[0]["chunk"] == 0
 
 
-def test_close_ring(spark):
-    from changegen_spark.operators.ways import close_ring
-
-    df = spark.createDataFrame([([1, 2, 3],)], "nds array<long>")
-    assert df.select(close_ring(F.col("nds")).alias("r")).first()["r"] == [1, 2, 3, 1]
-
-
 def _vertices_df(spark, coords, px, py):
     rows = [("w1", i, float(x), float(y), float(px), float(py)) for i, (x, y) in enumerate(coords)]
     return spark.createDataFrame(
@@ -241,17 +234,6 @@ def test_hstore_parse_and_merge(spark):
     # column precedence: hstore 'name' discarded
     assert merged["name"] == "column-name"
     assert merged["amenity"] == "cafe"
-
-
-def test_unpivot_tags(spark):
-    from changegen_spark.operators.tags import unpivot_tags
-
-    df = spark.createDataFrame(
-        [(1, "path", None, 3)], "fid long, highway string, name string, z int"
-    )
-    out = unpivot_tags(df, ["fid"], exclude=("fid",)).first()["tags"]
-    # null dropped, int stringified
-    assert out == {"highway": "path", "z": "3"}
 
 
 def test_mercator_roundtrip(spark):

@@ -201,7 +201,6 @@ def test_junction_cell_at_zero_resolves(spark, tables):
             "pbf_ways": spark.createDataFrame([(1, [1, 2], {})], tables["pbf_ways"].schema),
         },
         id_offset=ID_OFFSET,
-        check_collision=False,
     ).collect()
 
     at_origin = [
@@ -378,11 +377,12 @@ def test_degenerate_ring_is_not_a_member(spark, tables):
     assert [(m["ref"], m["role"]) for m in rel["members"]] == [(min(way_ids), "outer")]
 
 
-def test_collision_abort_restores_session_state(spark, tables):
-    """The collision guard's fail-fast abort must leave the session's
-    planning confs as they were and no stage-pool thread running — r3
-    regression guard for the overlapped head's pool, which the abort
-    leaves through its ``with`` block."""
+def test_stage_failure_restores_session_state(spark, tables):
+    """A stage that fails inside the stage pool must leave the session's
+    planning confs as they were and no pool thread running: the failure
+    leaves the pool through its ``with`` block, which joins it.  Stage C
+    (modified ways) needs ``pbf_ways``; without it the stage raises on
+    its pool thread."""
     import threading
 
     from changegen_spark.pipeline import generate_changes
@@ -392,9 +392,10 @@ def test_collision_abort_restores_session_state(spark, tables):
         "spark.sql.constraintPropagation.enabled",
     )
     prev = {k: spark.conf.get(k) for k in keys}
+    no_pbf_ways = {k: v for k, v in tables.items() if k != "pbf_ways"}
     before = set(threading.enumerate())
-    with pytest.raises(ValueError, match="collide") as excinfo:
-        generate_changes(spark, tables, id_offset=0)  # max pbf id > 0
+    with pytest.raises(KeyError, match="pbf_ways") as excinfo:
+        generate_changes(spark, no_pbf_ways, id_offset=ID_OFFSET)
     assert {k: spark.conf.get(k) for k in keys} == prev
     # The held traceback keeps the failed frame, and any pool it owns,
     # alive, as a caller that keeps the error would: only an explicit join
@@ -408,13 +409,13 @@ def test_collision_abort_restores_session_state(spark, tables):
 
 @pytest.mark.slow
 def test_emit_osm_id_tag_reference_compat(spark, tables):
-    """emit_osm_id_tag=True re-emits the source osm_id as a tag on modified
+    """reference_bytes=True re-emits the source osm_id as a tag on modified
     intersecting ways (the reference's actual modify-path output,
     generator.py:812-813); default run excludes it."""
     from changegen_spark.pipeline import generate_changes
 
     cs = generate_changes(
-        spark, tables, id_offset=ID_OFFSET, emit_osm_id_tag=True
+        spark, tables, id_offset=ID_OFFSET, reference_bytes=True
     )
     mods = cs.filter(
         (F.col("kind") == "way") & (F.col("change_type") == "modify")

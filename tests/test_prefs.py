@@ -153,6 +153,14 @@ def test_rater_agreement_matches_independent_kappa(spark, sf_dir):
     assert all(v > 0 for v in k.values())  # all raters beat chance
 
 
+def _rater_weights(spark, sf_dir):
+    """Per-rater reliability weights from q_rater_agreement's kappas."""
+    from changegen_spark.queries.prefs import _weights_from_kappas, q_rater_agreement
+
+    rows = q_rater_agreement(spark, sf_dir).collect()
+    return _weights_from_kappas({(r.rater_a, r.rater_b): int(r.kappa_e6) for r in rows})
+
+
 def test_weighted_bt_beats_unweighted_on_planted_truth(spark, sf_dir):
     """r8 verdict #5: the reliability-weighted fit must land measurably
     closer to the noise-free fit than the equal-weight fit over the SAME
@@ -165,10 +173,9 @@ def test_weighted_bt_beats_unweighted_on_planted_truth(spark, sf_dir):
         bt_weighted_fit,
         q_bt_scores,
         q_bt_weighted,
-        rater_weights_e2,
     )
 
-    ws = rater_weights_e2(spark, sf_dir)
+    ws = _rater_weights(spark, sf_dir)
     # weights must track the planted noise ordering: flip% 5 < 15 < 30
     assert ws[0] > ws[2] and ws[1] > ws[2], ws
     assert all(w > 0 for w in ws), ws  # every rater beats chance
@@ -205,14 +212,12 @@ def test_weighted_bt_all_zero_weights_degrades_to_unweighted(spark, sf_dir):
 
 def test_kappas_from_cells_match_rater_agreement(spark, sf_dir):
     """r13 one-pass optimization: the driver-side kappa replay over the
-    _wcells artifact must be integer-identical to q_rater_agreement, and
-    the derived weights must match rater_weights_e2."""
+    _wcells artifact must be integer-identical to q_rater_agreement, so
+    the weights derived from either match."""
     from changegen_spark.queries.prefs import (
         _kappas_from_cells,
         _wcells,
-        _weights_from_kappas,
         q_rater_agreement,
-        rater_weights_e2,
     )
 
     cells = _wcells(spark, sf_dir)
@@ -222,7 +227,6 @@ def test_kappas_from_cells_match_rater_agreement(spark, sf_dir):
         for r in q_rater_agreement(spark, sf_dir).collect()
     }
     assert got == want
-    assert _weights_from_kappas(got) == rater_weights_e2(spark, sf_dir)
 
 
 def test_div_trunc_matches_spark_div():

@@ -56,53 +56,3 @@ def test_shard_export_deterministic_and_verifiable(spark, sf_dir, tmp_path):
     with open(victim, "w") as f:
         f.writelines(lines)
     assert not verify_training_shards(spark, p1)["ok"]
-
-
-def test_epoch_shards_reproducible_and_pos_ordered(spark, sf_dir, tmp_path):
-    """The Feistel write path (r7 verdict #7): two independent writes of
-    the same epoch produce byte-identical shard files regardless of input
-    partitioning; per shard, rows ascend by pos; shard membership is
-    pos % n_shards; a different epoch is a different permutation."""
-    import json as _json
-
-    from changegen_spark.queries.ordering import feistel_pos
-    from changegen_spark.sinks.shards import write_epoch_shards
-
-    docs = (
-        spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-        .select("doc_id", "lang")
-        .filter("doc_id < 64")
-    )
-    p1, p2, p3 = str(tmp_path / "a"), str(tmp_path / "b"), str(tmp_path / "c")
-    m1 = write_epoch_shards(docs, p1, "doc_id", epoch=1, n_shards=4)
-    m2 = write_epoch_shards(docs.repartition(7), p2, "doc_id", epoch=1, n_shards=4)
-    assert m1 == m2
-    assert sum(m1["shards"].values()) == 64
-    f1, f2 = _file_md5s(p1), _file_md5s(p2)
-    assert len(f1) == 4  # one file per shard
-    assert list(f1.values()) == list(f2.values())  # byte-identical re-run
-
-    # per-shard pos order + membership, straight off the bytes on disk
-    seen_ids = []
-    for sh in range(4):
-        (fp,) = glob.glob(os.path.join(p1, f"shard={sh}", "*.json"))
-        rows = [_json.loads(l) for l in open(fp)]
-        poss = [r["pos"] for r in rows]
-        assert poss == sorted(poss) and len(set(poss)) == len(poss)
-        assert all(p % 4 == sh for p in poss)
-        seen_ids += [r["doc_id"] for r in rows]
-    assert sorted(seen_ids) == list(range(64))  # a permutation, nothing lost
-
-    # epoch 2 is a DIFFERENT reproducible order
-    write_epoch_shards(docs, p3, "doc_id", epoch=2, n_shards=4)
-    assert _file_md5s(p3) != f1
-    # and pos agrees with the queryable expression for spot ids
-    expr = {
-        r.doc_id: r.pos
-        for r in docs.select(
-            "doc_id", feistel_pos("doc_id", 1).alias("pos")
-        ).collect()
-    }
-    (fp,) = glob.glob(os.path.join(p1, "shard=0", "*.json"))
-    for r in (_json.loads(l) for l in open(fp)):
-        assert expr[r["doc_id"]] == r["pos"]

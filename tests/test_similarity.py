@@ -136,31 +136,6 @@ def test_pq_codes_artifact_roundtrip(vectors, queries, tmp_path):
     assert persisted == inline
 
 
-@pytest.mark.slow
-def test_ivfpq_composite(vectors, queries):
-    """IVF+PQ (the FAISS-style production composite): results must be a
-    subset of the probed cells' members, deterministic across runs, and
-    recall must be within quantization reach of plain PQ (the IVF pruning
-    can only lose what the probe misses)."""
-    from changegen_spark.functions.similarity import (
-        brute_force_topk, ivfpq_topk, pq_topk,
-    )
-
-    a = _result_map(
-        ivfpq_topk(vectors, queries, k=10, n_cells=8, n_probe=6, m=16, ks=64)
-    )
-    b = _result_map(
-        ivfpq_topk(vectors, queries, k=10, n_cells=8, n_probe=6, m=16, ks=64)
-    )
-    assert a == b
-    exact = _result_map(brute_force_topk(vectors, queries, k=10))
-    pq_only = _result_map(pq_topk(vectors, queries, k=10, m=16, ks=64))
-    r_comp = _mean_recall(exact, a, 10)
-    r_pq = _mean_recall(exact, pq_only, 10)
-    assert r_comp >= r_pq - 0.2  # probe-6-of-8 loses at most the tail
-    assert r_comp >= 0.3
-
-
 def test_recall_golden_lsh_registry(vectors):
     """q_ann_lsh's banded config: r2 single band 0.16 → r3 4 bands 0.40 →
     r5 8 bands measured 0.76 — floor 0.65."""

@@ -1,74 +1,11 @@
-"""Salted-join / two-phase-agg equivalence and quarantine routing tests."""
-
-from pyspark.sql import functions as F
-
-
-def test_salted_join_matches_plain_join(spark):
-    from changegen_spark.operators.skew import salted_join
-
-    # heavy skew: 90% of rows share key 1
-    big = spark.range(0, 10_000).select(
-        F.when(F.col("id") % 10 < 9, F.lit(1)).otherwise(F.col("id") % 100).alias("k"),
-        F.col("id").alias("v"),
-    )
-    small = spark.range(0, 100).select(
-        F.col("id").cast("int").alias("k"), (F.col("id") * 10).alias("w")
-    )
-    plain = big.join(small, "k").groupBy("k").agg(F.count("*").alias("n"), F.sum("v").alias("s"))
-    salted = salted_join(big, small, "k", salt=8).groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("v").alias("s")
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-
-def test_two_phase_agg_matches_plain_agg(spark):
-    from changegen_spark.operators.skew import two_phase_agg
-
-    df = spark.range(0, 5_000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
-    )
-    plain = df.groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("v").alias("s"), F.max("v").alias("m")
-    )
-    two = two_phase_agg(
-        df,
-        ["k"],
-        {
-            "n": (F.count("*"), "sum"),
-            "s": (F.sum("v"), "sum"),
-            "m": (F.max("v"), "max"),
-        },
-        salt=8,
-    )
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, two.collect()))
-
-
-def test_quarantine_routing(spark):
-    from changegen_spark.operators.quarantine import geometry_checks, with_quarantine
-
-    rows = [
-        (1, {"gtype": "Point", "rings": [[{"x": 1.0, "y": 2.0}]]}),
-        (2, None),  # null geometry
-        (3, {"gtype": "MultiPolygon", "rings": [[{"x": 0.0, "y": 0.0}]]}),  # bad type
-        (4, {"gtype": "LineString", "rings": [[]]}),  # degenerate
-    ]
-    df = spark.createDataFrame(
-        rows,
-        "fid int, geometry struct<gtype:string, rings:array<array<struct<x:double,y:double>>>>",
-    )
-    good, bad = with_quarantine(df, geometry_checks())
-    assert [r["fid"] for r in good.collect()] == [1]
-    reasons = {r["fid"]: set(r["__reasons"]) for r in bad.collect()}
-    assert reasons[2] == {"null_geometry", "unsupported_type", "degenerate_ring"}
-    assert reasons[3] == {"unsupported_type"}
-    assert reasons[4] == {"degenerate_ring"}
+"""Skew handling of the spatial grid join: AQE splits a hot cell."""
 
 
 def test_grid_join_hot_cell_aqe_skew_split(spark):
     """A pathological 100:1 hot grid cell must (a) produce exact results
     and (b) be SPLIT by AQE's skew-join handling rather than funneling
-    into a single task — the runtime half of SCALE.md's hot-bucket story
-    for the spatial joins (salted_join is the static half).
+    into a single task — SCALE.md's hot-cell story for the spatial
+    joins.
 
     Thresholds are lowered so the KB-scale fixture crosses AQE's
     skew-detection bars; what is being pinned is that the grid join's

@@ -69,47 +69,6 @@ def test_hopping_windows_stream_matches_batch(spark, sf_dir):
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in expected.collect()]
 
 
-def test_capped_balance_stream_plan_builds(spark, sf_dir):
-    """transformWithStateInPandas plan constructs with the right schema
-    (execution needs google.protobuf — gated below)."""
-    from changegen_spark.streaming.events import capped_balance_stream
-
-    df = capped_balance_stream(spark, sf_dir)
-    assert df.isStreaming
-    assert df.columns == [
-        "user_id",
-        "n_events",
-        "final_balance",
-        "n_cap_hits",
-        "n_floor_hits",
-    ]
-
-
-def test_capped_balance_stream_matches_batch(spark, sf_dir):
-    """Stream == batch == recursive-CTE oracle: the same recurrence's
-    third execution (import-gated: transformWithState needs protobuf)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from changegen_spark.queries.events import q_capped_balance
-    from changegen_spark.streaming.events import (
-        capped_balance_stream,
-        run_to_memory_sink,
-    )
-
-    got = run_to_memory_sink(
-        capped_balance_stream(spark, sf_dir), "t_capped_bal", mode="update"
-    )
-    # update mode: last emitted row per user is the final state
-    import collections
-
-    final = {}
-    for r in got.collect():
-        final[r.user_id] = tuple(r)
-    exp = {r.user_id: tuple(r) for r in q_capped_balance(spark, sf_dir).collect()}
-    assert final == exp
-
-
 def test_sessionize_stream_matches_batch_sessionization(spark, sf_dir):
     """session_window must agree with the batch lag/cumsum sessionization on
     session count and per-user event totals."""
@@ -205,86 +164,6 @@ def test_change_feed_ids_have_no_global_window(spark, sf_dir):
     for line in plan.splitlines():
         if "windowspecdefinition(event_id" in line:
             raise AssertionError(f"global window over data: {line}")
-
-
-def test_custom_state_sessionization_matches_batch(spark, sf_dir):
-    """applyInPandasWithState sessionization must agree with the batch
-    lag/cumsum sessionization on completed sessions (the final open session
-    per user stays in state when input ends — excluded from comparison)."""
-    from changegen_spark.queries.events import q_sessionize
-    from changegen_spark.streaming.events import (
-        run_to_memory_sink,
-        sessionize_custom_state,
-        stream_events,
-    )
-
-    stream = stream_events(spark, sf_dir).filter(F.col("user_id") % 10 == 0)
-    got = run_to_memory_sink(
-        sessionize_custom_state(stream), "t_custom_sessions", mode="append"
-    )
-    batch = q_sessionize(spark, sf_dir)
-    # Each user's final session stays in state at end-of-input UNLESS the
-    # final watermark already passed its timeout (then it's emitted via
-    # EventTimeTimeout).  So: gap-closed (non-final) sessions must ALL be
-    # emitted, and every emitted session must be a genuine batch session.
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id")
-    completed = (
-        batch.withColumn("max_seq", F.max("session_seq").over(w))
-        .filter(F.col("session_seq") < F.col("max_seq"))
-    )
-    g = {
-        (r["user_id"], str(r["session_start"]), str(r["session_end"]), r["n_events"])
-        for r in got.withColumn("session_start", F.date_format("session_start", "yyyy-MM-dd HH:mm:ss"))
-        .withColumn("session_end", F.date_format("session_end", "yyyy-MM-dd HH:mm:ss"))
-        .collect()
-    }
-    b_completed = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in completed.collect()
-    }
-    b_all = {
-        (r["user_id"], r["session_start"], r["session_end"], r["n_events"])
-        for r in batch.collect()
-    }
-    assert b_completed <= g  # every gap-closed session emitted
-    assert g <= b_all  # nothing emitted that isn't a real session
-    # the extras are exactly timed-out final sessions
-    assert all(s in b_all - b_completed for s in g - b_completed)
-
-
-def test_anomaly_stream_matches_batch_flags(spark, sf_dir):
-    """Streaming z-scores against the static baseline must equal the batch
-    q_moving_avg z/flag on every observed (non-empty) hour."""
-    from changegen_spark.queries.timeseries import q_moving_avg
-    from changegen_spark.streaming.events import (
-        anomaly_stream,
-        hourly_count_stats,
-        run_to_memory_sink,
-        stream_events,
-    )
-
-    stats = hourly_count_stats(spark, sf_dir)
-    stream = anomaly_stream(stream_events(spark, sf_dir), stats)
-    # complete mode: emit every window (append would withhold the windows
-    # the final watermark hasn't closed — eviction-based lateness, GAPS.md)
-    got = {
-        (r["event_type"], r["hour_start"]): (r["c"], r["z"], r["is_anomaly"])
-        for r in run_to_memory_sink(stream, "anomalies", mode="complete").collect()
-    }
-    assert got  # the finite source produced output
-
-    import datetime as dt
-
-    batch = {}
-    for r in q_moving_avg(spark, sf_dir).collect():
-        if r["c"] > 0:  # stream emits only observed hours
-            hs = dt.datetime.fromtimestamp(
-                r["hour"] * 3600, dt.timezone.utc
-            ).strftime("%Y-%m-%d %H:%M:%S")
-            batch[(r["event_type"], hs)] = (r["c"], r["z"], r["is_anomaly"])
-    assert got == batch
 
 
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
@@ -401,678 +280,39 @@ def test_hll_stream_matches_batch(spark, sf_dir):
         assert abs(est[g] - n) <= max(3.0, rel_err * n), (g, est[g], n)
 
 
-def test_win_matrix_stream_matches_batch(spark, sf_dir):
-    """The streaming preference win matrix equals the batch q_win_matrix
-    exactly: count/sum state is merge-safe, so micro-batch splits cannot
-    move a cell; state is the ≤N²/2 item-pair lattice, not the stream."""
-    from changegen_spark.queries.prefs import q_win_matrix
-    from changegen_spark.streaming.events import (
-        run_to_memory_sink,
-        stream_events,
-        win_matrix_stream,
-    )
-
-    got = run_to_memory_sink(
-        win_matrix_stream(stream_events(spark, sf_dir)),
-        "t_win_matrix",
-        mode="complete",
-    ).orderBy("item_a", "item_b")
-    expected = q_win_matrix(spark, sf_dir)
-    assert [tuple(r) for r in got.collect()] == [
-        tuple(r) for r in expected.collect()
-    ]
-
-
-def test_rater_agreement_stream_matches_batch(spark, sf_dir):
-    """The streaming rater-reliability monitor equals the batch
-    q_rater_agreement exactly (wide vs long form): the kappa sufficient
-    statistics are sums, so micro-batch splits cannot move a counter;
-    state is one row regardless of stream length."""
-    from changegen_spark.queries.prefs import q_rater_agreement
-    from changegen_spark.streaming.events import (
-        rater_agreement_stream,
-        run_to_memory_sink,
-        stream_events,
-    )
-
-    got = run_to_memory_sink(
-        rater_agreement_stream(stream_events(spark, sf_dir)),
-        "t_rater_agreement",
-        mode="complete",
-    ).collect()
-    assert len(got) == 1
-    wide = got[0].asDict()
-    batch = q_rater_agreement(spark, sf_dir).collect()
-    for r in batch:
-        assert wide["n"] == r.n
-        assert wide[f"agree_{r.rater_a}_{r.rater_b}"] == r.agree
-        assert wide[f"kappa_{r.rater_a}_{r.rater_b}_e6"] == r.kappa_e6
-
-
-def test_elo_stream_matches_independent_fold(spark, sf_dir):
-    """Online Elo over the judgment stream: an independent hashlib+loop
-    reimplementation over the (ts, event_id)-ordered batch log is the
-    expectation (single-batch availableNow run, where arrival order =
-    global order).  Pins: exact rating vector, zero-sum conservation
-    (Σratings = N·INIT), and that the online ordering tracks the planted
-    strengths (strongest item rated above weakest)."""
-    import hashlib
-
-    from changegen_spark.queries.prefs import N_ITEMS
-    from changegen_spark.sources.tables import load_table
-    from changegen_spark.streaming.events import (
-        ELO_INIT,
-        ELO_K,
-        elo_stream,
-        run_to_memory_sink,
-        stream_events,
-    )
-
-    got = run_to_memory_sink(
-        elo_stream(stream_events(spark, sf_dir)), "t_elo", mode="update"
-    )
-    # update mode emits one leaderboard per micro-batch; keep the final
-    # (availableNow over one file = one batch, but stay order-robust)
-    rows = got.orderBy(F.col("n_games").desc(), "item").collect()[:N_ITEMS]
-    final = {r.item: (r.rating, r.n_games) for r in rows}
-
-    def h60(s):
-        return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-
-    ev = (
-        load_table(spark, sf_dir, "events")
-        .select("ts", "event_id")
-        .orderBy("ts", "event_id")
-        .collect()
-    )
-    ratings, n = [ELO_INIT] * N_ITEMS, 0
-    for r in ev:
-        e = str(r.event_id)
-        ia, ib = h60(f"{e}:pa") % N_ITEMS, h60(f"{e}:pb") % N_ITEMS
-        if ia == ib:
-            continue
-        aw = h60(f"{e}:pw") % (ia + ib + 2) < ia + 1
-        ea = 1.0 / (1.0 + 10.0 ** ((ratings[ib] - ratings[ia]) / 400.0))
-        delta = round(ELO_K * ((1.0 if aw else 0.0) - ea))
-        ratings[ia] += delta
-        ratings[ib] -= delta
-        n += 1
-    assert final == {i: (ratings[i], n) for i in range(N_ITEMS)}
-    assert sum(r for r, _ in final.values()) == N_ITEMS * ELO_INIT
-    assert final[N_ITEMS - 1][0] > final[0][0]  # planted order recovered
-
-
-def test_incremental_er_stream_matches_batch_assignment(spark):
-    """Stream-static incremental ER: the union of per-micro-batch
-    assignments must equal the batch q_er_incremental result exactly —
-    legal because each arrival's assignment depends only on the static
-    base, never on other arrivals (stateless by construction)."""
-    from changegen_spark.queries.er import q_er_incremental
-    from changegen_spark.streaming.er import incremental_er_stream
-
-    got = []
-    n_batches = []
-
-    def collect(df, batch_id):
-        got.extend(
-            (r.rec_id, r.matched_entity, r.lev, r.n_matches)
-            for r in df.collect()
-        )
-        n_batches.append(batch_id)
-
-    q = incremental_er_stream(spark, collect, n_files=4)
-    q.awaitTermination(120)
-    assert len(n_batches) >= 2, "want multiple micro-batches"
-    want = [
-        (r.rec_id, r.matched_entity, r.lev, r.n_matches)
-        for r in q_er_incremental(spark, "").collect()
-    ]
-    assert sorted(got) == sorted(want)
-
-
-def test_incremental_er_stream_order_permutation_parity(spark, tmp_path):
-    """Dropping the SAME arrival files in a different order must produce
-    the identical final assignment table (r10 verdict #7): assignment is
-    stateless per arrival against a static base, so nothing may depend
-    on micro-batch sequencing.  The file copies get explicitly PINNED
-    mtimes one second apart in copy order (r12: fast copies all landed
-    in the same millisecond, and the file source's same-mtime tie-break
-    is listing-order — arbitrary — so the "permutation is real" check
-    was flaky), so the file-source's (mtime, path) ordering provably
-    differs between the two runs — the per-batch compositions are
-    asserted to differ, so the parity claim is tested against a real
-    permutation, not two identical schedules."""
-    import glob
+def _stage_lifecycle_files(spark, out_dir, batches):
+    """Stage a composed-lifecycle event sequence: each element of
+    ``batches`` is a list of (kind, rec_id) pairs — kind 'arrive' pulls
+    the er_ambig fixture row, kind 'delete' stages a bare retraction
+    key.  One file per batch, mtimes pinned in order."""
     import os
-    import shutil
-
-    from changegen_spark.streaming.er import (
-        incremental_er_stream,
-        stage_arrival_files,
-    )
-
-    stage = stage_arrival_files(spark, n_files=4)
-    parts = sorted(glob.glob(os.path.join(stage, "part-*.parquet")))
-    assert len(parts) >= 3
-    finals, batch0 = [], []
-    for tag, order in (("fwd", parts), ("rev", list(reversed(parts)))):
-        d = tmp_path / f"drop_{tag}"
-        d.mkdir()
-        t0 = os.stat(parts[0]).st_mtime + 10
-        for i, src in enumerate(order):
-            dst = d / f"{i:02d}.parquet"
-            shutil.copy(src, dst)
-            os.utime(dst, (t0 + i, t0 + i))
-        got, first = [], []
-
-        def collect(df, batch_id, got=got, first=first):
-            rows = [
-                (r.rec_id, r.matched_entity, r.lev, r.n_matches)
-                for r in df.collect()
-            ]
-            got.extend(rows)
-            if batch_id == 0:
-                first.extend(rows)
-
-        q = incremental_er_stream(spark, collect, stage_dir=str(d))
-        q.awaitTermination(120)
-        assert len(got) == 80
-        finals.append(sorted(got))
-        batch0.append(sorted(first))
-    # the permutation must be real (first micro-batches differ) ...
-    assert batch0[0] != batch0[1]
-    # ... and the final table must not care
-    assert finals[0] == finals[1]
-
-
-def test_golden_maintenance_stream_converges_and_is_restart_safe(
-    spark, tmp_path
-):
-    """The streamed golden table (bucket-partition-overwrite MERGE per
-    micro-batch) must converge to exactly the survivorship a from-
-    scratch computation over base ∪ all arrivals produces — batch
-    boundaries must leave no trace (mode counts accumulate across
-    batches through the members table) — and a checkpointed re-run
-    must process zero batches and leave the table byte-identical."""
-    import pyspark.sql.functions as F
-
-    from changegen_spark.queries.er import (
-        _people,
-        q_er_incremental_margin,
-    )
-    from changegen_spark.streaming.er import (
-        _golden_rows,
-        _member_rows,
-        golden_maintenance_stream,
-    )
-
-    gdir, ckpt = str(tmp_path / "golden"), str(tmp_path / "ckpt")
-    q = golden_maintenance_stream(spark, gdir, checkpoint=ckpt)
-    q.awaitTermination(180)
-
-    def read_table():
-        spark.catalog.refreshByPath(gdir + "/golden")
-        return sorted(
-            (r.entity, r.n_members, r.name_mode, r.name_longest,
-             r.city_latest)
-            for r in spark.read.parquet(gdir + "/golden")
-            .drop("bucket")
-            .collect()
-        )
-
-    got = read_table()
-    # expected: base singletons ∪ arrivals folded by the SAME margin
-    # assignment, survivorship recomputed from scratch in one pass
-    ppl = _people(spark)
-    base = ppl.filter("rec_id < 400")
-    assigned = q_er_incremental_margin(spark, "").select(
-        "rec_id", "matched_entity"
-    )
-    arr_members = _member_rows(
-        ppl.filter("rec_id >= 400").join(assigned, "rec_id"),
-        F.when(
-            F.col("matched_entity") >= 0, F.col("matched_entity")
-        ).otherwise(F.col("rec_id")),
-    )
-    want = sorted(
-        (r.entity, r.n_members, r.name_mode, r.name_longest, r.city_latest)
-        for r in _golden_rows(
-            _member_rows(base, F.col("rec_id")).unionByName(arr_members)
-        ).collect()
-    )
-    assert got == want
-    # every entity is represented exactly once (400 base + new
-    # singletons for unmatched/ambiguous arrivals)
-    assert len({e for e, *_ in got}) == len(got) >= 400
-    # restart: zero new batches, table untouched
-    q2 = golden_maintenance_stream(spark, gdir, checkpoint=ckpt)
-    q2.awaitTermination(120)
-    assert read_table() == got
-
-
-def test_incremental_er_stream_restart_is_exactly_once(spark, tmp_path):
-    """With a real checkpoint, a second run of the same availableNow
-    stream processes ZERO new batches — the file-source commit log is
-    the exactly-once guarantee a production upsert sink relies on."""
-    from changegen_spark.streaming.er import incremental_er_stream
-
-    ckpt = str(tmp_path / "ckpt")
-    first = []
-    q = incremental_er_stream(
-        spark, lambda df, i: first.extend(df.collect()), checkpoint=ckpt
-    )
-    q.awaitTermination(120)
-    assert len(first) == 80
-    second = []
-    q2 = incremental_er_stream(
-        spark, lambda df, i: second.extend(df.collect()), checkpoint=ckpt
-    )
-    q2.awaitTermination(120)
-    assert second == []
-
-
-def _stage_ambig_ordered(spark, tmp_path, groups):
-    """Write one drop file per rec_id group, mtimes pinned in group
-    order, so micro-batches process the groups in sequence."""
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
 
     from changegen_spark.queries.er import ER_AMBIG_PATH
+    from changegen_spark.streaming.er import stage_lifecycle_frames
 
-    arr = spark.read.parquet(ER_AMBIG_PATH).filter("rec_id >= 400")
-    d = tmp_path / "drop"
-    d.mkdir()
-    t0 = os.stat(ER_AMBIG_PATH).st_mtime + 10
-    for i, ids in enumerate(groups):
-        tmp = str(tmp_path / f"g{i}")
-        arr.filter(F.col("rec_id").isin(ids)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dst = str(d / f"{i:02d}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-    return str(d)
-
-
-def _read_resolve_state(spark, state_dir):
-    import glob
-    import os
-
-    drained = {}
-    for p in sorted(glob.glob(os.path.join(state_dir, "drained", "batch=*"))):
-        spark.catalog.refreshByPath(p)
-        for r in spark.read.parquet(p).collect():
-            assert r.rec_id not in drained, "terminal dispositions are final"
-            drained[r.rec_id] = (r.matched_entity, r.status)
-    pools = sorted(
-        glob.glob(os.path.join(state_dir, "pool", "batch=*")),
-        key=lambda p: int(p.rsplit("=", 1)[1]),
-    )
-    spark.catalog.refreshByPath(pools[-1])
-    final_pool = {r.rec_id for r in spark.read.parquet(pools[-1]).collect()}
-    return drained, final_pool
-
-
-def test_resolve_stream_carried_pool_matches_batch_operator(spark, tmp_path):
-    """The pool-carrying stream (confident arrivals landing AFTER the
-    ties that need them) must reach exactly the one-shot batch
-    operator's terminal dispositions: the ambiguous arrivals are parked
-    in batch 0, carried across TWO batches, and drained as their
-    resolvers land — pinning both the carry mechanics and stream ≡
-    batch parity for resolver-no-later orderings."""
-    from changegen_spark.queries.er import q_er_ambiguous_resolve
-    from changegen_spark.streaming.er import resolve_maintenance_stream
-
-    stage = _stage_ambig_ordered(
-        spark,
-        tmp_path,
-        [
-            [401, 402, 405, 407, 413],
-            [400, 409, 410, 411],
-            [403, 404, 406, 408, 412],
-        ],
-    )
-    state = str(tmp_path / "state")
-    q = resolve_maintenance_stream(spark, state, stage_dir=stage)
-    q.awaitTermination(180)
-    drained, final_pool = _read_resolve_state(spark, state)
-
-    want = {
-        r.rec_id: (r.matched_entity, r.status)
-        for r in q_er_ambiguous_resolve(spark, "").collect()
-    }
-    want_drained = {
-        k: v for k, v in want.items() if v[1] != "still_ambiguous"
-    }
-    assert drained == want_drained
-    assert final_pool == {
-        k for k, v in want.items() if v[1] == "still_ambiguous"
-    }
-    # the carry was real: 413's resolver (412) landed TWO batches after
-    # it was parked — park_lev rode the pool snapshots across both
-    b0 = spark.read.parquet(str(tmp_path / "state/drained/batch=0"))
-    assert b0.count() == 0, "batch 0 must drain nothing (base-only golden)"
-
-    # golden table reflects the drained pool: 405 is a new entity, the
-    # flipped survivors are in place; 401 stays PARKED under the
-    # default 'toward' policy (loser drift only), so entity 101 keeps
-    # its own name; 413's toward-resolve joined entity 130
-    spark.catalog.refreshByPath(state + "/golden")
-    golden = {
-        r.entity: r.name_mode
-        for r in spark.read.parquet(state + "/golden").collect()
-    }
-    assert golden[405] == "paul brandeo"
-    assert golden[100] == "dana maier"
-    assert golden[101] == "dana meyer"
-    assert golden[130] == "lena hofmaan"
-    assert 402 not in golden, "parked arrivals are not golden entities"
-
-
-def test_resolve_stream_single_batch_equals_batch_query(spark, tmp_path):
-    """All arrivals in ONE micro-batch: the stream's drained decisions
-    must equal q_er_ambiguous_resolve row-for-row (incl. the re-probe
-    diagnostics), and the still-ambiguous arrival sits in the pool."""
-    from changegen_spark.queries.er import q_er_ambiguous_resolve
-    from changegen_spark.streaming.er import resolve_maintenance_stream
-
-    stage = _stage_ambig_ordered(
-        spark, tmp_path, [[400 + i for i in range(14)]]
-    )
-    state = str(tmp_path / "state")
-    q = resolve_maintenance_stream(spark, state, stage_dir=stage)
-    q.awaitTermination(180)
-
-    spark.catalog.refreshByPath(state + "/drained/batch=0")
-    got = {
-        r.rec_id: (r.matched_entity, r.lev, r.margin, r.n_matches, r.status)
-        for r in spark.read.parquet(state + "/drained/batch=0").collect()
-    }
-    want = {
-        r.rec_id: (r.matched_entity, r.lev, r.margin, r.n_matches, r.status)
-        for r in q_er_ambiguous_resolve(spark, "").collect()
-        if r.status != "still_ambiguous"
-    }
-    assert got == want
-    _, final_pool = _read_resolve_state(spark, state)
-    # the loser-drift ties 401/407 stay parked under the default
-    # 'toward' policy, alongside the untouched tie 402
-    assert final_pool == {401, 402, 407}
-
-
-def test_resolve_stream_restart_is_exactly_once(spark, tmp_path):
-    """A checkpointed re-run must process zero batches and leave the
-    drained log, pool snapshots, and golden table unchanged."""
-    import glob
-
-    from changegen_spark.streaming.er import resolve_maintenance_stream
-
-    stage = _stage_ambig_ordered(
-        spark, tmp_path, [[401, 402, 405, 407], [400, 403, 404, 406, 408]]
-    )
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    q = resolve_maintenance_stream(
-        spark, state, stage_dir=stage, checkpoint=ckpt
-    )
-    q.awaitTermination(180)
-    before = _read_resolve_state(spark, state)
-    n_dirs = len(glob.glob(state + "/drained/batch=*"))
-
-    q2 = resolve_maintenance_stream(
-        spark, state, stage_dir=stage, checkpoint=ckpt
-    )
-    q2.awaitTermination(180)
-    assert _read_resolve_state(spark, state) == before
-    assert len(glob.glob(state + "/drained/batch=*")) == n_dirs
-
-
-def test_resolve_stream_eager_drain_no_longer_leaks_drift(spark, tmp_path):
-    """Semantics pin, UPDATED for the r13 'toward' policy.  Under the
-    r12 'gap' rule this exact staging (group N's two survivor flips in
-    different batches) exposed an eager-drain order dependence: after
-    403's flip parked 405 saw 105 as uniquely best and merged into it
-    — a drift resolution the one-shot batch operator (both flips
-    visible) called 'new'.  The toward policy REJECTS that premature
-    resolution (105's lev equals the parked lev — no evidence), so the
-    arrival stays parked through batch 1 and drains as 'new' in batch
-    2 when 404's flip empties its candidate set: for this fixture the
-    eager stream and the one-shot operator now AGREE.  Eager draining
-    remains order-dependent in general (a later batch can still move a
-    survivor toward a pooled arrival that an earlier batch resolved
-    'new'), but the uninformative-drift class is gone by policy."""
-    from changegen_spark.queries.er import q_er_ambiguous_resolve
-    from changegen_spark.streaming.er import resolve_maintenance_stream
-
-    stage = _stage_ambig_ordered(spark, tmp_path, [[405], [403], [404]])
-    state = str(tmp_path / "state")
-    q = resolve_maintenance_stream(spark, state, stage_dir=stage)
-    q.awaitTermination(180)
-    drained, final_pool = _read_resolve_state(spark, state)
-    assert drained[405] == (-1, "new"), "toward rejects the drift merge"
-    assert final_pool == set()
-    batch_says = {
-        r.rec_id: r.status
-        for r in q_er_ambiguous_resolve(spark, "").collect()
-    }
-    assert batch_says[405] == "new", "one-shot operator agrees"
-
-
-def test_retract_stream_matches_from_scratch_recompute(spark, tmp_path):
-    """Streaming retraction across TWO delete batches must converge to
-    exactly the membership a from-scratch CC over (people minus all
-    deletes) produces — iterated local re-CC of touched entities equals
-    the global recompute — and the golden table must reflect it (split
-    heads present, vanished entities gone)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from changegen_spark.functions.clustering import connected_components
-    from changegen_spark.queries.er import ER_AMBIG_PATH
-    from changegen_spark.queries.er.blocking import er_pairs_for
-    from changegen_spark.queries.er.retract import RETRACT_DELETES
-    from changegen_spark.streaming.er import retract_stream
-
-    drop = tmp_path / "dels"
-    drop.mkdir()
-    t0 = os.stat(ER_AMBIG_PATH).st_mtime + 10
-    batches = [[301, 115], [102, 405]]
-    for i, ids in enumerate(batches):
-        import glob
-        import shutil
-
-        tmp = str(tmp_path / f"d{i}")
-        spark.createDataFrame(
-            [(int(r),) for r in ids], "rec_id long"
-        ).coalesce(1).write.mode("overwrite").parquet(tmp)
-        (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dst = str(drop / f"{i:02d}.parquet")
-        shutil.copy(part, dst)
-        os.utime(dst, (t0 + i, t0 + i))
-
-    state = str(tmp_path / "state")
-    q = retract_stream(spark, state, deletes_stage=str(drop))
-    q.awaitTermination(180)
-
-    mdir = state + "/membership/batch=1"
-    spark.catalog.refreshByPath(mdir)
-    got = {
-        r.rec_id: r.entity for r in spark.read.parquet(mdir).collect()
-    }
-    people = spark.read.parquet(ER_AMBIG_PATH)
-    alive = people.filter(~F.col("rec_id").isin(list(RETRACT_DELETES)))
-    comp = connected_components(
-        er_pairs_for(alive).select("rec_a", "rec_b"),
-        src="rec_a",
-        dst="rec_b",
-    )
-    want = {
-        r.rec_id: r.entity
-        for r in alive.select("rec_id")
-        .join(comp, alive.rec_id == comp.node, "left")
-        .select("rec_id", F.coalesce("comp", F.col("rec_id")).alias("entity"))
-        .collect()
-    }
-    assert got == want
-    # golden table: split heads present, tombstoned ids absent
-    spark.catalog.refreshByPath(state + "/golden")
-    golden = {
-        r.entity: r for r in spark.read.parquet(state + "/golden").collect()
-    }
-    assert golden[302].name_mode == "marrah webbber"
-    assert golden[103].n_members == 2
-    for gone in (102, 115):
-        assert gone not in golden
-    # every live record's entity has a golden row; every golden entity
-    # is a live head
-    assert set(golden) == set(want.values())
-
-
-def test_retract_stream_restart_is_exactly_once(spark, tmp_path):
-    """A checkpointed re-run of the delete stream must process nothing
-    and leave membership snapshots and the golden table unchanged."""
-    import glob
-    import os
-    import shutil
-
-    from changegen_spark.queries.er import ER_AMBIG_PATH
-    from changegen_spark.streaming.er import retract_stream
-
-    drop = tmp_path / "dels"
-    drop.mkdir()
-    tmp = str(tmp_path / "d0")
-    spark.createDataFrame([(301,)], "rec_id long").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
-    shutil.copy(part, str(drop / "00.parquet"))
-
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    q = retract_stream(spark, state, deletes_stage=str(drop), checkpoint=ckpt)
-    q.awaitTermination(180)
-
-    def fingerprint():
-        spark.catalog.refreshByPath(state + "/membership/batch=0")
-        spark.catalog.refreshByPath(state + "/golden")
-        m = sorted(
-            (r.rec_id, r.entity)
-            for r in spark.read.parquet(state + "/membership/batch=0").collect()
+    ppl = spark.read.parquet(ER_AMBIG_PATH)
+    frames = []
+    for evs in batches:
+        arr_ids = [r for k, r in evs if k == "arrive"]
+        del_ids = [r for k, r in evs if k == "delete"]
+        df = ppl.filter(F.col("rec_id").isin(arr_ids or [-1])).select(
+            F.lit("arrive").alias("kind"), "rec_id", "name", "city"
         )
-        g = sorted(
-            tuple(r) for r in spark.read.parquet(state + "/golden").collect()
-        )
-        return m, g, len(glob.glob(state + "/membership/batch=*"))
-
-    before = fingerprint()
-    q2 = retract_stream(
-        spark, state, deletes_stage=str(drop), checkpoint=ckpt
+        if del_ids:
+            df = df.unionByName(
+                spark.createDataFrame(
+                    [(int(r),) for r in del_ids], "rec_id long"
+                ).select(
+                    F.lit("delete").alias("kind"),
+                    "rec_id",
+                    F.lit(None).cast("string").alias("name"),
+                    F.lit(None).cast("string").alias("city"),
+                )
+            )
+        frames.append(df)
+    return stage_lifecycle_frames(
+        spark, out_dir, frames, os.stat(ER_AMBIG_PATH).st_mtime + 10
     )
-    q2.awaitTermination(180)
-    assert fingerprint() == before
-
-
-def _mv_expected_final(spark, sf_dir):
-    """Independent recompute of the post-CDC join view aggregate: all
-    orders/lineitems (pre-cutoff seed + post-cutoff inserts), minus the
-    keyed deletes, with the keyed update images applied."""
-    from pyspark.sql import functions as F
-
-    from changegen_spark.queries.mv import (
-        DELETE_PRED,
-        DELETE_PRED_B,
-        UPDATE_PRED_A,
-        UPDATE_PRED_B,
-        UPDATED_FLAG,
-        UPDATED_PRIORITY,
-    )
-    from changegen_spark.sources.tables import load_table
-
-    o = (
-        load_table(spark, sf_dir, "orders")
-        .filter(f"NOT ({DELETE_PRED})")
-        .select(
-            "o_orderkey",
-            F.when(
-                F.expr(UPDATE_PRED_A), F.lit(UPDATED_PRIORITY)
-            ).otherwise(F.col("o_orderpriority")).alias("o_orderpriority"),
-        )
-    )
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(f"NOT ({DELETE_PRED_B})")
-        .select(
-            F.col("l_orderkey").alias("o_orderkey"),
-            "l_linenumber",
-            F.when(F.expr(UPDATE_PRED_B), F.lit(UPDATED_FLAG)).otherwise(
-                F.col("l_returnflag")
-            ).alias("l_returnflag"),
-            F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias(
-                "cents"
-            ),
-        )
-    )
-    return sorted(
-        tuple(r)
-        for r in o.join(li, "o_orderkey")
-        .groupBy("o_orderpriority", "l_returnflag")
-        .agg(F.count("*").alias("n"), F.sum("cents").alias("s"))
-        .collect()
-    )
-
-
-def _mv_view_agg(spark, state):
-    from pyspark.sql import functions as F
-
-    spark.catalog.refreshByPath(state + "/view")
-    return sorted(
-        tuple(r)
-        for r in spark.read.parquet(state + "/view")
-        .groupBy("o_orderpriority", "l_returnflag")
-        .agg(F.count("*").alias("n"), F.sum("cents").alias("s"))
-        .collect()
-    )
-
-
-def test_mv_join_stream_converges_to_post_cdc_recompute(
-    spark, sf_dir, tmp_path
-):
-    """The stored join view maintained under the full CDC sequence
-    (ΔA inserts, ΔB inserts, keyed deletes, keyed update images — one
-    micro-batch each) must converge to exactly the from-scratch join
-    over the post-CDC base states: the streaming twin of
-    q_mv_join_refresh + q_mv_join_delete + q_mv_join_update composed."""
-    from changegen_spark.streaming.mv import mv_join_maintenance_stream
-
-    state = str(tmp_path / "state")
-    q = mv_join_maintenance_stream(spark, state, sf_dir)
-    q.awaitTermination(300)
-    assert _mv_view_agg(spark, state) == _mv_expected_final(spark, sf_dir)
-
-
-def test_mv_join_stream_restart_is_exactly_once(spark, sf_dir, tmp_path):
-    """A checkpointed re-run must process zero batches: the CDC log dir
-    count and the view aggregate are unchanged."""
-    import glob
-
-    from changegen_spark.streaming.mv import mv_join_maintenance_stream
-
-    state, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
-    q = mv_join_maintenance_stream(spark, state, sf_dir, checkpoint=ckpt)
-    q.awaitTermination(300)
-    before = (
-        _mv_view_agg(spark, state),
-        len(glob.glob(state + "/cdc/batch=*")),
-    )
-    q2 = mv_join_maintenance_stream(spark, state, sf_dir, checkpoint=ckpt)
-    q2.awaitTermination(300)
-    assert (
-        _mv_view_agg(spark, state),
-        len(glob.glob(state + "/cdc/batch=*")),
-    ) == before
 
 
 def _lifecycle_fingerprint(spark, state):
@@ -1110,12 +350,9 @@ def test_lifecycle_stream_interleaves_arrivals_and_deletes(spark, tmp_path):
     with deletes before and after it), head deletion re-heads the
     entity an earlier batch merged into, and tombstoned entities leave
     the golden table."""
-    from changegen_spark.streaming.er import (
-        lifecycle_stream,
-        stage_lifecycle_files,
-    )
+    from changegen_spark.streaming.er import lifecycle_stream
 
-    stage = stage_lifecycle_files(
+    stage = _stage_lifecycle_files(
         spark,
         str(tmp_path / "events"),
         [
@@ -1176,14 +413,11 @@ def test_lifecycle_stream_deletes_first_equals_one_shot_batch(
         incremental_assign_margin,
         resolve_ambiguous,
     )
-    from changegen_spark.streaming.er import (
-        lifecycle_stream,
-        stage_lifecycle_files,
-    )
+    from changegen_spark.streaming.er import lifecycle_stream
 
     dels = [101, 106]
     arrivals = list(range(400, 414))
-    stage = stage_lifecycle_files(
+    stage = _stage_lifecycle_files(
         spark,
         str(tmp_path / "events"),
         [
@@ -1235,10 +469,7 @@ def test_lifecycle_stream_restart_resumes_mid_sequence(spark, tmp_path):
     import glob
     import shutil
 
-    from changegen_spark.streaming.er import (
-        lifecycle_stream,
-        stage_lifecycle_files,
-    )
+    from changegen_spark.streaming.er import lifecycle_stream
 
     seq = [
         [("arrive", 401), ("arrive", 402), ("arrive", 413)],
@@ -1246,7 +477,7 @@ def test_lifecycle_stream_restart_resumes_mid_sequence(spark, tmp_path):
         [("arrive", 400), ("arrive", 412)],
         [("delete", 100), ("delete", 412)],
     ]
-    full_stage = stage_lifecycle_files(
+    full_stage = _stage_lifecycle_files(
         spark, str(tmp_path / "events_full"), seq
     )
     staged = sorted(glob.glob(full_stage + "/*.parquet"))
@@ -1292,12 +523,9 @@ def test_lifecycle_stream_pool_ttl_escalates_with_last_chance(
     rather than park forever."""
     import glob
 
-    from changegen_spark.streaming.er import (
-        lifecycle_stream,
-        stage_lifecycle_files,
-    )
+    from changegen_spark.streaming.er import lifecycle_stream
 
-    stage = stage_lifecycle_files(
+    stage = _stage_lifecycle_files(
         spark,
         str(tmp_path / "events"),
         [
@@ -1340,15 +568,12 @@ def test_lifecycle_stream_tombstone_guard_parks_shadowed_merges(
     confidently into 100 — the deletes-first test's pinned outcome) is
     parked instead; once the window expires the same sequence merges,
     so the guard is a bounded shadow, not a permanent veto."""
-    from changegen_spark.streaming.er import (
-        lifecycle_stream,
-        stage_lifecycle_files,
-    )
+    from changegen_spark.streaming.er import lifecycle_stream
 
     seq = [[("delete", 101)], [("arrive", 401)]]
 
     def run(tag, window):
-        stage = stage_lifecycle_files(
+        stage = _stage_lifecycle_files(
             spark, str(tmp_path / f"events_{tag}"), seq
         )
         state = str(tmp_path / f"state_{tag}")

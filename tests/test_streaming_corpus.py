@@ -1,217 +1,15 @@
-"""Streaming twins of the training-data prep family: batch parity over a
+"""Streaming twin of the training-data prep family: batch parity over a
 finite file source (availableNow), the core Structured Streaming guarantee."""
 
 import pytest
 
-import os
-
-from pyspark.sql import functions as F
-
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
-
-
-def _stage_docs(spark, tmp_path):
-    """A corpus drop-dir with planted duplicates and PII, written as two
-    separate files (micro-batch boundaries land between files)."""
-    rows1 = [
-        (1, "alpha beta gamma delta", "en", "s0", 22),
-        (2, "unique text one with words", "en", "s0", 26),
-        (3, "alpha beta gamma delta", "en", "s1", 22),  # dup of 1
-        (4, "mail me at bob@example.com now", "en", "s1", 30),
-    ]
-    rows2 = [
-        (5, "unique text one with words", "en", "s2", 26),  # dup of 2
-        (6, "server at 192.168.1.10 logged +1 555-0199", "en", "s2", 41),
-        (7, "short", "en", "s2", 5),
-    ]
-    d = str(tmp_path / "docs_drop")
-    os.makedirs(d, exist_ok=True)
-    spark.createDataFrame(rows1, DOC_SCHEMA).coalesce(1).write.mode("append").parquet(d)
-    spark.createDataFrame(rows2, DOC_SCHEMA).coalesce(1).write.mode("append").parquet(d)
-    return d
 
 
 def _run(stream_df, name, mode="append"):
     from changegen_spark.streaming.events import run_to_memory_sink
 
     return run_to_memory_sink(stream_df, name, mode=mode)
-
-
-def test_dedup_stream_first_writer_wins(spark, tmp_path):
-    from changegen_spark.streaming.corpus import dedup_stream, stream_documents
-
-    d = _stage_docs(spark, tmp_path)
-    out = _run(dedup_stream(stream_documents(spark, d)), "t_dedup_stream")
-    rows = out.select("doc_id", "content_hash").collect()
-    hashes = [r.content_hash for r in rows]
-    # one survivor per distinct content
-    assert len(hashes) == len(set(hashes)) == 5
-    # batch parity on the kept-hash set
-    batch = (
-        spark.read.parquet(d)
-        .select(F.md5(F.trim("text")).alias("h"))
-        .distinct()
-    )
-    assert set(hashes) == {r.h for r in batch.collect()}
-
-
-def test_dedup_stream_plan_is_streaming(spark, tmp_path):
-    from changegen_spark.streaming.corpus import dedup_stream, stream_documents
-
-    d = _stage_docs(spark, tmp_path)
-    df = dedup_stream(stream_documents(spark, d))
-    assert df.isStreaming
-
-
-def test_quality_filter_stream_matches_batch(spark, tmp_path):
-    from changegen_spark.streaming.corpus import (
-        quality_filter_stream,
-        stream_documents,
-    )
-
-    d = _stage_docs(spark, tmp_path)
-    got = _run(
-        quality_filter_stream(stream_documents(spark, d), min_tokens=4),
-        "t_quality_stream",
-    )
-    batch = quality_filter_stream(spark.read.parquet(d), min_tokens=4)
-    assert not batch.isStreaming
-    a = sorted([tuple(r) for r in got.collect()])
-    b = sorted([tuple(r) for r in batch.collect()])
-    assert a == b and len(a) == 6  # doc 7 ("short") filtered out
-
-
-def test_pii_scrub_stream_redacts(spark, tmp_path):
-    from changegen_spark.streaming.corpus import pii_scrub_stream, stream_documents
-
-    d = _stage_docs(spark, tmp_path)
-    got = {r.doc_id: r for r in _run(
-        pii_scrub_stream(stream_documents(spark, d)), "t_pii_stream"
-    ).collect()}
-    assert got[4].n_email == 1 and "<EMAIL>" in got[4].redacted
-    assert got[6].n_ip == 1 and got[6].n_phone == 1
-    assert "<IP>" in got[6].redacted and "<PHONE>" in got[6].redacted
-    assert got[1].n_email == got[1].n_phone == got[1].n_ip == 0
-
-
-@pytest.mark.slow
-def test_near_dup_hits_stream_static_join(spark, tmp_path):
-    """Stream-static LSH band join: stream docs sharing a bucket with the
-    persisted corpus emit hit events; batch applying the same function is
-    value-identical (the stream-static join holds no state)."""
-    from changegen_spark.streaming.corpus import (
-        corpus_band_frame,
-        near_dup_hits_stream,
-        stream_documents,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again today"
-    corpus = spark.createDataFrame(
-        [
-            (1, base + " end", "en", "s", 1),
-            (2, "alpha beta gamma delta epsilon zeta", "en", "s", 1),
-        ],
-        DOC_SCHEMA,
-    )
-    stream_rows = [
-        (10, base + " fin", "en", "s", 1),  # near-dup of corpus doc 1
-        (11, "completely different words about parquet and shuffles", "en", "s", 1),
-    ]
-    d = str(tmp_path / "near_drop")
-    spark.createDataFrame(stream_rows, DOC_SCHEMA).coalesce(1).write.parquet(d)
-
-    bands = corpus_band_frame(corpus)
-    out = _run(near_dup_hits_stream(stream_documents(spark, d), bands), "t_near_dup")
-    hit_docs = {r.doc_id for r in out.collect()}
-    assert hit_docs == {10}
-
-    # batch parity: the identical function on the batch read
-    batch_hits = {
-        r.doc_id
-        for r in near_dup_hits_stream(spark.read.parquet(d), bands).collect()
-    }
-    assert batch_hits == {10}
-
-    # r3 artifact unification: the stream joins the SAME persisted
-    # bucketed band table the batch incremental dedup writes — identical
-    # hits, and the corpus side reads its bucket layout
-    from changegen_spark.queries.scale import persist_dedup_corpus
-
-    _, cb = persist_dedup_corpus(spark, corpus, prefix="t_stream_dedup", num_buckets=4)
-    out2 = _run(
-        near_dup_hits_stream(stream_documents(spark, d), cb), "t_near_dup2"
-    )
-    assert {r.doc_id for r in out2.collect()} == {10}
-
-
-def test_dsir_weight_stream_matches_batch_query(spark, tmp_path, sf_dir):
-    """The streaming DSIR scorer with the batch-learned ratio table must
-    reproduce the batch query's exact integer weights for corpus docs —
-    the map-only twin of q_dsir_weights' per-doc aggregation."""
-    from changegen_spark.queries.mlprep import q_dsir_weights
-    from changegen_spark.sources.tables import load_table
-    from changegen_spark.streaming.corpus import (
-        dsir_ratio_terms,
-        dsir_weight_stream,
-        stream_documents,
-    )
-
-    terms = dsir_ratio_terms(spark, str(sf_dir))
-    docs = load_table(spark, str(sf_dir), "documents").filter(F.col("doc_id") < 20)
-    # a NULL-source doc must be excluded by the stream exactly as the
-    # batch query's _dsir_occ excludes it (advisor r4 parity gap)
-    null_src = docs.limit(1).withColumn(
-        "doc_id", F.lit(999_999).cast("long")
-    ).withColumn("source", F.lit(None).cast("string"))
-    d = str(tmp_path / "dsir_drop")
-    docs.unionByName(null_src).coalesce(1).write.parquet(d)
-    got = _run(dsir_weight_stream(stream_documents(spark, d), terms), "t_dsir_stream")
-    g = {r["doc_id"]: (r["n_grams"], r["logw_e6"]) for r in got.collect()}
-    assert 999_999 not in g
-    want = {
-        r["doc_id"]: (r["n_grams"], r["logw_e6"])
-        for r in q_dsir_weights(spark, str(sf_dir)).collect()
-        if r["doc_id"] < 20
-    }
-    assert g == want and len(g) > 0
-
-
-@pytest.mark.slow
-def test_countmin_stream_matches_batch(spark, tmp_path):
-    """The streaming count-min cells must equal the batch cells exactly
-    (sum is the sketch merge law, so micro-batch splits cannot move a
-    count), and min-over-depth estimates must dominate true counts."""
-    from changegen_spark.queries.scale import CMS_DEPTH
-    from changegen_spark.streaming.corpus import countmin_stream, stream_documents
-
-    d = _stage_docs(spark, tmp_path)
-    got = _run(countmin_stream(stream_documents(spark, d)), "t_cms_stream",
-               mode="complete")
-
-    batch = spark.read.parquet(d)
-    expected = countmin_stream(batch)  # same expressions, batch plan
-    key = ["j", "b", "c"]
-    assert sorted(map(tuple, got.select(key).collect())) == sorted(
-        map(tuple, expected.select(key).collect())
-    )
-
-    # one-sided error: est(word) = min over depth cells >= true count
-    cells = {(r.j, r.b): r.c for r in got.collect()}
-    words = (
-        batch.select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
-        .filter(F.col("w") != "")
-        .groupBy("w")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    )
-    import hashlib
-
-    for r in words:
-        est = min(
-            cells[(j, hashlib.md5(f"{r.w}#{j}".encode()).hexdigest()[:1])]
-            for j in range(1, CMS_DEPTH + 1)
-        )
-        assert est >= r.n, (r.w, est, r.n)
 
 
 @pytest.mark.slow
@@ -223,10 +21,7 @@ def test_reservoir_stream_matches_batch(spark, tmp_path, sf_dir):
     bound made observable)."""
     from changegen_spark.queries.mlprep import RS_GROUP_K, q_reservoir_per_source
     from changegen_spark.sources.tables import load_table
-    from changegen_spark.streaming.corpus import (
-        DOC_SCHEMA,
-        reservoir_per_source_stream,
-    )
+    from changegen_spark.streaming.corpus import reservoir_per_source_stream
 
     docs = load_table(spark, str(sf_dir), "documents")
     d = str(tmp_path / "res_drop")
@@ -261,22 +56,3 @@ def test_reservoir_stream_matches_batch(spark, tmp_path, sf_dir):
         for r in q_reservoir_per_source(spark, str(sf_dir)).collect()
     }
     assert got == want
-
-
-def test_gopher_filter_stream_matches_batch(spark, tmp_path, sf_dir):
-    """The streaming Gopher gate must keep exactly the docs the batch
-    scorecard keeps (same Catalyst expressions → exact parity)."""
-    from changegen_spark.queries.curation import q_gopher_rules
-    from changegen_spark.sources.tables import load_table
-    from changegen_spark.streaming.corpus import gopher_filter_stream, stream_documents
-
-    docs = load_table(spark, str(sf_dir), "documents")
-    d = str(tmp_path / "gopher_drop")
-    docs.coalesce(1).write.parquet(d)
-    got = {r.doc_id for r in _run(
-        gopher_filter_stream(stream_documents(spark, d)), "t_gopher_stream"
-    ).collect()}
-    want = {
-        r.doc_id for r in q_gopher_rules(spark, str(sf_dir)).collect() if r.keep == 1
-    }
-    assert got == want and len(want) > 0

@@ -4,6 +4,8 @@ guarantee, and the short-document convention."""
 
 import hashlib
 
+from pyspark.sql import functions as F
+
 import changegen_spark.queries.winnow as wn
 
 
@@ -28,9 +30,12 @@ def _fp(spark, docs: dict[int, str]):
     df = spark.createDataFrame(
         [(i, t) for i, t in docs.items()], "doc_id long, text string"
     )
+    fps = df.select(
+        "doc_id", F.explode(wn.winnow_select_pandas()(F.col("text")).getField("fps")).alias("f")
+    )
     res = {}
-    for r in wn.winnow_fingerprints(df).collect():
-        res.setdefault(r["doc_id"], set()).add((r["fpos"], r["fh"]))
+    for r in fps.collect():
+        res.setdefault(r["doc_id"], set()).add((r["f"]["fpos"], r["f"]["fh"]))
     return res
 
 
