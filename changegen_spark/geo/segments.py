@@ -150,22 +150,21 @@ def closest_point_cols(cp: Column = None) -> list[Column]:
 
 
 def segment_distance_join(
-    left_segs: DataFrame,
-    right_segs: DataFrame,
-    radius: float,
-    cell_size: float | None = None,
-    dedup_pairs: bool = True,
+    left_segs: DataFrame, right_segs: DataFrame, radius: float
 ) -> DataFrame:
     """Candidate segment pairs within ``radius``: grid-bin both sides on
-    radius-expanded segment bboxes, equi-join on cell, dedup pairs, refine
-    with exact segment math.
+    segment bboxes (the left side's grown by ``radius``), equi-join on
+    cell, refine with exact segment math.
+
+    A segment pair that meets in several cells appears once per shared
+    cell; the caller's per-pair ``min_by`` is idempotent over those
+    duplicates, so no dedup shuffle runs here.
 
     Output: all left+right columns (prefixed ``l``/``r`` by the caller's
     column naming) + cp_x/cp_y/dist.  Scale: shuffle keyed by grid cell —
     identical plan shape to Sedona's DistanceJoin.
     """
-    if cell_size is None:
-        cell_size = max(2.0 * radius, 64.0)
+    cell_size = max(2.0 * radius, 64.0)
 
     def with_cells(df: DataFrame, p: str) -> DataFrame:
         xmin = F.least(F.col(f"{p}ax"), F.col(f"{p}bx")) - radius
@@ -188,17 +187,6 @@ def segment_distance_join(
         "__cell", F.explode(_cells_for_bbox(rxmin, rymin, rxmax, rymax, cell_size))
     )
     pairs = lc.join(rc, "__cell").drop("__cell")
-    if dedup_pairs:
-        # a segment-pair can meet in several cells → dedup before refine.
-        # Dedup on the IDENTIFYING columns only (keys + segment indexes —
-        # they functionally determine the coordinates): a narrower shuffle
-        # key than hashing eight doubles per row.  Callers that aggregate
-        # per pair right after (min_by — the junction pipeline) should pass
-        # dedup_pairs=False: duplicates are idempotent under the agg and
-        # skipping this stage removes an exchange + hash-agg (~5 s of the
-        # small-region fixed cost, measured).
-        coord_cols = {f"{p}{e}" for p in ("l", "r") for e in ("ax", "ay", "bx", "by")}
-        pairs = pairs.dropDuplicates([c for c in pairs.columns if c not in coord_cols])
     pairs = pairs.select("*", segment_pair_closest().alias("__cp"))
     pairs = pairs.select("*", *closest_point_cols()).drop("__cp")
     return pairs.filter(F.col("dist") <= F.lit(radius))

@@ -16,7 +16,7 @@ order, which shuffles do not preserve.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 NODE_LIMIT_DEFAULT = 2000   # --max_nodes_per_way, changegen/__main__.py:148
@@ -102,18 +102,22 @@ def cumulative_fraction(
 ) -> DataFrame:
     """Per-vertex cumulative fractional distance along each polyline.
 
-    Adds ``seg_len`` (distance from previous vertex), ``cum_len``, ``total_len``
-    and ``frac`` = cum_len/total_len.  Windowed prefix-sum — the Spark-native
-    form of the reference's ``cumsum/total`` (``generator.py:236-244``).
+    Adds ``ax``/``ay`` (the previous vertex, null at the first), ``seg_len``
+    (distance from it), ``cum_len``, ``total_len`` and ``frac`` =
+    cum_len/total_len.  Windowed prefix-sum — the Spark-native form of the
+    reference's ``cumsum/total`` (``generator.py:236-244``) — and the only
+    vertex window of the way operators: ``line_locate_fraction`` reads its
+    rows.
     """
     w = Window.partitionBy(*part_cols).orderBy(pos_col)
     wall = Window.partitionBy(*part_cols)
-    px = F.lag(x_col).over(w)
-    py = F.lag(y_col).over(w)
-    seg = F.when(
-        px.isNull(), F.lit(0.0)
-    ).otherwise(F.sqrt(F.pow(F.col(x_col) - px, 2) + F.pow(F.col(y_col) - py, 2)))
-    out = vertices.withColumn("seg_len", seg)
+    out = vertices.withColumn("ax", F.lag(x_col).over(w)).withColumn(
+        "ay", F.lag(y_col).over(w)
+    )
+    seg = F.when(F.col("ax").isNull(), F.lit(0.0)).otherwise(
+        F.sqrt(F.pow(F.col(x_col) - F.col("ax"), 2) + F.pow(F.col(y_col) - F.col("ay"), 2))
+    )
+    out = out.withColumn("seg_len", seg)
     out = out.withColumn(
         "cum_len", F.sum("seg_len").over(w.rowsBetween(Window.unboundedPreceding, 0))
     )
@@ -124,28 +128,13 @@ def cumulative_fraction(
     )
 
 
-def line_locate_fraction(
-    vertices: DataFrame,
-    part_cols: list[str],
-    px_col: str,
-    py_col: str,
-    pos_col: str = "pos",
-    x_col: str = "x",
-    y_col: str = "y",
+def _located(
+    fractions: DataFrame, px_col: str, py_col: str, x_col: str, y_col: str
 ) -> DataFrame:
-    """Normalized fractional position of a point projected onto a polyline
-    (``shapely project(normalized=True)`` / ST_LineLocatePoint, F7).
-
-    Input: exploded vertices with the probe point's coordinates carried on
-    every row (``px_col``, ``py_col``).  Output: one row per ``part_cols``
-    group with ``point_frac``.  Implemented as segment-wise clamped projection
-    + ``min_by`` over squared distance — all built-ins, no UDF.
-    """
-    cf = cumulative_fraction(vertices, part_cols, pos_col, x_col, y_col)
-    w = Window.partitionBy(*part_cols).orderBy(pos_col)
-    ax, ay = F.lag(x_col).over(w), F.lag(y_col).over(w)  # segment start
-    bx, by = F.col(x_col), F.col(y_col)                  # segment end
-    seg = cf.withColumn("ax", ax).withColumn("ay", ay).filter(F.col("ax").isNotNull())
+    """The segment rows of ``cumulative_fraction`` output (every vertex but
+    the first) plus ``__frac_here``, the fraction at the probe's clamped
+    projection onto the segment, and ``__d2``, the squared distance to it."""
+    seg = fractions.filter(F.col("ax").isNotNull())
     dx, dy = F.col(x_col) - F.col("ax"), F.col(y_col) - F.col("ay")
     seg_len2 = dx * dx + dy * dy
     t_raw = F.when(
@@ -158,7 +147,7 @@ def line_locate_fraction(
     d2 = F.pow(F.col(px_col) - qx, 2) + F.pow(F.col(py_col) - qy, 2)
     seg = seg.withColumn("__t", t).withColumn("__d2", d2)
     # fraction at the projected point = frac at segment start + t * seg share
-    seg = seg.withColumn(
+    return seg.withColumn(
         "__frac_here",
         F.when(
             F.col("total_len") > 0,
@@ -166,11 +155,37 @@ def line_locate_fraction(
             / F.col("total_len"),
         ).otherwise(F.lit(0.0)),
     )
-    return seg.groupBy(*part_cols).agg(
-        F.min_by(
-            F.col("__frac_here"), F.struct(F.col("__d2"), F.col(pos_col))
-        ).alias("point_frac")
+
+
+def _point_frac(pos_col: str) -> Column:
+    """The fraction at the closest projection; ties go to the lower ``pos``."""
+    return F.min_by(F.col("__frac_here"), F.struct(F.col("__d2"), F.col(pos_col))).alias(
+        "point_frac"
     )
+
+
+def line_locate_fraction(
+    fractions: DataFrame,
+    part_cols: list[str],
+    px_col: str,
+    py_col: str,
+    pos_col: str = "pos",
+    x_col: str = "x",
+    y_col: str = "y",
+) -> DataFrame:
+    """Normalized fractional position of a point projected onto a polyline
+    (``shapely project(normalized=True)`` / ST_LineLocatePoint, F7).
+
+    Input: ``cumulative_fraction`` rows (one per vertex, with ``ax``/``ay``,
+    ``seg_len``, ``cum_len`` and ``total_len``) with the probe point's
+    coordinates carried on every row (``px_col``, ``py_col``); ``part_cols``
+    may extend the fraction's own partition, one group per probe.  Output:
+    one row per ``part_cols`` group with ``point_frac``.  Implemented as
+    segment-wise clamped projection + ``min_by`` over squared distance — one
+    aggregate, no window, all built-ins.
+    """
+    located = _located(fractions, px_col, py_col, x_col, y_col)
+    return located.groupBy(*part_cols).agg(_point_frac(pos_col))
 
 
 def insertion_index(
@@ -186,10 +201,18 @@ def insertion_index(
 
     The reference (``generator.py:208-255``) returns the first vertex index
     whose cumulative fractional distance exceeds the point's projected
-    fraction.  Output: ``part_cols`` + ``insert_idx``.
+    fraction.  Output: ``part_cols`` + ``insert_idx``.  One window pass
+    (``cumulative_fraction``) and one aggregate: the projected fraction and
+    the (frac, pos) list come from the same group.  The first vertex has no
+    segment row, and its frac 0 never exceeds a projected fraction.
     """
     cf = cumulative_fraction(vertices, part_cols, pos_col, x_col, y_col)
-    pf = line_locate_fraction(vertices, part_cols, px_col, py_col, pos_col, x_col, y_col)
-    joined = cf.join(pf, part_cols)
-    past = joined.filter(F.col("frac") > F.col("point_frac"))
-    return past.groupBy(*part_cols).agg(F.min(pos_col).cast("long").alias("insert_idx"))
+    located = _located(cf, px_col, py_col, x_col, y_col).groupBy(*part_cols).agg(
+        _point_frac(pos_col),
+        F.collect_list(F.struct("frac", pos_col)).alias("__fp"),
+    )
+    past = F.filter("__fp", lambda e: e["frac"] > F.col("point_frac"))
+    idx = F.array_min(F.transform(past, lambda e: e[pos_col])).cast("long")
+    return located.select(*part_cols, idx.alias("insert_idx")).filter(
+        F.col("insert_idx").isNotNull()
+    )

@@ -3,26 +3,34 @@
 The reference's ``generate_changes`` (``changegen/generator.py:496-873``) is
 a row-at-a-time loop; here every stage is a whole-DataFrame transform:
 
-  A. junction synthesis — segment grid join (J1/J3) + 6-dp grid dedup (A3)
-  B. new-way construction — vertex explode, junction vertex-reuse (J4) or
-     fractional insertion (W2/M2), way splitting (W3)
-  C. modify intersecting existing ways — PBF node-list join (J5), junction
-     replace/insert, version 2 (C2)
+  A. junction synthesis — ONE segment grid join of the new ways against
+     the existing ways (J1) and, with ``--self``, the new ways themselves
+     (J3); one closest approach per pair; 6-dp grid dedup (A3)
+  B. new-way construction — vertex explode with ``cumulative_fraction``,
+     one left join flagging junction vertices (J4 reuse), fractional
+     insertion of the other junctions (W2/M2), way splitting (W3)
+  C. modify intersecting existing ways — PBF node-list join (J5), then
+     stage B's member rebuild against the way's own junction cells
+     (replace at a vertex, insert otherwise), version 2 (C2)
   D. point create/modify paths (C1/C2) with tag projection (P1/P2)
   E. polygon paths — closed ways, multipolygon relations (P6/M4/M5)
   F. modify-meta flow (C4)  G. deletion flow (C5/C3/A7)
 
-ID policy (W1, SURVEY §7 risk 1): one union of id requests gets a global
-``row_number`` ordered by (kind, stable key) — ids are unique, dense from
-``id_offset+1``, deterministic; exact interleaving parity with the
-reference's mutable counter is explicitly out of contract.  The id table
-is one eager fence, read by two joins.  The member-ref join resolves every
-way and relation member (junction cell, new-way vertex, polygon node,
-ring) to its id; modified ways keep their PBF node ids.  The element join
-gives every node, way and relation payload its id; modified ways keep
-their ``osm_id``.  Stage B's chunked member lists and stage C's rebuilt
-ways are eager fences built in their pool threads, so neither the id
-fence nor the sink recomputes them.
+Stages B and C share one member rebuild (``_junction_members``): the
+only window is each stage's fenced vertex fractions, and inserted
+junctions are located on those rows.
+
+ID policy (W1, SURVEY §7 risk 1): one union of id requests is ranked by
+(kind, stable key) with ``operators.ids.prefix_sum`` — ids are unique,
+dense from ``id_offset+1``, deterministic; exact interleaving parity with
+the reference's mutable counter is explicitly out of contract.  The id
+table is one eager fence, read by two joins.  The member-ref join resolves
+every way and relation member (junction cell, new-way vertex, polygon
+node, ring) to its id; modified ways keep their PBF node ids.  The element
+join gives every node, way and relation payload its id; modified ways
+keep their ``osm_id``.  Stage B's chunked member lists and stage C's
+rebuilt ways are eager fences built in their pool threads, so neither the
+id fence nor the sink recomputes them.
 
 Scale notes: every join is keyed (grid cell, rounded coordinate, osm_id);
 the only single-partition stages are the ordered XML sink and, in the
@@ -115,70 +123,37 @@ def synthesize_junctions(
 ) -> tuple[DataFrame, DataFrame]:
     """Stage A: (junction_nodes keyed by rounded lon/lat, per-pair junctions).
 
-    Junction per (new way, existing way) pair = closest point on the new
-    geometry within the buffer (crossings → exact crossing point), then
-    6-dp grid dedup; the same cached join yields the intersecting-id list
-    (J2) — unlike the reference, the spatial predicate runs once
-    (SURVEY §3.3)."""
+    Junction per (new way, existing way) pair, and with
+    ``self_intersections`` per pair of distinct new ways = closest point on
+    the new geometry within the buffer (crossings → exact crossing point),
+    then 6-dp grid dedup; the same fenced join yields the intersecting-id
+    list (J2) — unlike the reference, the spatial predicate runs once, in
+    one segment join (SURVEY §3.3)."""
+    ring = exterior(F.col("geometry")).alias("__ring")
     lsegs = explode_segments(
-        new_ways.select(F.col(key_col).alias("nkey"), exterior(F.col("geometry")).alias("__ring")),
-        ["nkey"],
-        F.col("__ring"),
-        prefix="l",
+        new_ways.select(F.col(key_col).alias("nkey"), ring), ["nkey"], F.col("__ring"), prefix="l"
     )
-    rsegs = explode_segments(
-        existing_ways.select(F.col("osm_id"), exterior(F.col("geometry")).alias("__ring")),
-        ["osm_id"],
-        F.col("__ring"),
-        prefix="r",
+    # The right side: every existing way (okey null), and with --self (J3,
+    # changegen/__main__.py:131-139) every new way as well (osm_id null).
+    # Both directions of a new×new crossing pair appear, so each way
+    # receives the junction; the 6-dp grid dedup collapses them to one
+    # shared node.  Self junctions carry no osm_id: they modify no existing
+    # way.
+    rways = existing_ways.select(
+        "osm_id", F.lit(None).cast(new_ways.schema[key_col].dataType).alias("okey"), ring
     )
-    pairs = segment_distance_join(lsegs, rsegs, DISTANCE_BUFFER_DEFAULT, dedup_pairs=False)
-    # one junction per (new, existing) pair: the globally closest approach
-    best = pairs.groupBy("nkey", "osm_id").agg(
-        F.min_by(
-            F.struct("cp_x", "cp_y"), F.struct("dist", "lseg", "rseg")
-        ).alias("cp"),
-        F.min("dist").alias("dist"),
-    )
-    junctions = best.select(
-        "nkey",
-        "osm_id",
-        F.col("cp.cp_x").alias("jx"),
-        F.col("cp.cp_y").alias("jy"),
-    )
-
     if self_intersections:
-        # J3 --self (changegen/__main__.py:131-139): junctions among the new
-        # features themselves — the same segment grid join, new×new, with
-        # identical-feature pairs excluded.  Both directions of a crossing
-        # pair appear, so each way receives the junction; the 6-dp grid
-        # dedup collapses them to one shared node.  No osm_id: self
-        # junctions modify no existing way.
-        osegs = explode_segments(
-            new_ways.select(
-                F.col(key_col).alias("okey"), exterior(F.col("geometry")).alias("__ring")
-            ),
-            ["okey"],
-            F.col("__ring"),
-            prefix="r",
-        )
-        self_pairs = segment_distance_join(
-            lsegs, osegs, DISTANCE_BUFFER_DEFAULT, dedup_pairs=False
-        ).filter(
-            F.col("nkey") != F.col("okey")
-        )
-        self_best = self_pairs.groupBy("nkey", "okey").agg(
-            F.min_by(
-                F.struct("cp_x", "cp_y"), F.struct("dist", "lseg", "rseg")
-            ).alias("cp")
-        )
-        self_junctions = self_best.select(
-            "nkey",
-            F.lit(None).cast("long").alias("osm_id"),
-            F.col("cp.cp_x").alias("jx"),
-            F.col("cp.cp_y").alias("jy"),
-        )
-        junctions = junctions.unionByName(self_junctions)
+        rways = rways.unionByName(new_ways.select(
+            F.lit(None).cast("long").alias("osm_id"), F.col(key_col).alias("okey"), ring
+        ))
+    rsegs = explode_segments(rways, ["osm_id", "okey"], F.col("__ring"), prefix="r")
+    pairs = segment_distance_join(lsegs, rsegs, DISTANCE_BUFFER_DEFAULT).filter(
+        F.col("okey").isNull() | (F.col("nkey") != F.col("okey"))
+    )
+    # one junction per (new, other) pair: the globally closest approach
+    junctions = pairs.groupBy("nkey", "osm_id", "okey").agg(
+        F.min_by(F.struct("cp_x", "cp_y"), F.struct("dist", "lseg", "rseg")).alias("cp")
+    ).select("nkey", "osm_id", F.col("cp.cp_x").alias("jx"), F.col("cp.cp_y").alias("jy"))
     rlon, rlat = _rounded_lonlat(F.col("jx"), F.col("jy"))
     junctions = junctions.withColumn("rlon", rlon).withColumn("rlat", rlat)
     # ONE materialization of the segment-join pipeline: every downstream
@@ -213,49 +188,64 @@ def _vertices_with_frac(geoms: DataFrame, key_cols: list[str]) -> DataFrame:
     return verts.withColumn("rlon", rlon).withColumn("rlat", rlat)
 
 
-def _junction_inserts(
-    verts: DataFrame, junctions: DataFrame, key: str
-) -> tuple[DataFrame, DataFrame]:
-    """The junctions of each way, and those of them to insert between its
-    vertices: (way_j, inserted).
-
-    ``way_j`` holds ONE row per (way, 6-dp cell): raw jx/jy from different
-    pair joins can differ in low-order bits within the same cell (e.g. a
-    new way crossing an existing way AND another new way at the same spot
-    — the duplicate case the reference dedups, generator.py:132-142); a
-    plain distinct() would keep both and double every vertex row inside
-    the line_locate_fraction window, corrupting the insertion fraction.
-    A junction not coincident with any vertex of its way is ``inserted``
-    at its fractional position along the way (W2/M2)."""
-    way_j = (
+def _way_junctions(junctions: DataFrame, key: str) -> DataFrame:
+    """The junctions of each way: ONE row per (way, 6-dp cell).  Raw jx/jy
+    from different pair joins can differ in low-order bits within the same
+    cell (e.g. a new way crossing an existing way AND another new way at
+    the same spot — the duplicate case the reference dedups,
+    generator.py:132-142); a plain distinct() would keep both, mixing two
+    probes in one located group and, where these rows are the cell frame
+    (stage C), doubling every vertex in the cell."""
+    return (
         junctions.groupBy(key, "rlon", "rlat")
         .agg(F.min_by(F.struct("jx", "jy"), F.struct("jx", "jy")).alias("__j"))
         .select(key, F.col("__j.jx").alias("jx"), F.col("__j.jy").alias("jy"), "rlon", "rlat")
     )
+
+
+def _junction_members(
+    verts: DataFrame,
+    way_j: DataFrame,
+    key: str,
+    cells: DataFrame,
+    on: list[str],
+    extra: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame]:
+    """(flagged vertices, ordered members) of one stage's ways.
+
+    ``verts`` are the ways' ``cumulative_fraction`` rows and ``way_j``
+    their ``_way_junctions``.  One left join against ``cells`` (distinct
+    on ``on``) flags each vertex ``is_junction``.  A junction not
+    coincident with any vertex of its way is inserted at its fractional
+    position along the way (W2/M2), located on the vertex rows with no
+    further window.  Each way's members are its flagged vertices plus its
+    inserted junctions, sorted by ``_ordered_members``; ``extra`` vertex
+    columns ride along (null on inserted junctions)."""
+    flagged = verts.join(
+        cells.select(*on, F.lit(True).alias("__hit")), on, "left"
+    ).withColumn("is_junction", F.col("__hit").isNotNull())
     to_insert = way_j.join(
         verts.select(key, "rlon", "rlat"), [key, "rlon", "rlat"], "left_anti"
-    )
-    ins_input = verts.select(key, "pos", "x", "y").join(
-        to_insert.select(
-            key,
-            F.col("jx").alias("px"),
-            F.col("jy").alias("py"),
-            F.col("rlon").alias("jrlon"),
-            F.col("rlat").alias("jrlat"),
-        ),
+    ).select(
         key,
+        F.col("jx").alias("px"),
+        F.col("jy").alias("py"),
+        F.col("rlon").alias("jrlon"),
+        F.col("rlat").alias("jrlat"),
     )
     inserted = line_locate_fraction(
-        ins_input, [key, "jrlon", "jrlat"], "px", "py"
+        verts.join(to_insert, key), [key, "jrlon", "jrlat"], "px", "py"
     ).select(
         key,
         F.col("point_frac").alias("frac"),
         F.col("jrlon").alias("rlon"),
         F.col("jrlat").alias("rlat"),
         F.lit(True).alias("is_junction"),
-        F.lit(None).cast("int").alias("pos"),
     )
-    return way_j, inserted
+    members = flagged.select(
+        key, "pos", "frac", "rlon", "rlat", "is_junction", *extra
+    ).unionByName(inserted, allowMissingColumns=True)
+    return flagged, _ordered_members(members, key, extra)
 
 
 def _ordered_members(members: DataFrame, key: str, extra: tuple[str, ...] = ()) -> DataFrame:
@@ -317,7 +307,7 @@ def _way_members(ways: DataFrame, change_type: str, owner, vertex) -> DataFrame:
 
 def new_way_vertices(new_ways: DataFrame, key_col: str) -> DataFrame:
     """Stage B's vertex frame: every new way's vertices with their
-    fractions, fenced.  It feeds four downstream joins; truncating its
+    fractions, fenced.  It feeds three downstream joins; truncating its
     (windowed) lineage keeps every consumer's analysis tree shallow.
     Eager (measured, see SCALE.md): a lazy fence lets several consumers
     race to compute the same partitions.  The vertices derive from
@@ -348,26 +338,14 @@ def build_new_ways(
     Junction handling: a junction equal to a way vertex at 6 dp reuses the
     junction node (J4, generator.py:430-443); otherwise it is inserted at
     its fractional position (W2/M2, generator.py:208-255,458-487)."""
-    jn = junction_nodes.select("rlon", "rlat")
-    matched = verts.join(jn, ["rlon", "rlat"], "inner").select(
-        "nkey", "pos", "frac", "rlon", "rlat",
-        F.lit(True).alias("is_junction"),
+    flagged, ordered = _junction_members(
+        verts, _way_junctions(junctions, "nkey"), "nkey", junction_nodes, ["rlon", "rlat"]
     )
-    unmatched = verts.join(jn, ["rlon", "rlat"], "left_anti")
-    _, inserted = _junction_inserts(verts, junctions, "nkey")
+    unmatched = flagged.filter(~F.col("is_junction"))
 
     # id requests for unmatched vertices
     vkey = F.concat_ws(":", F.col("nkey"), F.col("pos"))
     cs.request_ids(unmatched, _K_VERTEX, vkey)
-
-    members = (
-        unmatched.select(
-            "nkey", "pos", "frac", "rlon", "rlat", F.lit(False).alias("is_junction")
-        )
-        .unionByName(matched)
-        .unionByName(inserted, allowMissingColumns=True)
-    )
-    ordered = _ordered_members(members, "nkey")
 
     # key_col stays IN the tag map when it is a real attribute (e.g. name);
     # synthetic "__"-prefixed keys are dropped by _tags_map automatically.
@@ -416,25 +394,14 @@ def modify_intersecting_ways(
         fence, "changegen modified-way vertices"
     )
 
-    way_j, inserted = _junction_inserts(verts, hit, "osm_id")
     # unlike the create path's global junction cells, a vertex here matches
-    # only the junction cells of its own way
-    cells = way_j.select("osm_id", "rlon", "rlat").distinct()
-    matched = verts.join(cells, ["osm_id", "rlon", "rlat"], "inner").select(
-        "osm_id", "pos", "frac", "rlon", "rlat", F.lit(True).alias("is_junction")
+    # only the junction cells of its own way; a vertex that matches none
+    # keeps its PBF node id
+    way_j = _way_junctions(hit, "osm_id")
+    _, ordered = _junction_members(
+        verts, way_j, "osm_id", way_j, ["osm_id", "rlon", "rlat"], extra=("node_id",)
     )
-    unmatched = verts.join(cells, ["osm_id", "rlon", "rlat"], "left_anti").select(
-        "osm_id", "pos", "frac", "rlon", "rlat",
-        F.lit(False).alias("is_junction"), F.col("node_id"),
-    )
-
-    no_node = F.lit(None).cast("long")
-    members = (
-        unmatched
-        .unionByName(matched.withColumn("node_id", no_node), allowMissingColumns=True)
-        .unionByName(inserted.withColumn("node_id", no_node))
-    )
-    return _ordered_members(members, "osm_id", extra=("node_id",))
+    return ordered
 
 
 def generate_changes(

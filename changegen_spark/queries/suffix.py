@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from changegen_spark.operators.fence import fence
@@ -158,16 +158,20 @@ def q_longest_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rank",
         F.expr(f"substring(s, pos, {LCP_CAP})").alias("px"),
     )
-    w = Window.orderBy("rank", "doc_id", "pos")
-    adj = ranked.select(
-        "doc_id",
-        "pos",
-        "rank",
-        "px",
-        F.lag("doc_id").over(w).alias("p_doc"),
-        F.lag("pos").over(w).alias("p_pos"),
-        F.lag("px").over(w).alias("p_px"),
-    ).filter(F.col("p_doc").isNotNull())
+    # neighbours in (rank, doc_id, pos) order meet on consecutive ``run``:
+    # rank alone is not a key, as identical suffixes of different documents
+    # share a rank.  Fenced once, so the self-join's two sides share one
+    # prefix_sum pass.
+    seq = prefix_sum(ranked, ["rank", "doc_id", "pos"]).transform(
+        fence, "q_longest_repeats seq", eager=False
+    )
+    prev = seq.select(
+        (F.col("run") + 1).alias("run"),
+        F.col("doc_id").alias("p_doc"),
+        F.col("pos").alias("p_pos"),
+        F.col("px").alias("p_px"),
+    )
+    adj = seq.join(prev, "run")
     out = (
         adj.withColumn("lcp", _lcp_pandas(LCP_CAP)(F.col("px"), F.col("p_px")))
         .filter(F.col("lcp") >= F.lit(MIN_REPEAT))

@@ -68,3 +68,21 @@ def cli_dirs(spark, tmp_path_factory):
             os.path.join(ext, f"{name}.parquet")
         )
     return db, ext
+
+
+@pytest.fixture(scope="module")
+def tables_with_diagonal(spark):
+    """Base fixtures + one diagonal new way crossing all 4 verticals."""
+    from changegen_spark.sources.osm import _X0, _Y0, _geom, _ring, fixture_tables
+
+    tables = dict(fixture_tables(spark))
+    x0, x1 = _X0 + 1000.0, _X0 + 8000.0
+    coords = [
+        (x0 + k * 700.0, _Y0 - 500.0 + k * 560.0) for k in range(11)
+    ]  # slope 0.8, crosses the verticals between their vertices
+    diag = spark.createDataFrame(
+        [("path", "new-diag", "yes", _geom("LineString", _ring(coords)))],
+        tables["new_ways"].schema,
+    )
+    tables["new_ways"] = tables["new_ways"].unionByName(diag)
+    return tables

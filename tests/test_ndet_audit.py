@@ -57,6 +57,10 @@ DISPOSITIONS = {
         (2, "order-insensitive consumer: hull_stats and size() are set "
             "functions of the points; xs/ys stay row-aligned because "
             "both lists fill in the same single aggregate pass"),
+    ("changegen_spark/operators/ways.py", "insertion_index", "collect_list"):
+        (1, "order-insensitive consumer: F.filter then array_min of the "
+            "(frac, pos) list; the result is the least matching pos in "
+            "any order"),
     ("changegen_spark/queries/geo.py", "q_haversine", "repartitionByRange"):
         (1, "fenced (r9 site)"),
     ("changegen_spark/queries/misc.py", "q_mad_outliers", "F.first"):

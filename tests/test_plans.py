@@ -663,6 +663,64 @@ def test_changegen_elements_join_the_id_fence_at_most_twice(spark):
     assert 1 <= len(id_fence) <= 2, plan
 
 
+def test_changegen_stage_fences_hold_no_window(spark, tables_with_diagonal, monkeypatch):
+    """Stages B and C locate their inserted junctions on the fenced vertex
+    rows, whose ``cumulative_fraction`` window already ran, so neither
+    stage's fenced frame holds a ``Window`` node; and ``--self`` joins the
+    new ways as extra right-side rows of stage A's one grid-cell segment
+    join instead of running a second join."""
+    import re
+
+    from changegen_spark import pipeline
+
+    plans = {}
+    real = pipeline.fence
+
+    def recording_fence(df, name, eager=True):
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return real(df, name, eager)
+
+    monkeypatch.setattr(pipeline, "fence", recording_fence)
+    pipeline.generate_changes(
+        spark, tables_with_diagonal, id_offset=20_000, self_intersections=True
+    )
+    for name in ("changegen new-way chunks", "changegen modified ways"):
+        assert not re.search(r"\bWindow \[", plans[name]), plans[name]
+    cell_joins = [
+        l for l in plans["changegen junctions"].splitlines() if "Join" in l and "[__cell" in l
+    ]
+    assert len(cell_joins) == 1, plans["changegen junctions"]
+
+
+def test_longest_repeats_pairs_neighbours_without_single_partition(
+    spark, sf_dir, monkeypatch
+):
+    """Rank-adjacent suffixes meet on an equi-join of consecutive
+    ``prefix_sum`` runs: the only ``Exchange SinglePartition`` left is the
+    scan over prefix_sum's per-partition counts inside the fenced ``seq``
+    rows, never one above the suffix rows themselves (the old ``lag`` over
+    an unpartitioned window); and the self-join reads ``seq`` through one
+    fence, so prefix_sum's window runs once."""
+    from changegen_spark.queries import suffix
+
+    plans = {}
+    real = suffix.fence
+
+    def recording_fence(df, name, eager=True):
+        plans[name] = _plan(df)
+        return real(df, name, eager)
+
+    monkeypatch.setattr(suffix, "fence", recording_fence)
+    top = _plan(suffix.q_longest_repeats(spark, sf_dir))
+    assert "Exchange SinglePartition" not in top, top
+    assert "Window" not in top, top
+    lines = plans["q_longest_repeats seq"].splitlines()
+    singles = [i for i, l in enumerate(lines) if "Exchange SinglePartition" in l]
+    assert singles
+    for i in singles:
+        assert "HashAggregate(keys=[__part" in lines[i + 1], "\n".join(lines)
+
+
 def test_osc_sinks_plan_no_python_node(spark, tmp_path):
     """Both .osc writers render every element's XML in the JVM: no SQL
     execution either writer starts has a Python node in its physical plan

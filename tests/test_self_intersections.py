@@ -5,22 +5,24 @@ import pytest
 from pyspark.sql import functions as F
 
 
-@pytest.fixture(scope="module")
-def tables_with_diagonal(spark):
-    """Base fixtures + one diagonal new way crossing all 4 verticals."""
-    from changegen_spark.sources.osm import _X0, _Y0, _geom, _ring, fixture_tables
+def test_self_changefile_bytes(spark, tables_with_diagonal, tmp_path):
+    """Byte pin of the --self changefile on the diagonal fixture: its
+    self junctions, shared nodes and ids must not move."""
+    import hashlib
 
-    tables = dict(fixture_tables(spark))
-    x0, x1 = _X0 + 1000.0, _X0 + 8000.0
-    coords = [
-        (x0 + k * 700.0, _Y0 - 500.0 + k * 560.0) for k in range(11)
-    ]  # slope 0.8, crosses the verticals between their vertices
-    diag = spark.createDataFrame(
-        [("path", "new-diag", "yes", _geom("LineString", _ring(coords)))],
-        tables["new_ways"].schema,
+    from changegen_spark.pipeline import generate_changes
+    from changegen_spark.sinks.oscxml import write_osmchange
+
+    out = str(tmp_path / "self.osc")
+    write_osmchange(
+        generate_changes(
+            spark, tables_with_diagonal, id_offset=20_000, self_intersections=True
+        ),
+        out,
     )
-    tables["new_ways"] = tables["new_ways"].unionByName(diag)
-    return tables
+    with open(out, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()
+    assert digest == "0ffed73416a6808a8cc77d5d231f59e16e7b5f7001ae1b690c6c32b63261ba23"
 
 
 @pytest.mark.slow
